@@ -97,6 +97,9 @@ object CovidPipeline {
       hospitalizations.except(yesterday.hospitalizations),
       excessMortality.except(yesterday.excessMortality),
       fullData.except(yesterday.fullData))
+
+    def map(f: DataFrame => DataFrame): Raw =
+      Raw(f(owid), f(vaccinations), f(hospitalizations), f(excessMortality), f(fullData))
   }
 
   object Raw {
@@ -285,15 +288,22 @@ object CovidPipeline {
     * through the star assembly, appended to curated.
     *
     * Returns the new curated content (merged ++ inserted).
-    */
-  /** @param materialize applied after each merge. The reference runs
-    *                     each of its 8 MERGEs eagerly against the Delta
-    *                     table (`main.py:191-199`), so the chain never
-    *                     exists as one plan; the default
-    *                     `localCheckpoint` mirrors that — without it the
-    *                     8 stacked merge joins form one deep Catalyst
-    *                     tree that is re-analyzed on every action.
-    *                     Pass `identity` for a fully-lazy single plan.
+    *
+    * @param materialize the barrier put where the day's work is reused:
+    *                    on each of the five change sets (the `except`
+    *                    diffs of the raw files) and on the returned
+    *                    curated frame. Every downstream action
+    *                    ([[reconcile]]'s sinks and upsert batch, a
+    *                    table-format MERGE of that batch) reads the
+    *                    curated frame, so without these barriers each
+    *                    one re-runs the raw-file diff and the star
+    *                    assembly. The eight merges in between stay one
+    *                    lazy chain over the pinned change sets, run
+    *                    once by the final barrier: the day's changes
+    *                    are computed once, as in the reference's eager
+    *                    MERGE loop (`main.py:191-199`), with one
+    *                    curated-sized barrier instead of eight. Pass
+    *                    `identity` for a fully-lazy single plan.
     */
   def incremental(
       today: Raw,
@@ -303,7 +313,7 @@ object CovidPipeline {
       asOf: String,
       materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
     val yesterday = today_.minusDays(1)
-    val changed = today.changedSince(yesterdayFiles)
+    val changed = today.changedSince(yesterdayFiles).map(materialize)
     val cmap = countryMap(changed.owid)
     val excess = withIsoCode(changed.excessMortality, cmap, "location_excess_mort", "iso_code_excess_mort")
     val fullData = withIsoCode(changed.fullData, cmap, "location_full_data", "iso_code_full_data")
@@ -313,9 +323,9 @@ object CovidPipeline {
     val audit = Map("_TF_LAST_UPDATE" -> "_TF_LAST_UPDATE", "Is_updated" -> "Is_updated")
     def merge(target: DataFrame, updates: DataFrame, isoCol: String, dateCol: String,
         mapping: Map[String, String]) =
-      materialize(Upsert.updateMerge(target, updates,
+      Upsert.updateMerge(target, updates,
         keys = Seq("CodeISO" -> isoCol, "Date" -> dateCol),
-        mapping = mapping ++ audit))
+        mapping = mapping ++ audit)
 
     var cur = curated
     cur = merge(cur, updateSlice(changed.owid, "date", yesterday, asOf), "iso_code", "date", Map(
@@ -360,7 +370,7 @@ object CovidPipeline {
       insertSlice(hospPivoted, "date_hosp", yesterday),
       asOf)
 
-    cur.unionByName(inserted)
+    materialize(cur.unionByName(inserted))
   }
 
   // =====================================================================
@@ -383,6 +393,10 @@ object CovidPipeline {
     * (SET2+P11), then the three sinks: last-writer-wins staged upsert
     * into the warehouse (M3), 20-column full upsert into enterprise
     * (M2), and the curated `Is_updated` Y→N flag reset (M4).
+    *
+    * In incremental mode the returned `upsertBatch` is pinned
+    * (`localCheckpoint`): a small relation that the sinks and a
+    * downstream MERGE read without recomputing the day's lineage.
     *
     * @param warehouse  current warehouse content (25 FinalColumns).
     * @param fullMode   reference `_FULLMODE == 'Y'`: whole curated is
@@ -438,14 +452,21 @@ object CovidPipeline {
         // assign DIFFERENT keys to the same row across sinks. The
         // barrier pins one assignment for all three — exactly the
         // reference's eager write of the keyed frame (main.py:287).
-        // (The incremental branch needs no barrier: its row_number
-        // over (CodeISO, Date) is recomputation-stable.)
+        // (The incremental branch's row_number over (CodeISO, Date) is
+        // recomputation-stable; its batch is pinned below for cost.)
         SurrogateKey.scalable(insertBase, "_SK_METRICS_FACT", startAt = 0L).localCheckpoint()
       else incrementalSk(insertBase, warehouse)
 
-    // SET2 + P11 — canonical 25-column batch
-    val batch = inserts.select(FinalColumns.map(col): _*)
-      .unionByName(updates.select(FinalColumns.map(col): _*))
+    // SET2 + P11 — canonical 25-column batch. Incremental mode pins it:
+    // the warehouse and enterprise sinks and the caller's table-format
+    // MERGE each read it, and unpinned, every read re-runs the warehouse
+    // key join and the key window (and, over a lazy curated, the day's
+    // whole lineage). Full mode keeps its barrier on `inserts` above.
+    val batch = {
+      val b = inserts.select(FinalColumns.map(col): _*)
+        .unionByName(updates.select(FinalColumns.map(col): _*))
+      if (fullMode) b else b.localCheckpoint()
+    }
 
     // M3 — warehouse staged upsert (newest _TF_LAST_UPDATE wins, tie →
     // staging), M2 — enterprise 20-column merge, M4 — flag reset.

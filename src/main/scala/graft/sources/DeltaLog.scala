@@ -944,11 +944,6 @@ object DeltaLog {
       }
     }
 
-  /** Resolve the snapshot's live data-file paths (absolute). */
-  def snapshotFiles(
-      spark: SparkSession, tablePath: String, versionAsOf: Option[Long] = None): Seq[String] =
-    snapshot(spark, tablePath, versionAsOf).files.map(f => resolve(tablePath, f.path))
-
   /** Read a Delta table snapshot as a DataFrame: log replay → live-file
     * list → ordinary parquet scan(s), with the `metaData.schemaString`
     * as the DECLARED scan schema when present (no inference pass).
@@ -2488,6 +2483,18 @@ object DeltaLog {
     * out CLEAN (no descriptor — their DV-dead rows are physically
     * gone), untouched files keep their vectors, and the orphaned DV
     * bins age out under [[vacuum]].
+    *
+    * `updates` is evaluated several times: by the matched-file
+    * detection, the emptiness check, the rewrite (anti-join and
+    * union), the writer rules and, with the change feed on, the
+    * post-image and insert splits. A caller whose `updates` has a
+    * costly or non-deterministic lineage should pin it first
+    * (`localCheckpoint` or a persisted frame), as
+    * `CovidPipeline.reconcile` does with its incremental batch. The
+    * merge does not pin its input itself: over an already-pinned
+    * batch, a `persist` inside the merge only adds work (on the
+    * `etl_lake` benchmark day, 4 cores: 23 → 35 Spark jobs per merge,
+    * 3.0 → 4.3 s).
     */
   def merge(
       spark: SparkSession, tablePath: String, updates: DataFrame, keys: Seq[String],

@@ -292,9 +292,12 @@ object IcebergTable {
     case StringType => "string"
     case DateType => "date"
     case TimestampType => "timestamp"
+    case d: DecimalType => s"decimal(${d.precision}, ${d.scale})"
     case other => throw new IllegalArgumentException(
       s"IcebergTable: unsupported column type ${other.simpleString}")
   }
+
+  private val IcebergDecimal = """decimal\((\d+),\s*(\d+)\)""".r
 
   private def fromIcebergType(t: String): DataType = t match {
     case "long" => LongType
@@ -305,6 +308,7 @@ object IcebergTable {
     case "string" => StringType
     case "date" => DateType
     case "timestamp" | "timestamptz" => TimestampType
+    case IcebergDecimal(p, sc) => DecimalType(p.toInt, sc.toInt)
     case other => throw new IllegalArgumentException(
       s"IcebergTable: unsupported Iceberg type $other")
   }
@@ -2025,11 +2029,42 @@ object IcebergTable {
   private def parquetRowCount(fs: FileSystem, p: Path): Long =
     parquetFooterInfo(fs, p)._1
 
+  /** How a column chunk's footer min/max becomes the JVM value
+    * [[boundBytes]] serializes, for the physical/logical types it can
+    * serialize: signed 32/64-bit integers, dates, UTC-adjusted
+    * micro/millisecond timestamps (as epoch micros), floats, doubles,
+    * booleans and UTF-8 strings. `None` for everything else — INT96
+    * timestamps (Spark's default timestamp encoding), decimals,
+    * unsigned integers, raw binary — which stays unbounded, the rule
+    * `DeltaLog.statsJson` applies to Delta file stats.
+    */
+  private def footerBound(
+      t: org.apache.parquet.schema.PrimitiveType): Option[Any => Any] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val same: Any => Any = v => v
+    (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (INT32 | INT64 | FLOAT | DOUBLE | BOOLEAN, null) => Some(same)
+      case (INT32 | INT64, i: IntLogicalTypeAnnotation) if i.isSigned => Some(same)
+      case (INT32, _: DateLogicalTypeAnnotation) => Some(same)
+      case (INT64, ts: TimestampLogicalTypeAnnotation) if ts.isAdjustedToUTC =>
+        ts.getUnit match {
+          case TimeUnit.MICROS => Some(same)
+          case TimeUnit.MILLIS => Some(v => v.asInstanceOf[java.lang.Long] * 1000L)
+          case TimeUnit.NANOS => None
+        }
+      case (BINARY, _: StringLogicalTypeAnnotation) =>
+        Some(v => v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
+      case _ => None
+    }
+  }
+
   /** One footer read: record count + per-column (min, max) merged
     * across row groups — what `record_count` and the manifest's
     * `lower_bounds`/`upper_bounds` carry. A column whose stats are
-    * missing in ANY row group (or all-null) gets no bounds; readers
-    * treat missing bounds as "keep the file".
+    * missing in ANY row group (or all-null), or whose type
+    * [[footerBound]] does not bound, gets no bounds; readers treat
+    * missing bounds as "keep the file".
     */
   private def parquetFooterInfo(
       fs: FileSystem, p: Path): (Long, Map[String, (Any, Any)]) = {
@@ -2046,15 +2081,10 @@ object IcebergTable {
           if (c.getPath.size == 1) { // top-level primitives only
             val name = c.getPath.toDotString
             val st = c.getStatistics
-            if (st == null || st.isEmpty || !st.hasNonNullValue) dropped += name
+            val conv = footerBound(c.getPrimitiveType)
+            if (conv.isEmpty || st == null || st.isEmpty || !st.hasNonNullValue) dropped += name
             else {
-              val (mn, mx): (Any, Any) = st.genericGetMin match {
-                case bin: org.apache.parquet.io.api.Binary =>
-                  (bin.toStringUsingUTF8,
-                    st.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-                      .toStringUsingUTF8)
-                case other => (other, st.genericGetMax)
-              }
+              val (mn, mx) = (conv.get(st.genericGetMin), conv.get(st.genericGetMax))
               perColumn.get(name) match {
                 case None => perColumn(name) = (mn, mx)
                 case Some((pmn, pmx)) =>

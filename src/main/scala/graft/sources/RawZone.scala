@@ -141,12 +141,6 @@ object RawZone {
       .mode(mode)
       .parquet(path)
 
-  /** S8 — unpartitioned append sink (reference enterprise first load,
-    * `load_functions.py:124`).
-    */
-  def writeAppend(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path)
-
   /** Unpartitioned overwrite — the batch-version writer used by the
     * schema-evolution round-trip (S11): each schema version lands in
     * its own directory; a merge-schema read unions the footers.

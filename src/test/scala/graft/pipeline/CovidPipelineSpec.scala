@@ -322,6 +322,48 @@ class CovidPipelineSpec extends SparkSpec {
     assert(r3.curated.count() == 7)
   }
 
+  // day 1's full-mode reconcile, the warehouse/enterprise state day 2
+  // reconciles against
+  private lazy val day1Reconciled = {
+    val empty = curatedDay1.limit(0)
+      .drop("Year", "Month", "Is_updated")
+      .withColumn("_SK_METRICS_FACT", lit(0L))
+      .select(CovidPipeline.FinalColumns.map(col): _*)
+    CovidPipeline.reconcile(curatedDay1, empty, empty, fullMode = true, LocalDate.parse(D2), AsOf1)
+  }
+
+  private def reconcileDay2(curated: DataFrame) =
+    CovidPipeline.reconcile(curated, day1Reconciled.warehouse, day1Reconciled.enterprise,
+      fullMode = false, Day2, AsOf2)
+
+  private def outputs(r: CovidPipeline.Reconciled) = Seq(
+    "upsertBatch" -> r.upsertBatch, "warehouse" -> r.warehouse,
+    "enterprise" -> r.enterprise, "curated" -> r.curated)
+
+  test("pinning is result-neutral: default barriers and a fully-lazy day give the same rows") {
+    def same(a: DataFrame, b: DataFrame, what: String): Unit =
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, what)
+    val pinned = CovidPipeline.incremental(day2Raw, day1Raw, curatedDay1, Day2, AsOf2)
+    val unpinned = CovidPipeline.incremental(day2Raw, day1Raw, curatedDay1, Day2, AsOf2,
+      materialize = identity)
+    same(pinned, unpinned, "incremental")
+    outputs(reconcileDay2(pinned)).zip(outputs(reconcileDay2(unpinned))).foreach {
+      case ((name, a), (_, b)) => same(a, b, name)
+    }
+  }
+
+  test("an incremental day's reconciled outputs no longer reach back to the raw-file diff") {
+    import org.apache.spark.sql.catalyst.plans.logical.Except
+    def hasExcept(df: DataFrame) = df.queryExecution.analyzed.collectFirst { case e: Except => e }.nonEmpty
+    val r = reconcileDay2(CovidPipeline.incremental(day2Raw, day1Raw, curatedDay1, Day2, AsOf2))
+    for ((name, df) <- outputs(r))
+      assert(!hasExcept(df), s"$name plan still holds the raw-file diff:\n${df.queryExecution.analyzed}")
+    // control: without the barriers the diff is in the plan
+    val lazyDay = CovidPipeline.incremental(day2Raw, day1Raw, curatedDay1, Day2, AsOf2,
+      materialize = identity)
+    assert(hasExcept(reconcileDay2(lazyDay).curated))
+  }
+
   test("atomic publish: a crash between sink writes leaves readers on the old version for ALL sinks") {
     import spark.implicits._
     import graft.sources.SnapshotPublish

@@ -615,6 +615,43 @@ class IcebergTableSpec extends SparkSpec {
       (120L to 130L).filterNot(_ == 125L))
   }
 
+  test("timestamp and decimal columns append, read back equal and filter; unboundable stats stay unbounded") {
+    import spark.implicits._
+    val ts = Seq("2021-03-01 04:00:00", "2021-03-02 04:00:00", "2021-03-03 04:00:00")
+      .map(java.sql.Timestamp.valueOf)
+    val df = Seq((1L, ts(0), "1.25", "10.0001"), (2L, ts(1), "2.50", "20.0002"),
+      (3L, ts(2), "3.75", "30.0003")).toDF("id", "ts", "small", "wide")
+      .select(col("id"), col("ts"), col("small").cast(DecimalType(9, 2)),
+        col("wide").cast(DecimalType(20, 4)))
+      .coalesce(1)
+    val key = "spark.sql.parquet.outputTimestampType"
+    val saved = spark.conf.getOption(key)
+    // INT96 is Spark's default timestamp encoding; the INT64 encodings
+    // carry bounds, converted to epoch micros
+    for ((enc, tsBounded) <- Seq("INT96" -> false, "TIMESTAMP_MICROS" -> true,
+        "TIMESTAMP_MILLIS" -> true)) {
+      spark.conf.set(key, enc)
+      val t = try { val t = newTable(); IcebergTable.append(spark, t, df); t }
+        finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val back = IcebergTable.read(spark, t)
+      assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+        df.schema.fields.map(f => (f.name, f.dataType)).toSeq, enc)
+      assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty, enc)
+      assert(back.filter(col("ts") >= lit(ts(1))).select("id").as[Long].collect().sorted.toSeq ==
+        Seq(2L, 3L), enc)
+      assert(IcebergTable.readRange(spark, t, "ts", ts(1), ts(1))
+        .select("id").as[Long].collect().toSeq == Seq(2L), enc)
+      val ref = IcebergTable.snapshot(spark, t).dataRefs.head
+      assert(ref.bounds.contains("id") && !ref.bounds.contains("small") &&
+        !ref.bounds.contains("wide"), enc)
+      assert(ref.bounds.contains("ts") == tsBounded, enc)
+      // a timestamp range outside the file's bounds prunes it
+      if (tsBounded) assert(IcebergTable.rangePruneFiles(IcebergTable.snapshot(spark, t), "ts",
+        java.sql.Timestamp.valueOf("2022-01-01 00:00:00"),
+        java.sql.Timestamp.valueOf("2022-01-02 00:00:00")).isEmpty, enc)
+    }
+  }
+
   test("refs: tags pin snapshots across expiry; branches move; refs survive appends") {
     import spark.implicits._
     val t = newTable()

@@ -55,28 +55,13 @@ object Similarity {
   def cosineWithNorms(a: Column, b: Column, normA: Column, normB: Column): Column =
     dot(a, b) / (normA * normB)
 
-  /** ±1 pseudo-random hyperplane weight for (dimension i, plane j) —
-    * pure integer mixing shared with the oracle:
-    * ((i*1103515245 + j*12345) mod 65537) mod 2 == 0 → +1 else -1.
-    */
-  def weight(i: Column, j: Int): Column =
-    when((i.cast("long") * 1103515245L + lit(j * 12345L)) % 65537L % 2L === 0L,
-      lit(1.0)).otherwise(lit(-1.0))
-
   /** Random-hyperplane LSH bucket id in [0, 2^planes): bit j is the
-    * sign of the projection onto hyperplane j.
+    * sign of the projection onto hyperplane j, whose ±1 weight for
+    * dimension i is pure integer mixing shared with the oracle:
+    * ((i*1103515245 + j*12345) mod 65537) mod 2 == 0 → +1 else -1.
     */
   def lshBucket(emb: Column, planes: Int): Column =
     call_function("lsh_bucket", emb, lit(planes)) // native (graft.functions.LshBucket)
-
-  /** Pure-builtin twin of [[lshBucket]] (spec cross-check). */
-  def lshBucketDeclarative(emb: Column, planes: Int): Column =
-    (0 until planes).map { j =>
-      val proj = aggregate(
-        transform(emb, (x, i) => x.cast(DoubleType) * weight(i, j)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1 << j)).otherwise(lit(0))
-    }.reduce(_ + _)
 
   /** Brute-force cosine top-k: each query vector (selected by
     * `queryPred`) against the whole corpus. The query side is tiny →

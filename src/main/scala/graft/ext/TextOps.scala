@@ -120,38 +120,16 @@ object TextOps {
   def simhash16(toks: Column): Column =
     call_function("simhash16", toks) // native (graft.functions.SimHash16)
 
-  /** Pure-builtin twin of [[simhash16]] (spec cross-check). */
-  def simhash16Declarative(toks: Column): Column =
-    (0 until 16).map { b =>
-      val contrib = transform(toks, t =>
-        when(substring(md5(t), b + 1, 1) >= "8", lit(1)).otherwise(lit(-1)))
-      val s = aggregate(contrib, lit(0), (acc, x) => acc + x)
-      when(s >= 0, lit(1 << b)).otherwise(lit(0))
-    }.reduce(_ + _)
-
-  /** Token → 27-bit-ish integer from the first 4 hex chars of its md5
-    * (via `ascii`, which both engines share); feeds [[rollingHash]].
-    */
-  def tokenInt(t: Column): Column = {
-    val m = md5(t)
-    (ascii(substring(m, 1, 1)) * lit(1000000L) +
-      ascii(substring(m, 2, 1)) * lit(10000L) +
-      ascii(substring(m, 3, 1)) * lit(100L) +
-      ascii(substring(m, 4, 1))).cast(LongType)
-  }
-
   /** Polynomial rolling hash over the token stream:
-    * fold(acc * 131 + tokenInt) mod 1e9+7 — an order-sensitive
+    * fold(acc * 131 + tokenInt) mod 1e9+7, where tokenInt packs the
+    * `ascii` codes of the first 4 hex chars of the token's md5 (which
+    * both engines share) — an order-sensitive
     * document fingerprint (content AND sequence), vs the order-free
     * md5-of-text fingerprint. In-order left fold from 0 in both
     * engines (`aggregate` / `list_reduce(list_prepend(0, ...))`).
     */
   def rollingHash(toks: Column): Column =
     call_function("rolling_hash", toks) // native (graft.functions.RollingHash)
-
-  /** Pure-builtin twin of [[rollingHash]] (spec cross-check). */
-  def rollingHashDeclarative(toks: Column): Column =
-    aggregate(toks, lit(0L), (acc, t) => (acc * 131L + tokenInt(t)) % 1000000007L)
 
   /** Quality-scoring stopword list (drawn from the synthetic corpus
     * vocabulary; stands in for a real language's function words).

@@ -50,7 +50,7 @@ private[queries] trait ExtFragments { this: ExtQueries.type =>
         s"(acc, x) -> acc + x) >= 0 THEN ${1 << b} ELSE 0 END)"
     }.mkString("(", " + ", ")")
 
-  /** mirrors TextOps.tokenInt (argument: an md5-hex expression) */
+  /** the token integer of TextOps.rollingHash (argument: an md5-hex expression) */
   private[queries] def tokenIntSql(m: String): String =
     s"(ascii(substr($m, 1, 1)) * 1000000 + ascii(substr($m, 2, 1)) * 10000 + " +
       s"ascii(substr($m, 3, 1)) * 100 + ascii(substr($m, 4, 1)))"

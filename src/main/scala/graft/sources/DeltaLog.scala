@@ -2,8 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,28 +19,31 @@ import org.apache.spark.sql.types._
   *
   * Scope (guarded loudly, never silently wrong):
   *  - reader versions 1-3 with the features this reader implements:
-  *    column mapping (name mode, reader v2) and DELETION VECTORS
-  *    (reader v3 feature — [[DeletionVectors]] decodes the bitmaps,
-  *    [[read]] anti-joins them on `_metadata.row_index`, and
-  *    [[deleteWithDv]] WRITES them, the modern Delta DELETE). Any
-  *    other declared reader feature (v2Checkpoint, typeWidening, …)
-  *    refuses, and the check is evaluated over BOTH the JSON commits
-  *    and the checkpoint parquet (real checkpoints carry
-  *    `protocol`/`metaData` rows — that is what makes the JSON prefix
-  *    disposable — so a guard that only saw JSON commits would be
-  *    silently bypassed after compaction);
+  *    column mapping (name and id mode), DELETION VECTORS
+  *    ([[DeletionVectors]] decodes the bitmaps, [[read]] anti-joins
+  *    them on `_metadata.row_index`, and [[deleteWithDv]] WRITES them,
+  *    the modern Delta DELETE), v2Checkpoint, typeWidening and
+  *    timestampNtz. Any other declared reader feature refuses, and the
+  *    check is evaluated over BOTH the JSON commits and the checkpoint
+  *    parquet (real checkpoints carry `protocol`/`metaData` rows —
+  *    that is what makes the JSON prefix disposable — so a guard that
+  *    only saw JSON commits would be silently bypassed after
+  *    compaction);
   *  - classic checkpoints, single-part AND multi-part (all N parts of
   *    a complete set union into one scan; incomplete part sets are
   *    ignored, as Delta's own reader does — the JSON log still covers
-  *    them). The WRITER emits single-part checkpoints only.
+  *    them), and V2 (UUID-named) checkpoints with sidecars. The WRITER
+  *    emits single-part classic checkpoints ([[writeCheckpoint]]) and
+  *    V2 checkpoints with one sidecar ([[writeCheckpointV2]]).
   *
-  * Scale shape: the action replay runs IN SPARK — the JSON commits and
-  * the checkpoint parquet are read as DataFrames, the last-action-per-
-  * path reconciliation is one window over the FILE-CARDINALITY action
-  * relation (a 100 TB table is ~10^5-10^6 add actions — metadata-
-  * sized), and only the resolved live-file LIST is collected to the
-  * driver (the same driver-memory contract Delta's own snapshot replay
-  * has). When `_last_checkpoint` exists the current-snapshot path never
+  * Scale shape: the action replay runs ON THE DRIVER ([[replay]]) —
+  * JSON commits parse with Jackson, the checkpoint parquet is read by
+  * one Spark job and collected, and the last-action-per-path
+  * reconciliation is a plain group-by over the FILE-CARDINALITY action
+  * list (a 100 TB table is ~10^5-10^6 add actions — metadata-sized;
+  * the same driver-memory contract Delta's own snapshot replay has).
+  * Reads, txn lookups and both checkpoint writers share that one
+  * replay. When `_last_checkpoint` exists the current-snapshot path never
   * LISTS the log directory at all: it reads the pointer and probes
   * forward for the commits after the checkpoint, so a 10^5-commit table
   * costs one checkpoint scan + a handful of existence checks. Data
@@ -92,6 +94,48 @@ object DeltaLog {
       StructField("domain", StringType),
       StructField("configuration", StringType),
       StructField("removed", BooleanType))))))
+
+  /** Action schema of the checkpoint parquet this writer emits. A
+    * classic checkpoint carries the first six columns, a V2 checkpoint
+    * all eight, and a V2 sidecar only `add` and `remove`.
+    */
+  private val checkpointSchema: StructType = {
+    val strMap = MapType(StringType, StringType)
+    StructType(Seq(
+      StructField("add", StructType(Seq(
+        StructField("path", StringType),
+        StructField("partitionValues", strMap),
+        StructField("size", LongType),
+        StructField("modificationTime", LongType),
+        StructField("dataChange", BooleanType),
+        StructField("stats", StringType),
+        StructField("baseRowId", LongType),
+        StructField("defaultRowCommitVersion", LongType),
+        logSchema("add").dataType.asInstanceOf[StructType]("deletionVector")))),
+      StructField("remove", StructType(Seq(
+        StructField("path", StringType),
+        StructField("deletionTimestamp", LongType),
+        StructField("dataChange", BooleanType)))),
+      logSchema("protocol"),
+      StructField("metaData", StructType(Seq(
+        StructField("id", StringType),
+        StructField("format", StructType(Seq(
+          StructField("provider", StringType),
+          StructField("options", strMap)))),
+        StructField("schemaString", StringType),
+        StructField("partitionColumns", ArrayType(StringType)),
+        StructField("configuration", strMap)))),
+      logSchema("txn"),
+      logSchema("domainMetadata"),
+      StructField("checkpointMetadata", StructType(Seq(
+        StructField("version", LongType),
+        StructField("tags", strMap)))),
+      StructField("sidecar", StructType(Seq(
+        StructField("path", StringType),
+        StructField("sizeInBytes", LongType),
+        StructField("modificationTime", LongType),
+        StructField("tags", strMap))))))
+  }
 
   private val JsonCommit = """^(\d{20})\.json$""".r
   private val Checkpoint = """^(\d{20})\.checkpoint\.parquet$""".r
@@ -173,8 +217,6 @@ object DeltaLog {
       v -> CheckpointRef(Seq(named.map(_._2).min), v2 = true)
     }
     val cps = multis ++ v2s ++ singles // later wins: classic > v2 > multi
-    require(jsons.nonEmpty || cps.nonEmpty,
-      s"DeltaLog: empty _delta_log under $tablePath")
     LogListing(jsons, cps)
   }
 
@@ -223,11 +265,9 @@ object DeltaLog {
     }
   }
 
-  /** Normalize a source of raw protocol actions to the narrow relation
-    * the replay runs over. Both the JSON commits and the checkpoint
-    * parquet funnel through this shape, so `union` never trips over a
-    * real checkpoint's extra struct fields (`stats`, `tags`,
-    * `modificationTime`, …).
+  /** Flatten checkpoint actions (read under [[logSchema]]) to the
+    * narrow positional relation [[actFromRow]] reads; a field the
+    * source lacks reads as null.
     */
   private def normalize(df: DataFrame): DataFrame = {
     def sub(struct: String, field: String, t: DataType): Column = {
@@ -290,19 +330,9 @@ object DeltaLog {
     */
   def lastTxnVersion(spark: SparkSession, tablePath: String, appId: String): Option[Long] = {
     val logDir = logDirOf(tablePath)
-    val fs = fsOf(spark, logDir)
-    if (!fs.exists(logDir) || fs.listStatus(logDir).isEmpty) None
-    else
-      actsLocal(spark, tablePath, None).iterator
-        .filter(a => a.txnApp == appId && a.txnVersion != null)
-        .map(_.txnVersion.longValue).maxOption
+    if (!fsOf(spark, logDir).exists(logDir)) None
+    else replay(spark, tablePath, segmentFor(spark, tablePath, None)).txns.get(appId)
   }
-
-  private def jsonActions(spark: SparkSession, paths: Seq[String]): DataFrame =
-    normalize(
-      spark.read.schema(logSchema).json(paths: _*)
-        .withColumn("version",
-          regexp_extract(input_file_name(), """(\d{20})\.json""", 1).cast(LongType)))
 
   /** Checkpoint actions — crucially, `protocol` and `metaData` are
     * PROJECTED from the checkpoint parquet, not nulled: the protocol
@@ -396,27 +426,31 @@ object DeltaLog {
     }
   }
 
-  /** The normalized actions DataFrame for a snapshot.
+  /** The concrete sources a snapshot replays: at most one checkpoint
+    * anchor plus the ordered JSON commits after it. `version` is the
+    * version the segment reaches, -1 for a log with no commit yet.
+    */
+  private final case class LogSegment(
+      checkpoint: Option[(Long, CheckpointRef)], commits: Seq[(Long, String)]) {
+    def version: Long =
+      commits.lastOption.map(_._1).orElse(checkpoint.map(_._1)).getOrElse(-1L)
+  }
+
+  /** The segment for a snapshot, the one source-selection policy every
+    * [[replay]] goes through.
     *
     * Current snapshot (`versionAsOf = None`): prefer the
     * `_last_checkpoint` fast path — checkpoint + forward-probed commits,
     * NO directory listing (the scale path for 10^5-commit logs); fall
-    * back to a full listing when the pointer is absent or stale.
+    * back to a full listing when the pointer is absent or stale. A log
+    * directory that holds no commit yet (a first commit that never
+    * landed) gives the empty segment.
     *
     * Time travel (`Some(v)`): replay JSON commits 0..v when they all
     * survive; otherwise anchor on the newest checkpoint c <= v plus the
     * commits (c, v] — so log cleanup before a checkpoint no longer
     * forbids travel to versions the checkpoint covers.
     */
-  /** The concrete sources a snapshot replays: at most one checkpoint
-    * anchor plus the ordered JSON commits after it. Extracted from the
-    * replay so the DataFrame materialization (checkpoint writers) and
-    * the driver-side one ([[actsLocal]] — the read hot path) share one
-    * source-selection policy, fast paths and refusals included.
-    */
-  private final case class LogSegment(
-      checkpoint: Option[(Long, CheckpointRef)], commits: Seq[(Long, String)])
-
   private def segmentFor(
       spark: SparkSession, tablePath: String, versionAsOf: Option[Long]): LogSegment = {
     val logDir = logDirOf(tablePath)
@@ -455,7 +489,9 @@ object DeltaLog {
             LogSegment(Some(c -> ref), tail)
           case None =>
             val log = listLog(spark, tablePath)
-            val latest = (log.jsons.keySet ++ log.checkpoints.keySet).max
+            val versions = log.jsons.keySet ++ log.checkpoints.keySet
+            if (versions.isEmpty) return LogSegment(None, Seq.empty)
+            val latest = versions.max
             log.checkpoints.keySet.toSeq.sorted.lastOption match {
               case Some(c) =>
                 val tail = ((c + 1) to latest).map { v =>
@@ -475,35 +511,17 @@ object DeltaLog {
     }
   }
 
-  private def actions(
-      spark: SparkSession, tablePath: String, versionAsOf: Option[Long]): DataFrame = {
-    val logDir = logDirOf(tablePath)
-    val seg = segmentFor(spark, tablePath, versionAsOf)
-    val cp = seg.checkpoint.map { case (c, ref) =>
-      checkpointActions(spark, c, ref, logDir) }
-    val js =
-      if (seg.commits.isEmpty) None
-      else Some(jsonActions(spark, seg.commits.map(_._2)))
-    (cp, js) match {
-      case (Some(a), Some(b)) => a.union(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case (None, None) =>
-        throw new IllegalArgumentException(s"DeltaLog: empty log segment at $tablePath")
-    }
-  }
-
   /** One normalized action, driver-resident — the same 26 fields
-    * [[normalize]] projects, as plain (nullable) values. The snapshot
-    * replay runs over these instead of a DataFrame: the log is
-    * metadata-sized by protocol design and [[snapshot]] already
-    * collects every live file to the driver, so replaying JSON commits
-    * through Spark jobs bought no scale — it cost 1 `read.json` + 3
-    * actions PER SNAPSHOT (guard aggregate, metaData head, reconcile
-    * collect), the dominant fixed cost of every Delta read at bench
-    * scale and pure scheduler overhead at cluster scale. Checkpoint
-    * parquet still reads through Spark (one job), commits parse with
-    * Jackson like [[cdfFrames]] always has.
+    * [[normalize]] projects, as plain (nullable) values. [[replay]]
+    * runs over these instead of a DataFrame: the log is metadata-sized
+    * by protocol design and [[snapshot]] already holds every live file
+    * on the driver, so replaying JSON commits through Spark jobs bought
+    * no scale — it cost 1 `read.json` + 3 actions PER SNAPSHOT (guard
+    * aggregate, metaData head, reconcile collect), the dominant fixed
+    * cost of every Delta read at bench scale and pure scheduler
+    * overhead at cluster scale. Checkpoint parquet still reads through
+    * Spark (one job), commits parse with Jackson like [[cdfFrames]]
+    * always has.
     */
   private final case class Act(
       addPath: String, addPvals: Map[String, String], addSize: java.lang.Long,
@@ -636,15 +654,23 @@ object DeltaLog {
       version = r.getLong(26))
   }
 
-  /** The snapshot's normalized actions, driver-resident: JSON commits
-    * Jackson-parsed straight off the filesystem (zero Spark jobs), the
-    * checkpoint anchor (when one exists) collected through one parquet
-    * read. Same source selection as [[actions]] via [[segmentFor]].
+  /** One replay of a [[LogSegment]], on the driver: its version, the
+    * LAST action per path (live adds AND remove tombstones, sorted by
+    * path), the newest `txn` version per appId, and the resolved
+    * [[Snapshot]] (live adds only). Reads, [[lastTxnVersion]] and both
+    * checkpoint writers all take their state from here.
     */
-  private def actsLocal(
-      spark: SparkSession, tablePath: String, versionAsOf: Option[Long]): Seq[Act] = {
+  private final case class Replay(
+      version: Long, winners: Seq[Act], txns: Map[String, Long], snapshot: Snapshot)
+
+  /** Replay `seg`: the checkpoint anchor (when one exists) collected
+    * through one parquet read, the JSON commits Jackson-parsed straight
+    * off the filesystem (zero Spark jobs), then the protocol guard,
+    * metaData pick, per-path reconciliation and domain-metadata
+    * resolution as plain Scala over the metadata-sized action list.
+    */
+  private def replay(spark: SparkSession, tablePath: String, seg: LogSegment): Replay = {
     val logDir = logDirOf(tablePath)
-    val seg = segmentFor(spark, tablePath, versionAsOf)
     val fs = fsOf(spark, logDir)
     val cpActs = seg.checkpoint.toSeq.flatMap { case (c, ref) =>
       checkpointActions(spark, c, ref, logDir).collect().map(actFromRow).toSeq
@@ -667,33 +693,89 @@ object DeltaLog {
         lines.flatMap(actFromJson(_, v))
       }
     }
-    cpActs ++ jsonActs
-  }
-
-  /** One live/tombstone winner row per path: the LAST action per path
-    * wins (a path may be added, removed, then re-added across commits;
-    * within one commit it appears at most once).
-    */
-  private def reconcile(acts: DataFrame): DataFrame = {
-    // within one version the ADD wins the tie: a DV commit (and Delta's
-    // own DELETE) removes and re-adds the SAME path in one transaction,
-    // and the add is the surviving incarnation (checkpoints never carry
-    // both actions for one path, so the tie-break is inert there)
-    val perPath = Window.partitionBy("path")
-      .orderBy(col("version").desc, col("is_add").desc)
-    acts
-      .select(
-        coalesce(col("add_path"), col("remove_path")).as("path"),
-        col("add_path").isNotNull.as("is_add"),
-        col("add_pvals"), col("add_size"), col("add_stats"),
-        col("add_base_row_id"), col("add_default_rcv"),
-        col("remove_ts"), col("version"),
-        col("dv_storage"), col("dv_path"), col("dv_offset"),
-        col("dv_size"), col("dv_cardinality"))
-      .filter(col("path").isNotNull)
-      .withColumn("rn", row_number().over(perPath))
-      .filter(col("rn") === 1)
-      .drop("rn")
+    val acts = cpActs ++ jsonActs
+    // protocol guard — sees checkpoint-carried protocol rows too
+    val readerVersion =
+      acts.iterator.flatMap(a => Option(a.readerVersion)).map(_.intValue).maxOption
+    val readerFeats: Set[String] =
+      acts.iterator.flatMap(a => Option(a.readerFeatures)).flatten.toSet
+    val writerVersion =
+      acts.iterator.flatMap(a => Option(a.writerVersion)).map(_.intValue).maxOption
+    val writerFeats: Set[String] =
+      acts.iterator.flatMap(a => Option(a.writerFeatures)).flatten.toSet
+    readerVersion.foreach { rv =>
+      // v3 tables declare their reader features explicitly; any feature
+      // outside the implemented set refuses
+      val unsupported = readerFeats --
+        Set("deletionVectors", "columnMapping", "v2Checkpoint",
+          "typeWidening", "typeWidening-preview", "timestampNtz")
+      require(rv <= 2 || (rv == 3 && unsupported.isEmpty),
+        s"DeltaLog: minReaderVersion $rv with reader features " +
+          s"[${readerFeats.mkString(",")}] requires " +
+          s"[${unsupported.mkString(",")}] this reader does not implement " +
+          "(supported: column mapping, deletion vectors, v2 checkpoints, type widening, " +
+          "timestamp without time zone)")
+    }
+    // latest metaData wins (schema evolution replaces the action)
+    val metaRow = acts
+      .filter(a => a.partitionCols != null || a.schemaString != null) match {
+      case Seq() => None
+      case ms => Some(ms.maxBy(_.version))
+    }
+    val (metaId, schemaStr, pcols, conf) = metaRow match {
+      case Some(a) => (
+        Option(a.metaId),
+        Option(a.schemaString),
+        Option(a.partitionCols).getOrElse(Seq.empty),
+        Option(a.metaConf).getOrElse(Map.empty[String, String]))
+      case None => (None, None, Seq.empty[String], Map.empty[String, String])
+    }
+    // one live/tombstone winner per path: the LAST action wins, and
+    // within one version the ADD wins the tie (a DV commit — and
+    // Delta's own DELETE — removes and re-adds the SAME path in one
+    // transaction, and the add is the surviving incarnation)
+    def pathOf(a: Act): String = if (a.addPath != null) a.addPath else a.removePath
+    val winners = acts
+      .filter(a => a.addPath != null || a.removePath != null)
+      .groupBy(pathOf)
+      .map { case (_, as) => as.maxBy(a => (a.version, if (a.addPath != null) 1 else 0)) }
+      .toSeq.sortBy(pathOf)
+    val live = winners.filter(_.addPath != null).map { w =>
+      val dv = Option(w.dvStorage).map { st =>
+        DeletionVectors.Descriptor(
+          st,
+          w.dvPath,
+          Option(w.dvOffset).map(_.intValue),
+          w.dvSize.intValue,
+          Option(w.dvCardinality).map(_.longValue).getOrElse(0L))
+      }
+      DeltaFile(
+        w.addPath,
+        Option(w.addPvals).getOrElse(Map.empty),
+        Option(w.addSize).map(_.longValue).getOrElse(0L),
+        dv,
+        Option(w.addStats),
+        Option(w.addBaseRowId).map(_.longValue),
+        Option(w.addDefaultRcv).map(_.longValue))
+    }
+    // domain metadata: latest action per domain wins (the protocol's
+    // reconciliation rule), a removed=true winner drops the domain
+    val domains: Map[String, String] = acts
+      .filter(_.dmDomain != null)
+      .groupBy(_.dmDomain)
+      .flatMap { case (domain, as) =>
+        val latest = as.maxBy(_.version)
+        val removed = latest.dmRemoved != null && latest.dmRemoved.booleanValue
+        if (removed) None
+        else Some(domain -> Option(latest.dmConf).getOrElse(""))
+      }
+    val txns: Map[String, Long] = acts
+      .filter(a => a.txnApp != null && a.txnVersion != null)
+      .groupBy(_.txnApp)
+      .map { case (app, as) => app -> as.map(_.txnVersion.longValue).max }
+    Replay(seg.version, winners, txns,
+      Snapshot(live, metaId, schemaStr, pcols, conf, readerVersion, readerFeats,
+        writerVersion, writerFeats, domains))
   }
 
   /** A resolved snapshot: live files (with their partition values),
@@ -787,96 +869,22 @@ object DeltaLog {
       if (columnMappingMode == "none") c else physicalNames.getOrElse(c, c)
   }
 
+  /** The snapshot at `versionAsOf` (the current one when None). A
+    * log directory with no commit yet is refused for the current
+    * snapshot; time travel to version -1 is the empty table.
+    */
   def snapshot(
-      spark: SparkSession, tablePath: String, versionAsOf: Option[Long] = None): Snapshot = {
-    // driver-side replay (see [[Act]]): the guard scan, metaData pick,
-    // per-path reconciliation and domain-metadata resolution are plain
-    // Scala over the metadata-sized action list — the former DataFrame
-    // form spent 1 read.json + 3 Spark jobs per snapshot on the same
-    // metadata, the fixed cost of EVERY Delta read
-    val acts = actsLocal(spark, tablePath, versionAsOf)
-    // protocol guard — sees checkpoint-carried protocol rows too
-    val readerVersion =
-      acts.iterator.flatMap(a => Option(a.readerVersion)).map(_.intValue).maxOption
-    val readerFeats: Set[String] =
-      acts.iterator.flatMap(a => Option(a.readerFeatures)).flatten.toSet
-    val writerVersion =
-      acts.iterator.flatMap(a => Option(a.writerVersion)).map(_.intValue).maxOption
-    val writerFeats: Set[String] =
-      acts.iterator.flatMap(a => Option(a.writerFeatures)).flatten.toSet
-    readerVersion.foreach { rv =>
-      // v3 tables declare their reader features explicitly; this reader
-      // implements deletionVectors, columnMapping (name mode) and
-      // v2Checkpoint — any OTHER declared feature (typeWidening, ...)
-      // refuses
-      val unsupported = readerFeats --
-        Set("deletionVectors", "columnMapping", "v2Checkpoint",
-          "typeWidening", "typeWidening-preview", "timestampNtz")
-      require(rv <= 2 || (rv == 3 && unsupported.isEmpty),
-        s"DeltaLog: minReaderVersion $rv with reader features " +
-          s"[${readerFeats.mkString(",")}] requires " +
-          s"[${unsupported.mkString(",")}] this reader does not implement " +
-          "(supported: column mapping, deletion vectors, v2 checkpoints, type widening)")
+      spark: SparkSession, tablePath: String, versionAsOf: Option[Long] = None): Snapshot =
+    versionAsOf match {
+      case None => currentReplay(spark, tablePath).snapshot
+      case v => replay(spark, tablePath, segmentFor(spark, tablePath, v)).snapshot
     }
-    // latest metaData wins (schema evolution replaces the action)
-    val metaRow = acts
-      .filter(a => a.partitionCols != null || a.schemaString != null) match {
-      case Seq() => None
-      case ms => Some(ms.maxBy(_.version))
-    }
-    val (metaId, schemaStr, pcols, conf) = metaRow match {
-      case Some(a) => (
-        Option(a.metaId),
-        Option(a.schemaString),
-        Option(a.partitionCols).getOrElse(Seq.empty),
-        Option(a.metaConf).getOrElse(Map.empty[String, String]))
-      case None => (None, None, Seq.empty[String], Map.empty[String, String])
-    }
-    // one live/tombstone winner per path: the LAST action wins, and
-    // within one version the ADD wins the tie (a DV commit removes and
-    // re-adds the same path in one transaction) — the same rule as the
-    // DataFrame [[reconcile]] the checkpoint writers replay
-    val live = acts.iterator
-      .filter(a => a.addPath != null || a.removePath != null)
-      .map(a => (if (a.addPath != null) a.addPath else a.removePath, a))
-      .toSeq
-      .groupBy(_._1)
-      .flatMap { case (path, pairs) =>
-        val winner = pairs.map(_._2)
-          .maxBy(a => (a.version, if (a.addPath != null) 1 else 0))
-        if (winner.addPath == null) None
-        else {
-          val dv = Option(winner.dvStorage).map { st =>
-            DeletionVectors.Descriptor(
-              st,
-              winner.dvPath,
-              Option(winner.dvOffset).map(_.intValue),
-              winner.dvSize.intValue,
-              Option(winner.dvCardinality).map(_.longValue).getOrElse(0L))
-          }
-          Some(DeltaFile(
-            path,
-            Option(winner.addPvals).getOrElse(Map.empty),
-            Option(winner.addSize).map(_.longValue).getOrElse(0L),
-            dv,
-            Option(winner.addStats),
-            Option(winner.addBaseRowId).map(_.longValue),
-            Option(winner.addDefaultRcv).map(_.longValue)))
-        }
-      }.toSeq.sortBy(_.path)
-    // domain metadata: latest action per domain wins (the protocol's
-    // reconciliation rule), a removed=true winner drops the domain
-    val domains: Map[String, String] = acts
-      .filter(_.dmDomain != null)
-      .groupBy(_.dmDomain)
-      .flatMap { case (domain, as) =>
-        val latest = as.maxBy(_.version)
-        val removed = latest.dmRemoved != null && latest.dmRemoved.booleanValue
-        if (removed) None
-        else Some(domain -> Option(latest.dmConf).getOrElse(""))
-      }
-    Snapshot(live, metaId, schemaStr, pcols, conf, readerVersion, readerFeats,
-      writerVersion, writerFeats, domains)
+
+  /** The replay of the current segment; refuses a log with no commit yet. */
+  private def currentReplay(spark: SparkSession, tablePath: String): Replay = {
+    val r = replay(spark, tablePath, segmentFor(spark, tablePath, None))
+    require(r.version >= 0, s"DeltaLog: empty _delta_log under $tablePath")
+    r
   }
 
   /** Protocol paths are percent-encoded relative URIs (or absolute
@@ -1436,157 +1444,98 @@ object DeltaLog {
     try out.write(bytes) finally out.close()
   }
 
-  /** Write a classic single-part checkpoint of the CURRENT snapshot and
-    * point `_last_checkpoint` at it: live `add` rows (with partition
-    * values and real sizes), tombstone `remove` rows, plus the
-    * `protocol` and `metaData` actions the spec requires every
-    * checkpoint to carry — so guards still fire after the JSON prefix
-    * is cleaned up. Returns the checkpointed version.
-    */
-  /** The (add, remove) checkpoint rows for a snapshot's reconciled
-    * winners — shared by the classic and V2 writers (V2 lands them in
-    * a SIDECAR parquet instead of the checkpoint file itself). Live
-    * deletion vectors survive — dropping the descriptor would
-    * RESURRECT every DV-deleted row after cleanup.
-    */
-  private def fileActionRows(winners: DataFrame): DataFrame =
-    winners.select(
-      when(col("is_add"), struct(
-        col("path"),
-        coalesce(col("add_pvals"),
-          lit(null).cast(MapType(StringType, StringType))).as("partitionValues"),
-        coalesce(col("add_size"), lit(0L)).as("size"),
-        lit(0L).as("modificationTime"),
-        lit(true).as("dataChange"),
-        col("add_stats").as("stats"),
-        // rowTracking identities survive checkpointing — dropping them
-        // here would strand readWithRowIds after JSON-prefix cleanup
-        col("add_base_row_id").as("baseRowId"),
-        col("add_default_rcv").as("defaultRowCommitVersion"),
-        when(col("dv_storage").isNotNull, struct(
-          col("dv_storage").as("storageType"),
-          col("dv_path").as("pathOrInlineDv"),
-          col("dv_offset").as("offset"),
-          col("dv_size").as("sizeInBytes"),
-          col("dv_cardinality").as("cardinality"))).as("deletionVector"))).as("add"),
-      when(!col("is_add"), struct(
-        col("path"),
-        coalesce(col("remove_ts"), lit(0L)).as("deletionTimestamp"),
-        lit(true).as("dataChange"))).as("remove"))
+  /** One checkpoint row carrying the given actions, null elsewhere. */
+  private def checkpointRow(actions: (String, Row)*): Row = {
+    val byName = actions.toMap
+    Row.fromSeq(checkpointSchema.fieldNames.toSeq.map(byName.getOrElse(_, null)))
+  }
 
-  /** Checkpoint shape of a `domainMetadata` action. */
-  private val dmType: StructType = StructType(Seq(
-    StructField("domain", StringType),
-    StructField("configuration", StringType),
-    StructField("removed", BooleanType)))
-
-  /** The live domain-metadata rows a checkpoint must retain (spec:
-    * dropping them would e.g. lose the row-tracking high-water mark
-    * after JSON-prefix cleanup and make the next append re-allocate
-    * already-burned row ids). Null action columns mirror `shape`.
+  /** The rows a checkpoint of `r` carries, as (file actions, the rest).
+    * The file actions are the add/remove winners — live deletion
+    * vectors and row-tracking identities survive (dropping them would
+    * resurrect every DV-deleted row, or strand readWithRowIds, after
+    * JSON-prefix cleanup). The rest is the head row (the table's
+    * `protocol` and `metaData`, plus `headExtra`), the newest `txn`
+    * per appId and the live domain metadata — the spec requires both,
+    * or [[lastTxnVersion]]'s exactly-once guard and the row-tracking
+    * high-water mark would be lost with the JSON prefix.
     */
-  private def domainMetadataRows(
-      spark: SparkSession, snap: Snapshot, shape: StructType): Option[DataFrame] =
-    if (snap.domainMetadata.isEmpty) None
-    else Some {
-      val rows = snap.domainMetadata.toSeq.sorted.map { case (d, c) =>
-        org.apache.spark.sql.Row.fromSeq(shape.fields.toSeq.map { f =>
-          if (f.name == "domainMetadata") org.apache.spark.sql.Row(d, c, false)
-          else null
-        })
+  private def checkpointRows(r: Replay, headExtra: (String, Row)*): (Seq[Row], Seq[Row]) = {
+    val files = r.winners.map { w =>
+      if (w.addPath == null)
+        checkpointRow("remove" -> Row(w.removePath, Option(w.removeTs).fold(0L)(_.longValue), true))
+      else {
+        val dv =
+          if (w.dvStorage == null) null
+          else Row(w.dvStorage, w.dvPath, w.dvOffset, w.dvSize, w.dvCardinality)
+        checkpointRow("add" -> Row(w.addPath, w.addPvals, Option(w.addSize).fold(0L)(_.longValue),
+          0L, true, w.addStats, w.addBaseRowId, w.addDefaultRcv, dv))
       }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), shape)
     }
+    val snap = r.snapshot
+    // the protocol row mirrors the TABLE's protocol — a DV'd table
+    // checkpoints as (3, 7) with its feature sets, not the writer's
+    // own floor
+    val reader = snap.readerVersion.getOrElse(1)
+    val writer = snap.writerVersion.getOrElse(if (reader >= 3) 7 else 2)
+    def feats(s: Set[String]): Seq[String] = if (s.isEmpty) null else s.toSeq.sorted
+    // the spec's metaData carries format + configuration — a real Delta
+    // reader rebuilding the snapshot from this checkpoint (after JSON
+    // cleanup) needs both, same as the append path
+    val head = checkpointRow(Seq(
+      "protocol" -> Row(reader, writer, feats(snap.readerFeatures), feats(snap.writerFeatures)),
+      "metaData" -> Row(snap.metaId.getOrElse("graft"), Row("parquet", Map.empty[String, String]),
+        snap.schemaString.getOrElse(""), snap.partitionColumns, snap.configuration)) ++
+      headExtra: _*)
+    val txns = r.txns.toSeq.sorted.map { case (app, v) => checkpointRow("txn" -> Row(app, v)) }
+    val domains = snap.domainMetadata.toSeq.sorted.map { case (d, c) =>
+      checkpointRow("domainMetadata" -> Row(d, c, false)) }
+    (files, head +: (txns ++ domains))
+  }
 
-  def writeCheckpoint(spark: SparkSession, tablePath: String): Long = {
-    val logDir = logDirOf(tablePath)
-    val fs = fsOf(spark, logDir)
-    // a table that has adopted the v2Checkpoint feature must not write
-    // classic checkpoints (spec) — delegate
-    if (snapshot(spark, tablePath, None).readerFeatures.contains("v2Checkpoint"))
-      return writeCheckpointV2(spark, tablePath)
-    val log = listLog(spark, tablePath)
-    val latest = (log.jsons.keySet ++ log.checkpoints.keySet).max
-    val acts = actions(spark, tablePath, None)
-    val winners = reconcile(acts)
-    val snap = snapshot(spark, tablePath, None)
-    val actionRows = fileActionRows(winners)
-      .withColumn("protocol", lit(null).cast(StructType(Seq(
-        StructField("minReaderVersion", IntegerType),
-        StructField("minWriterVersion", IntegerType),
-        StructField("readerFeatures", ArrayType(StringType)),
-        StructField("writerFeatures", ArrayType(StringType))))))
-      .withColumn("metaData", lit(null).cast(StructType(Seq(
-        StructField("id", StringType),
-        StructField("format", StructType(Seq(
-          StructField("provider", StringType),
-          StructField("options", MapType(StringType, StringType))))),
-        StructField("schemaString", StringType),
-        StructField("partitionColumns", ArrayType(StringType)),
-        StructField("configuration", MapType(StringType, StringType))))))
-      .withColumn("txn", lit(null).cast(StructType(Seq(
-        StructField("appId", StringType),
-        StructField("version", LongType)))))
-      .withColumn("domainMetadata", lit(null).cast(dmType))
-    // the checkpoint's protocol row mirrors the TABLE's protocol — a
-    // DV'd table checkpoints as (3, 7) with its feature sets, not the
-    // writer's own floor
-    val cpReader = snap.readerVersion.getOrElse(1)
-    val cpWriter = snap.writerVersion.getOrElse(if (cpReader >= 3) 7 else 2)
-    def featArray(s: Set[String]): Column =
-      if (s.isEmpty) lit(null).cast(ArrayType(StringType))
-      else array(s.toSeq.sorted.map(lit): _*)
-    val headRow = spark.range(1).select(
-      lit(null).cast(actionRows.schema("add").dataType).as("add"),
-      lit(null).cast(actionRows.schema("remove").dataType).as("remove"),
-      struct(
-        lit(cpReader).as("minReaderVersion"), lit(cpWriter).as("minWriterVersion"),
-        featArray(snap.readerFeatures).as("readerFeatures"),
-        featArray(snap.writerFeatures).as("writerFeatures")).as("protocol"),
-      struct(
-        lit(snap.metaId.getOrElse("graft")).as("id"),
-        // the spec's metaData carries format + configuration — a real
-        // Delta reader rebuilding the snapshot from this checkpoint
-        // (after JSON cleanup) needs both, same as the append path
-        struct(
-          lit("parquet").as("provider"),
-          typedLit(Map.empty[String, String]).as("options")).as("format"),
-        lit(snap.schemaString.getOrElse("")).as("schemaString"),
-        snap.partitionColumns match {
-          case Seq() => array().cast(ArrayType(StringType)).as("partitionColumns")
-          case ps => array(ps.map(lit): _*).as("partitionColumns")
-        },
-        typedLit(snap.configuration).as("configuration")).as("metaData"),
-      lit(null).cast(actionRows.schema("txn").dataType).as("txn"),
-      lit(null).cast(dmType).as("domainMetadata"))
-    // the spec requires checkpoints to retain the NEWEST txn per appId
-    // — dropping them here would silently break the exactly-once
-    // contract of [[lastTxnVersion]] after log cleanup
-    val txnRows = acts.filter(col("txn_app").isNotNull)
-      .groupBy(col("txn_app")).agg(max(col("txn_version")).as("v"))
-      .select(
-        lit(null).cast(actionRows.schema("add").dataType).as("add"),
-        lit(null).cast(actionRows.schema("remove").dataType).as("remove"),
-        lit(null).cast(actionRows.schema("protocol").dataType).as("protocol"),
-        lit(null).cast(actionRows.schema("metaData").dataType).as("metaData"),
-        struct(col("txn_app").as("appId"), col("v").as("version")).as("txn"),
-        lit(null).cast(dmType).as("domainMetadata"))
-    val cpBase = headRow.unionByName(actionRows).unionByName(txnRows)
-    val cpDf = domainMetadataRows(spark, snap, cpBase.schema)
-      .fold(cpBase)(cpBase.unionByName(_))
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new Path(tablePath, s"_cp_stage_$stamp")
-    cpDf.coalesce(1).write.parquet(stage.toString)
+  /** Land `rows`, cut to the first `width` columns of
+    * [[checkpointSchema]], as the single parquet `target`: written to
+    * a staging dir under the table root, then renamed into place.
+    */
+  private def writeCheckpointFile(
+      spark: SparkSession, fs: FileSystem, tablePath: String,
+      rows: Seq[Row], width: Int, target: Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    val stage = new Path(tablePath, s"_cp_stage_${java.util.UUID.randomUUID().toString.take(8)}")
+    spark.createDataFrame(rows.map(r => Row.fromSeq(r.toSeq.take(width))).asJava,
+        StructType(checkpointSchema.take(width)))
+      .coalesce(1).write.parquet(stage.toString)
     val part = fs.globStatus(new Path(stage, "part-*.parquet"))(0).getPath
-    val target = checkpointPath(logDir, latest)
     fs.delete(target, false)
     require(fs.rename(part, target), s"DeltaLog: checkpoint move failed for $part")
     fs.delete(stage, true)
-    val n = cpDf.count()
+  }
+
+  /** Write a classic single-part checkpoint of the CURRENT snapshot and
+    * point `_last_checkpoint` at it: live `add` rows (with partition
+    * values and real sizes), tombstone `remove` rows, the newest `txn`
+    * per appId, the live domain metadata, plus the `protocol` and
+    * `metaData` actions the spec requires every checkpoint to carry —
+    * so guards still fire after the JSON prefix is cleaned up. A table
+    * that has adopted v2Checkpoint gets [[writeCheckpointV2]] instead.
+    * The version is the one the replayed segment reaches, so a commit
+    * landing meanwhile cannot slip under its name. Returns the
+    * checkpointed version.
+    */
+  def writeCheckpoint(spark: SparkSession, tablePath: String): Long = {
+    val logDir = logDirOf(tablePath)
+    val fs = fsOf(spark, logDir)
+    val r = currentReplay(spark, tablePath)
+    // a table that has adopted the v2Checkpoint feature must not write
+    // classic checkpoints (spec) — delegate
+    if (r.snapshot.readerFeatures.contains("v2Checkpoint"))
+      return writeCheckpointV2(spark, tablePath)
+    val (files, rest) = checkpointRows(r)
+    val rows = rest ++ files
+    writeCheckpointFile(spark, fs, tablePath, rows, 6, checkpointPath(logDir, r.version))
     writeAtomic(fs, new Path(logDir, "_last_checkpoint"),
-      s"""{"version":$latest,"size":$n}""".getBytes("UTF-8"), overwrite = true)
-    latest
+      s"""{"version":${r.version},"size":${rows.size}}""".getBytes("UTF-8"), overwrite = true)
+    r.version
   }
 
   /** Write a V2 (UUID-named) checkpoint — the `v2Checkpoint` table
@@ -1594,142 +1543,59 @@ object DeltaLog {
     * `_delta_log/_sidecars/`, and the checkpoint file
     * `%020d.checkpoint.<uuid>.parquet` carries the spec-required
     * `checkpointMetadata` self-identification, the `sidecar` pointer
-    * rows, `protocol` + `metaData`, and the newest `txn` per appId.
-    * A table not yet declaring the feature gets a protocol-upgrade
-    * COMMIT first (readerVersion 3 / writerVersion 7 + v2Checkpoint,
-    * legacy implied features re-declared) — checkpoints themselves
-    * cannot change the protocol. `_last_checkpoint` then points at the
-    * version; [[probeCheckpoint]] locates the UUID name with one glob,
-    * so the no-listing fast path survives. Returns the checkpointed
-    * version (which is the upgrade commit's when one was needed).
+    * row, `protocol` + `metaData`, the newest `txn` per appId and the
+    * live domain metadata. A table not yet declaring the feature gets
+    * a protocol-upgrade COMMIT first (readerVersion 3 / writerVersion 7
+    * + v2Checkpoint, legacy implied features re-declared) — checkpoints
+    * themselves cannot change the protocol. `_last_checkpoint` then
+    * points at the version; [[probeCheckpoint]] locates the UUID name
+    * with one glob, so the no-listing fast path survives. Returns the
+    * checkpointed version (which is the upgrade commit's when one was
+    * needed).
     *
-    * Scale shape: identical to the classic writer — the sidecar is the
-    * same file-cardinality relation, written distributed and moved
-    * once; splitting actions across MANY sidecars (what Delta does at
-    * 10^6-file scale) would only change the coalesce(1).
+    * Scale shape: identical to the classic writer; splitting actions
+    * across MANY sidecars (what Delta does at 10^6-file scale) would
+    * only change how the file rows are cut.
     */
   def writeCheckpointV2(spark: SparkSession, tablePath: String): Long = {
     val logDir = logDirOf(tablePath)
     val fs = fsOf(spark, logDir)
-    val snap0 = snapshot(spark, tablePath, None)
-    if (!(snap0.readerVersion.exists(_ >= 3) && snap0.readerFeatures.contains("v2Checkpoint"))) {
-      val rf = (snap0.readerFeatures + "v2Checkpoint" ++
-        snap0.readerVersion.toSet.flatMap(legacyImpliedReaderFeatures) ++
-        (if (snap0.columnMappingMode != "none") Set("columnMapping") else Set.empty)).toSeq.sorted
-      val wf = (snap0.writerFeatures ++
-        snap0.writerVersion.toSet.flatMap(legacyImpliedWriterFeatures) ++
-        Set("appendOnly", "invariants", "v2Checkpoint")).toSeq.sorted
-      val line = actionLineStatic { root =>
-        val p = root.putObject("protocol")
-        p.put("minReaderVersion", 3); p.put("minWriterVersion", 7)
-        val rfa = p.putArray("readerFeatures"); rf.foreach(rfa.add)
-        val wfa = p.putArray("writerFeatures"); wf.foreach(wfa.add)
+    val r0 = currentReplay(spark, tablePath)
+    val snap0 = r0.snapshot
+    val r =
+      if (snap0.readerVersion.exists(_ >= 3) && snap0.readerFeatures.contains("v2Checkpoint")) r0
+      else {
+        val rf = (snap0.readerFeatures + "v2Checkpoint" ++
+          snap0.readerVersion.toSet.flatMap(legacyImpliedReaderFeatures) ++
+          (if (snap0.columnMappingMode != "none") Set("columnMapping") else Set.empty)).toSeq.sorted
+        val wf = (snap0.writerFeatures ++
+          snap0.writerVersion.toSet.flatMap(legacyImpliedWriterFeatures) ++
+          Set("appendOnly", "invariants", "v2Checkpoint")).toSeq.sorted
+        val line = actionLineStatic { root =>
+          val p = root.putObject("protocol")
+          p.put("minReaderVersion", 3); p.put("minWriterVersion", 7)
+          val rfa = p.putArray("readerFeatures"); rf.foreach(rfa.add)
+          val wfa = p.putArray("writerFeatures"); wf.foreach(wfa.add)
+        }
+        commitActions(fs, logDir, tablePath, _ => Seq(line))
+        currentReplay(spark, tablePath)
       }
-      commitActions(fs, logDir, tablePath, _ => Seq(line))
-    }
-    val log = listLog(spark, tablePath)
-    val latest = (log.jsons.keySet ++ log.checkpoints.keySet).max
-    val acts = actions(spark, tablePath, None)
-    val winners = reconcile(acts)
-    val snap = snapshot(spark, tablePath, None)
     val uuid = java.util.UUID.randomUUID().toString
-    // --- sidecar: the file actions, one parquet under _sidecars/
-    val fileRows = fileActionRows(winners)
+    val (files, rest) = checkpointRows(r, "checkpointMetadata" -> Row(r.version, null))
     val sidecarDir = new Path(logDir, "_sidecars")
     fs.mkdirs(sidecarDir)
-    val stage = new Path(tablePath, s"_cp_stage_${uuid.take(8)}")
-    fileRows.coalesce(1).write.parquet(stage.toString)
-    val part = fs.globStatus(new Path(stage, "part-*.parquet"))(0).getPath
     val sidecarName = s"$uuid.parquet"
     val sidecarPath = new Path(sidecarDir, sidecarName)
-    require(fs.rename(part, sidecarPath), s"DeltaLog: sidecar move failed for $part")
-    fs.delete(stage, true)
+    writeCheckpointFile(spark, fs, tablePath, files, 2, sidecarPath)
     val sidecarStat = fs.getFileStatus(sidecarPath)
-    // --- checkpoint file: protocol + metaData + txn + checkpointMetadata + sidecar
-    val addT = fileRows.schema("add").dataType
-    val removeT = fileRows.schema("remove").dataType
-    val protocolT = StructType(Seq(
-      StructField("minReaderVersion", IntegerType),
-      StructField("minWriterVersion", IntegerType),
-      StructField("readerFeatures", ArrayType(StringType)),
-      StructField("writerFeatures", ArrayType(StringType))))
-    val metaT = StructType(Seq(
-      StructField("id", StringType),
-      StructField("format", StructType(Seq(
-        StructField("provider", StringType),
-        StructField("options", MapType(StringType, StringType))))),
-      StructField("schemaString", StringType),
-      StructField("partitionColumns", ArrayType(StringType)),
-      StructField("configuration", MapType(StringType, StringType))))
-    val txnT = StructType(Seq(
-      StructField("appId", StringType), StructField("version", LongType)))
-    val cpMetaT = StructType(Seq(
-      StructField("version", LongType),
-      StructField("tags", MapType(StringType, StringType))))
-    val sidecarT = StructType(Seq(
-      StructField("path", StringType),
-      StructField("sizeInBytes", LongType),
-      StructField("modificationTime", LongType),
-      StructField("tags", MapType(StringType, StringType))))
-    def nulls(except: String*): Seq[Column] = {
-      val all = Seq(
-        "add" -> addT, "remove" -> removeT, "protocol" -> protocolT,
-        "metaData" -> metaT, "txn" -> txnT, "domainMetadata" -> dmType,
-        "checkpointMetadata" -> cpMetaT, "sidecar" -> sidecarT)
-      all.filterNot(kv => except.contains(kv._1))
-        .map { case (nm, t) => lit(null).cast(t).as(nm) }
-    }
-    def featArray(s: Set[String]): Column =
-      if (s.isEmpty) lit(null).cast(ArrayType(StringType))
-      else array(s.toSeq.sorted.map(lit): _*)
-    val headRow = spark.range(1).select(
-      (nulls("protocol", "metaData", "checkpointMetadata") ++ Seq(
-        struct(
-          lit(snap.readerVersion.getOrElse(3)).as("minReaderVersion"),
-          lit(snap.writerVersion.getOrElse(7)).as("minWriterVersion"),
-          featArray(snap.readerFeatures).as("readerFeatures"),
-          featArray(snap.writerFeatures).as("writerFeatures")).as("protocol"),
-        struct(
-          lit(snap.metaId.getOrElse("graft")).as("id"),
-          struct(
-            lit("parquet").as("provider"),
-            typedLit(Map.empty[String, String]).as("options")).as("format"),
-          lit(snap.schemaString.getOrElse("")).as("schemaString"),
-          snap.partitionColumns match {
-            case Seq() => array().cast(ArrayType(StringType)).as("partitionColumns")
-            case ps => array(ps.map(lit): _*).as("partitionColumns")
-          },
-          typedLit(snap.configuration).as("configuration")).as("metaData"),
-        struct(
-          lit(latest).as("version"),
-          lit(null).cast(MapType(StringType, StringType)).as("tags")).as("checkpointMetadata"))): _*)
-    val sidecarRow = spark.range(1).select(
-      (nulls("sidecar") :+ struct(
-        lit(sidecarName).as("path"),
-        lit(sidecarStat.getLen).as("sizeInBytes"),
-        lit(sidecarStat.getModificationTime).as("modificationTime"),
-        lit(null).cast(MapType(StringType, StringType)).as("tags")).as("sidecar")): _*)
-    val txnRows = acts.filter(col("txn_app").isNotNull)
-      .groupBy(col("txn_app")).agg(max(col("txn_version")).as("v"))
-      .select((nulls("txn") :+
-        struct(col("txn_app").as("appId"), col("v").as("version")).as("txn")): _*)
-    val order = Seq("add", "remove", "protocol", "metaData", "txn",
-      "domainMetadata", "checkpointMetadata", "sidecar").map(col)
-    val cpBase = headRow.select(order: _*)
-      .unionByName(sidecarRow.select(order: _*))
-      .unionByName(txnRows.select(order: _*))
-    val cpDf = domainMetadataRows(spark, snap, cpBase.schema)
-      .fold(cpBase)(cpBase.unionByName(_))
-    val stage2 = new Path(tablePath, s"_cp_stage_${uuid.take(8)}b")
-    cpDf.coalesce(1).write.parquet(stage2.toString)
-    val part2 = fs.globStatus(new Path(stage2, "part-*.parquet"))(0).getPath
-    val target = new Path(logDir, f"$latest%020d.checkpoint.$uuid.parquet")
-    require(fs.rename(part2, target), s"DeltaLog: checkpoint move failed for $part2")
-    fs.delete(stage2, true)
-    val n = cpDf.count() + fileRows.count()
+    val rows = rest :+ checkpointRow("sidecar" ->
+      Row(sidecarName, sidecarStat.getLen, sidecarStat.getModificationTime, null))
+    writeCheckpointFile(spark, fs, tablePath, rows, 8,
+      new Path(logDir, f"${r.version}%020d.checkpoint.$uuid.parquet"))
     writeAtomic(fs, new Path(logDir, "_last_checkpoint"),
-      s"""{"version":$latest,"size":$n}""".getBytes("UTF-8"), overwrite = true)
-    latest
+      s"""{"version":${r.version},"size":${rows.size + files.size}}""".getBytes("UTF-8"),
+      overwrite = true)
+    r.version
   }
 
   /** APPEND-ONLY writer twin: land `df` as one new protocol commit.
@@ -3573,7 +3439,9 @@ object DeltaLog {
   /** The table's current (latest) version. */
   def currentVersion(spark: SparkSession, tablePath: String): Long = {
     val log = listLog(spark, tablePath)
-    (log.jsons.keySet ++ log.checkpoints.keySet).max
+    val versions = log.jsons.keySet ++ log.checkpoints.keySet
+    require(versions.nonEmpty, s"DeltaLog: empty _delta_log under $tablePath")
+    versions.max
   }
 
   /** Incremental PULL of a Delta table — the polling streaming-source
@@ -3628,7 +3496,7 @@ object DeltaLog {
     // emit NO action for it and silently leave the post-target deletes
     // applied (r13 advice). With (path, dv) keys the DV swap restores
     // as a remove+add pair re-carrying the target's descriptor (the
-    // within-version add-wins tie-break in [[reconcile]] makes that
+    // within-version add-wins tie-break in [[replay]] makes that
     // pair the canonical DV-change commit shape).
     def fkey(f: DeltaFile): (String, Option[DeletionVectors.Descriptor]) = (f.path, f.dv)
     val currentKeys = current.files.map(fkey).toSet

@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.SparkSpec
 import graft.ext.{Similarity, TextOps}
@@ -23,6 +25,47 @@ class TextNativeSpec extends SparkSpec {
       (5L, "x")).toDF("doc_id", "text")
   }
   private def toks = TextOps.tokens(col("text"))
+
+  // Pure-builtin parity oracles of the native expressions: the DuckDB
+  // oracle SQL (`graft.queries.ExtFragments`) mirrors these forms.
+
+  /** Bit b is set iff the sum over tokens of ±1 (hex digit b of the
+    * token's md5 >= '8' means +1) is non-negative.
+    */
+  private def simhash16Declarative(toks: Column): Column =
+    (0 until 16).map { b =>
+      val contrib = transform(toks, t =>
+        when(substring(md5(t), b + 1, 1) >= "8", lit(1)).otherwise(lit(-1)))
+      val s = aggregate(contrib, lit(0), (acc, x) => acc + x)
+      when(s >= 0, lit(1 << b)).otherwise(lit(0))
+    }.reduce(_ + _)
+
+  /** Token → integer from the `ascii` codes of its md5's first 4 hex chars. */
+  private def tokenInt(t: Column): Column = {
+    val m = md5(t)
+    (ascii(substring(m, 1, 1)) * lit(1000000L) +
+      ascii(substring(m, 2, 1)) * lit(10000L) +
+      ascii(substring(m, 3, 1)) * lit(100L) +
+      ascii(substring(m, 4, 1))).cast(LongType)
+  }
+
+  private def rollingHashDeclarative(toks: Column): Column =
+    aggregate(toks, lit(0L), (acc, t) => (acc * 131L + tokenInt(t)) % 1000000007L)
+
+  /** ±1 hyperplane weight for (dimension i, plane j):
+    * ((i*1103515245 + j*12345) mod 65537) mod 2 == 0 → +1 else -1.
+    */
+  private def weight(i: Column, j: Int): Column =
+    when((i.cast("long") * 1103515245L + lit(j * 12345L)) % 65537L % 2L === 0L,
+      lit(1.0)).otherwise(lit(-1.0))
+
+  private def lshBucketDeclarative(emb: Column, planes: Int): Column =
+    (0 until planes).map { j =>
+      val proj = aggregate(
+        transform(emb, (x, i) => x.cast(DoubleType) * weight(i, j)),
+        lit(0.0), (acc, x) => acc + x)
+      when(proj >= 0, lit(1 << j)).otherwise(lit(0))
+    }.reduce(_ + _)
 
   private def assertSame(native: org.apache.spark.sql.Column, declarative: org.apache.spark.sql.Column): Unit = {
     val bad = docs.select(col("doc_id"), native.as("n"), declarative.as("d"))
@@ -52,10 +95,10 @@ class TextNativeSpec extends SparkSpec {
   }
 
   test("simhash16 == declarative simhash16")(
-    assertSame(TextOps.simhash16(toks), TextOps.simhash16Declarative(toks)))
+    assertSame(TextOps.simhash16(toks), simhash16Declarative(toks)))
 
   test("rolling_hash == declarative rollingHash")(
-    assertSame(TextOps.rollingHash(toks), TextOps.rollingHashDeclarative(toks)))
+    assertSame(TextOps.rollingHash(toks), rollingHashDeclarative(toks)))
 
   test("min_shingle == array_min of md5'd declarative shingles")(
     assertSame(
@@ -100,7 +143,7 @@ class TextNativeSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val bad = emb.select(
         Similarity.lshBucket(col("embedding"), 8).as("n"),
-        Similarity.lshBucketDeclarative(col("embedding"), 8).as("d"))
+        lshBucketDeclarative(col("embedding"), 8).as("d"))
       .filter(!(col("n") <=> col("d"))).collect()
     assert(bad.isEmpty)
   }

@@ -1372,6 +1372,57 @@ class DeltaLogSpec extends SparkSpec {
     assert(!logDir.list().exists(_.matches("""\d{20}\.checkpoint\.parquet""")))
   }
 
+  test("checkpoint round trip: classic and V2 checkpoints rebuild snapshot, txns and tombstones") {
+    import spark.implicits._
+    def rows(from: Long, to: Long) =
+      (from to to).map(i => (i, s"g${i % 3}", i * 1.5)).toDF("id", "g", "v")
+    // partitioned, a copy-on-write delete (tombstones), a DV delete and
+    // txn stamps from two appIds
+    def dvTable(): String = {
+      val t = newTable()
+      DeltaLog.append(spark, t, rows(1L, 12L), partitionBy = Seq("g"), txn = Some(("app-a", 1L)))
+      DeltaLog.append(spark, t, rows(13L, 18L), partitionBy = Seq("g"), txn = Some(("app-b", 7L)))
+      DeltaLog.delete(spark, t, col("id") === 2L, txn = Some(("app-a", 2L)))
+      DeltaLog.deleteWithDv(spark, t, col("id") === 4L, txn = Some(("app-b", 8L)))
+      t
+    }
+    // row tracking refuses deletes in this writer, so its tombstones
+    // come from a compaction
+    def rowTrackingTable(): String = {
+      val t = newTable()
+      DeltaLog.append(spark, t, rows(1L, 6L), partitionBy = Seq("g"), rowTracking = true,
+        txn = Some(("app-a", 3L)))
+      DeltaLog.append(spark, t, rows(7L, 12L), partitionBy = Seq("g"), txn = Some(("app-b", 5L)))
+      assert(DeltaLog.compact(spark, t) >= 0)
+      t
+    }
+    def roundTrip(t: String, v2: Boolean): Unit = {
+      val logDir = s"$t/_delta_log"
+      val cv = if (v2) DeltaLog.writeCheckpointV2(spark, t) else DeltaLog.writeCheckpoint(spark, t)
+      // time travel with every commit present replays the JSON alone
+      val before = DeltaLog.snapshot(spark, t, Some(cv))
+      val txnsBefore = Seq("app-a", "app-b").map(DeltaLog.lastTxnVersion(spark, t, _))
+      assert(txnsBefore.forall(_.isDefined), txnsBefore)
+      val removed = spark.read.json(s"$logDir/*.json")
+        .filter(col("remove").isNotNull).select("remove.path").as[String].collect().toSet
+      val tombstones = removed -- before.files.map(_.path)
+      assert(tombstones.nonEmpty)
+      (0L to cv).foreach(v => Files.delete(Paths.get(s"$logDir/" + f"$v%020d.json")))
+      assert(DeltaLog.snapshot(spark, t) == before)
+      assert(Seq("app-a", "app-b").map(DeltaLog.lastTxnVersion(spark, t, _)) == txnsBefore)
+      val fileActions =
+        if (v2) s"$logDir/_sidecars"
+        else s"$logDir/" + f"$cv%020d.checkpoint.parquet"
+      val removeRows = spark.read.parquet(fileActions)
+        .filter(col("remove").isNotNull).select("remove.path").as[String].collect().toSeq
+      assert(removeRows.sorted == tombstones.toSeq.sorted, s"v2=$v2")
+    }
+    for (v2 <- Seq(false, true)) {
+      roundTrip(dvTable(), v2)
+      roundTrip(rowTrackingTable(), v2)
+    }
+  }
+
   test("merge over DV-carrying files: dead rows neither match nor resurrect; rewrites come out clean") {
     import spark.implicits._
     val t = newTable()

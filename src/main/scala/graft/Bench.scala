@@ -267,7 +267,9 @@ object Bench {
         p(name) * (RefCalibrationS / cal) }.sorted
       scaled(scaled.length / 2)
     }.sum
-    val skew = try skewBench(spark, sfDir) catch { case _: Throwable => Nil }
+    // a throwing A/B is recorded as a failure, like a throwing query
+    var skew: Seq[(String, Double)] = Nil
+    attempt("skew", "skew_ab") { skew = skewBench(spark, sfDir) }
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val medianPassTotal = passTotals.sorted.apply(passTotals.length / 2)
     val storeBuild = math.max(0.0, prebuildPass - medianPassTotal)

@@ -550,12 +550,12 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
 
   /** Serving-path candidates for the novel queries: centroid-assign
     * against the stored pivot, probe the top-`nprobe` stored cells
-    * ([[ivfServeNprobe]] unless overridden by the sweep harness),
+    * ([[ivfServeNprobe]] unless the caller overrides it),
     * dedup replicated candidates by (query, vec). Shared by the
     * top-k serving query and the recall measurement.
     */
   /** Serving nprobe scales with the cell count: nprobe =
-    * max(4, round(k/3)). The r8 sweep (`IvfProbeSweep`, sf0.1, k=45,
+    * max(4, round(k/3)). An r8 offline sweep (sf0.1, k=45,
     * 24 distinct novel queries) measured the recall-vs-nprobe curve:
     * 2→0.25, 4→0.50, 6→0.58, 8→0.67, 10→0.71, 12→0.83, 16→0.96
     * (since r9 the {2,4,8} points are a hash-checked oracle query,
@@ -633,9 +633,8 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
       .repartition(col("query_id"))
       .groupBy("query_id", "vec_id").agg(max(col("cos")).as("cos"))
 
-  private[queries] def novelCandidates(spark: SparkSession, dir: String,
-      nprobeOverride: Option[Int] = None): DataFrame =
-    servingCandidates(spark, dir, novelQueries(spark), nprobeOverride)
+  private[queries] def novelCandidates(spark: SparkSession, dir: String): DataFrame =
+    servingCandidates(spark, dir, novelQueries(spark), nprobeOverride = None)
 
   /** PUBLIC online-serving entry: top-[[NovelQueryK]] ANN results for
     * an arbitrary (query_id, embedding) query relation against the
@@ -656,14 +655,10 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
       .select("query_id", "rank", "vec_id", "cos")
   }
 
-  def xAnnQueryNovel(spark: SparkSession, dir: String): DataFrame =
-    annQueryNovelAt(spark, dir, nprobeOverride = None)
-
-  private[queries] def annQueryNovelAt(spark: SparkSession, dir: String,
-      nprobeOverride: Option[Int]): DataFrame = {
+  def xAnnQueryNovel(spark: SparkSession, dir: String): DataFrame = {
     val byQuery = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("vec_id"))
-    novelCandidates(spark, dir, nprobeOverride)
+    novelCandidates(spark, dir)
       .withColumn("rank", row_number().over(byQuery).cast(LongType))
       .filter(col("rank") <= NovelQueryK)
       .select("query_id", "rank", "vec_id", "cos")
@@ -685,8 +680,18 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
     * |Q|·corpus (the measurement cost, sampled exactly like this at
     * real scale); the served leg reuses the stored-index probe.
     */
-  def xAnnNovelRecall(spark: SparkSession, dir: String): DataFrame =
-    annNovelRecallAt(spark, dir, nprobeOverride = None)
+  def xAnnNovelRecall(spark: SparkSession, dir: String): DataFrame = {
+    val exact = novelExactTop1(spark, dir)
+    val served = xAnnQueryNovel(spark, dir)
+      .filter(col("rank") === 1L)
+      .select(col("query_id"), col("vec_id").as("ann_id"))
+    exact.join(served, Seq("query_id"), "left")
+      .agg(
+        count(lit(1)).as("n_queries"),
+        sum(when(col("ann_id") === col("exact_id"), 1L).otherwise(0L)).as("n_matched"))
+      .select(col("n_queries"), col("n_matched"),
+        (col("n_matched").cast(DoubleType) / col("n_queries").cast(DoubleType)).as("recall"))
+  }
 
   /** Brute-force exact top-1 for the novel query set — the
     * measurement leg (|Q|·corpus by contract) shared by the FP and
@@ -707,20 +712,6 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
       .withColumn("rn", row_number().over(byQuery))
       .filter(col("rn") === 1)
       .select(col("query_id"), col("vec_id").as("exact_id"))
-  }
-
-  private[queries] def annNovelRecallAt(spark: SparkSession, dir: String,
-      nprobeOverride: Option[Int]): DataFrame = {
-    val exact = novelExactTop1(spark, dir)
-    val served = annQueryNovelAt(spark, dir, nprobeOverride)
-      .filter(col("rank") === 1L)
-      .select(col("query_id"), col("vec_id").as("ann_id"))
-    exact.join(served, Seq("query_id"), "left")
-      .agg(
-        count(lit(1)).as("n_queries"),
-        sum(when(col("ann_id") === col("exact_id"), 1L).otherwise(0L)).as("n_matched"))
-      .select(col("n_queries"), col("n_matched"),
-        (col("n_matched").cast(DoubleType) / col("n_queries").cast(DoubleType)).as("recall"))
   }
 
   /** The recall-vs-nprobe CURVE as a first-class oracle query — the
@@ -909,7 +900,7 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
     // actually applied if the stored set ever changed).
     val ts = annTombstones(spark, dir)
       .select(col("vec_id"), lit(1L).as("is_ts"))
-    val top = novelCandidates(spark, dir, nprobeOverride = None)
+    val top = novelCandidates(spark, dir)
       .join(broadcast(ts), Seq("vec_id"), "left")
       .groupBy("query_id")
       .agg(
@@ -1371,7 +1362,7 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
     val sq8 = xAnnSq8(spark, dir)
       .filter(col("rank") === 1L)
       .select(col("query_id"), col("vec_id").as("sq8_id"))
-    val fp = annQueryNovelAt(spark, dir, None)
+    val fp = xAnnQueryNovel(spark, dir)
       .filter(col("rank") === 1L)
       .select(col("query_id"), col("vec_id").as("fp_id"))
     novelExactTop1(spark, dir)

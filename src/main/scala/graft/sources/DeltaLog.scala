@@ -38,10 +38,12 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: the action replay runs ON THE DRIVER ([[replay]]) —
   * JSON commits parse with Jackson, the checkpoint parquet is read by
-  * one Spark job and collected, and the last-action-per-path
-  * reconciliation is a plain group-by over the FILE-CARDINALITY action
-  * list (a 100 TB table is ~10^5-10^6 add actions — metadata-sized;
-  * the same driver-memory contract Delta's own snapshot replay has).
+  * one Spark job and collected once per process (later replays of the
+  * same file take its decoded actions from a bounded cache), and the
+  * last-action-per-path reconciliation is a plain group-by over the
+  * FILE-CARDINALITY action list (a 100 TB table is ~10^5-10^6 add
+  * actions — metadata-sized; the same driver-memory contract Delta's
+  * own snapshot replay has).
   * Reads, txn lookups and both checkpoint writers share that one
   * replay. When `_last_checkpoint` exists the current-snapshot path never
   * LISTS the log directory at all: it reads the pointer and probes
@@ -341,7 +343,10 @@ object DeltaLog {
     * checkpoint still evaluates the reader-feature guard and still
     * learns the partition columns. A checkpoint MISSING those columns
     * is malformed and refused loudly — silently substituting null here
-    * is exactly the guard bypass the r11 verdict flagged.
+    * is exactly the guard bypass the r11 verdict flagged. [[replay]]
+    * calls this only on a [[checkpointCache]] miss, so these guards run
+    * on a file's first decode and again whenever it is rewritten; the
+    * returned frame costs one Spark job when collected.
     */
   private def checkpointActions(
       spark: SparkSession, version: Long, ref: CheckpointRef, logDir: Path): DataFrame = {
@@ -519,9 +524,9 @@ object DeltaLog {
     * no scale — it cost 1 `read.json` + 3 actions PER SNAPSHOT (guard
     * aggregate, metaData head, reconcile collect), the dominant fixed
     * cost of every Delta read at bench scale and pure scheduler
-    * overhead at cluster scale. Checkpoint parquet still reads through
-    * Spark (one job), commits parse with Jackson like [[cdfFrames]]
-    * always has.
+    * overhead at cluster scale. A checkpoint is decoded once per
+    * process (one Spark job on first use, then [[checkpointCache]]);
+    * commits parse with Jackson like [[cdfFrames]] always has.
     */
   private final case class Act(
       addPath: String, addPvals: Map[String, String], addSize: java.lang.Long,
@@ -663,17 +668,44 @@ object DeltaLog {
   private final case class Replay(
       version: Long, winners: Seq[Act], txns: Map[String, Long], snapshot: Snapshot)
 
-  /** Replay `seg`: the checkpoint anchor (when one exists) collected
-    * through one parquet read, the JSON commits Jackson-parsed straight
-    * off the filesystem (zero Spark jobs), then the protocol guard,
-    * metaData pick, per-path reconciliation and domain-metadata
-    * resolution as plain Scala over the metadata-sized action list.
+  /** Upper bound on the checkpoint actions [[checkpointCache]] holds:
+    * a table of 10^5 files, about 100 MB of driver heap at ~1 KB of
+    * stats per add. A larger checkpoint is decoded on every replay.
+    */
+  private val CheckpointCacheMaxActions = 100000
+
+  /** Decoded checkpoint actions for the whole process, keyed on the
+    * checkpoint version plus each part file's qualified path, length
+    * and modification time. Checkpoints are immutable by protocol;
+    * length and mtime still catch a file rewritten in place, which is
+    * then decoded (and guarded) again. A V2 checkpoint keys on its
+    * top-level file alone: its sidecars are UUID-named, immutable and
+    * referenced only from that file. The value is plain data read from
+    * the files, never session state, so every session shares it — the
+    * snapshot reuse of Delta's own `DeltaLog.forTable`.
+    */
+  private val checkpointCache =
+    new CheckpointCache[(Long, Seq[(String, Long, Long)]), Act](CheckpointCacheMaxActions)
+
+  /** Replay `seg`: the checkpoint anchor (when one exists) from
+    * [[checkpointCache]], decoded through one parquet read only the
+    * first time the process meets that file; the JSON commits
+    * Jackson-parsed straight off the filesystem (zero Spark jobs); then
+    * the protocol guard, metaData pick, per-path reconciliation and
+    * domain-metadata resolution as plain Scala over the metadata-sized
+    * action list. The guard and everything after it run on every call,
+    * hit or miss.
     */
   private def replay(spark: SparkSession, tablePath: String, seg: LogSegment): Replay = {
     val logDir = logDirOf(tablePath)
     val fs = fsOf(spark, logDir)
     val cpActs = seg.checkpoint.toSeq.flatMap { case (c, ref) =>
-      checkpointActions(spark, c, ref, logDir).collect().map(actFromRow).toSeq
+      val parts = ref.paths.map { p =>
+        val st = fs.getFileStatus(new Path(p))
+        (fs.makeQualified(st.getPath).toString, st.getLen, st.getModificationTime)
+      }
+      checkpointCache.getOrDecode((c, parts))(
+        checkpointActions(spark, c, ref, logDir).collect().map(actFromRow).toSeq)
     }
     val jsonActs = seg.commits.sortBy(_._1).flatMap { case (v, p) =>
       // a DIRECTORY squatting on a commit-file name (the occupied-slot

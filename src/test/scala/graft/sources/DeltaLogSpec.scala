@@ -1423,6 +1423,132 @@ class DeltaLogSpec extends SparkSpec {
     }
   }
 
+  /** `body`'s value and the Spark jobs it starts from this thread. */
+  private def withJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    val out =
+      try body
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    (out, jobs.get)
+  }
+
+  /** A partitioned table of ids 1-8 in four files, checkpointed at v1
+    * and not yet read since.
+    */
+  private def checkpointedTable(): String = {
+    import spark.implicits._
+    val t = newTable()
+    def rows(ids: Seq[Long]) = ids.map(i => (i, s"g${i % 2}")).toDF("id", "g").coalesce(1)
+    DeltaLog.append(spark, t, rows(1L to 4L), partitionBy = Seq("g"), txn = Some(("app", 1L)))
+    DeltaLog.append(spark, t, rows(5L to 8L), partitionBy = Seq("g"), txn = Some(("app", 2L)))
+    assert(DeltaLog.writeCheckpoint(spark, t) == 1L)
+    t
+  }
+
+  private def ids(t: String): Seq[Long] = {
+    import spark.implicits._
+    DeltaLog.read(spark, t).select("id").as[Long].collect().toSeq.sorted
+  }
+
+  test("checkpoint cache: decoded once per process, a second snapshot runs no Spark job") {
+    val t = checkpointedTable()
+    val (first, firstJobs) = withJobs(DeltaLog.snapshot(spark, t))
+    val (second, secondJobs) = withJobs(DeltaLog.snapshot(spark, t))
+    assert(firstJobs == 1)
+    assert(secondJobs == 0)
+    assert(second == first)
+    assert(first.files.size == 4)
+  }
+
+  test("checkpoint cache: a checkpoint rewritten in place is decoded again and refused") {
+    import spark.implicits._
+    val t = checkpointedTable()
+    assert(ids(t) == (1L to 8L))
+    // the same path now holds a checkpoint with add rows only
+    val cp = new org.apache.hadoop.fs.Path(s"$t/_delta_log/" + f"${1L}%020d" + ".checkpoint.parquet")
+    val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("x.parquet").toDF("p")
+      .select(struct(col("p").as("path"), lit(1L).as("size")).as("add"))
+      .coalesce(1).write.parquet(s"$t/_cpstage")
+    val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$t/_cpstage/part-*.parquet"))(0)
+    assert(fs.getFileStatus(cp).getLen != part.getLen)
+    assert(fs.delete(cp, false) && fs.rename(part.getPath, cp))
+    val e = intercept[IllegalArgumentException](DeltaLog.snapshot(spark, t))
+    assert(e.getMessage.contains("malformed checkpoint"), e.getMessage)
+  }
+
+  test("checkpoint cache: reads, snapshot and txns stay right across checkpoint, vacuum and restore") {
+    val t = checkpointedTable()
+    val atV1 = DeltaLog.snapshot(spark, t).files.map(_.path).toSet
+    assert(ids(t) == (1L to 8L))
+    assert(DeltaLog.lastTxnVersion(spark, t, "app") == Some(2L))
+    // v2 rewrites v0's two files without ids 1 and 2
+    DeltaLog.delete(spark, t, col("id") <= 2L, txn = Some(("app", 3L)))
+    assert(ids(t) == (3L to 8L))
+    assert(DeltaLog.writeCheckpoint(spark, t) == 2L)
+    assert(ids(t) == (3L to 8L))
+    assert(DeltaLog.lastTxnVersion(spark, t, "app") == Some(3L))
+    // v3 restores v1's files over the checkpoint at v2
+    assert(DeltaLog.restore(spark, t, 1L) == 3L)
+    assert(ids(t) == (1L to 8L))
+    assert(DeltaLog.snapshot(spark, t).files.map(_.path).toSet == atV1)
+    assert(DeltaLog.lastTxnVersion(spark, t, "app") == Some(3L))
+    // the delete's rewritten files are no longer live: vacuum reclaims them
+    assert(DeltaLog.vacuum(spark, t, retainMs = 0L, force = true) == 2L)
+    assert(DeltaLog.writeCheckpoint(spark, t) == 3L)
+    assert(ids(t) == (1L to 8L))
+    assert(DeltaLog.snapshot(spark, t).files.map(_.path).toSet == atV1)
+    assert(DeltaLog.snapshot(spark, t, Some(1L)).files.map(_.path).toSet == atV1)
+    assert(DeltaLog.lastTxnVersion(spark, t, "app") == Some(3L))
+  }
+
+  test("checkpoint cache: two threads reading one table together get equal snapshots") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val t = checkpointedTable()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val both = Seq.fill(2)(Future {
+      start.await()
+      (DeltaLog.snapshot(spark, t), ids(t))
+    })
+    start.countDown()
+    val Seq(a, b) = both.map(Await.result(_, 2.minutes))
+    assert(a == b)
+    assert(a._1 == DeltaLog.snapshot(spark, t))
+    assert(a._2 == (1L to 8L))
+  }
+
+  test("checkpoint cache: bounded by action count, evicting least recently used entries") {
+    val cache = new CheckpointCache[String, Int](4)
+    var decodes = 0
+    def get(k: String, n: Int): Seq[Int] = cache.getOrDecode(k) { decodes += 1; Seq.fill(n)(n) }
+    get("a", 2); get("b", 1); get("a", 2) // holds a, b; a most recent
+    assert(decodes == 2)
+    get("c", 2) // 5 > 4: evicts b, the least recently used
+    get("a", 2); get("c", 2)
+    assert(decodes == 3)
+    get("b", 1) // decoded again; evicts a
+    assert(decodes == 4)
+    get("big", 5); get("big", 5) // over the bound: never kept
+    assert(decodes == 6)
+    get("c", 2); get("b", 1)
+    assert(decodes == 6)
+  }
+
   test("merge over DV-carrying files: dead rows neither match nor resurrect; rewrites come out clean") {
     import spark.implicits._
     val t = newTable()

@@ -4,6 +4,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.CRC32
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.roaringbitmap.RoaringBitmap
 
 /** Delta Lake DELETION VECTORS — the storage layer for row-level
   * deletes without rewriting data files (delta.io PROTOCOL.md,
@@ -25,7 +26,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     array (sorted uint16s), bitset (1024 uint64s) or run
   *     (count + [start, length] uint16 pairs) containers. Bitmap `i`
   *     holds the low 32 bits of the 64-bit values whose high 32 bits
-  *     equal `i`. The writer emits array/bitset containers only (always
+  *     equal `i`. The 32-bit bitmaps are `org.roaringbitmap`'s own
+  *     codec; the writer emits array/bitset containers only (always
   *     legal); the reader accepts run containers too.
   *  3. '''The DV file''' — a 1-byte format version (1), then each
   *     vector at its descriptor's `offset`: a BIG-endian int32 data
@@ -102,8 +104,6 @@ object DeletionVectors {
   private val MagicNumber = 1681511377
   private val SerialCookieNoRun = 12346
   private val SerialCookie = 12347
-  private val NoOffsetThreshold = 4
-  private val ArrayMaxCardinality = 4096
 
   /** Serialize sorted distinct non-negative longs as a portable
     * RoaringBitmapArray. Bitmaps are indexed DENSELY by the high
@@ -112,45 +112,14 @@ object DeletionVectors {
     */
   def serialize(positions: Array[Long]): Array[Byte] = {
     require(positions.forall(_ >= 0), "DV: negative row position")
-    val sorted = positions.distinct.sorted
-    val nBitmaps = if (sorted.isEmpty) 0L else (sorted.last >>> 32) + 1
-    val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-      out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-    }
-    def le64(v: Long): Unit = { le32(v.toInt); le32((v >>> 32).toInt) }
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    le32(MagicNumber)
-    le64(nBitmaps)
-    var b = 0L
-    var idx = 0
-    while (b < nBitmaps) {
-      // the slice of values whose high 32 bits == b, as unsigned ints
-      val lo = idx
-      while (idx < sorted.length && (sorted(idx) >>> 32) == b) idx += 1
-      val vals = sorted.slice(lo, idx).map(v => (v & 0xffffffffL).toInt)
-      // group into 16-bit-key containers
-      val byKey = vals.groupBy(v => v >>> 16).toSeq.sortBy(_._1)
-      le32(SerialCookieNoRun)
-      le32(byKey.length)
-      byKey.foreach { case (k, vs) => le16(k); le16(vs.length - 1) }
-      // offset header (always present for the no-run cookie)
-      var off = 4 + 4 + 4 * byKey.length + 4 * byKey.length
-      byKey.foreach { case (_, vs) =>
-        le32(off)
-        off += (if (vs.length > ArrayMaxCardinality) 8192 else 2 * vs.length)
-      }
-      byKey.foreach { case (_, vs) =>
-        if (vs.length > ArrayMaxCardinality) {
-          val words = new Array[Long](1024)
-          vs.foreach { v => val low = v & 0xffff; words(low >>> 6) |= (1L << (low & 63)) }
-          words.foreach(le64)
-        } else vs.foreach(v => le16(v & 0xffff))
-      }
-      b += 1
-    }
-    out.toByteArray
+    val nBitmaps = if (positions.isEmpty) 0 else (positions.max >>> 32).toInt + 1
+    val bitmaps = Array.fill(nBitmaps)(new RoaringBitmap)
+    positions.foreach(p => bitmaps((p >>> 32).toInt).add(p.toInt))
+    val out = ByteBuffer.allocate(12 + bitmaps.map(_.serializedSizeInBytes).sum)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    out.putInt(MagicNumber).putLong(nBitmaps.toLong)
+    bitmaps.foreach(_.serialize(out))
+    out.array()
   }
 
   /** Deserialize a portable RoaringBitmapArray to sorted long
@@ -167,71 +136,31 @@ object DeletionVectors {
     val acc = scala.collection.mutable.ArrayBuilder.make[Long]
     var b = 0L
     while (b < nBitmaps) {
-      val high = b << 32
-      val start = buf.position()
-      val cookie = buf.getInt
-      val (nContainers, runFlags) =
-        if ((cookie & 0xffff) == SerialCookie) {
-          val n = (cookie >>> 16) + 1
-          val flags = new Array[Byte]((n + 7) / 8)
-          buf.get(flags)
-          (n, flags)
-        } else {
-          require(cookie == SerialCookieNoRun,
-            s"DV: unknown RoaringBitmap cookie $cookie")
-          (buf.getInt, null)
-        }
-      def isRun(i: Int): Boolean =
-        runFlags != null && (runFlags(i / 8) & (1 << (i % 8))) != 0
-      val keys = new Array[Int](nContainers)
-      val cards = new Array[Int](nContainers)
-      var i = 0
-      while (i < nContainers) {
-        keys(i) = buf.getShort & 0xffff
-        cards(i) = (buf.getShort & 0xffff) + 1
-        i += 1
-      }
-      val hasOffsets = runFlags == null || nContainers >= NoOffsetThreshold
-      val offsets = if (hasOffsets) Array.fill(nContainers)(buf.getInt) else null
-      i = 0
-      while (i < nContainers) {
-        if (offsets != null) buf.position(start + offsets(i))
-        val keyBase = high | (keys(i).toLong << 16)
-        if (isRun(i)) {
-          val nRuns = buf.getShort & 0xffff
-          var r = 0
-          while (r < nRuns) {
-            val s = buf.getShort & 0xffff
-            val len = buf.getShort & 0xffff
-            var v = s
-            while (v <= s + len) { acc += (keyBase | v); v += 1 }
-            r += 1
-          }
-        } else if (cards(i) > ArrayMaxCardinality) {
-          var w = 0
-          while (w < 1024) {
-            var word = buf.getLong
-            var bit = 0
-            while (word != 0) {
-              val t = java.lang.Long.numberOfTrailingZeros(word)
-              bit += t
-              acc += (keyBase | (w * 64 + bit))
-              word = word >>> t >>> 1
-              bit += 1
-            }
-            w += 1
-          }
-        } else {
-          var v = 0
-          while (v < cards(i)) { acc += (keyBase | (buf.getShort & 0xffff)); v += 1 }
-        }
-        i += 1
-      }
+      readBitmap32(buf, b << 32, acc, "DV")
       b += 1
     }
     val arr = acc.result()
     java.util.Arrays.sort(arr)
     arr
+  }
+
+  /** Read one standard 32-bit RoaringBitmap (the published format both
+    * Delta's and Iceberg's 64-bit vectors embed) at `buf`'s position,
+    * append its values, each under the 32 `high` bits, to `acc`, and
+    * advance `buf` past it. A stream that starts with neither cookie
+    * is refused before the decoder sees it.
+    */
+  private[sources] def readBitmap32(
+      buf: ByteBuffer, high: Long,
+      acc: scala.collection.mutable.ArrayBuilder[Long], label: String): Unit = {
+    val cookie = buf.getInt(buf.position())
+    require(cookie == SerialCookieNoRun || (cookie & 0xffff) == SerialCookie,
+      s"$label: unknown RoaringBitmap cookie $cookie")
+    val bitmap = new RoaringBitmap
+    bitmap.deserialize(buf)
+    buf.position(buf.position() + bitmap.serializedSizeInBytes)
+    val values = bitmap.getIntIterator
+    while (values.hasNext) acc += (high | (values.next() & 0xffffffffL))
   }
 
   // ------------------------------------------------------ DV file I/O

@@ -2,7 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -959,44 +959,17 @@ object DeltaLog {
     else new Path(tablePath, decoded).toString
   }
 
-  /** True iff every live file sits under a `col=value/...` chain that
-    * matches its `add.partitionValues` exactly — the precondition for
-    * the single-scan basePath read (directory names are a CONVENTION;
-    * the log is truth, so the fast path is only taken when the two
-    * agree for every file).
-    */
-  private def hiveConsistent(snap: Snapshot): Boolean =
-    snap.files.forall { f =>
-      val rel = decodePath(f.path)
-      if (rel.contains("://") || new Path(rel).isAbsolute) false
-      else {
-        val segs = rel.split('/').dropRight(1)
-        segs.length == snap.partitionColumns.length &&
-          snap.partitionColumns.zip(segs).forall { case (c, seg) =>
-            seg.split("=", 2) match {
-              case Array(k, v) if k == c =>
-                val expect = f.partitionValues.get(c).flatMap(Option(_))
-                if (v == "__HIVE_DEFAULT_PARTITION__") expect.isEmpty
-                else expect.contains(unescapePathName(v))
-              case _ => false
-            }
-          }
-      }
-    }
-
   /** Read a Delta table snapshot as a DataFrame: log replay → live-file
-    * list → ordinary parquet scan(s), with the `metaData.schemaString`
-    * as the DECLARED scan schema when present (no inference pass).
+    * list → ONE parquet scan over a [[LogFileIndex]] built from that
+    * list, with the `metaData.schemaString` as the DECLARED scan schema
+    * when present (no inference pass).
     *
     * Partitioned tables: partition values live in `add.partitionValues`
-    * — not in the data files — so each distinct partition tuple becomes
-    * one scan branch with its values attached as foldable literal
-    * columns (cast per the declared schema), unioned in deterministic
-    * order. A filter on a partition column constant-folds to `false` on
-    * non-matching branches and the optimizer drops them wholesale —
-    * partition pruning of FILES, pinned by `PlanAuditSpec`. The branch
-    * count is the table's distinct-partition count: metadata-sized by
-    * the same contract as the log replay itself.
+    * — not in the data files or the directory names — and the index
+    * hands them to Spark typed per the declared schema. A filter on a
+    * partition column lands as a native `PartitionFilters` and the
+    * index drops non-matching files at planning time — partition
+    * pruning of FILES, pinned by `PlanAuditSpec`.
     */
   def read(
       spark: SparkSession, tablePath: String, versionAsOf: Option[Long] = None): DataFrame = {
@@ -1004,60 +977,10 @@ object DeltaLog {
     require(snap.files.nonEmpty,
       s"DeltaLog: snapshot of $tablePath" +
         versionAsOf.fold("")(v => s" at version $v") + " has no live data files")
-    snap.columnMappingMode match {
-      case "none" => ()
-      case "name" | "id" =>
-        // the mapped scan path composes with deletion vectors: the DV
-        // anti-join keys on `_metadata.row_index` + file identity,
-        // both orthogonal to the physical->logical projection
-        return (if (snap.files.exists(_.dv.isDefined)) readWithDv(spark, tablePath, snap)
-                else readSnapshotFiles(spark, tablePath, snap, snap.files,
-                  addFileColumn = false))
-      case other => throw new IllegalArgumentException(
-        s"DeltaLog: column mapping mode '$other' is not supported — " +
-          "'name' (physical renames) and 'id' (parquet field ids) are implemented")
-    }
-    if (snap.files.exists(_.dv.isDefined)) return readWithDv(spark, tablePath, snap)
-    val declared = snap.schema
-    if (snap.partitionColumns.isEmpty) {
-      val reader = declared.fold(spark.read)(s => spark.read.schema(s))
-      reader.parquet(snap.files.map(f => resolve(tablePath, f.path)): _*)
-    } else if (declared.isDefined && hiveConsistent(snap)) {
-      // FAST PATH: when every file's col=value directory chain agrees
-      // with its add.partitionValues (checked file-by-file on the
-      // metadata-sized list) and the schema is declared, ONE basePath
-      // scan serves the whole table — native partition pruning, a
-      // single relation instead of a per-partition union (the branch
-      // plan is fine at 10^2 partitions, not at 10^4), and NO
-      // directory-name type inference (the user-specified schema types
-      // the partition columns, so a zero-padded "03" string stays a
-      // string). The final select re-asserts schemaString order.
-      val s = declared.get
-      spark.read.schema(s).option("basePath", tablePath)
-        .parquet(snap.files.map(f => resolve(tablePath, f.path)): _*)
-        .select(s.fieldNames.map(col).toSeq: _*)
-    } else {
-      val pcols = snap.partitionColumns
-      val dataSchema = declared.map(s => StructType(s.filterNot(f => pcols.contains(f.name))))
-      val ptypes: Map[String, DataType] =
-        declared.map(_.filter(f => pcols.contains(f.name)).map(f => f.name -> f.dataType).toMap)
-          .getOrElse(Map.empty)
-      def reader: DataFrameReader = dataSchema.fold(spark.read)(s => spark.read.schema(s))
-      val groups = snap.files.groupBy(_.partitionValues).toSeq
-        .sortBy { case (pv, _) => pcols.map(c => pv.getOrElse(c, "")).mkString("\u0001") }
-      val branches = groups.map { case (pv, fs) =>
-        val base = reader.parquet(fs.map(f => resolve(tablePath, f.path)): _*)
-        pcols.foldLeft(base) { (d, c) =>
-          val t = ptypes.getOrElse(c, StringType)
-          pv.get(c).flatMap(Option(_)) match {
-            case Some(v) => d.withColumn(c, lit(v).cast(t))
-            case None => d.withColumn(c, lit(null).cast(t))
-          }
-        }
-      }
-      val unioned = branches.reduce(_.unionByName(_))
-      declared.fold(unioned)(s => unioned.select(s.fieldNames.map(col).toSeq: _*))
-    }
+    // the DV anti-join keys on `_metadata.row_index` + file identity,
+    // both orthogonal to the column-mapping projection
+    if (snap.files.exists(_.dv.isDefined)) readWithDv(spark, tablePath, snap)
+    else readSnapshotFiles(spark, tablePath, snap, snap.files, addFileColumn = false)
   }
 
   private def hasNestedStruct(dt: DataType): Boolean = dt match {
@@ -1067,25 +990,6 @@ object DeltaLog {
     case _ => false
   }
 
-  /** Read a file SUBSET of a COLUMN-MAPPED table (r12 verdict item:
-    * any table written by 2023+ Databricks defaults to `name` mode;
-    * `CONVERT TO DELTA` over Iceberg produces `id` mode):
-    *  - `name` mode: data files carry PHYSICAL column names (the
-    *    per-field `delta.columnMapping.physicalName` the protocol
-    *    stores inside schemaString) — scan with the physical schema,
-    *    alias back to logical names;
-    *  - `id` mode: columns resolve by PARQUET FIELD ID (the file's
-    *    column names are whatever the original writer used) — the read
-    *    schema carries `parquet.field.id` metadata and Spark's own
-    *    field-id resolution does the matching, so the fields come back
-    *    already under their logical names.
-    * In BOTH modes `add.partitionValues` is keyed by physical names
-    * while `metaData.partitionColumns` stays logical. Nested structs
-    * would need recursive renames — refused loudly rather than
-    * half-read. `__file`/`__pos` provenance columns attach exactly as
-    * in the unmapped scan, so deletion vectors and the copy-on-write
-    * rewrite scans compose unchanged.
-    */
   /** Enable parquet field-id READ resolution for this session, once.
     * Spark reads this flag from the SESSION conf at scan-build time
     * (`ParquetFileFormat` overwrites the per-relation hadoop conf with
@@ -1101,59 +1005,6 @@ object DeltaLog {
   private[sources] def enableFieldIdRead(spark: SparkSession): Unit =
     if (!spark.conf.get("spark.sql.parquet.fieldId.read.enabled", "false").toBoolean)
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-
-  private def readMappedFiles(
-      spark: SparkSession, tablePath: String, snap: Snapshot,
-      files: Seq[DeltaFile], addFileColumn: Boolean, addRowIndex: Boolean): DataFrame = {
-    val logical = snap.schema.getOrElse(throw new IllegalArgumentException(
-      s"DeltaLog: column-mapped table $tablePath has no parseable metaData.schemaString"))
-    require(logical.fields.forall(f => !hasNestedStruct(f.dataType)),
-      "DeltaLog: column mapping over nested struct columns is not supported")
-    val mode = snap.columnMappingMode
-    val phys = snap.physicalNames
-    val ids = snap.fieldIds
-    if (mode == "id") {
-      require(logical.fields.forall(f => ids.contains(f.name)),
-        s"DeltaLog: id-mapped table $tablePath has fields without delta.columnMapping.id")
-      enableFieldIdRead(spark)
-    }
-    val pcols = snap.partitionColumns
-    val dataFields = logical.fields.filterNot(f => pcols.contains(f.name)).toSeq
-    val readSchema = StructType(dataFields.map { f =>
-      if (mode == "id")
-        StructField(f.name, f.dataType, f.nullable,
-          new MetadataBuilder().putLong("parquet.field.id", ids(f.name)).build())
-      else StructField(phys(f.name), f.dataType, f.nullable)
-    })
-    def withFile(d: DataFrame): DataFrame = {
-      val a = if (addFileColumn) d.withColumn("__file", col("_metadata.file_path")) else d
-      if (addRowIndex) a.withColumn("__pos", col("_metadata.row_index")) else a
-    }
-    val extras = (if (addFileColumn) Seq("__file") else Nil) ++
-      (if (addRowIndex) Seq("__pos") else Nil)
-    def toLogical(d: DataFrame): DataFrame = d.select(
-      (dataFields.map(f =>
-        if (mode == "id") col(f.name) else col(phys(f.name)).as(f.name)) ++
-        extras.map(col)): _*)
-    val ptypes: Map[String, DataType] =
-      logical.fields.filter(f => pcols.contains(f.name)).map(f => f.name -> f.dataType).toMap
-    val groups = files.groupBy(_.partitionValues).toSeq
-      .sortBy { case (pv, _) => pcols.map(c => pv.getOrElse(phys(c), "")).mkString("") }
-    val branches = groups.map { case (pv, group) =>
-      val base = toLogical(withFile(spark.read.schema(readSchema)
-        .parquet(group.map(f => resolve(tablePath, f.path)): _*)))
-      pcols.foldLeft(base) { (d, c) =>
-        val t = ptypes.getOrElse(c, StringType)
-        // partitionValues keys are PHYSICAL names under column mapping
-        pv.get(phys(c)).flatMap(Option(_)) match {
-          case Some(v) => d.withColumn(c, lit(v).cast(t))
-          case None => d.withColumn(c, lit(null).cast(t))
-        }
-      }
-    }
-    branches.reduce(_.unionByName(_))
-      .select((logical.fieldNames.toSeq ++ extras).map(col): _*)
-  }
 
   /** `_metadata.file_path` (a URI like `file:///x` or `hdfs://nn/x`)
     * reduced to its scheme-less absolute path — the same identity
@@ -1274,7 +1125,7 @@ object DeltaLog {
     // NAME-mapped tables read fine: the materialized columns are
     // PHYSICAL-only (outside the declared schema, no mapping
     // metadata), and extending the read schema with them routes
-    // through readMappedFiles where physicalNames falls back to the
+    // through readSnapshotFiles where physicalNames falls back to the
     // field's own name — exactly the physical label the carry wrote.
     // ID-mapped tables keep refusing: every read-schema field resolves
     // by parquet field id there, and the materialized columns have
@@ -1388,9 +1239,30 @@ object DeltaLog {
   private def lessThan(a: Either[Double, String], b: Either[Double, String]): Boolean =
     (a, b) match {
       case (Left(x), Left(y)) => x < y
-      case (Right(x), Right(y)) => x < y
+      case (Right(x), Right(y)) => utf8Compare(x, y) < 0
       case _ => false
     }
+
+  /** Unsigned UTF-8 byte order — the order Parquet binary statistics,
+    * Iceberg string bounds and Spark's string comparisons are defined
+    * in. Java's String compare is UTF-16 code-unit order, which
+    * DISAGREES above U+FFFF (surrogate pairs sort below
+    * U+E000..U+FFFF there): merging or pruning in the wrong order can
+    * falsely skip a file. Both table formats' skipping uses this.
+    */
+  private[sources] def utf8Compare(a: String, b: String): Int = {
+    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
+    var i = 0
+    val n = math.min(x.length, y.length)
+    while (i < n) {
+      val d = (x(i) & 0xff) - (y(i) & 0xff)
+      if (d != 0) return d
+      i += 1
+    }
+    x.length - y.length
+  }
+
+  private val utf8Order: Ordering[String] = (a, b) => utf8Compare(a, b)
 
   /** The live files that can POSSIBLY hold a row with
     * `lower <= column <= upper` — Delta's data skipping, over the
@@ -1460,14 +1332,10 @@ object DeltaLog {
       s"DeltaLog: readRange column '$column' not in the table schema")
     val pred = col(column) >= lit(lower) && col(column) <= lit(upper)
     val kept = rangePruneFiles(snap, column, lower, upper)
-    if (kept.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], declared)
     val pruned = snap.copy(files = kept)
     val base =
       if (kept.exists(_.dv.isDefined)) readWithDv(spark, tablePath, pruned)
       else readSnapshotFiles(spark, tablePath, pruned, kept, addFileColumn = false)
-        .select(declared.fieldNames.map(col).toSeq: _*)
     base.filter(pred)
   }
 
@@ -2056,48 +1924,74 @@ object DeltaLog {
     version
   }
 
-  /** Read a SUBSET of a snapshot's live files with the declared schema
-    * and (for partitioned tables) the partition columns attached from
-    * `add.partitionValues` — the same branch mechanics as [[read]],
-    * restricted to `files`. With `addFileColumn` each row carries its
-    * source file path in `__file` (from the scan's `_metadata`), the
-    * row→file provenance [[merge]] and [[delete]] use to pick which
-    * files to rewrite.
+  /** The one data-file scan of the Delta reader: a SUBSET of a
+    * snapshot's files (or a commit's `_change_data` files) through a
+    * [[LogFileIndex]], with the declared schema and the partition
+    * columns typed from it and valued from each file's
+    * `partitionValues`. Every read, rewrite scan and change-data read
+    * goes through here.
+    *
+    * Column mapping (any table written by 2023+ Databricks defaults to
+    * `name` mode; `CONVERT TO DELTA` over Iceberg produces `id` mode):
+    *  - `name` mode: data files carry PHYSICAL column names (the
+    *    per-field `delta.columnMapping.physicalName`) — the scan reads
+    *    the physical schema and a projection aliases back to logical
+    *    names;
+    *  - `id` mode: columns resolve by PARQUET FIELD ID — the read
+    *    schema carries `parquet.field.id` metadata and Spark's own
+    *    field-id resolution matches them, under the logical names.
+    * In BOTH modes `partitionValues` is keyed by physical names while
+    * `metaData.partitionColumns` stays logical. Nested structs would
+    * need recursive renames — refused loudly rather than half-read.
+    *
+    * `extraData` columns are read by their own names after the table
+    * columns (a cdc file's `_change_type`). With `addFileColumn` each
+    * row carries its source file path in `__file` and with
+    * `addRowIndex` its position in `__pos` (both from the scan's
+    * `_metadata`): the row→file provenance [[merge]], [[delete]] and
+    * the deletion-vector anti-join key on.
     */
   private def readSnapshotFiles(
       spark: SparkSession, tablePath: String, snap: Snapshot,
       files: Seq[DeltaFile], addFileColumn: Boolean,
-      addRowIndex: Boolean = false): DataFrame = {
-    if (snap.columnMappingMode != "none")
-      return readMappedFiles(spark, tablePath, snap, files, addFileColumn, addRowIndex)
+      addRowIndex: Boolean = false, extraData: Seq[StructField] = Nil): DataFrame = {
+    val mode = snap.columnMappingMode
+    require(Set("none", "name", "id")(mode),
+      s"DeltaLog: column mapping mode '$mode' is not supported — " +
+        "'name' (physical renames) and 'id' (parquet field ids) are implemented")
     val declared = snap.schema
+    if (mode != "none") {
+      val logical = declared.getOrElse(throw new IllegalArgumentException(
+        s"DeltaLog: column-mapped table $tablePath has no parseable metaData.schemaString"))
+      require(logical.fields.forall(f => !hasNestedStruct(f.dataType)),
+        "DeltaLog: column mapping over nested struct columns is not supported")
+      if (mode == "id") {
+        require(logical.fields.forall(f => snap.fieldIds.contains(f.name)),
+          s"DeltaLog: id-mapped table $tablePath has fields without delta.columnMapping.id")
+        enableFieldIdRead(spark)
+      }
+    }
     val pcols = snap.partitionColumns
-    def withFile(d: DataFrame): DataFrame = {
-      val a = if (addFileColumn) d.withColumn("__file", col("_metadata.file_path")) else d
-      if (addRowIndex) a.withColumn("__pos", col("_metadata.row_index")) else a
+    val partitionSchema = StructType(pcols.map(c => StructField(c,
+      declared.flatMap(_.find(_.name == c)).fold[DataType](StringType)(_.dataType))))
+    def physical(f: StructField): StructField = mode match {
+      case "id" => f.copy(metadata =
+        new MetadataBuilder().putLong("parquet.field.id", snap.fieldIds(f.name)).build())
+      case "name" => StructField(snap.physicalNames(f.name), f.dataType, f.nullable)
+      case _ => f
     }
-    if (pcols.isEmpty) {
-      val reader = declared.fold(spark.read)(s => spark.read.schema(s))
-      withFile(reader.parquet(files.map(f => resolve(tablePath, f.path)): _*))
-    } else {
-      val dataSchema = declared.map(s => StructType(s.filterNot(f => pcols.contains(f.name))))
-      val ptypes: Map[String, DataType] =
-        declared.map(_.filter(f => pcols.contains(f.name)).map(f => f.name -> f.dataType).toMap)
-          .getOrElse(Map.empty)
-      def reader: DataFrameReader = dataSchema.fold(spark.read)(s => spark.read.schema(s))
-      val groups = files.groupBy(_.partitionValues).toSeq
-        .sortBy { case (pv, _) => pcols.map(c => pv.getOrElse(c, "")).mkString("") }
-      groups.map { case (pv, group) =>
-        val base = withFile(reader.parquet(group.map(f => resolve(tablePath, f.path)): _*))
-        pcols.foldLeft(base) { (d, c) =>
-          val t = ptypes.getOrElse(c, StringType)
-          pv.get(c).flatMap(Option(_)) match {
-            case Some(v) => d.withColumn(c, lit(v).cast(t))
-            case None => d.withColumn(c, lit(null).cast(t))
-          }
-        }
-      }.reduce(_.unionByName(_))
-    }
+    val scan = LogFileIndex.scan(spark,
+      files.map(f => (resolve(tablePath, f.path),
+        pcols.map(c => f.partitionValues.get(snap.pvKey(c)).flatMap(Option(_))))),
+      partitionSchema,
+      declared.map(s => StructType(
+        s.fields.filterNot(f => pcols.contains(f.name)).map(physical) ++ extraData)))
+    val columns = declared.fold(Seq(col("*")))(s => s.fields.toSeq.map(f =>
+      if (mode == "name" && !pcols.contains(f.name)) col(snap.physicalNames(f.name)).as(f.name)
+      else col(f.name)) ++ extraData.map(f => col(f.name)))
+    scan.select(columns ++
+      (if (addFileColumn) Seq(col("_metadata.file_path").as("__file")) else Nil) ++
+      (if (addRowIndex) Seq(col("_metadata.row_index").as("__pos")) else Nil): _*)
   }
 
   /** The filesystem-normalized identity of a live file (scheme-less
@@ -3273,9 +3167,7 @@ object DeltaLog {
     val onlyA = sa.files.filterNot(f => bKeys(key(f)))
     val onlyB = sb.files.filterNot(f => aKeys(key(f)))
     def rowsOf(snap: Snapshot, subset: Seq[DeltaFile]): DataFrame =
-      if (subset.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], declared)
-      else if (subset.exists(_.dv.isDefined))
+      if (subset.exists(_.dv.isDefined))
         readWithDv(spark, tablePath, snap.copy(files = subset))
       else readSnapshotFiles(spark, tablePath, snap.copy(files = subset), subset,
         addFileColumn = false).select(declared.fieldNames.map(col).toSeq: _*)
@@ -3382,11 +3274,12 @@ object DeltaLog {
           .filter(_.trim.nonEmpty).map(mapper.readTree).toVector
         finally in.close()
       val cdcs = nodes.flatMap(n => Option(n.get("cdc"))).map { c =>
-        (c.get("path").asText, pvMap(c.get("partitionValues")),
+        DeltaFile(c.get("path").asText, pvMap(c.get("partitionValues")),
           Option(c.get("size")).fold(0L)(_.asLong))
       }
       if (cdcs.nonEmpty) {
-        frames += readCdcFiles(spark, tablePath, snapTo, cdcs)
+        frames += readSnapshotFiles(spark, tablePath, snapTo, cdcs, addFileColumn = false,
+            extraData = Seq(StructField("_change_type", StringType)))
           .withColumn("_commit_version", lit(v))
       } else {
         val adds = nodes.flatMap(n => Option(n.get("add")))
@@ -3421,51 +3314,6 @@ object DeltaLog {
       v += 1
     }
     Right(frames.result())
-  }
-
-  /** Read a commit's `_change_data` files: table data columns
-    * (physical names / field ids under mapping) + the verbatim
-    * `_change_type` column, partition values re-attached from the cdc
-    * action — the cdc twin of [[readMappedFiles]], shared by mapped
-    * and unmapped tables.
-    */
-  private def readCdcFiles(
-      spark: SparkSession, tablePath: String, snap: Snapshot,
-      cdcs: Seq[(String, Map[String, String], Long)]): DataFrame = {
-    val logical = snap.schema.getOrElse(throw new IllegalArgumentException(
-      s"DeltaLog: reading change data needs a parseable metaData.schemaString at $tablePath"))
-    val mode = snap.columnMappingMode
-    val phys = snap.physicalNames
-    val ids = snap.fieldIds
-    if (mode == "id") enableFieldIdRead(spark)
-    val pcols = snap.partitionColumns
-    val dataFields = logical.fields.filterNot(f => pcols.contains(f.name)).toSeq
-    val readSchema = StructType(dataFields.map { f =>
-      if (mode == "id")
-        StructField(f.name, f.dataType, f.nullable,
-          new MetadataBuilder().putLong("parquet.field.id", ids(f.name)).build())
-      else StructField(phys.getOrElse(f.name, f.name), f.dataType, f.nullable)
-    } :+ StructField("_change_type", StringType))
-    val ptypes: Map[String, DataType] =
-      logical.fields.filter(f => pcols.contains(f.name)).map(f => f.name -> f.dataType).toMap
-    val groups = cdcs.groupBy(_._2).toSeq
-      .sortBy { case (pv, _) => pcols.map(c => pv.getOrElse(snap.pvKey(c), "")).mkString("") }
-    val branches = groups.map { case (pv, group) =>
-      val base = spark.read.schema(readSchema)
-        .parquet(group.map(g => resolve(tablePath, g._1)): _*)
-        .select((dataFields.map(f =>
-          if (mode == "id" || mode == "none") col(f.name)
-          else col(phys(f.name)).as(f.name)) :+ col("_change_type")): _*)
-      pcols.foldLeft(base) { (d, c) =>
-        val t = ptypes.getOrElse(c, StringType)
-        pv.get(snap.pvKey(c)).flatMap(Option(_)) match {
-          case Some(x) => d.withColumn(c, lit(x).cast(t))
-          case None => d.withColumn(c, lit(null).cast(t))
-        }
-      }
-    }
-    branches.reduce(_.unionByName(_))
-      .select((logical.fieldNames.toSeq :+ "_change_type").map(col): _*)
   }
 
   /** The table's current (latest) version. */
@@ -3718,9 +3566,11 @@ object DeltaLog {
                   maxVals.put(name, nonNull.map(_.genericGetMax.asInstanceOf[java.lang.Boolean].booleanValue).max)
                 case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
                   minVals.put(name, nonNull.map(
-                    _.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8).min)
+                    _.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
+                    .min(utf8Order))
                   maxVals.put(name, nonNull.map(
-                    _.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8).max)
+                    _.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
+                    .max(utf8Order))
                 case _ => () // INT96 / decimals / raw binary: not indexed
               }
             }

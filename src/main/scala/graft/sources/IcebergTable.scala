@@ -201,24 +201,6 @@ object IcebergTable {
     }
   }
 
-  /** Unsigned UTF-8 byte order — the order Parquet binary statistics
-    * and Iceberg string bounds are defined in. Java's String compare
-    * is UTF-16 code-unit order, which DISAGREES above U+FFFF
-    * (surrogate pairs sort below U+E000..U+FFFF there): merging or
-    * pruning in the wrong order can falsely skip a file.
-    */
-  private def utf8Compare(a: String, b: String): Int = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
-  }
-
   /** Skipping-comparable form: numerics/temporals to Double, strings
     * verbatim (compared in UNSIGNED UTF-8 order) — the same lattice
     * the Delta reader's stats skipping uses. `raw` values come from
@@ -920,12 +902,14 @@ object IcebergTable {
       }.collect().toMap
   }
 
-  /** The declared-schema scan over data files, surfacing v3
-    * `initial-default` values: files written BEFORE a defaulted
-    * column existed read the declared literal in its place (grouped
-    * by footer presence — [[probeFieldPresence]]), files that carry
-    * the column read their stored values. Tables without defaults
-    * (every v1/v2 table) take the single plain scan, unchanged plan.
+  /** The declared-schema scan over data files, each group one scan
+    * over a [[LogFileIndex]] of the manifests' paths (no listing; the
+    * data files carry their partition columns, so the index has none),
+    * surfacing v3 `initial-default` values: files written BEFORE a
+    * defaulted column existed read the declared literal in its place
+    * (grouped by footer presence — [[probeFieldPresence]]), files that
+    * carry the column read their stored values. Tables without
+    * defaults (every v1/v2 table) take a single scan.
     * With `withFidPos` each row carries the scan-side file identity
     * and row index — requested INSIDE each group scan because
     * `_metadata` only resolves directly on a file source, not through
@@ -935,7 +919,8 @@ object IcebergTable {
       paths: Seq[String], withFidPos: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     def one(group: Seq[String]): DataFrame = {
-      val base = spark.read.schema(snap.schema).parquet(group: _*)
+      val base = LogFileIndex.scan(spark, group.map(p => (p, Nil)), new StructType(),
+        Some(snap.schema))
       if (withFidPos)
         base.select(col("*"),
           DeltaLog.normalizedFileId(col("_metadata.file_path")).as("__fid"),
@@ -2090,7 +2075,7 @@ object IcebergTable {
                 case Some((pmn, pmx)) =>
                   def lt(a: Any, b2: Any): Boolean = (a, b2) match {
                     // parquet binary stats order: unsigned UTF-8 bytes
-                    case (x: String, y: String) => utf8Compare(x, y) < 0
+                    case (x: String, y: String) => DeltaLog.utf8Compare(x, y) < 0
                     case (x: Number, y: Number) => x.doubleValue < y.doubleValue
                     case (x: Boolean, y: Boolean) => !x && y
                     case _ => false
@@ -2767,10 +2752,7 @@ object IcebergTable {
             "use a full-table diff for that consumer")
       }
     }
-    if (added.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    else scanData(spark, snap, added)
+    scanData(spark, snap, added)
   }
 
   // -------------------------------------------- stats-based skipping
@@ -2799,7 +2781,7 @@ object IcebergTable {
               def le(a: Either[Double, String], b: Either[Double, String]): Boolean =
                 (a, b) match {
                   case (Left(x), Left(y)) => x <= y
-                  case (Right(x), Right(y)) => utf8Compare(x, y) <= 0
+                  case (Right(x), Right(y)) => DeltaLog.utf8Compare(x, y) <= 0
                   case _ => true // incomparable: keep
                 }
               le(fmn, hi) && le(lo, fmx)
@@ -2823,12 +2805,9 @@ object IcebergTable {
       s"IcebergTable: readRange column '$column' not in the table schema")
     if (snap.fieldIdsWritten) DeltaLog.enableFieldIdRead(spark)
     val kept = rangePruneFiles(snap, column, lower, upper)
-    if (kept.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
     val pred = col(column) >= lit(lower) && col(column) <= lit(upper)
     val base =
-      if (snap.deleteFiles.isEmpty) scanData(spark, snap, kept.map(_.path))
+      if (snap.deleteFiles.isEmpty || kept.isEmpty) scanData(spark, snap, kept.map(_.path))
       else readWithPositionDeletes(spark, snap, kept)
     base.filter(pred)
   }

@@ -6,6 +6,7 @@ import java.util.zip.CRC32
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.roaringbitmap.RoaringBitmap
 
 /** PUFFIN — Iceberg's auxiliary blob-file format
   * (iceberg.apache.org/puffin-spec) and the v3 `deletion-vector-v1`
@@ -30,7 +31,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * sparse bitmaps with no magic prefix, versus Delta's
   * magic-prefixed DENSE array. The inner 32-bit container encoding
   * (cookie, descriptive header, array/bitset/run containers) is the
-  * same published RoaringBitmap format in both.
+  * same published RoaringBitmap format in both, and both code it with
+  * `org.roaringbitmap.RoaringBitmap`.
   *
   * Zero-egress caveat, stated loudly: the CRC polynomial is plain
   * CRC-32 (java.util.zip.CRC32, the zlib polynomial — what the Delta
@@ -60,36 +62,16 @@ object Puffin {
     */
   def serialize64(positions: Array[Long]): Array[Byte] = {
     require(positions.forall(_ >= 0), "Puffin DV: negative row position")
-    val sorted = positions.distinct.sorted
-    val byHigh = sorted.groupBy(_ >>> 32).toSeq.sortBy(_._1)
-    val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    def le32(v: Int): Unit = { le16(v & 0xffff); le16((v >>> 16) & 0xffff) }
-    def le64(v: Long): Unit = { le32(v.toInt); le32((v >>> 32).toInt) }
-    le64(byHigh.size.toLong)
-    byHigh.foreach { case (high, vs64) =>
-      le32(high.toInt)
-      // one standard 32-bit RoaringBitmap (no-run cookie + offsets —
-      // always-legal container choices, same as the Delta writer)
-      val vals = vs64.map(v => (v & 0xffffffffL).toInt)
-      val byKey = vals.groupBy(v => v >>> 16).toSeq.sortBy(_._1)
-      le32(12346) // SERIAL_COOKIE_NO_RUNCONTAINER
-      le32(byKey.length)
-      byKey.foreach { case (k, vs) => le16(k); le16(vs.length - 1) }
-      var off = 4 + 4 + 4 * byKey.length + 4 * byKey.length
-      byKey.foreach { case (_, vs) =>
-        le32(off)
-        off += (if (vs.length > 4096) 8192 else 2 * vs.length)
-      }
-      byKey.foreach { case (_, vs) =>
-        if (vs.length > 4096) {
-          val words = new Array[Long](1024)
-          vs.foreach { v => val low = v & 0xffff; words(low >>> 6) |= (1L << (low & 63)) }
-          words.foreach(le64)
-        } else vs.foreach(v => le16(v & 0xffff))
-      }
+    val byHigh = positions.groupBy(_ >>> 32).toSeq.sortBy(_._1)
+      .map { case (high, vs) => (high.toInt, RoaringBitmap.bitmapOf(vs.map(_.toInt): _*)) }
+    val out = ByteBuffer.allocate(8 + byHigh.map(4 + _._2.serializedSizeInBytes).sum)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    out.putLong(byHigh.size.toLong)
+    byHigh.foreach { case (high, bitmap) =>
+      out.putInt(high)
+      bitmap.serialize(out)
     }
-    out.toByteArray
+    out.array()
   }
 
   /** Deserialize the keyed portable Roaring64 form to sorted
@@ -105,64 +87,7 @@ object Puffin {
     var b = 0L
     while (b < nBitmaps) {
       val high = (buf.getInt.toLong & 0xffffffffL) << 32
-      val start = buf.position()
-      val cookie = buf.getInt
-      val (nContainers, runFlags) =
-        if ((cookie & 0xffff) == 12347) { // SERIAL_COOKIE (with runs)
-          val n = (cookie >>> 16) + 1
-          val flags = new Array[Byte]((n + 7) / 8)
-          buf.get(flags)
-          (n, flags)
-        } else {
-          require(cookie == 12346, s"Puffin DV: unknown RoaringBitmap cookie $cookie")
-          (buf.getInt, null)
-        }
-      def isRun(i: Int): Boolean =
-        runFlags != null && (runFlags(i / 8) & (1 << (i % 8))) != 0
-      val keys = new Array[Int](nContainers)
-      val cards = new Array[Int](nContainers)
-      var i = 0
-      while (i < nContainers) {
-        keys(i) = buf.getShort & 0xffff
-        cards(i) = (buf.getShort & 0xffff) + 1
-        i += 1
-      }
-      val hasOffsets = runFlags == null || nContainers >= 4
-      val offsets = if (hasOffsets) Array.fill(nContainers)(buf.getInt) else null
-      i = 0
-      while (i < nContainers) {
-        if (offsets != null) buf.position(start + offsets(i))
-        val keyBase = high | (keys(i).toLong << 16)
-        if (isRun(i)) {
-          val nRuns = buf.getShort & 0xffff
-          var r = 0
-          while (r < nRuns) {
-            val s = buf.getShort & 0xffff
-            val len = buf.getShort & 0xffff
-            var v = s
-            while (v <= s + len) { acc += (keyBase | v); v += 1 }
-            r += 1
-          }
-        } else if (cards(i) > 4096) {
-          var w = 0
-          while (w < 1024) {
-            var word = buf.getLong
-            var bit = 0
-            while (word != 0) {
-              val t = java.lang.Long.numberOfTrailingZeros(word)
-              bit += t
-              acc += (keyBase | (w * 64 + bit))
-              word = word >>> t >>> 1
-              bit += 1
-            }
-            w += 1
-          }
-        } else {
-          var v = 0
-          while (v < cards(i)) { acc += (keyBase | (buf.getShort & 0xffff)); v += 1 }
-        }
-        i += 1
-      }
+      DeletionVectors.readBitmap32(buf, high, acc, "Puffin DV")
       b += 1
     }
     val arr = acc.result()

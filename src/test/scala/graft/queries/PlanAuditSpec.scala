@@ -38,11 +38,11 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("s23_delta_partitioned: Year filter prunes partition FILES, not just rows") {
-    // the Hive-consistent fixture takes the single-scan basePath fast
-    // path (r12): ONE relation whose partition columns are typed by
-    // schemaString, with the Year predicate landing as a native
-    // PartitionFilter — files outside 1995 are never read (the metric
-    // counts what the scan actually opened)
+    // every Delta read is ONE scan over the log-backed file index: one
+    // relation whose partition columns are typed by schemaString and
+    // valued from add.partitionValues, with the Year predicate landing
+    // as a native PartitionFilter — files outside 1995 are never read
+    // (the metric counts what the scan actually opened)
     val df = graft.SparkEntry.queries("s23_delta_partitioned")(spark, dir)
     df.collect() // execute so AQE finalizes and scan metrics fill
     // AQE wraps finished stages in leaf QueryStageExec nodes, so a
@@ -56,7 +56,7 @@ class PlanAuditSpec extends SparkSpec {
         case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => allScans(q.plan)
       }.flatten
     val scans = allScans(df.queryExecution.executedPlan)
-    assert(scans.size == 1, s"expected ONE basePath scan, got ${scans.size}")
+    assert(scans.size == 1, s"expected ONE log-backed scan, got ${scans.size}")
     val scan = scans.head
     assert(scan.toString.contains("PartitionFilters") && scan.toString.contains("1995"),
       s"Year predicate must land as a partition filter:\n$scan")

@@ -62,6 +62,34 @@ class DeletionVectorsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](DeletionVectors.deserialize(bad))
   }
 
+  test("our writer's array and bitset containers are pinned byte for byte") {
+    // hand-lay one bitmap: key 0 an ARRAY container {1, 5}, key 1 a
+    // BITSET container 65536..70535 (5000 values > 4096)
+    val bb = java.nio.ByteBuffer.allocate(64 + 8192).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.putInt(12346)      // SERIAL_COOKIE_NO_RUNCONTAINER
+    bb.putInt(2)          // two containers
+    bb.putShort(0); bb.putShort(1)    // key 0, cardinality - 1 = 1
+    bb.putShort(1); bb.putShort(4999) // key 1, cardinality - 1 = 4999
+    bb.putInt(24); bb.putInt(28)      // offsets from the cookie
+    bb.putShort(1); bb.putShort(5)    // the array container
+    (0 until 1024).foreach { w =>     // the bitset container: bits 0..4999
+      bb.putLong(if (w < 78) -1L else if (w == 78) 0xffL else 0L)
+    }
+    val bitmap = java.util.Arrays.copyOf(bb.array(), bb.position())
+    val positions = Array(1L, 5L) ++ (65536L until 70536L)
+    val head = java.nio.ByteBuffer.allocate(12).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(1681511377).putLong(1L).array() // magic, one dense bitmap
+    assert(DeletionVectors.serialize(positions).toSeq == (head ++ bitmap).toSeq)
+    val keyed = java.nio.ByteBuffer.allocate(12).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putLong(1L).putInt(0).array() // Puffin: count, then the high key
+    assert(Puffin.serialize64(positions).toSeq == (keyed ++ bitmap).toSeq)
+    // a bitmap that starts with neither cookie refuses loudly
+    val bad = head ++ bitmap
+    bad(12) = 0x00
+    intercept[IllegalArgumentException](DeletionVectors.deserialize(bad))
+    intercept[IllegalArgumentException](Puffin.deserialize64(keyed ++ bad.drop(12)))
+  }
+
   test("DV file: multi-vector packing, framing, CRC refusal, uuid path derivation") {
     val dir = Files.createTempDirectory("graft-dv").toString
     val fs = new Path(dir).getFileSystem(new Configuration())

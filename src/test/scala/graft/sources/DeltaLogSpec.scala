@@ -230,22 +230,43 @@ class DeltaLogSpec extends SparkSpec {
     val got = df.groupBy("year").agg(count(lit(1)).as("n")).collect()
       .map(r => (if (r.isNullAt(0)) -1 else r.getInt(0)) -> r.getLong(1)).toSet
     assert(got == Set(2020 -> 2L, 2021 -> 3L, -1 -> 1L))
-    // a filter on the partition column prunes whole BRANCHES in the
-    // OPTIMIZER (the non-matching branches' literal filters fold to
-    // false and the relations vanish): only the matching year's file
-    // survives in the optimized plan — file pruning, not row pruning
+    // a filter on the partition column reaches the one scan as a
+    // partition filter, and the log-backed index hands the planner only
+    // the matching year's file: the scan selects and reads that file
+    // alone — file pruning, not row pruning
     val pruned = df.filter(col("year") === 2020)
-    val survivingFiles = pruned.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.inputFiles.toSeq
-          case _ => Seq.empty[String]
-        }
-    }.flatten
-    assert(survivingFiles.length == 1 && survivingFiles.head.contains("year=2020"),
-      s"partition filter should prune to one file, scanned: $survivingFiles")
     assert(pruned.count() == 2L)
+    pruned.collect()
+    val scans = fileScans(pruned.queryExecution.executedPlan)
+    assert(scans.size == 1, s"expected one scan, got ${scans.size}")
+    val selected = scans.head.metrics("numFiles").value
+    val readFiles = scans.head.inputRDD.partitions.toSeq.flatMap {
+      case p: org.apache.spark.sql.execution.datasources.FilePartition =>
+        p.files.map(_.filePath.toString).toSeq
+      case _ => Nil
+    }
+    assert(selected == 1 && readFiles.length == 1 && readFiles.head.contains("year=2020"),
+      s"partition filter should prune to one file: selected $selected, read $readFiles")
+  }
+
+  /** Every file scan in an executed plan, through adaptive stages. */
+  private def fileScans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    p.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        fileScans(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => fileScans(q.plan)
+    }.flatten
+
+  test("string skipping compares in UTF-8 byte order, as parquet footers do") {
+    import spark.implicits._
+    // footer max is the 4-byte "😀" (F0 9F 98 80), above "！" (EF BC 81)
+    // in UTF-8; in UTF-16 order its surrogate pair sorts below "！"
+    val t = newTable()
+    DeltaLog.append(spark, t, Seq("！", "😀").toDF("tag").coalesce(1))
+    assert(DeltaLog.rangePruneFiles(DeltaLog.snapshot(spark, t), "tag", "！", "！").size == 1)
+    assert(DeltaLog.readRange(spark, t, "tag", "！", "！").count() == 1L)
   }
 
   test("percent-encoded add paths resolve to the on-disk file") {
@@ -1461,6 +1482,24 @@ class DeltaLogSpec extends SparkSpec {
   private def ids(t: String): Seq[Long] = {
     import spark.implicits._
     DeltaLog.read(spark, t).select("id").as[Long].collect().toSeq.sorted
+  }
+
+  test("reads over 40 log-listed files build with no Spark job, Delta and Iceberg alike") {
+    // over 32 explicit paths Spark's own file listing starts a parallel
+    // listing job; the log-backed index stats each file on the driver
+    val rows = spark.range(0, 40, 1, 40).withColumn("g", col("id") % 4)
+    val t = newTable()
+    DeltaLog.append(spark, t, rows, partitionBy = Seq("g"))
+    assert(DeltaLog.snapshot(spark, t).files.size == 40)
+    val (delta, deltaJobs) = withJobs(DeltaLog.read(spark, t))
+    assert(deltaJobs == 0)
+    assert(delta.count() == 40L)
+    val ice = Files.createTempDirectory("graft-iceberg").toString
+    IcebergTable.append(spark, ice, rows)
+    assert(IcebergTable.snapshot(spark, ice).dataRefs.size == 40)
+    val (iceberg, icebergJobs) = withJobs(IcebergTable.read(spark, ice))
+    assert(icebergJobs == 0)
+    assert(iceberg.count() == 40L)
   }
 
   test("checkpoint cache: decoded once per process, a second snapshot runs no Spark job") {

@@ -2285,10 +2285,10 @@ object CoreQueries {
   /** S32 — Iceberg v1 PARTITIONED append + manifest-driven file
     * pruning: orders land Year-partitioned in two snapshots (identity
     * transform, Hive-style `data/Year=.../` layout, per-file partition
-    * tuples in `data_file.partition`), then the read prunes to
-    * Year=1996 from the MANIFESTS alone — the Iceberg planner's move:
-    * the pruned file list is computed before Spark sees a single
-    * footer. The oracle recomputes the 1996 slice from `orders`; a
+    * tuples in `data_file.partition`), then a `Year = 1996` filter on
+    * the read prunes FILES from the MANIFESTS alone — the Iceberg
+    * planner's move: the scan's file index skips every other year's
+    * files before Spark opens a single footer. The oracle recomputes the 1996 slice from `orders`; a
     * mis-typed tuple, a file routed to the wrong partition dir, or a
     * pruning miss all hash-fail.
     */
@@ -2308,8 +2308,8 @@ object CoreQueries {
         s32BuiltFor.set(dir)
       }
     }
-    graft.sources.IcebergTable.read(spark, S32Root,
-        partitionFilter = Map("Year" -> "1996"))
+    graft.sources.IcebergTable.read(spark, S32Root)
+      .filter(col("Year") === 1996)
       .orderBy("o_orderkey")
   }
 
@@ -2409,11 +2409,10 @@ object CoreQueries {
     * scattered across 8 files, `compact(zorderBy = (o_custkey,
     * o_orderkey))` rewrites them clustered by the interleaved z-key
     * (each output file a tight rectangle in key space, real
-    * footer-derived min/max in `add.stats`), and `readRange` serves a
-    * `o_custkey BETWEEN` slice opening ONLY the files whose stats
-    * admit it — Delta's skipping index, measured by the spec and
-    * exact by construction here (the range predicate re-applies on
-    * the survivors). Oracle recomputes the slice from `orders`.
+    * footer-derived min/max in `add.stats`), and a `o_custkey BETWEEN`
+    * filter on the read opens ONLY the files whose stats admit it —
+    * Delta's skipping, inside the scan's file index, and exact by
+    * construction (the predicate still applies to the survivors' rows). Oracle recomputes the slice from `orders`.
     */
   def s35DeltaZorder(spark: SparkSession, dir: String): DataFrame = {
     sweepStaleFixtureDirs()
@@ -2432,7 +2431,8 @@ object CoreQueries {
         s35BuiltFor.set(dir)
       }
     }
-    graft.sources.DeltaLog.readRange(spark, S35Root, "o_custkey", 100L, 200L)
+    graft.sources.DeltaLog.read(spark, S35Root)
+      .filter(col("o_custkey").between(100L, 200L))
       .orderBy("o_orderkey")
   }
 
@@ -2784,11 +2784,11 @@ object CoreQueries {
     * `columnMapping = "id"` — data files carry `col-<uuid>` names plus
     * field ids, and the reader matches on the ids via Spark's own
     * field-id resolution. A copy-on-write DELETE (`%3 = 1`) rewrites
-    * through the mapped scan, then the final read goes through
-    * `readRange` so the STATS SKIPPING path proves its keys too: the
+    * through the mapped scan, then the final read filters a BETWEEN
+    * range so the STATS SKIPPING path proves its keys too: the
     * per-file min/max live under PHYSICAL names, and a logical-keyed
     * lookup would silently stop skipping (or worse, skip wrongly) —
-    * the oracle's BETWEEN recomputation pins the surviving row set.
+    * the oracle's recomputation pins the surviving row set.
     */
   def s42DeltaColumnMappingId(spark: SparkSession, dir: String): DataFrame = {
     sweepStaleFixtureDirs()
@@ -2805,8 +2805,8 @@ object CoreQueries {
         s42BuiltFor.set(dir)
       }
     }
-    graft.sources.DeltaLog.readRange(spark, S42Root,
-        "o_orderkey", 1000L, 100000000L)
+    graft.sources.DeltaLog.read(spark, S42Root)
+      .filter(col("o_orderkey").between(1000L, 100000000L))
       .orderBy("o_orderkey")
   }
 
@@ -3317,10 +3317,11 @@ object CoreQueries {
   /** S54 — Iceberg MANIFEST-BOUNDS file skipping: orders land
     * range-partitioned into disjoint-keyrange files whose manifests
     * carry real `lower_bounds`/`upper_bounds` (field-id keyed,
-    * single-value binary), and a keyrange probe reads through
-    * [[graft.sources.IcebergTable.readRange]] — files provably outside
-    * the range drop at PLAN time from the metadata walk alone (guarded
-    * in-query: at least half the files must skip; at 100 TB this is
+    * single-value binary), and a keyrange filter on the read skips
+    * the files provably outside the range at PLAN time, from the
+    * manifests alone, inside the scan's file index (guarded in-query
+    * through [[graft.sources.LogFileIndex.plannedFiles]]: at least
+    * half the files must skip; at 100 TB this is
     * the difference between a probe costing its selectivity and
     * costing the table). The oracle recomputes the exact rows, so
     * over-pruning (a lost row) or bound mis-encoding hash-fails.
@@ -3340,13 +3341,13 @@ object CoreQueries {
     val mx = Tables.orders(spark, dir)
       .agg(max("o_orderkey")).head().getLong(0)
     val (lo, hi) = (mx * 2 / 10, mx * 3 / 10)
-    val snap = graft.sources.IcebergTable.snapshot(spark, S54Root)
-    val kept = graft.sources.IcebergTable.rangePruneFiles(snap, "o_orderkey", lo, hi)
-    require(kept.size * 2 <= snap.dataRefs.size,
-      s"s54: bounds must skip at least half the files " +
-        s"(kept ${kept.size} of ${snap.dataRefs.size})")
-    graft.sources.IcebergTable.readRange(spark, S54Root, "o_orderkey", lo, hi)
-      .orderBy("o_orderkey")
+    val total = graft.sources.IcebergTable.snapshot(spark, S54Root).dataRefs.size
+    val slice = graft.sources.IcebergTable.read(spark, S54Root)
+      .filter(col("o_orderkey").between(lo, hi))
+    val planned = graft.sources.LogFileIndex.plannedFiles(slice).size
+    require(planned * 2 <= total,
+      s"s54: bounds must skip at least half the files (kept $planned of $total)")
+    slice.orderBy("o_orderkey")
   }
 
   private val s54IcebergRangeSql =

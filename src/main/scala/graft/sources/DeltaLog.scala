@@ -382,7 +382,8 @@ object DeltaLog {
       s"DeltaLog: malformed checkpoint ${paths.head} — protocol.minReaderVersion / " +
         "metaData.partitionColumns missing from the checkpoint schema")
     def declaredRead(ps: Seq[String]): DataFrame = normalize(
-      spark.read.schema(logSchema).parquet(ps: _*).withColumn("version", lit(version)))
+      LogFileIndex.scan(spark, ps.map(LogFile(_)), new StructType(), Some(logSchema))
+        .withColumn("version", lit(version)))
     val top = declaredRead(paths)
     if (!ref.v2) top
     else {
@@ -970,6 +971,15 @@ object DeltaLog {
     * partition column lands as a native `PartitionFilters` and the
     * index drops non-matching files at planning time — partition
     * pruning of FILES, pinned by `PlanAuditSpec`.
+    *
+    * Data skipping: a filter on a data column reaches the same index
+    * as a data filter, and `listFiles` skips every file whose
+    * `add.stats` min/max prove that no row can match (a file without
+    * usable stats for the column is kept), so
+    * `read(...).filter(col(c).between(lo, hi))` opens only the files
+    * whose range admits the slice. With files z-order-clustered by
+    * [[compact]]`(zorderBy = ...)`, the skip rate on either clustered
+    * column approaches the selectivity itself.
     */
   def read(
       spark: SparkSession, tablePath: String, versionAsOf: Option[Long] = None): DataFrame = {
@@ -1194,150 +1204,6 @@ object DeltaLog {
     if (files.exists(_.dv.isDefined))
       readWithDv(spark, tablePath, snap.copy(files = files), keepFile = addFileColumn)
     else readSnapshotFiles(spark, tablePath, snap, files, addFileColumn = addFileColumn)
-
-  // -------------------------------------------- stats-based file skipping
-
-  /** A value in its skipping-comparable form: Left(double) for
-    * numeric/temporal columns, Right(string) for strings.
-    */
-  private def comparable(dt: DataType, v: Any): Option[Either[Double, String]] = (dt, v) match {
-    case (_, null) => None
-    case (ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType, n: Number) =>
-      Some(Left(n.doubleValue))
-    case (_: DecimalType, n: Number) => Some(Left(n.doubleValue))
-    case (_: DecimalType, n: BigDecimal) => Some(Left(n.doubleValue))
-    case (StringType, s: String) => Some(Right(s))
-    case (DateType, d: java.sql.Date) => Some(Left(d.toLocalDate.toEpochDay.toDouble))
-    case (DateType, d: java.time.LocalDate) => Some(Left(d.toEpochDay.toDouble))
-    case (DateType, s: String) =>
-      scala.util.Try(java.time.LocalDate.parse(s).toEpochDay.toDouble).toOption.map(Left(_))
-    case (TimestampType, t: java.sql.Timestamp) =>
-      // getTime is epoch MILLIS (sub-second included); only the
-      // sub-millisecond residue of getNanos may be added on top —
-      // adding micros-within-second again would double-count millis
-      // and inflate range bounds by up to ~1s (r13 advice)
-      Some(Left(t.getTime * 1000.0 + (t.getNanos % 1000000) / 1000.0))
-    case (TimestampType, t: java.time.Instant) =>
-      Some(Left(t.getEpochSecond * 1e6 + t.getNano / 1000.0))
-    case (TimestampType, s: String) =>
-      scala.util.Try(java.time.Instant.parse(s)).toOption
-        .map(t => Left(t.getEpochSecond * 1e6 + t.getNano / 1000.0))
-    case _ => None
-  }
-
-  private def jsonComparable(
-      dt: DataType, node: com.fasterxml.jackson.databind.JsonNode): Option[Either[Double, String]] =
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType | _: DecimalType =>
-        if (node.isNumber) Some(Left(node.asDouble())) else None
-      case StringType => if (node.isTextual) Some(Right(node.asText())) else None
-      case DateType if node.isTextual => comparable(dt, node.asText())
-      case TimestampType if node.isTextual => comparable(dt, node.asText())
-      case _ => None
-    }
-
-  private def lessThan(a: Either[Double, String], b: Either[Double, String]): Boolean =
-    (a, b) match {
-      case (Left(x), Left(y)) => x < y
-      case (Right(x), Right(y)) => utf8Compare(x, y) < 0
-      case _ => false
-    }
-
-  /** Unsigned UTF-8 byte order — the order Parquet binary statistics,
-    * Iceberg string bounds and Spark's string comparisons are defined
-    * in. Java's String compare is UTF-16 code-unit order, which
-    * DISAGREES above U+FFFF (surrogate pairs sort below
-    * U+E000..U+FFFF there): merging or pruning in the wrong order can
-    * falsely skip a file. Both table formats' skipping uses this.
-    */
-  private[sources] def utf8Compare(a: String, b: String): Int = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  private val utf8Order: Ordering[String] = (a, b) => utf8Compare(a, b)
-
-  /** The live files that can POSSIBLY hold a row with
-    * `lower <= column <= upper` — Delta's data skipping, over the
-    * `add.stats` min/max this writer records from parquet footers (a
-    * file missing stats for the column is conservatively kept). When
-    * `column` is a PARTITION column, its `partitionValues` prune
-    * instead. Public so specs and planners can measure the skip rate.
-    */
-  def rangePruneFiles(
-      snap: Snapshot, column: String, lower: Any, upper: Any): Seq[DeltaFile] = {
-    val dtOpt =
-      snap.schema.flatMap(_.find(_.name == column)).map(_.dataType)
-    // stats and partitionValues key by the PHYSICAL name under mapping
-    val statsKey = snap.pvKey(column)
-    dtOpt match {
-      case None => snap.files
-      case Some(dt) =>
-        (comparable(dt, lower), comparable(dt, upper)) match {
-          case (Some(lo), Some(hi)) =>
-            if (snap.partitionColumns.contains(column)) {
-              snap.files.filter { f =>
-                f.partitionValues.get(statsKey).flatMap(Option(_))
-                  .flatMap(v => comparable(dt, v).orElse(
-                    scala.util.Try(v.toDouble).toOption.map(d => Left(d): Either[Double, String])))
-                match {
-                  case Some(v) => !(lessThan(v, lo) || lessThan(hi, v))
-                  case None => true
-                }
-              }
-            } else snap.files.filter { f =>
-              val range = f.stats.flatMap { s =>
-                scala.util.Try {
-                  val node = mapper.readTree(s)
-                  for {
-                    mnN <- Option(node.get("minValues")).flatMap(m => Option(m.get(statsKey)))
-                    mxN <- Option(node.get("maxValues")).flatMap(m => Option(m.get(statsKey)))
-                    mn <- jsonComparable(dt, mnN)
-                    mx <- jsonComparable(dt, mxN)
-                  } yield (mn, mx)
-                }.toOption.flatten
-              }
-              range match {
-                case Some((mn, mx)) => !(lessThan(mx, lo) || lessThan(hi, mn))
-                case None => true // no usable stats: cannot skip
-              }
-            }
-          case _ => snap.files
-        }
-    }
-  }
-
-  /** Range read with DATA SKIPPING: files whose stats prove no row can
-    * match are never opened; the surviving files scan with the range
-    * predicate applied (the result is exact regardless of how sharp
-    * the skip was). With files z-order-clustered by
-    * [[compact]]`(zorderBy = ...)`, the skip rate on either clustered
-    * column approaches the selectivity itself — the reason OPTIMIZE
-    * ZORDER exists.
-    */
-  def readRange(
-      spark: SparkSession, tablePath: String, column: String,
-      lower: Any, upper: Any, versionAsOf: Option[Long] = None): DataFrame = {
-    val snap = snapshot(spark, tablePath, versionAsOf)
-    val declared = snap.schema.getOrElse(throw new IllegalArgumentException(
-      s"DeltaLog: readRange needs a parseable metaData.schemaString at $tablePath"))
-    require(declared.fieldNames.contains(column),
-      s"DeltaLog: readRange column '$column' not in the table schema")
-    val pred = col(column) >= lit(lower) && col(column) <= lit(upper)
-    val kept = rangePruneFiles(snap, column, lower, upper)
-    val pruned = snap.copy(files = kept)
-    val base =
-      if (kept.exists(_.dv.isDefined)) readWithDv(spark, tablePath, pruned)
-      else readSnapshotFiles(spark, tablePath, pruned, kept, addFileColumn = false)
-    base.filter(pred)
-  }
 
   private def writeAtomic(fs: FileSystem, target: Path, bytes: Array[Byte], overwrite: Boolean): Unit = {
     val out = fs.create(target, overwrite)
@@ -1928,8 +1794,9 @@ object DeltaLog {
     * snapshot's files (or a commit's `_change_data` files) through a
     * [[LogFileIndex]], with the declared schema and the partition
     * columns typed from it and valued from each file's
-    * `partitionValues`. Every read, rewrite scan and change-data read
-    * goes through here.
+    * `partitionValues`; each file's `add.stats` bound its columns for
+    * the index's file skipping. Every read, rewrite scan and
+    * change-data read goes through here.
     *
     * Column mapping (any table written by 2023+ Databricks defaults to
     * `name` mode; `CONVERT TO DELTA` over Iceberg produces `id` mode):
@@ -1980,9 +1847,14 @@ object DeltaLog {
       case "name" => StructField(snap.physicalNames(f.name), f.dataType, f.nullable)
       case _ => f
     }
+    // stats key by PHYSICAL name; a scan column is physical under
+    // `name` mapping and logical under `id` mapping
+    val statsKey: String => String =
+      if (mode == "id") snap.physicalNames.withDefault(identity) else identity
     val scan = LogFileIndex.scan(spark,
-      files.map(f => (resolve(tablePath, f.path),
-        pcols.map(c => f.partitionValues.get(snap.pvKey(c)).flatMap(Option(_))))),
+      files.map(f => LogFile(resolve(tablePath, f.path),
+        pcols.map(c => f.partitionValues.get(snap.pvKey(c)).flatMap(Option(_))),
+        statsBounds(f, statsKey))),
       partitionSchema,
       declared.map(s => StructType(
         s.fields.filterNot(f => pcols.contains(f.name)).map(physical) ++ extraData)))
@@ -1992,6 +1864,27 @@ object DeltaLog {
     scan.select(columns ++
       (if (addFileColumn) Seq(col("_metadata.file_path").as("__file")) else Nil) ++
       (if (addRowIndex) Seq(col("_metadata.row_index").as("__pos")) else Nil): _*)
+  }
+
+  /** A file's `add.stats` min/max for a scan column, decoded to the
+    * column's type on first use (the stats JSON is parsed only when a
+    * data filter asks for a bound). Delta writers may truncate
+    * timestamp stats to milliseconds, so a timestamp max widens by
+    * 999 µs, as Delta's own reader widens it.
+    */
+  private def statsBounds(
+      f: DeltaFile, statsKey: String => String): (String, DataType) => Option[(Any, Any)] = {
+    lazy val stats = f.stats.flatMap(s => scala.util.Try(mapper.readTree(s)).toOption)
+    (column, dt) => {
+      def bound(kind: String): Option[Any] = stats
+        .flatMap(s => Option(s.get(kind))).flatMap(m => Option(m.get(statsKey(column))))
+        .filter(n => n.isValueNode && !n.isNull)
+        .flatMap(n => LogFileIndex.textBound(n.asText, dt))
+      for (lo <- bound("minValues"); hi <- bound("maxValues")) yield dt match {
+        case TimestampType | TimestampNTZType => (lo, hi.asInstanceOf[Long] + 999L)
+        case _ => (lo, hi)
+      }
+    }
   }
 
   /** The filesystem-normalized identity of a live file (scheme-less
@@ -3514,8 +3407,14 @@ object DeltaLog {
           val chunks = blocks.flatMap(_.getColumns.asScala.find(
             _.getPath.toDotString == name))
           val stats = chunks.map(_.getStatistics)
-          val usable = chunks.nonEmpty && stats.forall(s =>
-            s != null && !s.isEmpty && s.isNumNullsSet)
+          // a chunk holding values but no min/max (parquet reads a
+          // NaN-bearing chunk's stats back without them) leaves the
+          // column unbounded: the other chunks' range would not cover it
+          val usable = chunks.nonEmpty && chunks.forall { c =>
+            val s = c.getStatistics
+            s != null && !s.isEmpty && s.isNumNullsSet &&
+              (s.hasNonNullValue || s.getNumNulls == c.getValueCount)
+          }
           if (usable) {
             nullCnt.put(name, stats.map(_.getNumNulls).sum)
             val nonNull = stats.filter(_.hasNonNullValue)
@@ -3565,12 +3464,15 @@ object DeltaLog {
                   minVals.put(name, nonNull.map(_.genericGetMin.asInstanceOf[java.lang.Boolean].booleanValue).min)
                   maxVals.put(name, nonNull.map(_.genericGetMax.asInstanceOf[java.lang.Boolean].booleanValue).max)
                 case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-                  minVals.put(name, nonNull.map(
-                    _.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-                    .min(utf8Order))
-                  maxVals.put(name, nonNull.map(
-                    _.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-                    .max(utf8Order))
+                  // unsigned UTF-8 byte order, the order of Parquet
+                  // string stats and of Spark's string comparisons
+                  // (Java's UTF-16 order disagrees above U+FFFF)
+                  def utf8(v: Any) = org.apache.spark.unsafe.types.UTF8String.fromBytes(
+                    v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
+                  val byBytes: Ordering[org.apache.spark.unsafe.types.UTF8String] =
+                    (a, b) => a.binaryCompare(b)
+                  minVals.put(name, nonNull.map(s => utf8(s.genericGetMin)).min(byBytes).toString)
+                  maxVals.put(name, nonNull.map(s => utf8(s.genericGetMax)).max(byBytes).toString)
                 case _ => () // INT96 / decimals / raw binary: not indexed
               }
             }
@@ -3836,7 +3738,7 @@ object DeltaLog {
             case Seq(a, b) =>
               // interleave the two keys so every output file covers a
               // small rectangle in (a, b) space — min/max stay tight
-              // on BOTH columns, and readRange skips on either
+              // on BOTH columns, and a scan filtered on either skips
               val z = graft.ext.ZOrder.zValue(
                 col(a).cast(LongType), col(b).cast(LongType), 31)
               base.withColumn("__z", z)

@@ -201,28 +201,6 @@ object IcebergTable {
     }
   }
 
-  /** Skipping-comparable form: numerics/temporals to Double, strings
-    * verbatim (compared in UNSIGNED UTF-8 order) — the same lattice
-    * the Delta reader's stats skipping uses. `raw` values come from
-    * [[boundValue]] or a user argument.
-    */
-  private def comparableBound(dt: DataType, raw: Any): Option[Either[Double, String]] =
-    (dt, raw) match {
-      case (_, null) => None
-      case (StringType, s0: String) => Some(Right(s0))
-      case (DateType, d: java.sql.Date) => Some(Left(d.toLocalDate.toEpochDay.toDouble))
-      case (DateType, d: java.time.LocalDate) => Some(Left(d.toEpochDay.toDouble))
-      case (DateType, n: Int) => Some(Left(n.toDouble))
-      case (TimestampType, t: java.sql.Timestamp) =>
-        Some(Left(t.getTime * 1000.0 + (t.getNanos % 1000000) / 1000.0))
-      case (TimestampType, t: java.time.Instant) =>
-        Some(Left(t.getEpochSecond * 1e6 + t.getNano / 1000.0))
-      case (TimestampType, n: Long) => Some(Left(n.toDouble))
-      case (_, n: Number) => Some(Left(n.doubleValue))
-      case (BooleanType, x: Boolean) => Some(Left(if (x) 1.0 else 0.0))
-      case _ => None
-    }
-
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -844,13 +822,6 @@ object IcebergTable {
       if (meta.has("next-row-id")) Some(meta.get("next-row-id").asLong()) else None)
   }
 
-  /** Read a snapshot as a DataFrame: metadata walk → declared-schema
-    * parquet scan over the live files (pushdown/pruning intact).
-    * `partitionFilter` prunes at the FILE level from the manifests'
-    * identity partition tuples — the planning step Iceberg's own
-    * reader performs — before Spark ever sees the file list (values
-    * compared stringified, as recorded in the tuple).
-    */
   /** Resolve a wall-clock instant to the snapshot current AT that
     * time: the latest snapshot whose `timestamp-ms` is <= the asked
     * instant (Iceberg's own AS OF TIMESTAMP rule).
@@ -902,9 +873,27 @@ object IcebergTable {
       }.collect().toMap
   }
 
+  /** A data file's bounds for a scan column, as Catalyst values: the
+    * identity-partition value of an integral or string column as
+    * (v, v), else the manifest's `lower_bounds`/`upper_bounds`.
+    */
+  private def fileBounds(r: DataFileRef): (String, DataType) => Option[(Any, Any)] =
+    (column, dt) => dt match {
+      case IntegerType | LongType | StringType if r.partition.contains(column) =>
+        LogFileIndex.textBound(r.partition(column), dt).map(v => (v, v))
+      case StringType => r.bounds.get(column).collect { case (lo: String, hi: String) =>
+        (org.apache.spark.unsafe.types.UTF8String.fromString(lo),
+          org.apache.spark.unsafe.types.UTF8String.fromString(hi))
+      }
+      case IntegerType | LongType | DateType | TimestampType | FloatType | DoubleType |
+          BooleanType => r.bounds.get(column)
+      case _ => None
+    }
+
   /** The declared-schema scan over data files, each group one scan
-    * over a [[LogFileIndex]] of the manifests' paths (no listing; the
-    * data files carry their partition columns, so the index has none),
+    * over a [[LogFileIndex]] of the manifests' paths and bounds (no
+    * listing; the data files carry their partition columns, so the
+    * index has none and a partition filter skips by [[fileBounds]]),
     * surfacing v3 `initial-default` values: files written BEFORE a
     * defaulted column existed read the declared literal in its place
     * (grouped by footer presence — [[probeFieldPresence]]), files that
@@ -918,9 +907,11 @@ object IcebergTable {
   private def scanData(spark: SparkSession, snap: Snapshot,
       paths: Seq[String], withFidPos: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
+    val refs = snap.dataRefs.map(r => r.path -> r).toMap
     def one(group: Seq[String]): DataFrame = {
-      val base = LogFileIndex.scan(spark, group.map(p => (p, Nil)), new StructType(),
-        Some(snap.schema))
+      val base = LogFileIndex.scan(spark,
+        group.map(p => refs.get(p).fold(LogFile(p))(r => LogFile(p, bounds = fileBounds(r)))),
+        new StructType(), Some(snap.schema))
       if (withFidPos)
         base.select(col("*"),
           DeltaLog.normalizedFileId(col("_metadata.file_path")).as("__fid"),
@@ -939,29 +930,28 @@ object IcebergTable {
       }.reduce(_.unionByName(_))
   }
 
+  /** Read a snapshot as a DataFrame: metadata walk → declared-schema
+    * parquet scan over the live files through a [[LogFileIndex]]
+    * (pushdown intact), with position, equality and deletion-vector
+    * deletes applied. A filter on the result prunes FILES at planning
+    * time from the manifests alone — the planning step Iceberg's own
+    * reader performs: the index skips every file whose identity
+    * partition value or `lower_bounds`/`upper_bounds` prove that no
+    * row can match, so `read(...).filter(col("Year") === 1996)` opens
+    * only the 1996 files.
+    */
   def read(
-      spark: SparkSession, tablePath: String, snapshotId: Option[Long] = None,
-      partitionFilter: Map[String, String] = Map.empty): DataFrame = {
+      spark: SparkSession, tablePath: String, snapshotId: Option[Long] = None): DataFrame = {
     val snap = snapshot(spark, tablePath, snapshotId)
-    val refs =
-      if (partitionFilter.isEmpty) snap.dataRefs
-      else {
-        require(partitionFilter.keySet.subsetOf(snap.partitionColumns.toSet),
-          s"IcebergTable: partition filter on ${partitionFilter.keySet} but the " +
-            s"table is partitioned by [${snap.partitionColumns.mkString(",")}]")
-        snap.dataRefs.filter(r =>
-          partitionFilter.forall { case (k, v) => r.partition.get(k).contains(v) })
-      }
-    require(refs.nonEmpty,
-      s"IcebergTable: snapshot ${snap.snapshotId} of $tablePath has no data files" +
-        (if (partitionFilter.nonEmpty) s" matching $partitionFilter" else ""))
+    require(snap.dataRefs.nonEmpty,
+      s"IcebergTable: snapshot ${snap.snapshotId} of $tablePath has no data files")
     // id-capable tables resolve columns by FIELD ID (the schema carries
     // parquet.field.id metadata from parseSchema) — names in the files
     // are whatever the column was CALLED when written, which is what
     // makes rename/drop metadata-only; legacy tables read by name
     if (snap.fieldIdsWritten) DeltaLog.enableFieldIdRead(spark)
-    if (snap.deleteFiles.isEmpty) scanData(spark, snap, refs.map(_.path))
-    else readWithPositionDeletes(spark, snap, refs)
+    if (snap.deleteFiles.isEmpty) scanData(spark, snap, snap.files)
+    else readWithPositionDeletes(spark, snap, snap.dataRefs)
   }
 
   /** The reserved field id of the materialized `_row_id` column
@@ -1100,11 +1090,7 @@ object IcebergTable {
               // URI-encodes — space, #, non-ASCII)
               val dict = broadcast(
                 fidDictRows(files.map(_.path)).toDF("__dfn", "__dfid"))
-              Some(spark.read.parquet(posPaths: _*)
-                .select(DeltaLog.normalizedFileId(col("file_path")).as("__dfn"),
-                  col("pos").cast(LongType).as("__dpos"))
-                .join(dict, "__dfn")
-                .select(col("__dfid"), col("__dpos")))
+              Some(positionTombstones(spark, posPaths, dict))
             }
           val dvRefs = files.flatMap(f => dvByFile.get(scanFileId(f.path)))
           val dvPairs =
@@ -1141,12 +1127,10 @@ object IcebergTable {
           // id-capable tables read the delete file BY FIELD ID (its
           // columns carry whatever the field was NAMED when the delete
           // was written — binding by id is what keeps old equality
-          // deletes applying across renames); legacy tables by name
-          val eqScan =
-            if (snap.fieldIdsWritten)
-              spark.read.schema(StructType(cols.map(c => snap.schema(c))))
-                .parquet(dfiles.map(_.path): _*)
-            else spark.read.parquet(dfiles.map(_.path): _*)
+          // deletes applying across renames; the schema carries the
+          // ids); legacy tables by name
+          val eqScan = LogFileIndex.scan(spark, dfiles.map(d => LogFile(d.path)),
+            new StructType(), Some(StructType(cols.map(c => snap.schema(c)))))
           val dels0 = eqScan.select(
             cols.map(c => col(c).as(s"__eq_$c")): _*).distinct()
           val dels = if (fits(dfiles)) broadcast(dels0) else dels0
@@ -1155,6 +1139,22 @@ object IcebergTable {
         }
     }
     branches.reduce(_.unionByName(_))
+  }
+
+  /** The `(file, pos)` tombstones of position-delete files, keyed
+    * by scan identity through `dict` (stored path `__dfn` → scan
+    * identity `__dfid`): columns `__dfid`, `__dpos`.
+    */
+  private def positionTombstones(
+      spark: SparkSession, paths: Seq[String], dict: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val schema = StructType(Seq(
+      StructField("file_path", StringType), StructField("pos", LongType)))
+    LogFileIndex.scan(spark, paths.map(LogFile(_)), new StructType(), Some(schema))
+      .select(DeltaLog.normalizedFileId(col("file_path")).as("__dfn"),
+        col("pos").as("__dpos"))
+      .join(dict, "__dfn")
+      .select(col("__dfid"), col("__dpos"))
   }
 
   private def writeAvro(
@@ -2075,9 +2075,12 @@ object IcebergTable {
                 case Some((pmn, pmx)) =>
                   def lt(a: Any, b2: Any): Boolean = (a, b2) match {
                     // parquet binary stats order: unsigned UTF-8 bytes
-                    case (x: String, y: String) => DeltaLog.utf8Compare(x, y) < 0
-                    case (x: Number, y: Number) => x.doubleValue < y.doubleValue
-                    case (x: Boolean, y: Boolean) => !x && y
+                    case (x: String, y: String) =>
+                      org.apache.spark.unsafe.types.UTF8String.fromString(x)
+                        .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(y)) < 0
+                    // boxed numbers and booleans in their own order
+                    // (NaN above every double, longs without rounding)
+                    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y) < 0
                     case _ => false
                   }
                   perColumn(name) = (if (lt(mn, pmn)) mn else pmn,
@@ -2141,10 +2144,7 @@ object IcebergTable {
         // delete files carry the manifest's decoded path verbatim
         val dict = broadcast(
           fidDictRows(snap.dataRefs.map(_.path)).toDF("__dfn", "__dfid"))
-        val dels = spark.read.parquet(posDels.map(_.path): _*)
-          .select(DeltaLog.normalizedFileId(col("file_path")).as("__dfn"),
-            col("pos").cast(LongType).as("__dpos"))
-          .join(dict, "__dfn")
+        val dels = positionTombstones(spark, posDels.map(_.path), dict)
         base.join(dels,
           base("__fid") === dels("__dfid") && base("__pos") === dels("__dpos"), "left_anti")
       }
@@ -2753,63 +2753,6 @@ object IcebergTable {
       }
     }
     scanData(spark, snap, added)
-  }
-
-  // -------------------------------------------- stats-based skipping
-
-  /** The data files a `column BETWEEN lower AND upper` scan must read:
-    * files whose manifest bounds provably miss the range drop at PLAN
-    * time (the metadata walk — no footer is opened); files without
-    * bounds for the column are kept. The Iceberg twin of the Delta
-    * reader's stats skipping — at 100 TB this is the difference
-    * between a range probe costing its selectivity and costing the
-    * table.
-    */
-  def rangePruneFiles(
-      snap: Snapshot, column: String, lower: Any, upper: Any): Seq[DataFileRef] = {
-    val dt = snap.schema(column).dataType
-    val lo = comparableBound(dt, lower).getOrElse(throw new IllegalArgumentException(
-      s"IcebergTable: range lower bound $lower is not comparable as ${dt.simpleString}"))
-    val hi = comparableBound(dt, upper).getOrElse(throw new IllegalArgumentException(
-      s"IcebergTable: range upper bound $upper is not comparable as ${dt.simpleString}"))
-    snap.dataRefs.filter { r =>
-      r.bounds.get(column) match {
-        case Some((mn, mx)) =>
-          (comparableBound(dt, mn), comparableBound(dt, mx)) match {
-            case (Some(fmn), Some(fmx)) =>
-              // overlap test in the comparable lattice
-              def le(a: Either[Double, String], b: Either[Double, String]): Boolean =
-                (a, b) match {
-                  case (Left(x), Left(y)) => x <= y
-                  case (Right(x), Right(y)) => DeltaLog.utf8Compare(x, y) <= 0
-                  case _ => true // incomparable: keep
-                }
-              le(fmn, hi) && le(lo, fmx)
-            case _ => true
-          }
-        case None => true // no bounds recorded: must read
-      }
-    }
-  }
-
-  /** Range read with manifest-bounds file skipping: prune, scan only
-    * the kept files (position/equality deletes still applied), filter
-    * exactly. Mirrors [[DeltaLog.readRange]].
-    */
-  def readRange(
-      spark: SparkSession, tablePath: String, column: String,
-      lower: Any, upper: Any, snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val snap = snapshot(spark, tablePath, snapshotId)
-    require(snap.schema.fieldNames.contains(column),
-      s"IcebergTable: readRange column '$column' not in the table schema")
-    if (snap.fieldIdsWritten) DeltaLog.enableFieldIdRead(spark)
-    val kept = rangePruneFiles(snap, column, lower, upper)
-    val pred = col(column) >= lit(lower) && col(column) <= lit(upper)
-    val base =
-      if (snap.deleteFiles.isEmpty || kept.isEmpty) scanData(spark, snap, kept.map(_.path))
-      else readWithPositionDeletes(spark, snap, kept)
-    base.filter(pred)
   }
 
   // ------------------------------------------ schema evolution (by id)

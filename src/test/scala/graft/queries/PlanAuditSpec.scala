@@ -45,17 +45,7 @@ class PlanAuditSpec extends SparkSpec {
     // (the metric counts what the scan actually opened)
     val df = graft.SparkEntry.queries("s23_delta_partitioned")(spark, dir)
     df.collect() // execute so AQE finalizes and scan metrics fill
-    // AQE wraps finished stages in leaf QueryStageExec nodes, so a
-    // plain collect never reaches the scans — recurse through them
-    def allScans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-      p.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          allScans(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => allScans(q.plan)
-      }.flatten
-    val scans = allScans(df.queryExecution.executedPlan)
+    val scans = graft.PlanProbe.fileScans(df.queryExecution.executedPlan)
     assert(scans.size == 1, s"expected ONE log-backed scan, got ${scans.size}")
     val scan = scans.head
     assert(scan.toString.contains("PartitionFilters") && scan.toString.contains("1995"),
@@ -69,20 +59,13 @@ class PlanAuditSpec extends SparkSpec {
   test("s54_iceberg_range: the scan's file list IS the bounds-pruned subset") {
     val df = graft.SparkEntry.queries("s54_iceberg_range")(spark, dir)
     df.collect()
-    def allScans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-      p.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          allScans(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => allScans(q.plan)
-      }.flatten
-    val scans = allScans(df.queryExecution.executedPlan)
+    val scans = graft.PlanProbe.fileScans(df.queryExecution.executedPlan)
     assert(scans.nonEmpty)
-    // the relation Spark plans over contains ONLY the kept files: the
-    // skipped ones were dropped from the metadata walk, before Spark
-    // ever saw a path — a planner-level prune, not a row filter
-    val planned = scans.map(_.relation.location.inputFiles.length).sum
+    // the files the scans select are ONLY the kept files: the log-backed
+    // index holds every live file and skips, at planning, those whose
+    // manifest bounds miss the range — a planner-level prune, not a row
+    // filter
+    val planned = scans.map(_.selectedPartitions.totalNumberOfFiles).sum
     val root = s"/tmp/graft-fixtures-p${ProcessHandle.current().pid()}/s54_iceberg_range"
     val total = graft.sources.IcebergTable
       .snapshot(spark, root).dataRefs.size

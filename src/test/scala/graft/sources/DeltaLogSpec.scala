@@ -237,7 +237,7 @@ class DeltaLogSpec extends SparkSpec {
     val pruned = df.filter(col("year") === 2020)
     assert(pruned.count() == 2L)
     pruned.collect()
-    val scans = fileScans(pruned.queryExecution.executedPlan)
+    val scans = graft.PlanProbe.fileScans(pruned.queryExecution.executedPlan)
     assert(scans.size == 1, s"expected one scan, got ${scans.size}")
     val selected = scans.head.metrics("numFiles").value
     val readFiles = scans.head.inputRDD.partitions.toSeq.flatMap {
@@ -249,24 +249,15 @@ class DeltaLogSpec extends SparkSpec {
       s"partition filter should prune to one file: selected $selected, read $readFiles")
   }
 
-  /** Every file scan in an executed plan, through adaptive stages. */
-  private def fileScans(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-    p.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        fileScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => fileScans(q.plan)
-    }.flatten
-
   test("string skipping compares in UTF-8 byte order, as parquet footers do") {
     import spark.implicits._
     // footer max is the 4-byte "😀" (F0 9F 98 80), above "！" (EF BC 81)
     // in UTF-8; in UTF-16 order its surrogate pair sorts below "！"
     val t = newTable()
     DeltaLog.append(spark, t, Seq("！", "😀").toDF("tag").coalesce(1))
-    assert(DeltaLog.rangePruneFiles(DeltaLog.snapshot(spark, t), "tag", "！", "！").size == 1)
-    assert(DeltaLog.readRange(spark, t, "tag", "！", "！").count() == 1L)
+    val slice = DeltaLog.read(spark, t).filter(col("tag").between("！", "！"))
+    assert(LogFileIndex.plannedFiles(slice).size == 1)
+    assert(slice.count() == 1L)
   }
 
   test("percent-encoded add paths resolve to the on-disk file") {
@@ -760,17 +751,19 @@ class DeltaLogSpec extends SparkSpec {
     assert(first.get("minValues").get("v").asDouble() == 1.0)
     assert(first.get("nullCount").get("v").asLong() == 1L)
     assert(first.get("minValues").get("tag").asText() == "a")
+    def slice(c: String, lo: Any, hi: Any) =
+      DeltaLog.read(spark, t).filter(col(c).between(lo, hi))
     // skipping: the [90, 200] range can only live in file 2
-    assert(DeltaLog.rangePruneFiles(snap, "id", 90L, 200L).size == 1)
-    assert(DeltaLog.rangePruneFiles(snap, "id", 0L, 5000L).size == 3)
-    assert(DeltaLog.rangePruneFiles(snap, "id", 2000L, 9000L).isEmpty)
-    val got = DeltaLog.readRange(spark, t, "id", 90L, 200L).collect()
+    assert(LogFileIndex.plannedFiles(slice("id", 90L, 200L)).size == 1)
+    assert(LogFileIndex.plannedFiles(slice("id", 0L, 5000L)).size == 3)
+    assert(LogFileIndex.plannedFiles(slice("id", 2000L, 9000L)).isEmpty)
+    val got = slice("id", 90L, 200L).collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(100L))
     // a fully-skipped range returns EMPTY with the declared schema
-    val none = DeltaLog.readRange(spark, t, "id", 2000L, 9000L)
+    val none = slice("id", 2000L, 9000L)
     assert(none.isEmpty && none.schema.fieldNames.toSeq == Seq("id", "v", "tag"))
     // string-typed skipping works off the footer's UTF8 min/max
-    assert(DeltaLog.readRange(spark, t, "tag", "c", "cz").collect()
+    assert(slice("tag", "c", "cz").collect()
       .map(_.getString(2)).toSeq == Seq("c"))
     // stats survive checkpoint compaction
     DeltaLog.writeCheckpoint(spark, t)
@@ -779,7 +772,7 @@ class DeltaLogSpec extends SparkSpec {
     }
     val snapCp = DeltaLog.snapshot(spark, t)
     assert(snapCp.files.forall(_.stats.isDefined), "stats must survive the checkpoint")
-    assert(DeltaLog.rangePruneFiles(snapCp, "id", 90L, 200L).size == 1)
+    assert(LogFileIndex.plannedFiles(slice("id", 90L, 200L)).size == 1)
   }
 
   test("compact(zorderBy): files cluster into z-rectangles; either column skips") {
@@ -793,20 +786,22 @@ class DeltaLogSpec extends SparkSpec {
       col("id").as("payload"))
     DeltaLog.append(spark, t, df.repartition(8))
     val before = DeltaLog.snapshot(spark, t)
+    def planned(c: String, lo: Long, hi: Long) = LogFileIndex.plannedFiles(
+      DeltaLog.read(spark, t).filter(col(c).between(lo, hi))).size
     // scattered writes: an x-slice overlaps EVERY file
-    assert(DeltaLog.rangePruneFiles(before, "x", 16L, 31L).size == before.files.size)
+    assert(planned("x", 16L, 31L) == before.files.size)
     DeltaLog.compact(spark, t, targetFileBytes = 4L * 1024, zorderBy = Seq("x", "y"))
     val after = DeltaLog.snapshot(spark, t)
     assert(after.files.size > 1, "clustering must yield several files for skipping to mean anything")
     // top-half x slice: z bit 8 set -> the low-z files are skippable;
     // bottom y slice: odd bits >= 3 clear -> the high-z files are
-    val keptX = DeltaLog.rangePruneFiles(after, "x", 16L, 31L)
-    val keptY = DeltaLog.rangePruneFiles(after, "y", 0L, 1L)
-    assert(keptX.size < after.files.size, s"x-slice must skip: ${keptX.size}/${after.files.size}")
-    assert(keptY.size < after.files.size, s"y-slice must skip: ${keptY.size}/${after.files.size}")
+    val keptX = planned("x", 16L, 31L)
+    val keptY = planned("y", 0L, 1L)
+    assert(keptX < after.files.size, s"x-slice must skip: $keptX/${after.files.size}")
+    assert(keptY < after.files.size, s"y-slice must skip: $keptY/${after.files.size}")
     // results stay exact
-    assert(DeltaLog.readRange(spark, t, "x", 16L, 31L).count() == 512L)
-    assert(DeltaLog.readRange(spark, t, "y", 0L, 1L).count() == 64L)
+    assert(DeltaLog.read(spark, t).filter(col("x").between(16L, 31L)).count() == 512L)
+    assert(DeltaLog.read(spark, t).filter(col("y").between(0L, 1L)).count() == 64L)
     // guards: 3 columns, partition columns, non-integral two-col z
     intercept[IllegalArgumentException](
       DeltaLog.compact(spark, t, zorderBy = Seq("x", "y", "payload")))
@@ -826,10 +821,11 @@ class DeltaLogSpec extends SparkSpec {
         .withColumn("bucket", col("id") % 4L).drop("p"),
       partitionBy = Seq("bucket"))
     val snap = DeltaLog.snapshot(spark, t)
-    val kept = DeltaLog.rangePruneFiles(snap, "bucket", 1L, 2L)
+    val slice = DeltaLog.read(spark, t).filter(col("bucket").between(1L, 2L))
+    val kept = LogFileIndex.plannedFiles(slice)
     assert(kept.nonEmpty && kept.size < snap.files.size,
       s"partition pruning via range: ${kept.size}/${snap.files.size}")
-    assert(DeltaLog.readRange(spark, t, "bucket", 1L, 2L)
+    assert(slice
       .select("id").collect().map(_.getLong(0)).sorted.toSeq ==
       (1L to 12L).filter(i => i % 4 == 1 || i % 4 == 2))
   }
@@ -1444,27 +1440,7 @@ class DeltaLogSpec extends SparkSpec {
     }
   }
 
-  /** `body`'s value and the Spark jobs it starts from this thread. */
-  private def withJobs[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    val out =
-      try body
-      finally {
-        sc.clearJobGroup()
-        org.apache.spark.ListenerBusDrain(sc)
-        sc.removeSparkListener(listener)
-      }
-    (out, jobs.get)
-  }
+  private def withJobs[A](body: => A): (A, Int) = graft.PlanProbe.withJobs(spark)(body)
 
   /** A partitioned table of ids 1-8 in four files, checkpointed at v1
     * and not yet read since.
@@ -1500,6 +1476,25 @@ class DeltaLogSpec extends SparkSpec {
     val (iceberg, icebergJobs) = withJobs(IcebergTable.read(spark, ice))
     assert(icebergJobs == 0)
     assert(iceberg.count() == 40L)
+  }
+
+  test("a data filter skips files by the log's min/max at planning, with no Spark job") {
+    import spark.implicits._
+    // three files with disjoint id ranges, in each format
+    val parts = Seq(1L to 50L, 100L to 150L, 200L to 250L).map(_.toDF("id").coalesce(1))
+    val t = newTable()
+    parts.foreach(DeltaLog.append(spark, t, _))
+    val ice = Files.createTempDirectory("graft-iceberg").toString
+    parts.foreach(IcebergTable.append(spark, ice, _))
+    val reads = Seq("delta" -> (() => DeltaLog.read(spark, t)),
+      "iceberg" -> (() => IcebergTable.read(spark, ice)))
+    for ((format, read) <- reads) {
+      val (planned, jobs) =
+        withJobs(LogFileIndex.plannedFiles(read().filter(col("id") === 100L)))
+      assert(jobs == 0, format)
+      assert(planned.size == 1, s"$format plans $planned")
+      assert(read().filter(col("id") === 100L).as[Long].collect().toSeq == Seq(100L), format)
+    }
   }
 
   test("checkpoint cache: decoded once per process, a second snapshot runs no Spark job") {
@@ -1673,6 +1668,26 @@ class DeltaLogSpec extends SparkSpec {
     assert(DeltaLog.snapshot(spark, t).dvCardinality == 0L)
   }
 
+  test("a row group whose footer drops its min/max (NaN) leaves the column unbounded") {
+    val t = newTable()
+    val ice = Files.createTempDirectory("graft-iceberg").toString
+    val rows = spark.range(0, 2000).select(
+      when(col("id") === 0L, lit(Double.NaN)).otherwise(col("id").cast("double")).as("d"))
+      .coalesce(1)
+    // ~100-row row groups; the first holds a NaN, and parquet reads a
+    // NaN-bearing chunk's stats back with no min/max at all
+    spark.conf.set("parquet.block.size", "1024")
+    try { DeltaLog.append(spark, t, rows); IcebergTable.append(spark, ice, rows) }
+    finally spark.conf.unset("parquet.block.size")
+    val path = new org.apache.hadoop.fs.Path(t, DeltaLog.snapshot(spark, t).files.head.path)
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        path, spark.sparkContext.hadoopConfiguration))
+    try assert(footer.getRowGroups.size > 1) finally footer.close()
+    assert(DeltaLog.read(spark, t).filter(col("d") < 50.0).count() == 49L)
+    assert(IcebergTable.read(spark, ice).filter(col("d") < 50.0).count() == 49L)
+  }
+
   test("timestamp range skipping: sub-second bounds are not double-counted") {
     import spark.implicits._
     val t = newTable()
@@ -1686,15 +1701,13 @@ class DeltaLogSpec extends SparkSpec {
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     try DeltaLog.append(spark, t, rows.toDF("id", "ts").coalesce(1))
     finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-    val snap = DeltaLog.snapshot(spark, t)
-    val kept = DeltaLog.rangePruneFiles(snap, "ts",
-      new java.sql.Timestamp(1500L), new java.sql.Timestamp(1900L))
+    def slice(lo: Long, hi: Long) = DeltaLog.read(spark, t)
+      .filter(col("ts").between(new java.sql.Timestamp(lo), new java.sql.Timestamp(hi)))
+    val kept = LogFileIndex.plannedFiles(slice(1500L, 1900L))
     assert(kept.size == 1, "a 1.5s..1.9s range must keep the 1.6s..1.8s file")
-    assert(DeltaLog.readRange(spark, t, "ts",
-      new java.sql.Timestamp(1500L), new java.sql.Timestamp(1900L)).count() == 3L)
+    assert(slice(1500L, 1900L).count() == 3L)
     // and a range strictly above still skips
-    assert(DeltaLog.rangePruneFiles(snap, "ts",
-      new java.sql.Timestamp(1900L), new java.sql.Timestamp(2500L)).isEmpty)
+    assert(LogFileIndex.plannedFiles(slice(1900L, 2500L)).isEmpty)
   }
 
   test("delta.appendOnly: row-removing transactions refuse; appends and compaction proceed") {
@@ -1790,7 +1803,7 @@ class DeltaLogSpec extends SparkSpec {
     assert(DeltaLog.read(spark, t).orderBy("id").select("v").collect()
       .map(_.getLong(0)).toSeq == Seq(11L, 20L, 3000000000L))
     // stats skipping composes: int-era stats serve the long-typed range
-    assert(DeltaLog.readRange(spark, t, "v", 15L, 25L).count() == 1)
+    assert(DeltaLog.read(spark, t).filter(col("v").between(15L, 25L)).count() == 1)
     // NARROWING refuses, as does an unknown column
     assert(intercept[IllegalArgumentException](
       DeltaLog.widenColumnType(spark, t, "v", IntegerType))

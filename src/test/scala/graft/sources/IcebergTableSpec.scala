@@ -17,6 +17,8 @@ class IcebergTableSpec extends SparkSpec {
   private def newTable(): String =
     Files.createTempDirectory("graft-iceberg").toString
 
+  private def fileName(p: String): String = new org.apache.hadoop.fs.Path(p).getName
+
   test("writer -> reader round trip across two snapshots; declared schema types") {
     import spark.implicits._
     val t = newTable()
@@ -159,8 +161,8 @@ class IcebergTableSpec extends SparkSpec {
       f.contains(s"/data/yr=${pv("yr")}/")
     }, "manifest tuple must agree with the layout")
     // FILE-level pruning: a yr=2020 filter reads exactly the 2020 files
-    val pruned = IcebergTable.read(spark, t, partitionFilter = Map("yr" -> "2020"))
-    assert(pruned.inputFiles.length == 2, "one 2020 file per append")
+    val pruned = IcebergTable.read(spark, t).filter(col("yr") === 2020)
+    assert(LogFileIndex.plannedFiles(pruned).size == 2, "one 2020 file per append")
     assert(pruned.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
     // data files do NOT contain the alias; schema is the logical one
     assert(pruned.schema.fieldNames.toSeq == Seq("id", "tag", "yr"))
@@ -168,13 +170,27 @@ class IcebergTableSpec extends SparkSpec {
     val e1 = intercept[IllegalArgumentException](
       IcebergTable.append(spark, t, df1)) // unpartitioned into partitioned
     assert(e1.getMessage.contains("partitioning mismatch"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException](
-      IcebergTable.read(spark, t, partitionFilter = Map("nope" -> "1")))
-    assert(e2.getMessage.contains("partition filter"), e2.getMessage)
     // time travel composes with the spec: first snapshot still readable
     val metaTxt = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$t/metadata/v2.metadata.json"))
     assert(metaTxt.contains("\"partition-specs\""), "modern spec list present")
+  }
+
+  test("a partition filter on the read plans only that partition's files, with no Spark job") {
+    import spark.implicits._
+    val t = newTable()
+    def years(ids: Seq[Long]) = ids.map(i => (i, 1996 + (i % 3).toInt)).toDF("id", "Year")
+    IcebergTable.append(spark, t, years(1L to 12L), partitionBy = Seq("Year"))
+    IcebergTable.append(spark, t, years(13L to 24L), partitionBy = Seq("Year"))
+    val refs = IcebergTable.snapshot(spark, t).dataRefs
+    val want = refs.filter(_.partition("Year") == "1997").map(r => fileName(r.path))
+    assert(want.nonEmpty && want.size < refs.size)
+    val (planned, jobs) = graft.PlanProbe.withJobs(spark)(LogFileIndex.plannedFiles(
+      IcebergTable.read(spark, t).filter(col("Year") === 1997)))
+    assert(jobs == 0)
+    assert(planned.map(fileName).sorted == want.sorted, s"planned $planned")
+    assert(IcebergTable.read(spark, t).filter(col("Year") === 1997)
+      .select("id").as[Long].collect().sorted.toSeq == (1L to 24L).filter(_ % 3 == 1))
   }
 
   test("guards: unsupported format-version refusal, schema-mismatch append, unsupported type") {
@@ -363,7 +379,7 @@ class IcebergTableSpec extends SparkSpec {
     }
     assert(years.map(_.asInstanceOf[Int]).sorted == Seq(1996, 1997, 1998), years.toString)
     // partition pruning and deletes compose
-    assert(IcebergTable.read(spark, t, partitionFilter = Map("Year" -> "1997"))
+    assert(IcebergTable.read(spark, t).filter(col("Year") === 1997)
       .orderBy("id").select("id").as[Long].collect().toSeq ==
       Seq(1L, 7L, 10L), "Year=1997 holds ids 1,4,7,10 minus the deleted 4")
   }
@@ -392,7 +408,7 @@ class IcebergTableSpec extends SparkSpec {
       (1L to 12L).filterNot(Set(3L, 4L, 6L)))
     // partition PRUNING composes with both delete kinds: the pruned
     // branch still applies the global tombstone (4 dies in Year=1997)
-    assert(IcebergTable.read(spark, t, partitionFilter = Map("Year" -> "1997"))
+    assert(IcebergTable.read(spark, t).filter(col("Year") === 1997)
       .orderBy("id").select("id").as[Long].collect().toSeq == Seq(1L, 7L, 10L))
     // a PARTIAL scope tuple refuses (the spec matches full tuples)
     val e = intercept[IllegalArgumentException](
@@ -590,27 +606,33 @@ class IcebergTableSpec extends SparkSpec {
     assert(snap.dataRefs.forall(r =>
       r.bounds.contains("id") && r.bounds.contains("tag") && r.bounds.contains("v")),
       "every data file must carry bounds for every primitive column")
+    def slice(c: String, lo: Any, hi: Any) =
+      IcebergTable.read(spark, t).filter(col(c).between(lo, hi))
+    def planned(c: String, lo: Any, hi: Any): Seq[IcebergTable.DataFileRef] = {
+      val names = LogFileIndex.plannedFiles(slice(c, lo, hi)).map(fileName).toSet
+      snap.dataRefs.filter(r => names(fileName(r.path)))
+    }
     // PLAN-time pruning: [120, 130] hits exactly the second file
-    assert(IcebergTable.rangePruneFiles(snap, "id", 120L, 130L).size == 1)
-    assert(IcebergTable.readRange(spark, t, "id", 120L, 130L).count() == 11)
+    assert(planned("id", 120L, 130L).size == 1)
+    assert(slice("id", 120L, 130L).count() == 11)
     // double bounds prune the same way
-    assert(IcebergTable.rangePruneFiles(snap, "v", 60.0, 65.0).size == 1)
+    assert(planned("v", 60.0, 65.0).size == 1)
     // string bounds are lexicographic — coarser, never wrong
-    val keptTag = IcebergTable.rangePruneFiles(snap, "tag", "t120", "t130")
+    val keptTag = planned("tag", "t120", "t130")
     assert(keptTag.size <= 2 && keptTag.exists(_.bounds("tag")._1 == "t100"))
     // empty overlap: zero files read, typed empty frame
-    assert(IcebergTable.readRange(spark, t, "id", 5000L, 6000L).count() == 0)
+    assert(slice("id", 5000L, 6000L).count() == 0)
     // a position delete inside the surviving range applies through the
     // pruned scan (deletes gate on the kept subset, not the full table)
     IcebergTable.deleteRows(spark, t, col("id") === 125L)
-    assert(IcebergTable.readRange(spark, t, "id", 120L, 130L)
+    assert(slice("id", 120L, 130L)
       .select("id").as[Long].collect().toSeq.sorted ==
       (120L to 130L).filterNot(_ == 125L))
     // compaction re-collects bounds on the packed outputs
     IcebergTable.rewriteDataFiles(spark, t, minFileSizeBytes = Long.MaxValue)
     val after = IcebergTable.snapshot(spark, t)
     assert(after.dataRefs.forall(_.bounds.contains("id")))
-    assert(IcebergTable.readRange(spark, t, "id", 120L, 130L)
+    assert(slice("id", 120L, 130L)
       .select("id").as[Long].collect().toSeq.sorted ==
       (120L to 130L).filterNot(_ == 125L))
   }
@@ -639,16 +661,16 @@ class IcebergTableSpec extends SparkSpec {
       assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty, enc)
       assert(back.filter(col("ts") >= lit(ts(1))).select("id").as[Long].collect().sorted.toSeq ==
         Seq(2L, 3L), enc)
-      assert(IcebergTable.readRange(spark, t, "ts", ts(1), ts(1))
+      assert(back.filter(col("ts").between(ts(1), ts(1)))
         .select("id").as[Long].collect().toSeq == Seq(2L), enc)
       val ref = IcebergTable.snapshot(spark, t).dataRefs.head
       assert(ref.bounds.contains("id") && !ref.bounds.contains("small") &&
         !ref.bounds.contains("wide"), enc)
       assert(ref.bounds.contains("ts") == tsBounded, enc)
       // a timestamp range outside the file's bounds prunes it
-      if (tsBounded) assert(IcebergTable.rangePruneFiles(IcebergTable.snapshot(spark, t), "ts",
+      if (tsBounded) assert(LogFileIndex.plannedFiles(back.filter(col("ts").between(
         java.sql.Timestamp.valueOf("2022-01-01 00:00:00"),
-        java.sql.Timestamp.valueOf("2022-01-02 00:00:00")).isEmpty, enc)
+        java.sql.Timestamp.valueOf("2022-01-02 00:00:00")))).isEmpty, enc)
     }
   }
 
@@ -831,7 +853,7 @@ class IcebergTableSpec extends SparkSpec {
       .select("id").as[Long].collect().toSeq
     assert(back == (1L to 40L).filterNot(i => i == 2L || i == 4L))
     // partition pruning still runs off the rewritten manifests
-    assert(IcebergTable.read(spark, t, partitionFilter = Map("p" -> "A")).count() == 18)
+    assert(IcebergTable.read(spark, t).filter(col("p") === "A").count() == 18)
   }
 
   test("rewriteDataFiles + expireSnapshots: compaction orphans old files; expiry reclaims them") {

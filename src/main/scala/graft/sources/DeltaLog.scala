@@ -1870,18 +1870,31 @@ object DeltaLog {
     * column's type on first use (the stats JSON is parsed only when a
     * data filter asks for a bound). Delta writers may truncate
     * timestamp stats to milliseconds, so a timestamp max widens by
-    * 999 µs, as Delta's own reader widens it.
+    * 999 µs, as Delta's own reader widens it. A FLOAT column widened to
+    * DOUBLE keeps its old files' float stats, spelled as the float's
+    * shortest decimal, which as a double misses the float's value
+    * (0.7f reads back as 0.699999988): a double bound spans both
+    * readings. Decimal columns are unbounded: logs written before
+    * `statsJson` scaled them record the unscaled integer.
     */
   private def statsBounds(
       f: DeltaFile, statsKey: String => String): (String, DataType) => Option[(Any, Any)] = {
     lazy val stats = f.stats.flatMap(s => scala.util.Try(mapper.readTree(s)).toOption)
     (column, dt) => {
-      def bound(kind: String): Option[Any] = stats
+      def text(kind: String): Option[String] = stats
         .flatMap(s => Option(s.get(kind))).flatMap(m => Option(m.get(statsKey(column))))
-        .filter(n => n.isValueNode && !n.isNull)
-        .flatMap(n => LogFileIndex.textBound(n.asText, dt))
-      for (lo <- bound("minValues"); hi <- bound("maxValues")) yield dt match {
-        case TimestampType | TimestampNTZType => (lo, hi.asInstanceOf[Long] + 999L)
+        .filter(n => n.isValueNode && !n.isNull).map(_.asText)
+      def asFloat(t: String, orElse: Double): Double =
+        scala.util.Try(t.trim.toFloat.toDouble).getOrElse(orElse)
+      if (dt.isInstanceOf[DecimalType]) None
+      else for {
+        loText <- text("minValues"); hiText <- text("maxValues")
+        lo <- LogFileIndex.textBound(loText, dt); hi <- LogFileIndex.textBound(hiText, dt)
+      } yield (dt, lo, hi) match {
+        case (TimestampType | TimestampNTZType, _, hi: Long) => (lo, hi + 999L)
+        case (DoubleType, lo: Double, hi: Double) =>
+          (math.min(lo, asFloat(loText, Double.NegativeInfinity)),
+            math.max(hi, asFloat(hiText, Double.PositiveInfinity)))
         case _ => (lo, hi)
       }
     }
@@ -3428,6 +3441,14 @@ object DeltaLog {
                   val mx = nonNull.map(_.genericGetMax.asInstanceOf[Integer].intValue).max
                   minVals.put(name, java.time.LocalDate.ofEpochDay(mn.toLong).toString)
                   maxVals.put(name, java.time.LocalDate.ofEpochDay(mx.toLong).toString)
+                case (INT32 | INT64, d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
+                  // the chunk stats hold the unscaled integer; the log
+                  // spells the decimal's value
+                  def unscaled(v: Any) = v.asInstanceOf[Number].longValue
+                  minVals.put(name, java.math.BigDecimal.valueOf(
+                    nonNull.map(s => unscaled(s.genericGetMin)).min, d.getScale))
+                  maxVals.put(name, java.math.BigDecimal.valueOf(
+                    nonNull.map(s => unscaled(s.genericGetMax)).max, d.getScale))
                 case (INT32, _) =>
                   minVals.put(name, nonNull.map(_.genericGetMin.asInstanceOf[Integer].intValue).min)
                   maxVals.put(name, nonNull.map(_.genericGetMax.asInstanceOf[Integer].intValue).max)
@@ -3473,7 +3494,7 @@ object DeltaLog {
                     (a, b) => a.binaryCompare(b)
                   minVals.put(name, nonNull.map(s => utf8(s.genericGetMin)).min(byBytes).toString)
                   maxVals.put(name, nonNull.map(s => utf8(s.genericGetMax)).max(byBytes).toString)
-                case _ => () // INT96 / decimals / raw binary: not indexed
+                case _ => () // INT96 / FIXED_LEN decimals / raw binary: not indexed
               }
             }
           }

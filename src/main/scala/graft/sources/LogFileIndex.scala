@@ -76,7 +76,10 @@ object LogFileIndex {
     * here, loudly. Partition values are cast to their declared types
     * under the session's time zone. Without a `dataSchema` it is
     * inferred from the files' footers, as an undeclared
-    * `spark.read.parquet` would.
+    * `spark.read.parquet` would. Parquet's dictionary filter is off: it
+    * compares doubles by `Double.equals`/`compare`, which tell -0.0
+    * from 0.0, so it drops a row group of -0.0 under `d = 0.0` or
+    * `d >= 0.0`, which Spark holds true.
     */
   private[sources] def scan(
       spark: SparkSession, files: Seq[LogFile],
@@ -97,7 +100,8 @@ object LogFileIndex {
         StructType(s.filterNot(f => partitionSchema.fieldNames.contains(f.name))))
     val partitions = GraftSqlShims.asNullable(partitionSchema)
     val relation = HadoopFsRelation(new LogFileIndex(partitions, indexed), partitions,
-      GraftSqlShims.asNullable(data), None, format, Map.empty)(spark)
+      GraftSqlShims.asNullable(data), None, format,
+      Map("parquet.filter.dictionary.enabled" -> "false"))(spark)
     GraftSqlShims.ofRows(spark, LogicalRelation(relation))
   }
 

@@ -1497,6 +1497,53 @@ class DeltaLogSpec extends SparkSpec {
     }
   }
 
+  test("decimal stats spell the value; decimal filters keep every row, also over unscaled stats") {
+    import spark.implicits._
+    // 1.00 .. 100.00 as decimal(10,2): parquet stores the unscaled INT64
+    val t = newTable()
+    DeltaLog.append(spark, t, (1 to 100).map(c => java.math.BigDecimal.valueOf(c * 100L, 2))
+      .toDF("p").select(col("p").cast(DecimalType(10, 2)).as("p")).coalesce(1))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val stats = mapper.readTree(DeltaLog.snapshot(spark, t).files.head.stats.get)
+    assert(stats.get("minValues").get("p").decimalValue.compareTo(
+      new java.math.BigDecimal("1.00")) == 0, stats.toString)
+    assert(stats.get("maxValues").get("p").decimalValue.compareTo(
+      new java.math.BigDecimal("100.00")) == 0, stats.toString)
+    assert(DeltaLog.read(spark, t).filter(col("p") < 50).count() == 49)
+    // a log written before the stats were scaled records 100 .. 10000
+    val log = Paths.get(f"$t/_delta_log/${0L}%020d.json")
+    val unscaled = """{"numRecords":100,"minValues":{"p":100},"maxValues":{"p":10000},"nullCount":{"p":0}}"""
+    Files.writeString(log, Files.readAllLines(log).toArray(Array.empty[String]).map { l =>
+      val n = mapper.readTree(l)
+      Option(n.get("add")).fold(l) { a =>
+        a.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].put("stats", unscaled)
+        mapper.writeValueAsString(n)
+      }
+    }.mkString("", "\n", "\n"))
+    Files.deleteIfExists(log.resolveSibling(s".${log.getFileName}.crc"))
+    assert(DeltaLog.snapshot(spark, t).files.head.stats.contains(unscaled))
+    assert(DeltaLog.read(spark, t).filter(col("p") < 50).count() == 49)
+    assert(DeltaLog.read(spark, t).filter(col("p") === 100).count() == 1)
+  }
+
+  test("a filter on a signed zero keeps every row it matches, in both formats") {
+    import spark.implicits._
+    // parquet's dictionary filter alone would drop the -0.0 row group
+    // under `= 0.0` and `>= 0.0`, and the 0.0 one under `<= -0.0`
+    val t = newTable()
+    val ice = Files.createTempDirectory("graft-iceberg").toString
+    Seq(Seq(-0.0, -0.0), Seq(0.0, 0.0)).map(_.toDF("d").coalesce(1)).foreach { f =>
+      DeltaLog.append(spark, t, f)
+      IcebergTable.append(spark, ice, f)
+    }
+    for ((format, read) <- Seq("delta" -> (() => DeltaLog.read(spark, t)),
+        "iceberg" -> (() => IcebergTable.read(spark, ice)))) {
+      assert(read().filter(col("d") === 0.0).count() == 4, format)
+      assert(read().filter(col("d") >= 0.0).count() == 4, format)
+      assert(read().filter(col("d") <= -0.0).count() == 4, format)
+    }
+  }
+
   test("checkpoint cache: decoded once per process, a second snapshot runs no Spark job") {
     val t = checkpointedTable()
     val (first, firstJobs) = withJobs(DeltaLog.snapshot(spark, t))
@@ -1820,6 +1867,14 @@ class DeltaLogSpec extends SparkSpec {
     val r = DeltaLog.read(spark, t2).head()
     assert(r.getDouble(0) == 1.5 &&
       r.getAs[java.time.LocalDateTime](1).toLocalDate.toString == "2024-01-02")
+    // float-era stats spell 0.7f and 1.1f as "0.7" and "1.1", but the
+    // file's values read as doubles lie just below 0.7 and above 1.1
+    val t3 = newTable()
+    DeltaLog.append(spark, t3, Seq(0.7f, 1.1f).toDF("x").coalesce(1))
+    DeltaLog.widenColumnType(spark, t3, "x", DoubleType)
+    assert(DeltaLog.read(spark, t3).filter(col("x") < 0.7).count() == 1)
+    assert(DeltaLog.read(spark, t3).filter(col("x") > 1.1).count() == 1)
+    assert(DeltaLog.read(spark, t3).filter(col("x") === 0.7f.toDouble).count() == 1)
   }
 
   test("shallow clone: metadata-only copy that diverges without ever touching the source") {

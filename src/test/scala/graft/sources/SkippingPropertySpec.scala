@@ -5,13 +5,14 @@ import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
 /** ScalaCheck law for file skipping in [[LogFileIndex]]: skipping
   * never drops a row. Over random multi-file Delta and Iceberg tables
-  * (long, int, double, string, date and TIMESTAMP_MICROS columns, with
-  * nulls, NaN, signed zeros, empty and non-BMP strings) and random
+  * (long, int, double, string, date, TIMESTAMP_MICROS and decimal(10,2)
+  * columns, with nulls, NaN, signed zeros, empty and non-BMP strings) and random
   * predicates (`=`, `<`, `<=`, `>`, `>=`, IN, BETWEEN, IS NULL under
   * AND, OR and NOT), `read(t).filter(p)` equals `p` applied to the
   * source rows held here, which no file index sees.
@@ -24,10 +25,10 @@ import org.scalacheck.rng.Seed
   */
 class SkippingPropertySpec extends SparkSpec {
 
-  private type Row6 = (Option[Long], Option[Int], Option[Double], Option[String],
-    Option[java.sql.Date], Option[java.sql.Timestamp])
+  private type Row7 = (Option[Long], Option[Int], Option[Double], Option[String],
+    Option[java.sql.Date], Option[java.sql.Timestamp], Option[java.math.BigDecimal])
 
-  private val columns = Seq("l", "i", "d", "s", "dt", "ts")
+  private val columns = Seq("l", "i", "d", "s", "dt", "ts", "p")
 
   /** Each column's values in Spark's order (NaN above every double;
     * strings in UTF-8 byte order, which puts "😀" above "！").
@@ -40,7 +41,9 @@ class SkippingPropertySpec extends SparkSpec {
     IndexedSeq("", "a", "ab", "b", "z", "é", "！", "😀", "😀z"),
     (18000 to 18040 by 2).map(d => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d))),
     (0 to 20).map(k => java.sql.Timestamp.from(
-      java.time.Instant.ofEpochSecond(1600000000L + 3L * k, (k * 123457L % 1000000L) * 1000L))))
+      java.time.Instant.ofEpochSecond(1600000000L + 3L * k, (k * 123457L % 1000000L) * 1000L))),
+    Seq("-20.00", "-1.25", "0.00", "0.50", "1.00", "3.75", "9.99", "20.00", "50.00", "99.99")
+      .map(new java.math.BigDecimal(_)).toIndexedSeq)
 
   private def window(domain: IndexedSeq[Any]): Gen[IndexedSeq[Any]] = for {
     from <- Gen.choose(0, domain.size - 1)
@@ -50,17 +53,18 @@ class SkippingPropertySpec extends SparkSpec {
   private def cell(values: IndexedSeq[Any]): Gen[Option[Any]] =
     Gen.frequency(1 -> Gen.const(None), 5 -> Gen.oneOf(values).map(Some(_)))
 
-  private val fileGen: Gen[Seq[Row6]] = for {
+  private val fileGen: Gen[Seq[Row7]] = for {
     windows <- Gen.sequence[Seq[IndexedSeq[Any]], IndexedSeq[Any]](domains.map(window))
     n <- Gen.choose(1, 6)
     rows <- Gen.listOfN(n, Gen.sequence[Seq[Option[Any]], Option[Any]](windows.map(cell)))
   } yield rows.map { r =>
     (r(0).map(_.asInstanceOf[Long]), r(1).map(_.asInstanceOf[Int]),
       r(2).map(_.asInstanceOf[Double]), r(3).map(_.asInstanceOf[String]),
-      r(4).map(_.asInstanceOf[java.sql.Date]), r(5).map(_.asInstanceOf[java.sql.Timestamp]))
+      r(4).map(_.asInstanceOf[java.sql.Date]), r(5).map(_.asInstanceOf[java.sql.Timestamp]),
+      r(6).map(_.asInstanceOf[java.math.BigDecimal]))
   }
 
-  private val tableGen: Gen[Seq[Seq[Row6]]] =
+  private val tableGen: Gen[Seq[Seq[Row7]]] =
     Gen.choose(2, 4).flatMap(n => Gen.listOfN(n, fileGen))
 
   /** A literal from column `c`'s domain; the int column also compares
@@ -111,7 +115,9 @@ class SkippingPropertySpec extends SparkSpec {
     var skipped = 0
     try {
       val prop = Prop.forAll(tableGen, Gen.listOfN(6, predicate(2))) { (files, preds) =>
-        val frames = files.map(_.toDF(columns: _*))
+        // decimal(10,2) is written as INT64 holding the unscaled value
+        val frames = files.map(_.toDF(columns: _*)
+          .withColumn("p", col("p").cast(DecimalType(10, 2))))
         val source = frames.reduce(_.union(_))
         val delta = Files.createTempDirectory("graft-skip-delta").toString
         val ice = Files.createTempDirectory("graft-skip-iceberg").toString

@@ -1824,7 +1824,6 @@ object CoreQueries {
         val fs = new org.apache.hadoop.fs.Path(S23Root).getFileSystem(conf)
         val parts = fs.globStatus(new org.apache.hadoop.fs.Path(
           s"$stage/Year=*/Month=*/part-*.parquet")).toSeq.map(_.getPath)
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
         val adds = parts.sortBy(_.toString).map { p =>
           val monthDir = p.getParent.getName
           val yearDir = p.getParent.getParent.getName
@@ -1833,34 +1832,20 @@ object CoreQueries {
           fs.mkdirs(dest.getParent)
           require(fs.rename(p, dest), s"s23 fixture: move failed for $p")
           val st = fs.getFileStatus(dest)
-          val root = mapper.createObjectNode()
-          val a = root.putObject("add")
-          a.put("path", rel)
-          val pv = a.putObject("partitionValues")
-          pv.put("Year", yearDir.stripPrefix("Year="))
-          pv.put("Month", monthDir.stripPrefix("Month="))
-          a.put("size", st.getLen)
-          a.put("modificationTime", st.getModificationTime)
-          a.put("dataChange", true)
-          mapper.writeValueAsString(root)
+          val pvals = Map(
+            "Year" -> yearDir.stripPrefix("Year="), "Month" -> monthDir.stripPrefix("Month="))
+          graft.sources.DeltaLog.addAction(
+            graft.sources.DeltaLog.DeltaFile(rel, pvals, st.getLen), Seq("Year", "Month"),
+            st.getModificationTime, dataChange = true)
         }
         fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-        val metaLine = {
-          val root = mapper.createObjectNode()
-          val m = root.putObject("metaData")
-          m.put("id", "graft-s23-fixture")
-          val f = m.putObject("format"); f.put("provider", "parquet"); f.putObject("options")
-          m.put("schemaString", src.schema.json)
-          val pc = m.putArray("partitionColumns"); pc.add("Year"); pc.add("Month")
-          m.putObject("configuration")
-          mapper.writeValueAsString(root)
-        }
         val logDir = java.nio.file.Paths.get(s"$S23Root/_delta_log")
         java.nio.file.Files.createDirectories(logDir)
         java.nio.file.Files.writeString(
           logDir.resolve("00000000000000000000.json"),
-          (Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
-            metaLine) ++ adds).mkString("", "\n", "\n"))
+          (Seq(graft.sources.DeltaLog.protocolAction(1, 2),
+            graft.sources.DeltaLog.metaDataAction("graft-s23-fixture", src.schema.json,
+              Seq("Year", "Month"), Nil)) ++ adds).mkString("", "\n", "\n"))
         s23BuiltFor.set(dir)
       }
     }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -336,6 +337,16 @@ object DeltaLog {
     else replay(spark, tablePath, segmentFor(spark, tablePath, None)).txns.get(appId)
   }
 
+  /** Whether `txn`'s (appId, epoch) already landed — the exactly-once
+    * early return of every txn-stamped writer: a commit that already
+    * landed is NOT re-applied, the mechanism a streaming foreachBatch
+    * sink replays safely through.
+    */
+  private def txnLanded(
+      spark: SparkSession, tablePath: String, txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (appId, epoch) =>
+      lastTxnVersion(spark, tablePath, appId).exists(_ >= epoch) }
+
   /** Checkpoint actions — crucially, `protocol` and `metaData` are
     * PROJECTED from the checkpoint parquet, not nulled: the protocol
     * REQUIRES every classic checkpoint to carry both actions (that is
@@ -658,6 +669,193 @@ object DeltaLog {
       txnApp = s(21), txnVersion = l(22),
       dmDomain = s(23), dmConf = s(24), dmRemoved = b(25),
       version = r.getLong(26))
+  }
+
+  // ------------------------------------------------ action encoders
+  // The inverse of [[actFromJson]]: every commit line any writer lands
+  // is built by exactly one of these, one per action kind.
+
+  private def jsonLine(build: ObjectNode => Unit): String = {
+    val root = mapper.createObjectNode()
+    build(root)
+    mapper.writeValueAsString(root)
+  }
+
+  /** `partitionValues` under `keys`, in that order; a missing or null
+    * value is written as JSON null.
+    */
+  private def putPartitionValues(
+      action: ObjectNode, keys: Seq[String], values: Map[String, String]): Unit = {
+    val pv = action.putObject("partitionValues")
+    keys.foreach(k => values.get(k).flatMap(Option(_)) match {
+      case Some(v) => pv.put(k, v)
+      case None => pv.putNull(k)
+    })
+  }
+
+  /** The `add` action of `f`: its path as given (a new file's encoded
+    * relative path, or a logged path verbatim — the string is the log's
+    * reconciliation identity), its partition values under
+    * `partitionKeys`, the row-tracking pair `rowIds` = (baseRowId,
+    * defaultRowCommitVersion) when given, then its stats and deletion
+    * vector when present.
+    */
+  private[graft] def addAction(
+      f: DeltaFile, partitionKeys: Seq[String], modificationTime: Long,
+      dataChange: Boolean, rowIds: Option[(Long, Long)] = None): String = jsonLine { root =>
+    val a = root.putObject("add")
+    a.put("path", f.path)
+    putPartitionValues(a, partitionKeys, f.partitionValues)
+    a.put("size", f.size)
+    a.put("modificationTime", modificationTime)
+    a.put("dataChange", dataChange)
+    rowIds.foreach { case (base, version) =>
+      a.put("baseRowId", base)
+      a.put("defaultRowCommitVersion", version)
+    }
+    f.stats.foreach(s => a.put("stats", s))
+    f.dv.foreach { d =>
+      val dv = a.putObject("deletionVector")
+      dv.put("storageType", d.storageType)
+      dv.put("pathOrInlineDv", d.pathOrInlineDv)
+      d.offset.foreach(o => dv.put("offset", o))
+      dv.put("sizeInBytes", d.sizeInBytes)
+      dv.put("cardinality", d.cardinality)
+    }
+  }
+
+  /** The `remove` action of a logged path (verbatim, so it matches the
+    * add that wrote it).
+    */
+  private def removeAction(path: String, deletionTimestamp: Long, dataChange: Boolean): String =
+    jsonLine { root =>
+      val r = root.putObject("remove")
+      r.put("path", path)
+      r.put("deletionTimestamp", deletionTimestamp)
+      r.put("dataChange", dataChange)
+    }
+
+  /** A `cdc` action: change rows are a description of the change, not
+    * table data, so `dataChange = false` per the spec.
+    */
+  private def cdcAction(
+      path: String, partitionKeys: Seq[String], values: Map[String, String], size: Long): String =
+    jsonLine { root =>
+      val c = root.putObject("cdc")
+      c.put("path", path)
+      putPartitionValues(c, partitionKeys, values)
+      c.put("size", size)
+      c.put("dataChange", false)
+    }
+
+  /** The `txn` action stamping a commit with (appId, epoch). */
+  private def txnAction(txn: (String, Long)): String = jsonLine { root =>
+    val t = root.putObject("txn")
+    t.put("appId", txn._1)
+    t.put("version", txn._2)
+  }
+
+  /** The `metaData` action; `configuration` is written in its own order. */
+  private[graft] def metaDataAction(
+      id: String, schemaString: String, partitionColumns: Seq[String],
+      configuration: Iterable[(String, String)]): String = jsonLine { root =>
+    val m = root.putObject("metaData")
+    m.put("id", id)
+    val f = m.putObject("format"); f.put("provider", "parquet"); f.putObject("options")
+    m.put("schemaString", schemaString)
+    val pc = m.putArray("partitionColumns")
+    partitionColumns.foreach(pc.add)
+    val cfg = m.putObject("configuration")
+    configuration.foreach { case (k, v) => cfg.put(k, v) }
+  }
+
+  /** The `protocol` action; an empty feature list is left out. */
+  private[graft] def protocolAction(
+      minReader: Int, minWriter: Int,
+      readerFeatures: Seq[String] = Nil, writerFeatures: Seq[String] = Nil): String =
+    jsonLine { root =>
+      val p = root.putObject("protocol")
+      p.put("minReaderVersion", minReader)
+      p.put("minWriterVersion", minWriter)
+      if (readerFeatures.nonEmpty) {
+        val rf = p.putArray("readerFeatures"); readerFeatures.foreach(rf.add)
+      }
+      if (writerFeatures.nonEmpty) {
+        val wf = p.putArray("writerFeatures"); writerFeatures.foreach(wf.add)
+      }
+    }
+
+  /** The `protocol` action moving `snap`'s table to (3, 7) with
+    * `feature` declared on both lists, or None when it already declares
+    * it at reader 3. Every feature the table declares, every one its
+    * LEGACY version numbers imply, and columnMapping on a mapped table
+    * re-declare explicitly — dropping one (say checkConstraints on a v4
+    * table) would let a spec-compliant engine append without enforcing
+    * it while its metadata stays active.
+    */
+  private def upgradeProtocol(snap: Snapshot, feature: String): Option[String] =
+    if (snap.readerVersion.exists(_ >= 3) && snap.readerFeatures.contains(feature)) None
+    else Some(protocolAction(3, 7,
+      (snap.readerFeatures + feature ++
+        snap.readerVersion.toSet.flatMap(legacyImpliedReaderFeatures) ++
+        (if (snap.columnMappingMode != "none") Set("columnMapping") else Set.empty)).toSeq.sorted,
+      (snap.writerFeatures ++
+        snap.writerVersion.toSet.flatMap(legacyImpliedWriterFeatures) ++
+        Set("appendOnly", "invariants", feature)).toSeq.sorted))
+
+  /** The `commitInfo` action leading an in-commit-timestamp commit. */
+  private def commitInfoAction(inCommitTimestamp: Long): String = jsonLine { root =>
+    val ci = root.putObject("commitInfo")
+    ci.put("timestamp", System.currentTimeMillis())
+    ci.put("inCommitTimestamp", inCommitTimestamp)
+  }
+
+  /** Fresh row ids for newly landed files holding `counts` rows, above
+    * the table's high-water `mark` (None before the first allocation):
+    * file i takes the contiguous block from `bases(i)` — a row's id is
+    * its file's base plus its position — and [[commitWithRowIds]]
+    * advances the mark past them in the same commit, so ids are burned
+    * exactly once.
+    */
+  private final case class RowIdBlock(mark: Option[Long], counts: Seq[Long]) {
+    val bases: Seq[Long] = counts.scanLeft(mark.getOrElse(-1L) + 1L)(_ + _).init
+  }
+
+  /** [[commitActions]] for a commit allocating `rowIds` (None when the
+    * table does not track rows): the `delta.rowTracking` domainMetadata
+    * line advancing the mark rides last. On a LOST VERSION RACE the
+    * retry re-reads the mark and refuses loudly if it moved: the staged
+    * line would overwrite the winner's mark (latest-per-domain replay)
+    * and the next writer would re-allocate burned ids — a single-writer
+    * contract violation surfaces instead of silently corrupting.
+    */
+  private def commitWithRowIds(
+      spark: SparkSession, fs: FileSystem, logDir: Path, tablePath: String, op: String,
+      rowIds: Option[RowIdBlock], withIct: Boolean)(lines: Long => Seq[String]): Long = {
+    var firstTried: Option[Long] = None
+    commitActions(fs, logDir, tablePath, v => {
+      rowIds.foreach { r =>
+        if (firstTried.isEmpty) firstTried = Some(v)
+        else if (!firstTried.contains(v)) {
+          val cur = snapshot(spark, tablePath, None).rowIdHighWaterMark
+          if (cur != r.mark)
+            throw new java.util.ConcurrentModificationException(
+              s"DeltaLog: version race on a rowTracking $op of $tablePath — the " +
+                s"delta.rowTracking high-water mark moved from ${r.mark} to $cur during " +
+                "the commit; the staged base row ids would re-burn allocated ids " +
+                "(single-writer contract violated)")
+        }
+      }
+      lines(v) ++ rowIds.filter(_.counts.nonEmpty).map { r =>
+        jsonLine { root =>
+          val d = root.putObject("domainMetadata")
+          d.put("domain", "delta.rowTracking")
+          d.put("configuration",
+            s"""{"rowIdHighWaterMark":${r.mark.getOrElse(-1L) + r.counts.sum}}""")
+          d.put("removed", false)
+        }
+      }
+    }, withIct)
   }
 
   /** One replay of a [[LogSegment]], on the driver: its version, the
@@ -1327,25 +1525,12 @@ object DeltaLog {
     val logDir = logDirOf(tablePath)
     val fs = fsOf(spark, logDir)
     val r0 = currentReplay(spark, tablePath)
-    val snap0 = r0.snapshot
-    val r =
-      if (snap0.readerVersion.exists(_ >= 3) && snap0.readerFeatures.contains("v2Checkpoint")) r0
-      else {
-        val rf = (snap0.readerFeatures + "v2Checkpoint" ++
-          snap0.readerVersion.toSet.flatMap(legacyImpliedReaderFeatures) ++
-          (if (snap0.columnMappingMode != "none") Set("columnMapping") else Set.empty)).toSeq.sorted
-        val wf = (snap0.writerFeatures ++
-          snap0.writerVersion.toSet.flatMap(legacyImpliedWriterFeatures) ++
-          Set("appendOnly", "invariants", "v2Checkpoint")).toSeq.sorted
-        val line = actionLineStatic { root =>
-          val p = root.putObject("protocol")
-          p.put("minReaderVersion", 3); p.put("minWriterVersion", 7)
-          val rfa = p.putArray("readerFeatures"); rf.foreach(rfa.add)
-          val wfa = p.putArray("writerFeatures"); wf.foreach(wfa.add)
-        }
+    val r = upgradeProtocol(r0.snapshot, "v2Checkpoint") match {
+      case None => r0
+      case Some(line) =>
         commitActions(fs, logDir, tablePath, _ => Seq(line))
         currentReplay(spark, tablePath)
-      }
+    }
     val uuid = java.util.UUID.randomUUID().toString
     val (files, rest) = checkpointRows(r, "checkpointMetadata" -> Row(r.version, null))
     val sidecarDir = new Path(logDir, "_sidecars")
@@ -1366,12 +1551,13 @@ object DeltaLog {
 
   /** APPEND-ONLY writer twin: land `df` as one new protocol commit.
     * Data files are written through a staging dir and moved into the
-    * table under version-stamped names; the commit file is then created
-    * with `FileSystem.create(overwrite = false)` — the put-if-absent
-    * that makes the commit ATOMIC on filesystems with atomic create
-    * (local, HDFS; object stores need a coordination service, exactly
-    * as the Delta protocol itself documents — out of scope here and
-    * guarded only by documentation). A lost race (the version file
+    * table under stamped names ([[stageAndMove]]); the commit then lands
+    * through [[commitActions]], which writes the commit to a temp file
+    * and RENAMES it into the version slot — the put-if-absent that makes
+    * the commit ATOMIC on filesystems with atomic rename (local, HDFS;
+    * object stores need a coordination service, exactly as the Delta
+    * protocol itself documents — out of scope here and guarded only by
+    * documentation). A lost race (the version file
     * already exists) retries at the next version: the already-moved
     * data files are referenced only by OUR commit line, so retrying the
     * commit alone is safe; any OTHER IO failure (permissions, disk
@@ -1418,12 +1604,7 @@ object DeltaLog {
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val logDir = new Path(table, "_delta_log")
     val tableExists = fs.exists(logDir) && fs.listStatus(logDir).nonEmpty
-    // exactly-once via the protocol's txn action: a commit stamped
-    // (appId, epoch) that already landed is NOT re-applied — the
-    // mechanism a streaming foreachBatch sink replays safely through
-    txn.foreach { case (appId, epoch) =>
-      if (lastTxnVersion(spark, tablePath, appId).exists(_ >= epoch)) return -1L
-    }
+    if (txnLanded(spark, tablePath, txn)) return -1L
     var evolvedId: Option[String] = None // Some(tableId) => emit a new metaData action
     // mapping state the WRITE side uses: the existing table's mode, or
     // (at creation) the requested one with freshly assigned ids +
@@ -1600,20 +1781,13 @@ object DeltaLog {
     // the feature exists for (and refuse with nothing staged: the r16
     // placement fired after stageAndMove and left orphaned
     // uncommitted parquet in the table on refusal)
-    val rtHwmBefore: Long =
-      if (!rtEnabled) -1L
-      else existingSnap.flatMap(_.rowIdHighWaterMark) match {
-        case Some(h) => h
-        case None =>
-          require(existingSnap.forall(_.files.isEmpty),
-            "DeltaLog: append into a rowTracking table with live files but no " +
-              "delta.rowTracking high-water-mark domain metadata — allocating " +
-              "fresh base row ids could reuse burned ones")
-          -1L
-      }
+    val rtMark: Option[Long] = existingSnap.flatMap(_.rowIdHighWaterMark)
+    require(!rtEnabled || rtMark.isDefined || existingSnap.forall(_.files.isEmpty),
+      "DeltaLog: append into a rowTracking table with live files but no " +
+        "delta.rowTracking high-water-mark domain metadata — allocating " +
+        "fresh base row ids could reuse burned ones")
     val physDf = mapSnap.fold(dfIn)(s => toPhysical(spark, s, dfIn))
     val physBy = mapSnap.fold(partitionBy)(s => partitionBy.map(s.pvKey))
-    // moved: (relative path, partitionValues, size, mtime) per file —
     // partitionValues keyed physical for mapped tables (spec)
     val moved = stageAndMove(fs, table, physDf, physBy, "part")
     identityPin.foreach(_.unpersist(blocking = false))
@@ -1621,7 +1795,7 @@ object DeltaLog {
     // input for both high-water marks (row tracking + identity)
     val movedCounts: Seq[Long] =
       if (rtEnabled || identityState.isDefined)
-        moved.map { case (name, _, _, _) => footerRowCount(fs, table, name) }
+        moved.map(m => footerRowCount(fs, new Path(table, m.rel)))
       else Seq.empty
     // the identity mark advances in THIS commit's metaData (field
     // metadata, per the protocol) — emitted via the evolution path.
@@ -1644,37 +1818,21 @@ object DeltaLog {
       }
     }
 
-    def actionLine(build: com.fasterxml.jackson.databind.node.ObjectNode => Unit): String = {
-      val root = mapper.createObjectNode()
-      build(root)
-      mapper.writeValueAsString(root)
-    }
-    val cdfAtCreation = !tableExists &&
-      configuration.get("delta.enableChangeDataFeed").contains("true")
-    val ictAtCreation = !tableExists && ictEnabled(configuration)
-    val protocolLine = actionLine { root =>
-      val p = root.putObject("protocol")
-      if (!tableExists &&
-          (columnMapping != "none" || cdfAtCreation || ictAtCreation ||
-            rowTracking || identity.isDefined)) {
-        // column mapping / change data feed / in-commit timestamps /
-        // row tracking / identity columns are TABLE FEATURES — declared
-        // explicitly at writer 7 rather than via legacy versions;
-        // columnMapping alone needs reader 3
-        p.put("minReaderVersion", if (columnMapping != "none") 3 else 1)
-        p.put("minWriterVersion", 7)
-        if (columnMapping != "none")
-          p.putArray("readerFeatures").add("columnMapping")
-        val wf = p.putArray("writerFeatures")
-        if (columnMapping != "none") wf.add("columnMapping")
-        if (cdfAtCreation) wf.add("changeDataFeed")
-        if (ictAtCreation) wf.add("inCommitTimestamp")
-        if (rowTracking) { wf.add("rowTracking"); wf.add("domainMetadata") }
-        if (identity.isDefined) wf.add("identityColumns")
-      } else {
-        p.put("minReaderVersion", 1); p.put("minWriterVersion", 2)
-      }
-    }
+    // column mapping / change data feed / in-commit timestamps / row
+    // tracking / identity columns are TABLE FEATURES — declared
+    // explicitly at writer 7 rather than via legacy versions;
+    // columnMapping alone needs reader 3
+    val mapped = !tableExists && columnMapping != "none"
+    val features = if (tableExists) Nil else Seq(
+      "columnMapping" -> mapped,
+      "changeDataFeed" -> configuration.get("delta.enableChangeDataFeed").contains("true"),
+      "inCommitTimestamp" -> ictEnabled(configuration),
+      "rowTracking" -> rowTracking, "domainMetadata" -> rowTracking,
+      "identityColumns" -> identity.isDefined).collect { case (f, true) => f }
+    val protocolLine =
+      if (features.isEmpty) protocolAction(1, 2)
+      else protocolAction(if (mapped) 3 else 1, 7,
+        if (mapped) Seq("columnMapping") else Nil, features)
     // row-tracking creation declares the feature's table properties:
     // the enablement flag plus the MATERIALIZED identity column names
     // (physical-only columns a dataChange=false rewrite uses to carry
@@ -1687,107 +1845,26 @@ object DeltaLog {
           s"_row-id-col-${java.util.UUID.randomUUID()}",
         "delta.rowTracking.materializedRowCommitVersionColumnName" ->
           s"_row-commit-version-col-${java.util.UUID.randomUUID()}")
-    val metaLine = actionLine { root =>
-      val m = root.putObject("metaData")
-      // evolution REPLACES the metaData action but keeps the table id
-      m.put("id", evolvedId.getOrElse(s"graft-${java.util.UUID.randomUUID()}"))
-      val f = m.putObject("format"); f.put("provider", "parquet"); f.putObject("options")
-      m.put("schemaString", declaredSchema.json)
-      val pc = m.putArray("partitionColumns")
-      partitionBy.foreach(pc.add)
-      val cfg = m.putObject("configuration")
-      // creation declares the requested config; an EVOLUTION metaData
-      // re-emits the existing one (dropping it would silently turn off
-      // change-data-feed / mapping for every later reader)
-      (if (tableExists) carryConfig else creationConfig)
-        .foreach { case (k, v) => cfg.put(k, v) }
-      if (!tableExists && columnMapping != "none") {
-        cfg.put("delta.columnMapping.mode", columnMapping)
-        cfg.put("delta.columnMapping.maxColumnId", declaredSchema.size.toString)
-      }
+    // evolution REPLACES the metaData action but keeps the table id;
+    // creation declares the requested config, an EVOLUTION metaData
+    // re-emits the existing one (dropping it would silently turn off
+    // change-data-feed / mapping for every later reader)
+    val metaLine = metaDataAction(
+      evolvedId.getOrElse(s"graft-${java.util.UUID.randomUUID()}"),
+      declaredSchema.json, partitionBy,
+      if (tableExists) carryConfig
+      else creationConfig.toSeq ++ (if (!mapped) Nil else Seq(
+        "delta.columnMapping.mode" -> columnMapping,
+        "delta.columnMapping.maxColumnId" -> declaredSchema.size.toString)))
+    val rowIds = if (rtEnabled) Some(RowIdBlock(rtMark, movedCounts)) else None
+    val adds = landedAdds(fs, table, physBy, moved, dataChange = true, rowIds)
+    val version = commitWithRowIds(spark, fs, logDir, tablePath, "append", rowIds,
+        withIct = ictEnabled(if (tableExists) carryConfig else configuration)) { v =>
+      (if (v == 0L) Seq(protocolLine, metaLine)
+       else if (evolvedId.isDefined) Seq(metaLine)
+       else Seq.empty) ++ txn.map(txnAction) ++ adds(v)
     }
-    // ROW-TRACKING allocation: each new file takes a contiguous block
-    // of fresh row ids above the table's high-water mark (base =
-    // hwm+1+prefix of earlier files' counts; a row's id is base + its
-    // position), and the SAME commit advances the mark via the
-    // `delta.rowTracking` domain-metadata action — so ids are burned
-    // exactly once. Single-writer contract, but made LOUD: a lost
-    // version race re-reads the mark before retrying (see the commit
-    // closure below) instead of silently replaying a stale one.
-    val rtBases: Seq[(Long, Long)] = // (baseRowId, rows) per moved file
-      if (!rtEnabled) Seq.empty
-      else movedCounts.scanLeft(rtHwmBefore + 1L)(_ + _).zip(movedCounts)
-    def addLines(version: Long): Seq[String] = moved.zipWithIndex.map {
-      case ((name, pvals, len, mtime), i) =>
-        actionLine { root =>
-          val a = root.putObject("add")
-          a.put("path", encodePath(name))
-          val pv = a.putObject("partitionValues")
-          physBy.foreach { c =>
-            pvals.get(c) match {
-              case Some(null) | None => pv.putNull(c)
-              case Some(v) => pv.put(c, v)
-            }
-          }
-          a.put("size", len)
-          a.put("modificationTime", mtime)
-          a.put("dataChange", true)
-          if (rtEnabled) {
-            a.put("baseRowId", rtBases(i)._1)
-            a.put("defaultRowCommitVersion", version)
-          }
-          // real footer-derived column stats — the skipping index
-          statsJson(fs, table, name).foreach(s => a.put("stats", s))
-        }
-    }
-    val dmLines: Seq[String] =
-      if (!rtEnabled || rtBases.isEmpty) Seq.empty
-      else {
-        val newHwm = rtBases.last._1 + rtBases.last._2 - 1
-        Seq(actionLine { root =>
-          val d = root.putObject("domainMetadata")
-          d.put("domain", "delta.rowTracking")
-          d.put("configuration", s"""{"rowIdHighWaterMark":$newHwm}""")
-          d.put("removed", false)
-        })
-      }
-
-    val txnLines = txn.toSeq.map { case (appId, epoch) =>
-      actionLine { root =>
-        val t = root.putObject("txn")
-        t.put("appId", appId)
-        t.put("version", epoch)
-      }
-    }
-    // on a LOST VERSION RACE (another writer committed between our
-    // snapshot read and this attempt) a rowTracking append must not
-    // retry blindly: the staged domainMetadata would overwrite the
-    // winner's high-water mark (latest-per-domain replay) and the
-    // next append would re-allocate burned row ids. Re-read the mark
-    // on retry and refuse loudly if it moved — a single-writer
-    // contract violation surfaces instead of silently corrupting.
-    var firstTriedVersion: Option[Long] = None
-    val version = commitActions(fs, logDir, tablePath,
-      v => {
-        if (firstTriedVersion.isEmpty) firstTriedVersion = Some(v)
-        else if (rtEnabled && !firstTriedVersion.contains(v)) {
-          val cur = snapshot(spark, tablePath, None).rowIdHighWaterMark
-          val based = if (rtHwmBefore < 0L) None else Some(rtHwmBefore)
-          if (cur != based)
-            throw new java.util.ConcurrentModificationException(
-              s"DeltaLog: version race on a rowTracking append to $tablePath — " +
-                s"the delta.rowTracking high-water mark moved from $based to $cur " +
-                "during the commit; the staged base row ids would re-burn " +
-                "allocated ids (single-writer contract violated)")
-        }
-        (if (v == 0L) Seq(protocolLine, metaLine)
-         else if (evolvedId.isDefined) Seq(metaLine)
-         else Seq.empty) ++ txnLines ++ addLines(v) ++ dmLines
-      },
-      withIct = ictEnabled(if (tableExists) carryConfig else configuration))
-    if (checkpointInterval > 0 && (version + 1) % checkpointInterval == 0)
-      writeCheckpoint(spark, tablePath)
-    version
+    checkpointOnCadence(spark, tablePath, checkpointInterval, version)
   }
 
   /** The one data-file scan of the Delta reader: a SUBSET of a
@@ -1913,13 +1990,6 @@ object DeltaLog {
     Option(u.getRawPath).getOrElse(u.getPath)
   }
 
-  /** Protocol-level write gates shared by every transaction writer:
-    * a writer must implement every feature the table declares, whether
-    * spelled as a v7 `writerFeatures` list or implied by a LEGACY
-    * minWriterVersion (checkConstraints@3, generatedColumns@4,
-    * columnMapping-write@5, identityColumns@6 carry no feature list —
-    * the protocol requires a writer to enforce them or refuse).
-    */
   /** Writer features IMPLIED by a legacy `minWriterVersion` — the
     * table-features spec's upgrade rule: moving a legacy table to
     * (3, 7) must re-declare every capability the old version number
@@ -1951,6 +2021,13 @@ object DeltaLog {
   private[graft] def legacyImpliedReaderFeatures(minReaderVersion: Int): Set[String] =
     if (minReaderVersion == 2) Set("columnMapping") else Set.empty
 
+  /** Protocol-level write gates shared by every transaction writer:
+    * a writer must implement every feature the table declares, whether
+    * spelled as a v7 `writerFeatures` list or implied by a LEGACY
+    * minWriterVersion (checkConstraints@3, generatedColumns@4,
+    * columnMapping-write@5, identityColumns@6 carry no feature list —
+    * the protocol requires a writer to enforce them or refuse).
+    */
   private def protocolWriteGuards(snap: Snapshot, op: String): Unit = {
     val unknown = snap.writerFeatures --
       Set("appendOnly", "invariants", "deletionVectors", "columnMapping", "v2Checkpoint",
@@ -2126,32 +2203,14 @@ object DeltaLog {
   /** Stage CHANGE rows (table columns + `_change_type`) under
     * `_change_data/` — partitioned like the table, physical column
     * names under mapping, `_change_type` always verbatim — and return
-    * the commit's `cdc` action lines. `dataChange = false` on a cdc
-    * action per spec: the rows are a DESCRIPTION of the change, not
-    * table data.
+    * the commit's `cdc` action lines.
     */
   private def stageCdc(
       spark: SparkSession, fs: FileSystem, table: Path, snap: Snapshot,
       changes: DataFrame): Seq[String] = {
-    val cdcDir = new Path(table, "_change_data")
-    fs.mkdirs(cdcDir)
-    val moved = stageAndMove(fs, cdcDir, toPhysical(spark, snap, changes),
-      physPartitionBy(snap), "cdc", dropEmptyFiles = true)
-    moved.map { case (rel, pvals, len, _) =>
-      actionLineStatic { root =>
-        val c = root.putObject("cdc")
-        c.put("path", encodePath(s"_change_data/$rel"))
-        val pv = c.putObject("partitionValues")
-        physPartitionBy(snap).foreach { k =>
-          pvals.get(k).flatMap(Option(_)) match {
-            case Some(v) => pv.put(k, v)
-            case None => pv.putNull(k)
-          }
-        }
-        c.put("size", len)
-        c.put("dataChange", false)
-      }
-    }
+    stageAndMove(fs, table, toPhysical(spark, snap, changes),
+        physPartitionBy(snap), "cdc", dropEmptyFiles = true, dir = "_change_data")
+      .map(l => cdcAction(encodePath(l.rel), physPartitionBy(snap), l.partitionValues, l.size))
   }
 
   /** MERGE (full upsert) as ONE Delta transaction — the reference's
@@ -2201,9 +2260,7 @@ object DeltaLog {
     val fs = fsOf(spark, table)
     val logDir = logDirOf(tablePath)
     require(fs.exists(logDir), s"not a Delta table: no _delta_log under $tablePath")
-    txn.foreach { case (appId, epoch) =>
-      if (lastTxnVersion(spark, tablePath, appId).exists(_ >= epoch)) return -1L
-    }
+    if (txnLanded(spark, tablePath, txn)) return -1L
     val snap = snapshot(spark, tablePath, None)
     writeGuards(snap, tablePath, "merge")
     val schema = snap.schema.get
@@ -2292,25 +2349,18 @@ object DeltaLog {
   }
 
   /** Commit a schema-only metaData change (same table id, same
-    * configuration) — the shared tail of [[renameColumn]] and
-    * [[dropColumn]].
+    * configuration), after the `protocol` line `upgrade` when given —
+    * the shared tail of [[renameColumn]], [[dropColumn]] and
+    * [[widenColumnType]].
     */
   private def commitSchemaChange(
       spark: SparkSession, tablePath: String, snap: Snapshot,
-      newSchema: StructType, newPartitionColumns: Seq[String]): Long = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val line = actionLineStatic { root =>
-      val m = root.putObject("metaData")
-      m.put("id", snap.metaId.getOrElse("graft"))
-      val f = m.putObject("format"); f.put("provider", "parquet"); f.putObject("options")
-      m.put("schemaString", newSchema.json)
-      val pc = m.putArray("partitionColumns")
-      newPartitionColumns.foreach(pc.add)
-      val cfg = m.putObject("configuration")
-      snap.configuration.foreach { case (k, v) => cfg.put(k, v) }
-    }
-    commitActions(fs, logDirOf(tablePath), tablePath, _ => Seq(line),
-      withIct = ictEnabled(snap.configuration))
+      newSchema: StructType, newPartitionColumns: Seq[String],
+      upgrade: Option[String] = None): Long = {
+    val line = metaDataAction(snap.metaId.getOrElse("graft"), newSchema.json,
+      newPartitionColumns, snap.configuration)
+    commitActions(fsOf(spark, new Path(tablePath)), logDirOf(tablePath), tablePath,
+      _ => upgrade.toSeq :+ line, withIct = ictEnabled(snap.configuration))
   }
 
   /** RENAME COLUMN — metadata-only on a COLUMN-MAPPED table (the very
@@ -2423,39 +2473,8 @@ object DeltaLog {
       metadata = new MetadataBuilder().withMetadata(field.metadata)
         .putString("delta.typeChanges", mapper.writeValueAsString(changes)).build())
     val newSchema = StructType(schema.fields.map(f => if (f.name == column) newField else f))
-    val fs = fsOf(spark, new Path(tablePath))
-    val needsUpgrade = !(snap.readerVersion.exists(_ >= 3) &&
-      snap.readerFeatures.contains("typeWidening"))
-    val protocolLines = if (!needsUpgrade) Seq.empty else Seq(
-      actionLineStatic { root =>
-        val p = root.putObject("protocol")
-        p.put("minReaderVersion", 3); p.put("minWriterVersion", 7)
-        // EVERY feature the legacy version numbers implied re-declares
-        // explicitly at (3, 7) — dropping one (say checkConstraints on
-        // a v4 table) would let a spec-compliant engine append without
-        // enforcing it while its metadata stays active
-        val rf = p.putArray("readerFeatures")
-        (snap.readerFeatures ++
-          snap.readerVersion.toSet.flatMap(legacyImpliedReaderFeatures) +
-          "typeWidening").toSeq.sorted.foreach(rf.add)
-        val wf = p.putArray("writerFeatures")
-        (snap.writerFeatures ++
-          snap.writerVersion.toSet.flatMap(legacyImpliedWriterFeatures) ++
-          Set("appendOnly", "invariants", "typeWidening"))
-          .toSeq.sorted.foreach(wf.add)
-      })
-    val metaLine = actionLineStatic { root =>
-      val m = root.putObject("metaData")
-      m.put("id", snap.metaId.getOrElse("graft"))
-      val f = m.putObject("format"); f.put("provider", "parquet"); f.putObject("options")
-      m.put("schemaString", newSchema.json)
-      val pc = m.putArray("partitionColumns")
-      snap.partitionColumns.foreach(pc.add)
-      val cfg = m.putObject("configuration")
-      snap.configuration.foreach { case (k, v) => cfg.put(k, v) }
-    }
-    commitActions(fs, logDirOf(tablePath), tablePath,
-      _ => protocolLines :+ metaLine, withIct = ictEnabled(snap.configuration))
+    commitSchemaChange(spark, tablePath, snap, newSchema, snap.partitionColumns,
+      upgradeProtocol(snap, "typeWidening"))
   }
 
   /** SHALLOW CLONE — the CLONE TABLE semantics: a NEW table whose v0
@@ -2487,59 +2506,23 @@ object DeltaLog {
     require(!fs.exists(logDir) || fs.listStatus(logDir).isEmpty,
       s"DeltaLog: shallowClone target $targetPath is already a Delta table")
     fs.mkdirs(logDir)
-    val protocolLine = actionLineStatic { root =>
-      val p = root.putObject("protocol")
-      p.put("minReaderVersion", snap.readerVersion.getOrElse(1))
-      p.put("minWriterVersion", snap.writerVersion.getOrElse(2))
-      if (snap.readerFeatures.nonEmpty) {
-        val rf = p.putArray("readerFeatures")
-        snap.readerFeatures.toSeq.sorted.foreach(rf.add)
-      }
-      if (snap.writerFeatures.nonEmpty) {
-        val wf = p.putArray("writerFeatures")
-        snap.writerFeatures.toSeq.sorted.foreach(wf.add)
-      }
-    }
-    val metaLine = actionLineStatic { root =>
-      val m = root.putObject("metaData")
-      m.put("id", s"graft-${java.util.UUID.randomUUID()}") // a clone is a NEW table
-      val f = m.putObject("format"); f.put("provider", "parquet"); f.putObject("options")
-      m.put("schemaString", snap.schemaString.getOrElse(""))
-      val pc = m.putArray("partitionColumns")
-      snap.partitionColumns.foreach(pc.add)
-      val cfg = m.putObject("configuration")
-      snap.configuration.foreach { case (k, v) => cfg.put(k, v) }
-    }
+    val protocolLine = protocolAction(
+      snap.readerVersion.getOrElse(1), snap.writerVersion.getOrElse(2),
+      snap.readerFeatures.toSeq.sorted, snap.writerFeatures.toSeq.sorted)
+    // a clone is a NEW table
+    val metaLine = metaDataAction(s"graft-${java.util.UUID.randomUUID()}",
+      snap.schemaString.getOrElse(""), snap.partitionColumns, snap.configuration)
     val addLines = snap.files.map { f =>
+      // scheme-qualified: resolve() serves it verbatim
       val abs = srcFs.makeQualified(new Path(resolve(sourcePath, f.path))).toString
-      actionLineStatic { root =>
-        val a = root.putObject("add")
-        a.put("path", abs) // scheme-qualified: resolve() serves it verbatim
-        val pv = a.putObject("partitionValues")
-        f.partitionValues.foreach { case (k, v) =>
-          if (v == null) pv.putNull(k) else pv.put(k, v)
-        }
-        a.put("size", f.size)
-        a.put("modificationTime", 0L)
-        a.put("dataChange", true)
-        f.stats.foreach(s => a.put("stats", s))
-        f.dv.foreach { d =>
-          val dv = a.putObject("deletionVector")
-          if (d.storageType == "i") {
-            // inline descriptors carry the bitmap in the token itself
-            dv.put("storageType", "i")
-            dv.put("pathOrInlineDv", d.pathOrInlineDv)
-          } else {
-            dv.put("storageType", "p")
-            dv.put("pathOrInlineDv",
-              if (d.storageType == "p") d.pathOrInlineDv
-              else srcFs.makeQualified(d.absolutePath(sourcePath)).toString)
-          }
-          d.offset.foreach(o => dv.put("offset", o))
-          dv.put("sizeInBytes", d.sizeInBytes)
-          dv.put("cardinality", d.cardinality)
-        }
-      }
+      // an inline descriptor carries the bitmap in its token, a `p` one
+      // is already absolute; a `u` one re-anchors to the source's file
+      val dv = f.dv.map(d =>
+        if (d.storageType == "i" || d.storageType == "p") d
+        else d.copy(storageType = "p",
+          pathOrInlineDv = srcFs.makeQualified(d.absolutePath(sourcePath)).toString))
+      addAction(f.copy(path = abs, dv = dv), f.partitionValues.keys.toSeq,
+        modificationTime = 0L, dataChange = true)
     }
     commitActions(fs, logDir, targetPath,
       _ => Seq(protocolLine, metaLine) ++ addLines,
@@ -2563,9 +2546,7 @@ object DeltaLog {
     val fs = fsOf(spark, table)
     val logDir = logDirOf(tablePath)
     require(fs.exists(logDir), s"not a Delta table: no _delta_log under $tablePath")
-    txn.foreach { case (appId, epoch) =>
-      if (lastTxnVersion(spark, tablePath, appId).exists(_ >= epoch)) return -1L
-    }
+    if (txnLanded(spark, tablePath, txn)) return -1L
     val snap = snapshot(spark, tablePath, None)
     writeGuards(snap, tablePath, "applyChanges")
     val schema = snap.schema.get
@@ -2602,11 +2583,8 @@ object DeltaLog {
       // stamp there is nothing to persist and no commit to make.
       txn match {
         case Some((appId, epoch)) =>
-          return commitActions(fs, logDir, tablePath, _ => Seq(
-            actionLineStatic { root =>
-              val t = root.putObject("txn")
-              t.put("appId", appId); t.put("version", epoch)
-            }), withIct = ictEnabled(snap.configuration))
+          return commitActions(fs, logDir, tablePath, _ => Seq(txnAction((appId, epoch))),
+            withIct = ictEnabled(snap.configuration))
         case None => return -1L
       }
     }
@@ -2748,9 +2726,7 @@ object DeltaLog {
     val fs = fsOf(spark, table)
     val logDir = logDirOf(tablePath)
     require(fs.exists(logDir), s"not a Delta table: no _delta_log under $tablePath")
-    txn.foreach { case (appId, epoch) =>
-      if (lastTxnVersion(spark, tablePath, appId).exists(_ >= epoch)) return -1L
-    }
+    if (txnLanded(spark, tablePath, txn)) return -1L
     val snap = snapshot(spark, tablePath, None)
     writeGuards(snap, tablePath, "delete")
     require(!snap.schema.get.fieldNames.contains("__file"),
@@ -2768,7 +2744,7 @@ object DeltaLog {
     // parquet add would be valid but pointless); the isEmpty probe
     // early-exits on the first surviving row
     val moved =
-      if (survivors.isEmpty) Seq.empty[(String, Map[String, String], Long, Long)]
+      if (survivors.isEmpty) Seq.empty[Landed]
       else stageAndMove(fs, table, toPhysical(spark, snap, survivors),
         physPartitionBy(snap), "part-d", dropEmptyFiles = true)
     val cdcLines =
@@ -2812,9 +2788,7 @@ object DeltaLog {
     val fs = fsOf(spark, table)
     val logDir = logDirOf(tablePath)
     require(fs.exists(logDir), s"not a Delta table: no _delta_log under $tablePath")
-    txn.foreach { case (appId, epoch) =>
-      if (lastTxnVersion(spark, tablePath, appId).exists(_ >= epoch)) return -1L
-    }
+    if (txnLanded(spark, tablePath, txn)) return -1L
     val snap = snapshot(spark, tablePath, None)
     writeGuards(snap, tablePath, "deleteWithDv")
     require(!snap.schema.get.fieldNames.contains("__file"),
@@ -2861,64 +2835,14 @@ object DeltaLog {
       fs, tablePath, packed.map(p => (p._2, p._3)).toSeq)
     val fidToDesc: Map[String, DeletionVectors.Descriptor] =
       packed.map(_._1).zip(descriptors).toMap
-    val needsUpgrade =
-      !(snap.readerVersion.exists(_ >= 3) && snap.readerFeatures.contains("deletionVectors"))
-    val protocolLines = if (!needsUpgrade) Seq.empty else Seq(
-      actionLineStatic { root =>
-        val p = root.putObject("protocol")
-        p.put("minReaderVersion", 3); p.put("minWriterVersion", 7)
-        // features already declared AND those the legacy version
-        // numbers implied must all re-declare explicitly at (3, 7)
-        val rf = p.putArray("readerFeatures")
-        (snap.readerFeatures ++
-          snap.readerVersion.toSet.flatMap(legacyImpliedReaderFeatures) +
-          "deletionVectors").toSeq.sorted.foreach(rf.add)
-        val wf = p.putArray("writerFeatures")
-        (snap.writerFeatures ++
-          snap.writerVersion.toSet.flatMap(legacyImpliedWriterFeatures) ++
-          Set("appendOnly", "invariants", "deletionVectors")).toSeq.sorted.foreach(wf.add)
-      })
-    val txnLines = txn.toSeq.map { case (appId, epoch) =>
-      actionLineStatic { root =>
-        val t = root.putObject("txn")
-        t.put("appId", appId); t.put("version", epoch)
-      }
-    }
-    val affected = packed.map(_._1).map(byIdentity)
-    val removeLines = affected.map { f =>
-      actionLineStatic { root =>
-        val r = root.putObject("remove")
-        r.put("path", f.path) // verbatim: the log's reconciliation identity
-        r.put("deletionTimestamp", System.currentTimeMillis())
-        r.put("dataChange", true)
-      }
-    }
-    val addLines = packed.map(_._1).map { fid =>
-      val f = byIdentity(fid)
-      val d = fidToDesc(fid)
-      actionLineStatic { root =>
-        val a = root.putObject("add")
-        a.put("path", f.path)
-        val pv = a.putObject("partitionValues")
-        snap.partitionColumns.map(snap.pvKey).foreach { c =>
-          f.partitionValues.get(c).flatMap(Option(_)) match {
-            case Some(v) => pv.put(c, v)
-            case None => pv.putNull(c)
-          }
-        }
-        a.put("size", f.size)
-        a.put("modificationTime", System.currentTimeMillis())
-        a.put("dataChange", true)
-        // the physical file is unchanged: its stats stay valid as
-        // NON-tight bounds (some stat-counted rows are now DV-dead)
-        f.stats.foreach(s => a.put("stats", s))
-        val dv = a.putObject("deletionVector")
-        dv.put("storageType", d.storageType)
-        dv.put("pathOrInlineDv", d.pathOrInlineDv)
-        d.offset.foreach(o => dv.put("offset", o))
-        dv.put("sizeInBytes", d.sizeInBytes)
-        dv.put("cardinality", d.cardinality)
-      }
+    val now = System.currentTimeMillis()
+    val affected = packed.map(_._1).toSeq
+    val removeLines = affected.map(fid => removeAction(byIdentity(fid).path, now, dataChange = true))
+    // the physical file is unchanged: its stats stay valid as NON-tight
+    // bounds (some stat-counted rows are now DV-dead)
+    val addLines = affected.map { fid =>
+      addAction(byIdentity(fid).copy(dv = Some(fidToDesc(fid))), physPartitionBy(snap),
+        modificationTime = now, dataChange = true)
     }
     // CHANGE DATA FEED: the freshly-dead rows are exactly the LIVE
     // rows matching the predicate (DV-dead ones were excluded above)
@@ -2929,59 +2853,35 @@ object DeltaLog {
           .filter(coalesce(predicate, lit(false)))
           .withColumn("_change_type", lit("delete")))
     commitActions(fs, logDir, tablePath,
-      _ => protocolLines ++ txnLines ++ removeLines.toSeq ++ addLines.toSeq ++ cdcLines,
+      _ => upgradeProtocol(snap, "deletionVectors").toSeq ++ txn.map(txnAction) ++
+        removeLines ++ addLines ++ cdcLines,
       withIct = ictEnabled(snap.configuration))
   }
 
-  /** Shared commit tail of [[merge]] and [[delete]]: one transaction
-    * of `dataChange = true` remove+add pairs (+ the optional `txn`
-    * stamp), checkpointing on the same cadence as [[append]].
+  /** Shared commit tail of [[merge]], [[delete]] and [[applyChanges]]:
+    * one transaction of `dataChange = true` remove+add pairs (+ the
+    * optional `txn` stamp and the `cdc` lines).
     */
   private def commitRewrite(
       spark: SparkSession, fs: FileSystem, logDir: Path, tablePath: String,
-      snap: Snapshot, removed: Seq[DeltaFile],
-      added: Seq[(String, Map[String, String], Long, Long)],
+      snap: Snapshot, removed: Seq[DeltaFile], added: Seq[Landed],
       checkpointInterval: Int, txn: Option[(String, Long)],
       cdcLines: Seq[String] = Seq.empty): Long = {
-    val removeLines = removed.map { f =>
-      actionLineStatic { root =>
-        val r = root.putObject("remove")
-        // verbatim, NOT re-encoded: the path string is the log's
-        // reconciliation identity — it must match the add that wrote it
-        r.put("path", f.path)
-        r.put("deletionTimestamp", System.currentTimeMillis())
-        r.put("dataChange", true)
-      }
-    }
-    val addLines = added.map { case (rel, pvals, len, mtime) =>
-      actionLineStatic { root =>
-        val a = root.putObject("add")
-        a.put("path", encodePath(rel))
-        val pv = a.putObject("partitionValues")
-        snap.partitionColumns.map(snap.pvKey).foreach { c =>
-          pvals.get(c).flatMap(Option(_)) match {
-            case Some(v) => pv.put(c, v)
-            case None => pv.putNull(c)
-          }
-        }
-        a.put("size", len)
-        a.put("modificationTime", mtime)
-        a.put("dataChange", true)
-        statsJson(fs, new Path(tablePath), rel).foreach(s => a.put("stats", s))
-      }
-    }
-    val txnLines = txn.toSeq.map { case (appId, epoch) =>
-      actionLineStatic { root =>
-        val t = root.putObject("txn")
-        t.put("appId", appId)
-        t.put("version", epoch)
-      }
-    }
+    val now = System.currentTimeMillis()
+    val removeLines = removed.map(f => removeAction(f.path, now, dataChange = true))
+    val adds = landedAdds(fs, new Path(tablePath), physPartitionBy(snap), added, dataChange = true)
     val version = commitActions(fs, logDir, tablePath,
-      _ => txnLines ++ removeLines ++ addLines ++ cdcLines,
+      v => txn.map(txnAction).toSeq ++ removeLines ++ adds(v) ++ cdcLines,
       withIct = ictEnabled(snap.configuration))
-    if (checkpointInterval > 0 && (version + 1) % checkpointInterval == 0)
-      writeCheckpoint(spark, tablePath)
+    checkpointOnCadence(spark, tablePath, checkpointInterval, version)
+  }
+
+  /** `version`, after a [[writeCheckpoint]] when it is a multiple of
+    * `interval` commits — the cadence that keeps the JSON log bounded.
+    */
+  private def checkpointOnCadence(
+      spark: SparkSession, tablePath: String, interval: Int, version: Long): Long = {
+    if (interval > 0 && (version + 1) % interval == 0) writeCheckpoint(spark, tablePath)
     version
   }
 
@@ -3301,72 +3201,30 @@ object DeltaLog {
     require(missing.isEmpty,
       s"DeltaLog: restore to version $version impossible — " +
         s"${missing.size} file(s) vacuumed away (first: ${missing.headOption.map(_.path).getOrElse("")})")
-    val metaLines = if (!metaChanged) Seq.empty else Seq(
-      actionLineStatic { root =>
-        val m = root.putObject("metaData")
-        m.put("id", current.metaId.orElse(target.metaId).getOrElse("graft"))
-        val f = m.putObject("format"); f.put("provider", "parquet"); f.putObject("options")
-        m.put("schemaString", target.schemaString.getOrElse(""))
-        val pc = m.putArray("partitionColumns")
-        target.partitionColumns.foreach(pc.add)
-        val conf = m.putObject("configuration")
-        target.configuration.foreach { case (k, v) => conf.put(k, v) }
-      })
-    val removeLines = toRemove.map { f =>
-      actionLineStatic { root =>
-        val r = root.putObject("remove")
-        r.put("path", f.path)
-        r.put("deletionTimestamp", System.currentTimeMillis())
-        r.put("dataChange", true)
-      }
-    }
-    val addLines = toAdd.map { f =>
-      actionLineStatic { root =>
-        val a = root.putObject("add")
-        a.put("path", f.path) // verbatim: it IS the original add's identity
-        val pv = a.putObject("partitionValues")
-        target.partitionColumns.map(target.pvKey).foreach { c =>
-          f.partitionValues.get(c).flatMap(Option(_)) match {
-            case Some(v) => pv.put(c, v)
-            case None => pv.putNull(c)
-          }
-        }
-        a.put("size", f.size)
-        a.put("modificationTime", System.currentTimeMillis())
-        a.put("dataChange", true)
-        f.stats.foreach(s => a.put("stats", s))
-        f.dv.foreach { d =>
-          val dv = a.putObject("deletionVector")
-          dv.put("storageType", d.storageType)
-          dv.put("pathOrInlineDv", d.pathOrInlineDv)
-          d.offset.foreach(o => dv.put("offset", o))
-          dv.put("sizeInBytes", d.sizeInBytes)
-          dv.put("cardinality", d.cardinality)
-        }
-      }
-    }
+    val metaLines = if (!metaChanged) Seq.empty else Seq(metaDataAction(
+      current.metaId.orElse(target.metaId).getOrElse("graft"),
+      target.schemaString.getOrElse(""), target.partitionColumns, target.configuration))
+    // verbatim paths: a re-added path IS the original add's identity
+    val now = System.currentTimeMillis()
+    val removeLines = toRemove.map(f => removeAction(f.path, now, dataChange = true))
+    val addLines = toAdd.map(f =>
+      addAction(f, physPartitionBy(target), modificationTime = now, dataChange = true))
     commitActions(fs, logDir, tablePath,
       _ => metaLines ++ removeLines ++ addLines,
       withIct = ictEnabled(current.configuration))
   }
 
-  /** Stage `df` through a `_commit_stage_*` dir and move its part
-    * files into the table under collision-proof names — the shared
-    * data path of [[append]], [[merge]] and [[delete]]. Partitioned
-    * frames write the Hive layout in ONE job; each part file keeps its
-    * `col=value` dirs when moved, and the decoded values are returned
-    * for `add.partitionValues` (the protocol's truth — the reader
-    * never re-parses directory names). Returns (relative path,
-    * partitionValues, size, mtime) per moved file.
+  /** Exact row count from a parquet footer — a driver-side metadata
+    * read. [[stageAndMove]] drops the EMPTY part files a filtering
+    * rewrite can leave behind with it (a delete that empties a scan
+    * partition still makes Spark's writer emit a schema-only file;
+    * committing 10^4 empty adds after a wide delete would bloat every
+    * future replay), and it is the row-tracking and identity
+    * allocators' input. LOUD on an unreadable footer (unlike
+    * [[statsJson]]'s best-effort): committing a rowTracking add with a
+    * guessed count would burn or double-allocate row ids.
     */
-  /** Footer-level row count of a staged parquet file — a driver-side
-    * metadata read used to drop the EMPTY part files a filtering
-    * rewrite can leave behind (a delete that empties a scan partition
-    * still makes Spark's writer emit a schema-only file; committing
-    * 10^4 empty adds after a wide delete would bloat every future
-    * replay).
-    */
-  private def parquetRowCount(fs: FileSystem, p: Path): Long = {
+  private def footerRowCount(fs: FileSystem, p: Path): Long = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(fs.getFileStatus(p), fs.getConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getRecordCount finally r.close()
@@ -3381,21 +3239,6 @@ object DeltaLog {
     * stats carry. A footer that can't be read yields no stats rather
     * than a failed commit.
     */
-  /** Exact row count from the parquet footer — the row-tracking
-    * allocator's input. LOUD on an unreadable footer (unlike
-    * [[statsJson]]'s best-effort): committing a rowTracking add with a
-    * guessed count would burn or double-allocate row ids.
-    */
-  private def footerRowCount(fs: FileSystem, table: Path, rel: String): Long = {
-    import scala.jdk.CollectionConverters._
-    val p = new Path(table, rel)
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-      fs.getFileStatus(p), fs.getConf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
-  }
-
   private def statsJson(fs: FileSystem, table: Path, rel: String): Option[String] =
     try {
       val p = new Path(table, rel)
@@ -3503,63 +3346,72 @@ object DeltaLog {
       } finally reader.close()
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def stageAndMove(
-      fs: FileSystem, table: Path, df: DataFrame,
-      partitionBy: Seq[String], filePrefix: String,
-      dropEmptyFiles: Boolean = false): Seq[(String, Map[String, String], Long, Long)] = {
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new Path(table, s"_commit_stage_$stamp")
-    def nonEmpty(ps: Seq[Path]): Seq[Path] =
-      if (dropEmptyFiles) ps.filter(p => parquetRowCount(fs, p) > 0L) else ps
-    if (partitionBy.isEmpty) {
-      df.write.parquet(stage.toString)
-      val parts = nonEmpty(fs.globStatus(new Path(stage, "part-*.parquet")).toSeq.map(_.getPath))
-      val m = parts.zipWithIndex.map { case (p, i) =>
-        val name = s"$filePrefix-$stamp-$i.parquet"
-        val dest = new Path(table, name)
-        require(fs.rename(p, dest), s"DeltaLog: move failed for $p")
-        val st = fs.getFileStatus(dest)
-        (name, Map.empty[String, String], st.getLen, st.getModificationTime)
-      }
-      fs.delete(stage, true)
-      m
-    } else {
-      df.write.partitionBy(partitionBy: _*).parquet(stage.toString)
-      val pattern = partitionBy.map(_ => "*").mkString("/")
-      val parts = nonEmpty(fs.globStatus(new Path(stage, s"$pattern/part-*.parquet"))
-        .toSeq.map(_.getPath)).sortBy(_.toString)
-      val stagePrefix = fs.makeQualified(stage).toString + "/"
-      val m = parts.zipWithIndex.map { case (p, i) =>
-        // decode Spark's partition-dir escaping back to raw values
-        val rel0 = fs.makeQualified(p).toString.stripPrefix(stagePrefix)
-        require(rel0.length < fs.makeQualified(p).toString.length,
-          s"DeltaLog: stage-relative path resolution failed for $p")
-        val segs = rel0.split('/').dropRight(1)
-        val pvals = segs.map { s =>
-          val Array(k, v) = s.split("=", 2)
-          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
-                else unescapePathName(v))
-        }.toMap
-        require(pvals.keySet == partitionBy.toSet,
-          s"DeltaLog: unexpected partition layout under $p")
-        val rel = segs.mkString("/") + s"/$filePrefix-$stamp-$i.parquet"
-        val dest = new Path(table, rel)
-        fs.mkdirs(dest.getParent)
-        require(fs.rename(p, dest), s"DeltaLog: move failed for $p")
-        val st = fs.getFileStatus(dest)
-        (rel, pvals, st.getLen, st.getModificationTime)
-      }
-      fs.delete(stage, true)
-      m
+  /** A file [[stageAndMove]] landed: its path relative to the table
+    * (decoded), its partition values, size and modification time.
+    */
+  private final case class Landed(
+      rel: String, partitionValues: Map[String, String], size: Long, mtime: Long)
+
+  /** The `add` lines of `landed` files at the commit version, with
+    * encoded paths and footer stats (read once, not per commit
+    * attempt); `rowIds` gives file i its base row id.
+    */
+  private def landedAdds(
+      fs: FileSystem, table: Path, partitionKeys: Seq[String], landed: Seq[Landed],
+      dataChange: Boolean, rowIds: Option[RowIdBlock] = None): Long => Seq[String] = {
+    val files = landed.map(l =>
+      DeltaFile(encodePath(l.rel), l.partitionValues, l.size, stats = statsJson(fs, table, l.rel)))
+    v => files.zip(landed).zipWithIndex.map { case ((f, l), i) =>
+      addAction(f, partitionKeys, l.mtime, dataChange, rowIds.map(r => (r.bases(i), v)))
     }
   }
 
-  /** Land one commit at the next free version with the put-if-absent
-    * race loop shared by [[append]], [[compact]] and any future
-    * transaction writer. `lines(v)` builds the action lines for the
-    * version actually being attempted (version 0 carries protocol +
-    * metaData).
+  /** Stage `df` through a `_commit_stage_*` dir under the table root and
+    * move its part files to `dir` under collision-proof names
+    * `<filePrefix>-<stamp>-<i>.parquet` — the one data path of every
+    * writer that lands files ([[append]], the rewrites, [[compact]] and
+    * the change-data files). Partitioned frames write the Hive layout
+    * in ONE job; each part file keeps its `col=value` dirs when moved,
+    * and the decoded values are returned for `add.partitionValues` (the
+    * protocol's truth — the reader never re-parses directory names).
     */
+  private def stageAndMove(
+      fs: FileSystem, table: Path, df: DataFrame,
+      partitionBy: Seq[String], filePrefix: String,
+      dropEmptyFiles: Boolean = false, dir: String = ""): Seq[Landed] = {
+    val stamp = java.util.UUID.randomUUID().toString.take(8)
+    val stage = new Path(table, s"_commit_stage_$stamp")
+    (if (partitionBy.isEmpty) df.write else df.write.partitionBy(partitionBy: _*))
+      .parquet(stage.toString)
+    val pattern = (partitionBy.map(_ => "*") :+ "part-*.parquet").mkString("/")
+    val parts = fs.globStatus(new Path(stage, pattern)).toSeq.map(_.getPath)
+      .filter(p => !dropEmptyFiles || footerRowCount(fs, p) > 0L)
+      .sortBy(_.toString)
+    val stagePrefix = fs.makeQualified(stage).toString + "/"
+    val landed = parts.zipWithIndex.map { case (p, i) =>
+      val qualified = fs.makeQualified(p).toString
+      require(qualified.startsWith(stagePrefix),
+        s"DeltaLog: stage-relative path resolution failed for $p")
+      // decode Spark's partition-dir escaping back to raw values
+      val segs = qualified.stripPrefix(stagePrefix).split('/').toSeq.dropRight(1)
+      val pvals = segs.map { s =>
+        val Array(k, v) = s.split("=", 2)
+        k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null else unescapePathName(v))
+      }.toMap
+      require(pvals.keySet == partitionBy.toSet,
+        s"DeltaLog: unexpected partition layout under $p")
+      val rel = (Seq(dir).filter(_.nonEmpty) ++ segs :+ s"$filePrefix-$stamp-$i.parquet")
+        .mkString("/")
+      val dest = new Path(table, rel)
+      if (rel.contains('/')) fs.mkdirs(dest.getParent)
+      require(fs.rename(p, dest), s"DeltaLog: move failed for $p")
+      val st = fs.getFileStatus(dest)
+      Landed(rel, pvals, st.getLen, st.getModificationTime)
+    }
+    fs.delete(stage, true)
+    landed
+  }
+
   /** `delta.enableInCommitTimestamps = true` — every commit carries a
     * MONOTONIC `commitInfo.inCommitTimestamp` as its first action, and
     * timestamp travel resolves against it instead of file modification
@@ -3587,6 +3439,12 @@ object DeltaLog {
       }
     }
 
+  /** Land one commit at the next free version with the put-if-absent
+    * race loop — the one seam every writer commits through. `lines(v)`
+    * builds the action lines for the version actually being attempted
+    * (version 0 carries protocol + metaData); with `withIct` a
+    * `commitInfo` carrying the in-commit timestamp leads them.
+    */
   private def commitActions(
       fs: FileSystem, logDir: Path, tablePath: String,
       lines: Long => Seq[String], withIct: Boolean = false): Long = {
@@ -3598,11 +3456,7 @@ object DeltaLog {
           // guarantee that makes ICT binary-searchable)
           val ict = math.max(System.currentTimeMillis(),
             lastIct(fs, logDir, version).fold(Long.MinValue)(_ + 1))
-          Seq(actionLineStatic { root =>
-            val ci = root.putObject("commitInfo")
-            ci.put("timestamp", System.currentTimeMillis())
-            ci.put("inCommitTimestamp", ict)
-          })
+          Seq(commitInfoAction(ict))
         }
       val bytes = (ictLines ++ lines(version)).mkString("", "\n", "\n").getBytes("UTF-8")
       val target = jsonPath(logDir, version)
@@ -3709,10 +3563,9 @@ object DeltaLog {
             "without them survivor identities cannot be carried")
         Some((mi.get, mv.get))
       }
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
+    val partitionKeys = physPartitionBy(snap)
     var removes = Seq.empty[DeltaFile]
-    var adds = Seq.empty[(String, Map[String, String], Long, Long)]
-    var group = 0
+    var adds = Seq.empty[Landed]
     snap.files.groupBy(_.partitionValues).toSeq
       .sortBy { case (pv, _) => snap.partitionColumns.map(c => pv.getOrElse(c, "")).mkString(" ") }
       .foreach { case (pvals, files) =>
@@ -3732,7 +3585,6 @@ object DeltaLog {
         if (worthIt) {
           val total = small.map(_.size).sum
           val nOut = math.max(1, ((total + targetFileBytes - 1) / targetFileBytes).toInt)
-          val stage = new Path(table, s"_compact_stage_${stamp}_$group")
           // DV-aware live-row scan, then back to the DATA columns only
           // (partition values re-attach via add.partitionValues); a
           // rowTracking rewrite scans WITH ids and lands them in the
@@ -3767,110 +3619,37 @@ object DeltaLog {
                 .sortWithinPartitions("__z")
                 .drop("__z")
           }
-          toPhysical(spark, snap, rewritten).write.parquet(stage.toString)
-          val parts = fs.globStatus(new Path(stage, "part-*.parquet")).toSeq
-            .map(_.getPath).sortBy(_.toString)
-          // keep the partition's directory prefix so the layout stays
-          // Hive-browsable; values still travel in partitionValues
-          val dirPrefix = {
-            val firstRel = decodePath(small.head.path)
-            val idx = firstRel.lastIndexOf('/')
-            if (idx < 0) "" else firstRel.substring(0, idx + 1)
-          }
-          adds = adds ++ parts.zipWithIndex.map { case (p, i) =>
-            val rel = s"${dirPrefix}part-compact-$stamp-$group-$i.parquet"
-            val dest = new Path(table, rel)
-            fs.mkdirs(dest.getParent)
-            require(fs.rename(p, dest), s"DeltaLog: compaction move failed for $p")
-            val st = fs.getFileStatus(dest)
-            (rel, pvals, st.getLen, st.getModificationTime)
-          }
+          // the rewrite lands under the TABLE's own partition dir (the
+          // Hive path of the group's values, as Spark's writer spells
+          // it), never beside a source file: a shallow clone's files
+          // live in the source table
+          val dir = partitionKeys.map(k =>
+            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+              .getPartitionPathString(k, pvals.getOrElse(k, null))).mkString("/")
+          adds = adds ++ stageAndMove(fs, table, toPhysical(spark, snap, rewritten),
+              Seq.empty, "part-compact", dir = dir)
+            .map(_.copy(partitionValues = pvals))
           removes = removes ++ small
-          fs.delete(stage, true)
-          group += 1
         }
       }
     if (removes.isEmpty) return -1L
-    val removeLines = removes.map { f =>
-      actionLineStatic { root =>
-        val r = root.putObject("remove")
-        // verbatim, NOT re-encoded: the path string is the log's
-        // reconciliation identity — it must match the add that wrote it
-        r.put("path", f.path)
-        r.put("deletionTimestamp", 0L)
-        r.put("dataChange", false)
-      }
-    }
     // fresh base ids for the compacted outputs (every rowTracking add
     // must carry them; the materialized columns override for carried
     // rows) + the high-water-mark bump in the SAME commit
-    val rtBases: Seq[(Long, Long)] =
-      if (!rt) Seq.empty
+    val rowIds =
+      if (!rt) None
       else {
         require(snap.rowIdHighWaterMark.isDefined,
           "DeltaLog: compact on a rowTracking table with no delta.rowTracking " +
             "high-water-mark domain metadata — fresh base ids could reuse burned ones")
-        val hwm = snap.rowIdHighWaterMark.get
-        val counts = adds.map { case (rel, _, _, _) => footerRowCount(fs, table, rel) }
-        counts.scanLeft(hwm + 1L)(_ + _).zip(counts)
+        Some(RowIdBlock(snap.rowIdHighWaterMark,
+          adds.map(l => footerRowCount(fs, new Path(table, l.rel)))))
       }
-    def addLines(version: Long): Seq[String] = adds.zipWithIndex.map {
-      case ((rel, pvals, len, mtime), i) =>
-        actionLineStatic { root =>
-          val a = root.putObject("add")
-          a.put("path", encodePath(rel))
-          val pv = a.putObject("partitionValues")
-          snap.partitionColumns.map(snap.pvKey).foreach { c =>
-            pvals.get(c).flatMap(Option(_)) match {
-              case Some(v) => pv.put(c, v)
-              case None => pv.putNull(c)
-            }
-          }
-          a.put("size", len)
-          a.put("modificationTime", mtime)
-          a.put("dataChange", false)
-          if (rt) {
-            a.put("baseRowId", rtBases(i)._1)
-            a.put("defaultRowCommitVersion", version)
-          }
-          statsJson(fs, table, rel).foreach(s => a.put("stats", s))
-        }
-    }
-    val dmLines: Seq[String] =
-      if (!rt || rtBases.isEmpty) Seq.empty
-      else Seq(actionLineStatic { root =>
-        val d = root.putObject("domainMetadata")
-        d.put("domain", "delta.rowTracking")
-        d.put("configuration",
-          s"""{"rowIdHighWaterMark":${rtBases.last._1 + rtBases.last._2 - 1}}""")
-        d.put("removed", false)
-      })
-    // same retry-race guard as append: a stale dm replay after a lost
-    // version race would overwrite a concurrent winner's high-water
-    // mark and re-burn row ids — refuse loudly if the mark moved
-    var firstTriedVersion: Option[Long] = None
-    commitActions(fs, logDir, tablePath,
-      v => {
-        if (firstTriedVersion.isEmpty) firstTriedVersion = Some(v)
-        else if (rt && !firstTriedVersion.contains(v)) {
-          val cur = snapshot(spark, tablePath, None).rowIdHighWaterMark
-          if (cur != snap.rowIdHighWaterMark)
-            throw new java.util.ConcurrentModificationException(
-              s"DeltaLog: version race on a rowTracking compact of $tablePath — " +
-                s"the delta.rowTracking high-water mark moved from " +
-                s"${snap.rowIdHighWaterMark} to $cur during the commit; the staged " +
-                "base row ids would re-burn allocated ids")
-        }
-        removeLines ++ addLines(v) ++ dmLines
-      },
-      withIct = ictEnabled(snap.configuration))
-  }
-
-  private def actionLineStatic(
-      build: com.fasterxml.jackson.databind.node.ObjectNode => Unit): String = {
-    val root = mapper.createObjectNode()
-    build(root)
-    mapper.writeValueAsString(root)
+    // layout-only: removes carry no deletion time and dataChange=false
+    val removeLines = removes.map(f => removeAction(f.path, 0L, dataChange = false))
+    val addLines = landedAdds(fs, table, partitionKeys, adds, dataChange = false, rowIds)
+    commitWithRowIds(spark, fs, logDir, tablePath, "compact", rowIds,
+      withIct = ictEnabled(snap.configuration))(v => removeLines ++ addLines(v))
   }
 
   /** VACUUM twin — physically delete data files that are NOT in the
@@ -3913,7 +3692,7 @@ object DeltaLog {
         val name = st.getPath.getName
         if (st.isDirectory) {
           if (name != "_delta_log" && !name.startsWith("_commit_stage_") &&
-              !name.startsWith("_compact_stage_") && !name.startsWith("_cp_stage_"))
+              !name.startsWith("_cp_stage_"))
             walk(st.getPath)
         } else if (name.endsWith(".parquet") &&
             !live.contains(fs.makeQualified(st.getPath).toString) &&

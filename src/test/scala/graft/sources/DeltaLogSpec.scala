@@ -1906,6 +1906,24 @@ class DeltaLogSpec extends SparkSpec {
     assert(rows(dst0) == Seq((1L, "a"), (2L, "b")))
   }
 
+  test("shallow clone: compact writes under the clone, so a source vacuum cannot strand it") {
+    import spark.implicits._
+    val src = newTable()
+    val dst = newTable() + "/clone"
+    DeltaLog.append(spark, src, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
+    DeltaLog.append(spark, src, Seq((3L, "c"), (4L, "d")).toDF("id", "tag"))
+    DeltaLog.deleteWithDv(spark, src, col("id") === 2L)
+    DeltaLog.shallowClone(spark, src, dst)
+    assert(DeltaLog.compact(spark, dst) >= 0L)
+    val live = DeltaLog.snapshot(spark, dst).files.map(_.path)
+    assert(live.nonEmpty && live.forall(p => !p.contains(":") && !p.startsWith("/")),
+      s"compacted clone files must be clone-relative: $live")
+    DeltaLog.vacuum(spark, src, retainMs = 0L, force = true)
+    val rows = DeltaLog.read(spark, dst).orderBy("id")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(rows == Seq((1L, "a"), (3L, "c"), (4L, "d")))
+  }
+
   test("in-commit timestamps: a monotonic commitInfo clock drives timestamp travel, not mtimes") {
     import spark.implicits._
     val t = newTable()

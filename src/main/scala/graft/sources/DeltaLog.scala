@@ -224,21 +224,17 @@ object DeltaLog {
   }
 
   /** `_last_checkpoint` pointer, if present: (version, parts) — parts
-    * is 1 for a classic checkpoint, N for a multi-part one.
+    * is 1 for a classic checkpoint, N for a multi-part one. A missing,
+    * empty or unparsable pointer is None: the caller lists the log.
     */
-  private def lastCheckpointVersion(fs: FileSystem, logDir: Path): Option[(Long, Int)] = {
-    val p = new Path(logDir, "_last_checkpoint")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val node = mapper.readTree(txt)
-      require(node.has("version"), s"DeltaLog: malformed _last_checkpoint: $txt")
-      val parts = if (node.has("parts")) node.get("parts").asInt() else 1
-      require(parts >= 1, s"DeltaLog: malformed _last_checkpoint parts field: $txt")
-      Some((node.get("version").asLong(), parts))
-    }
-  }
+  private def lastCheckpointVersion(fs: FileSystem, logDir: Path): Option[(Long, Int)] =
+    try {
+      val in = fs.open(new Path(logDir, "_last_checkpoint"))
+      val node = try mapper.readTree(in) finally in.close()
+      val parts = if (node != null && node.has("parts")) node.get("parts").asInt() else 1
+      if (node == null || !node.path("version").canConvertToLong || parts < 1) None
+      else Some((node.get("version").asLong(), parts))
+    } catch { case _: java.io.IOException => None }
 
   /** All parquet paths of the checkpoint at `v` with `parts` parts. */
   private def checkpointPaths(logDir: Path, v: Long, parts: Int): Seq[Path] =
@@ -1403,9 +1399,34 @@ object DeltaLog {
       readWithDv(spark, tablePath, snap.copy(files = files), keepFile = addFileColumn)
     else readSnapshotFiles(spark, tablePath, snap, files, addFileColumn = addFileColumn)
 
-  private def writeAtomic(fs: FileSystem, target: Path, bytes: Array[Byte], overwrite: Boolean): Unit = {
-    val out = fs.create(target, overwrite)
-    try out.write(bytes) finally out.close()
+  /** Land `bytes` at `target` by temp + rename: the content is written
+    * fully off to the side under the hidden name `.tmp-<name>-<stamp>`
+    * (no log or metadata pattern matches a crash orphan), so no reader
+    * ever sees a partial file. With `overwrite = false` the rename is
+    * the put-if-absent and false means `target` was taken (a lost
+    * race). With `overwrite = true` an existing `target` is replaced;
+    * where rename refuses an existing destination it is deleted first,
+    * so pointer readers must treat a missing pointer as "list".
+    */
+  private[sources] def landFile(
+      fs: FileSystem, target: Path, bytes: Array[Byte], overwrite: Boolean): Boolean = {
+    val tmp = new Path(target.getParent,
+      s".tmp-${target.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+    } catch { case e: java.io.IOException => fs.delete(tmp, false); throw e }
+    def move(): Boolean =
+      try fs.rename(tmp, target) catch { case _: FileAlreadyExistsException => false }
+    val landed = move() || (overwrite && { fs.delete(target, false); move() })
+    if (!landed) {
+      fs.delete(tmp, false)
+      // rename refuses only when the destination exists (lost race)
+      // — anything else is a real IO failure and must surface
+      if (!fs.exists(target)) throw new java.io.IOException(
+        s"rename to $target failed with no competing file present")
+    }
+    landed
   }
 
   /** One checkpoint row carrying the given actions, null elsewhere. */
@@ -1497,7 +1518,7 @@ object DeltaLog {
     val (files, rest) = checkpointRows(r)
     val rows = rest ++ files
     writeCheckpointFile(spark, fs, tablePath, rows, 6, checkpointPath(logDir, r.version))
-    writeAtomic(fs, new Path(logDir, "_last_checkpoint"),
+    landFile(fs, new Path(logDir, "_last_checkpoint"),
       s"""{"version":${r.version},"size":${rows.size}}""".getBytes("UTF-8"), overwrite = true)
     r.version
   }
@@ -1528,7 +1549,8 @@ object DeltaLog {
     val r = upgradeProtocol(r0.snapshot, "v2Checkpoint") match {
       case None => r0
       case Some(line) =>
-        commitActions(fs, logDir, tablePath, _ => Seq(line))
+        commitActions(fs, logDir, tablePath, _ => Seq(line),
+          withIct = ictEnabled(r0.snapshot.configuration))
         currentReplay(spark, tablePath)
     }
     val uuid = java.util.UUID.randomUUID().toString
@@ -1543,7 +1565,7 @@ object DeltaLog {
       Row(sidecarName, sidecarStat.getLen, sidecarStat.getModificationTime, null))
     writeCheckpointFile(spark, fs, tablePath, rows, 8,
       new Path(logDir, f"${r.version}%020d.checkpoint.$uuid.parquet"))
-    writeAtomic(fs, new Path(logDir, "_last_checkpoint"),
+    landFile(fs, new Path(logDir, "_last_checkpoint"),
       s"""{"version":${r.version},"size":${rows.size + files.size}}""".getBytes("UTF-8"),
       overwrite = true)
     r.version
@@ -3161,9 +3183,9 @@ object DeltaLog {
   /** RESTORE the table to `version` as a NEW commit (Delta's RESTORE
     * TABLE ... TO VERSION AS OF): files added since the target version
     * are removed, files removed since then are re-added with their
-    * original partitionValues/size/stats/DV descriptors, and — when
-    * the schema evolved in between — the target's metaData action is
-    * re-emitted so readers see the restored shape. History is
+    * original partitionValues/size/stats/DV descriptors and row ids,
+    * and — when the schema evolved in between — the target's metaData
+    * action is re-emitted so readers see the restored shape. History is
     * PRESERVED: the restore is one more transaction, and time travel
     * to the pre-restore state still works. Refuses if any file the
     * target needs was vacuumed away. Returns the committed version
@@ -3204,11 +3226,13 @@ object DeltaLog {
     val metaLines = if (!metaChanged) Seq.empty else Seq(metaDataAction(
       current.metaId.orElse(target.metaId).getOrElse("graft"),
       target.schemaString.getOrElse(""), target.partitionColumns, target.configuration))
-    // verbatim paths: a re-added path IS the original add's identity
+    // verbatim paths: a re-added path IS the original add's identity,
+    // and it keeps the row ids the target snapshot gave it
     val now = System.currentTimeMillis()
     val removeLines = toRemove.map(f => removeAction(f.path, now, dataChange = true))
     val addLines = toAdd.map(f =>
-      addAction(f, physPartitionBy(target), modificationTime = now, dataChange = true))
+      addAction(f, physPartitionBy(target), modificationTime = now, dataChange = true,
+        rowIds = for (b <- f.baseRowId; v <- f.defaultRowCommitVersion) yield (b, v)))
     commitActions(fs, logDir, tablePath,
       _ => metaLines ++ removeLines ++ addLines,
       withIct = ictEnabled(current.configuration))
@@ -3224,7 +3248,7 @@ object DeltaLog {
     * [[statsJson]]'s best-effort): committing a rowTracking add with a
     * guessed count would burn or double-allocate row ids.
     */
-  private def footerRowCount(fs: FileSystem, p: Path): Long = {
+  private[sources] def footerRowCount(fs: FileSystem, p: Path): Long = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(fs.getFileStatus(p), fs.getConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getRecordCount finally r.close()
@@ -3462,28 +3486,9 @@ object DeltaLog {
       val target = jsonPath(logDir, version)
       if (fs.exists(target)) return false // already taken — skip the write
       // temp + rename (what Delta's own LogStore does on HDFS/local):
-      // the commit CONTENT is written fully off to the side, so a
-      // failed write (disk full mid-stream) can never leave a
-      // truncated %020d.json in the log, and no concurrent reader can
-      // observe a half-written commit. Only the RENAME is the
-      // put-if-absent; temp names never match the JsonCommit pattern,
-      // so replay and vacuum ignore any crash orphan.
-      val tmp = new Path(logDir,
-        s".tmp-${java.util.UUID.randomUUID().toString.take(8)}-${target.getName}")
-      try writeAtomic(fs, tmp, bytes, overwrite = true)
-      catch { case e: java.io.IOException => fs.delete(tmp, false); throw e }
-      val renamed =
-        try fs.rename(tmp, target)
-        catch { case _: FileAlreadyExistsException => false }
-      if (renamed) true
-      else {
-        fs.delete(tmp, false)
-        // rename refuses only when the destination exists (lost race)
-        // — anything else is a real IO failure and must surface
-        if (fs.exists(target)) false
-        else throw new java.io.IOException(
-          s"DeltaLog: commit rename failed for $target with no competing commit present")
-      }
+      // a failed write can never leave a truncated %020d.json in the
+      // log, and only the RENAME is the put-if-absent
+      landFile(fs, target, bytes, overwrite = false)
     }
     // the floor version counts CHECKPOINTS too: after log cleanup the
     // JSON prefix is gone and the checkpoint is the only witness of

@@ -1,42 +1,46 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-/** Reader/writer for Apache Iceberg's TABLE-METADATA format (v1) — the
-  * other open table format beside Delta, published at iceberg.apache.org
-  * (spec: Table Metadata / Manifests / Manifest Lists). The layout is
-  * `metadata/vN.metadata.json` (+ `version-hint.text`) → current
+/** Reader/writer for Apache Iceberg's TABLE-METADATA format (v1–v3) —
+  * the other open table format beside Delta, published at
+  * iceberg.apache.org (spec: Table Metadata / Manifests / Manifest
+  * Lists). The layout is `metadata/vN.metadata.json` → current
   * snapshot → a manifest-list AVRO file → manifest AVRO files → data
-  * file paths. No connector jar is needed: the metadata JSON parses
+  * file paths; `version-hint.text` names N, and readers probe forward
+  * past it (or list when it is missing or unreadable), as Hadoop
+  * tables do. No connector jar is needed: the metadata JSON parses
   * with Jackson, the manifests with the avro-core/avro-mapred jars
   * Spark already ships, and the data files are ordinary parquet.
   *
   * Scope (guarded loudly, never silently wrong):
-  *  - format-version 1, parquet data files; identity-partitioned
-  *    tables read AND write (partition tuples in
-  *    `data_file.partition`, Hive-style `data/col=value/` layout,
-  *    file-level pruning from the manifests on read);
-  *  - append-only snapshots (manifest entries with status DELETED (2)
-  *    are honored on read by exclusion; equality/position DELETE FILES
-  *    — v2 row-level deletes — are refused via the format-version
-  *    check);
+  *  - parquet data files; identity-partitioned tables read AND write
+  *    (partition tuples in `data_file.partition`, Hive-style
+  *    `data/col=value/` layout, file-level pruning from the manifests
+  *    on read);
+  *  - row-level deletes: v2 position and equality delete files and v3
+  *    deletion vectors, honored on read and written by [[deleteRows]],
+  *    [[deleteRowsEquality]] and [[deleteRowsDv]];
   *  - schema types: the primitive set the testdata needs (long, int,
-  *    double, float, boolean, string, date, timestamp).
+  *    double, float, boolean, string, date, timestamp, decimal).
   *
   * Scale shape: manifests are METADATA-sized (Iceberg's own design
   * point — a 100 TB table is ~10^5 manifest entries split across
   * manifest files); this reader walks them on the driver exactly as
   * Iceberg's own planner does, then hands Spark one declared-schema
-  * parquet scan over the live files. The writer twin appends a new
-  * snapshot per commit, CARRYING FORWARD prior manifests in the new
-  * manifest list (so old snapshots stay readable = time travel) and
-  * publishing via a new `vN.metadata.json` + `version-hint.text`.
+  * parquet scan over the live files. Every writer commits through one
+  * path: data and delete files land through [[stageFiles]], their
+  * manifest entries through [[entryRecord]], the manifest list (prior
+  * manifests CARRIED FORWARD, so old snapshots stay readable = time
+  * travel) through [[writeManifestList]], and `vN+1.metadata.json` plus
+  * `version-hint.text` through [[commitMetadata]].
   */
 object IcebergTable {
 
@@ -65,58 +69,15 @@ object IcebergTable {
       |  {"name":"added_snapshot_id","type":["null","long"],"default":null}
       |]}""".stripMargin)
 
-  /** v2 DELETE-manifest entries: `data_file.content = 1` marks a
-    * position-delete parquet (columns `file_path`, `pos`), and the
-    * explicit entry `sequence_number` gates which data files it
-    * applies to.
+  /** Manifest-entry schema. The v1 shape is what appends write; the v2
+    * shape (`v2`) adds the entry's explicit `sequence_number`, the file
+    * `content` (0 data, 1 position deletes or deletion vectors, 2
+    * equality deletes), `equality_ids` and the v3 deletion-vector
+    * reference. Partitioned tables add the spec's `data_file.partition`
+    * struct (r102) with one nullable field per identity-transformed
+    * partition column.
     */
-  private def deleteManifestEntrySchema(partitionFields: Seq[(String, DataType)]): Schema = {
-    val pField =
-      if (partitionFields.isEmpty) ""
-      else {
-        val fields = partitionFields.map { case (n, dt) =>
-          val t = dt match {
-            case IntegerType => "\"int\""
-            case LongType => "\"long\""
-            case StringType => "\"string\""
-            case other => throw new IllegalArgumentException(
-              s"IcebergTable: unsupported partition column type ${other.simpleString}")
-          }
-          s"""{"name":"$n","type":["null",$t],"default":null}"""
-        }.mkString(",")
-        s""",{"name":"partition","type":{"type":"record","name":"r102","fields":[$fields]}}"""
-      }
-    new Schema.Parser().parse(
-      s"""{"type":"record","name":"manifest_entry","fields":[
-         |  {"name":"status","type":"int"},
-         |  {"name":"snapshot_id","type":["null","long"],"default":null},
-         |  {"name":"sequence_number","type":["null","long"],"default":null},
-         |  {"name":"data_file","type":{"type":"record","name":"data_file","fields":[
-         |    {"name":"content","type":"int"},
-         |    {"name":"file_path","type":"string"},
-         |    {"name":"file_format","type":"string"},
-         |    {"name":"record_count","type":"long"},
-         |    {"name":"file_size_in_bytes","type":"long"},
-         |    {"name":"first_row_id","type":["null","long"],"default":null},
-         |    {"name":"equality_ids","type":["null",{"type":"array","items":"int"}],"default":null},
-         |    {"name":"referenced_data_file","type":["null","string"],"default":null},
-         |    {"name":"content_offset","type":["null","long"],"default":null},
-         |    {"name":"content_size_in_bytes","type":["null","long"],"default":null},
-         |    {"name":"lower_bounds","type":["null",{"type":"array","items":
-         |      {"type":"record","name":"k126_v127","fields":[
-         |        {"name":"key","type":"int"},{"name":"value","type":"bytes"}]}}],"default":null},
-         |    {"name":"upper_bounds","type":["null",{"type":"array","items":
-         |      {"type":"record","name":"k128_v129","fields":[
-         |        {"name":"key","type":"int"},{"name":"value","type":"bytes"}]}}],"default":null}$pField
-         |  ]}}
-         |]}""".stripMargin)
-  }
-
-  /** Manifest-entry schema; partitioned tables add the spec's
-    * `data_file.partition` struct (r102) with one nullable field per
-    * identity-transformed partition column.
-    */
-  private def manifestEntrySchema(partitionFields: Seq[(String, DataType)]): Schema = {
+  private def entrySchema(partitionFields: Seq[(String, DataType)], v2: Boolean): Schema = {
     val pField =
       if (partitionFields.isEmpty) ""
       else {
@@ -134,16 +95,24 @@ object IcebergTable {
         }.mkString(",")
         s""",{"name":"partition","type":{"type":"record","name":"r102","fields":[$fields]}}"""
       }
+    def v2Only(fields: String): String = if (v2) fields else ""
+    val sequence = v2Only("""{"name":"sequence_number","type":["null","long"],"default":null},""")
+    val content = v2Only("""{"name":"content","type":"int"},""")
+    val deletes = v2Only(
+      """{"name":"equality_ids","type":["null",{"type":"array","items":"int"}],"default":null},
+        |{"name":"referenced_data_file","type":["null","string"],"default":null},
+        |{"name":"content_offset","type":["null","long"],"default":null},
+        |{"name":"content_size_in_bytes","type":["null","long"],"default":null},""".stripMargin)
     new Schema.Parser().parse(
       s"""{"type":"record","name":"manifest_entry","fields":[
          |  {"name":"status","type":"int"},
-         |  {"name":"snapshot_id","type":["null","long"],"default":null},
-         |  {"name":"data_file","type":{"type":"record","name":"data_file","fields":[
+         |  {"name":"snapshot_id","type":["null","long"],"default":null},$sequence
+         |  {"name":"data_file","type":{"type":"record","name":"data_file","fields":[$content
          |    {"name":"file_path","type":"string"},
          |    {"name":"file_format","type":"string"},
          |    {"name":"record_count","type":"long"},
          |    {"name":"file_size_in_bytes","type":"long"},
-         |    {"name":"first_row_id","type":["null","long"],"default":null},
+         |    {"name":"first_row_id","type":["null","long"],"default":null},$deletes
          |    {"name":"lower_bounds","type":["null",{"type":"array","items":
          |      {"type":"record","name":"k126_v127","fields":[
          |        {"name":"key","type":"int"},{"name":"value","type":"bytes"}]}}],"default":null},
@@ -153,8 +122,6 @@ object IcebergTable {
          |  ]}}
          |]}""".stripMargin)
   }
-
-  private val ManifestEntrySchema: Schema = manifestEntrySchema(Seq.empty)
 
   // ------------------- column bounds (Iceberg single-value binary) --
 
@@ -279,8 +246,7 @@ object IcebergTable {
     * where the table declares a default mis-reads every pre-column
     * row (iceberg.apache.org/spec, "Default values").
     */
-  private def parseDefault(name: String, dt: DataType,
-      v: com.fasterxml.jackson.databind.JsonNode): Any = {
+  private def parseDefault(name: String, dt: DataType, v: JsonNode): Any = {
     def fail(why: String): Nothing = throw new IllegalArgumentException(
       s"IcebergTable: column '$name' declares default $v this reader cannot " +
         s"represent ($why) — refusing rather than mis-reading pre-column rows")
@@ -310,8 +276,7 @@ object IcebergTable {
   /** The spec's JSON single-value form of a default literal — the
     * write-side twin of [[parseDefault]] ([[addColumn]] emits it).
     */
-  private def defaultJsonNode(
-      dt: DataType, v: Any): com.fasterxml.jackson.databind.JsonNode = {
+  private def defaultJsonNode(dt: DataType, v: Any): JsonNode = {
     val nf = mapper.getNodeFactory
     (dt, v) match {
       case (LongType, x: Long) => nf.numberNode(x)
@@ -337,16 +302,12 @@ object IcebergTable {
     * strip declared defaults and every pre-column row would flip from
     * the declared literal to null).
     */
-  private def carriedDefaults(meta: com.fasterxml.jackson.databind.JsonNode)
-      : Map[Int, Seq[(String, com.fasterxml.jackson.databind.JsonNode)]] = {
-    val fn = currentSchemaNode(meta).get("fields")
-    if (fn == null || !fn.isArray) Map.empty
-    else (0 until fn.size()).map(fn.get).flatMap { f =>
+  private def carriedDefaults(meta: JsonNode): Map[Int, Seq[(String, JsonNode)]] =
+    elements(currentSchemaNode(meta).get("fields")).flatMap { f =>
       val keep = Seq("initial-default", "write-default")
         .filter(k => f.has(k) && !f.get(k).isNull).map(k => k -> f.get(k))
       if (keep.isEmpty) None else Some(f.get("id").asInt() -> keep)
     }.toMap
-  }
 
   /** Decorate a rebuilt schema json with carried defaults (by field
     * id) plus any NEW defaults this operation declares (by name, both
@@ -354,18 +315,18 @@ object IcebergTable {
     * backfill AND the omitted-write value).
     */
   private def attachDefaults(
-      node: com.fasterxml.jackson.databind.node.ObjectNode,
-      carried: Map[Int, Seq[(String, com.fasterxml.jackson.databind.JsonNode)]],
+      node: ObjectNode,
+      carried: Map[Int, Seq[(String, JsonNode)]],
       fresh: Map[String, (DataType, Any)] = Map.empty): Unit = {
-    val arr = node.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("fields")
+    val arr = node.withArray[ArrayNode]("fields")
     (0 until arr.size()).map(arr.get).foreach { fn =>
-      val ob = fn.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      val ob = fn.asInstanceOf[ObjectNode]
       carried.get(ob.get("id").asInt()).foreach(_.foreach { case (k, v) =>
-        ob.set[com.fasterxml.jackson.databind.node.ObjectNode](k, v) })
+        ob.set[ObjectNode](k, v) })
       fresh.get(ob.get("name").asText()).foreach { case (dt, v) =>
-        ob.set[com.fasterxml.jackson.databind.node.ObjectNode](
+        ob.set[ObjectNode](
           "initial-default", defaultJsonNode(dt, v))
-        ob.set[com.fasterxml.jackson.databind.node.ObjectNode](
+        ob.set[ObjectNode](
           "write-default", defaultJsonNode(dt, v))
       }
     }
@@ -379,12 +340,11 @@ object IcebergTable {
     */
   final case class IceField(id: Int, name: String, dataType: DataType)
 
-  private def schemaJson(schema: StructType): com.fasterxml.jackson.databind.node.ObjectNode =
+  private def schemaJson(schema: StructType): ObjectNode =
     schemaJsonOf(schema.fields.zipWithIndex.map { case (f, i) =>
       IceField(i + 1, f.name, f.dataType) }.toSeq)
 
-  private def schemaJsonOf(
-      fields: Seq[IceField]): com.fasterxml.jackson.databind.node.ObjectNode = {
+  private def schemaJsonOf(fields: Seq[IceField]): ObjectNode = {
     val node = mapper.createObjectNode()
     node.put("type", "struct")
     val arr = node.putArray("fields")
@@ -398,7 +358,7 @@ object IcebergTable {
     node
   }
 
-  private def parseFields(node: com.fasterxml.jackson.databind.JsonNode): Seq[IceField] = {
+  private def parseFields(node: JsonNode): Seq[IceField] = {
     require(node != null && node.get("type") != null &&
       node.get("type").asText() == "struct", "IcebergTable: malformed schema node")
     val fields = node.get("fields")
@@ -421,9 +381,7 @@ object IcebergTable {
     * unconditionally made a legacy table unreadable after any id-mode
     * read in the same session.
     */
-  private def parseSchema(
-      node: com.fasterxml.jackson.databind.JsonNode,
-      withIds: Boolean = false): StructType =
+  private def parseSchema(node: JsonNode, withIds: Boolean = false): StructType =
     StructType(parseFields(node).map { f =>
       StructField(f.name, f.dataType, nullable = true,
         if (withIds)
@@ -435,26 +393,106 @@ object IcebergTable {
 
   private def metadataDir(tablePath: String) = new Path(tablePath, "metadata")
 
-  private def currentMetadataPath(fs: FileSystem, tablePath: String): Path = {
+  private def metadataFile(dir: Path, version: Long) = new Path(dir, s"v$version.metadata.json")
+
+  private val MetadataFile = """v(\d+)\.metadata\.json""".r
+
+  private def versionHint(dir: Path) = new Path(dir, "version-hint.text")
+
+  /** A table's current metadata version and its JSON. */
+  private final case class Head(version: Long, meta: ObjectNode) {
+    def formatVersion: Int = meta.get("format-version").asInt()
+    def nextSequence: Long =
+      (if (meta.has("last-sequence-number")) meta.get("last-sequence-number").asLong() else 0L) + 1
+  }
+
+  /** The current metadata, or None when the table has no
+    * `vN.metadata.json` yet. The version comes from `version-hint.text`
+    * when it names an existing file, else from listing; either way the
+    * reader then probes forward while `v(N+1).metadata.json` exists
+    * (the Hadoop-table `findVersion` rule), so a commit that crashed
+    * before repointing the hint, or a missing, empty or unparsable
+    * hint, never hides or wedges a version.
+    */
+  private def headOption(fs: FileSystem, tablePath: String): Option[Head] = {
     val dir = metadataDir(tablePath)
-    require(fs.exists(dir), s"not an Iceberg table: no metadata/ under $tablePath")
-    val hint = new Path(dir, "version-hint.text")
-    if (fs.exists(hint)) {
-      val in = fs.open(hint)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-      new Path(dir, s"v$v.metadata.json")
-    } else {
-      val versions = fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
-        case n if n.matches("""v\d+\.metadata\.json""") =>
-          n.stripPrefix("v").stripSuffix(".metadata.json").toLong
-      }
-      require(versions.nonEmpty, s"IcebergTable: no vN.metadata.json under $dir")
-      new Path(dir, s"v${versions.max}.metadata.json")
+    if (!fs.exists(dir)) return None
+    val hinted =
+      try {
+        val in = fs.open(versionHint(dir))
+        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
+        finally in.close()
+      } catch { case _: java.io.IOException | _: NumberFormatException => None }
+    hinted.filter(v => fs.exists(metadataFile(dir, v))).orElse(
+      fs.listStatus(dir).toSeq.map(_.getPath.getName)
+        .collect { case MetadataFile(v) => v.toLong }.maxOption
+    ).map { v0 =>
+      val v = Iterator.iterate(v0)(_ + 1).dropWhile(v => fs.exists(metadataFile(dir, v + 1)))
+        .next()
+      Head(v, readJson(fs, metadataFile(dir, v)).asInstanceOf[ObjectNode])
     }
   }
 
-  private def readJson(fs: FileSystem, p: Path): com.fasterxml.jackson.databind.JsonNode = {
+  private def head(fs: FileSystem, tablePath: String): Head = {
+    require(fs.exists(metadataDir(tablePath)),
+      s"not an Iceberg table: no metadata/ under $tablePath")
+    headOption(fs, tablePath).getOrElse(throw new IllegalArgumentException(
+      s"IcebergTable: no vN.metadata.json under ${metadataDir(tablePath)}"))
+  }
+
+  /** The one Iceberg commit: land `newMeta` as `v(N+1).metadata.json`
+    * over `prev` (None creates the table) and repoint
+    * `version-hint.text`. With `snapshot` it first appends the
+    * snapshot node, under the table's current schema id and last
+    * sequence number, and makes it current. Both files land by temp +
+    * rename ([[DeltaLog.landFile]]): the metadata file put-if-absent,
+    * so a writer that lost the race for N+1 raises, and the hint by
+    * replacement (readers that find it missing or stale list or probe
+    * past it).
+    */
+  private def commitMetadata(
+      fs: FileSystem, tablePath: String, prev: Option[Head], newMeta: ObjectNode,
+      snapshot: Option[NewSnapshot] = None): Unit = {
+    val now = System.currentTimeMillis()
+    newMeta.put("last-updated-ms", now)
+    snapshot.foreach { s =>
+      newMeta.put("current-snapshot-id", s.id)
+      val sn = newMeta.withArray[ArrayNode]("snapshots").addObject()
+      sn.put("snapshot-id", s.id)
+      if (newMeta.has("last-sequence-number"))
+        sn.put("sequence-number", newMeta.get("last-sequence-number").asLong())
+      sn.put("timestamp-ms", now)
+      if (newMeta.has("current-schema-id"))
+        sn.put("schema-id", newMeta.get("current-schema-id").asInt())
+      s.firstRowId.foreach(sn.put("first-row-id", _))
+      sn.put("manifest-list", s.manifestList)
+      val sm = sn.putObject("summary")
+      sm.put("operation", s.operation)
+      s.summary.foreach { case (k, v) => sm.put(k, v) }
+    }
+    val dir = metadataDir(tablePath)
+    val version = prev.fold(0L)(_.version) + 1
+    val target = metadataFile(dir, version)
+    if (!DeltaLog.landFile(fs, target,
+        mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(newMeta), overwrite = false))
+      throw new FileAlreadyExistsException(
+        s"IcebergTable: $target already exists — a concurrent writer committed version $version")
+    DeltaLog.landFile(fs, versionHint(dir), version.toString.getBytes("UTF-8"), overwrite = true)
+  }
+
+  private def newStamp(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  private def newSnapshotId(): Long =
+    math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
+
+  /** A snapshot a commit appends: its id, manifest list, summary
+    * (operation first) and, on row-lineage tables, first row id.
+    */
+  private final case class NewSnapshot(
+      id: Long, manifestList: String, operation: String,
+      summary: Map[String, String] = Map.empty, firstRowId: Option[Long] = None)
+
+  private def readJson(fs: FileSystem, p: Path): JsonNode = {
     val in = fs.open(p)
     try mapper.readTree(in) finally in.close()
   }
@@ -469,6 +507,50 @@ object IcebergTable {
       out.result()
     } finally reader.close()
   }
+
+  /** An optional avro field: None when the record's schema lacks it
+    * or its value is null.
+    */
+  private def field(r: GenericRecord, name: String): Option[AnyRef] =
+    if (r.getSchema.getField(name) == null) None else Option(r.get(name))
+
+  /** A JSON array's elements; none for a missing or non-array node. */
+  private def elements(n: JsonNode): Seq[JsonNode] =
+    if (n == null || !n.isArray) Seq.empty else (0 until n.size()).map(n.get)
+
+  private def snapshotsOf(meta: JsonNode): Seq[JsonNode] = elements(meta.get("snapshots"))
+
+  private def snapshotNode(meta: JsonNode, id: Long): Option[JsonNode] =
+    snapshotsOf(meta).find(_.get("snapshot-id").asLong() == id)
+
+  /** One manifest-list row. */
+  private final case class ManifestRef(
+      path: String, length: Long, content: Int, sequence: Long, minSequence: Long,
+      addedSnapshotId: Long, specId: Int = 0)
+
+  /** The manifests a snapshot's list names. Fields a v1 list lacks
+    * read as 0 (the spec's upgrade rule), and a missing
+    * `added_snapshot_id` as the snapshot itself.
+    */
+  private def manifestRefs(
+      fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
+      snap: JsonNode): Seq[ManifestRef] = {
+    val sid = snap.get("snapshot-id").asLong()
+    readAvro(fs, new Path(snap.get("manifest-list").asText()), conf).map { r =>
+      def num(n: String): Long = field(r, n).fold(0L)(_.asInstanceOf[Number].longValue)
+      ManifestRef(r.get("manifest_path").toString, num("manifest_length"),
+        num("content").toInt, num("sequence_number"), num("min_sequence_number"),
+        field(r, "added_snapshot_id").fold(sid)(_.asInstanceOf[Long]),
+        num("partition_spec_id").toInt)
+    }
+  }
+
+  /** The current snapshot's manifests; none before the first snapshot. */
+  private def currentManifests(
+      fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
+      meta: JsonNode): Seq[ManifestRef] =
+    Option(meta.get("current-snapshot-id")).flatMap(id => snapshotNode(meta, id.asLong()))
+      .toSeq.flatMap(manifestRefs(fs, conf, _))
 
   /** The snapshot's live data-file paths + declared schema.
     * `filePartitions` is aligned with `files`: each file's identity
@@ -531,8 +613,7 @@ object IcebergTable {
   /** Table property marking that all files carry parquet field ids. */
   val FieldIdsProperty = "graft.parquet.field-ids"
 
-  private def propertiesOf(
-      meta: com.fasterxml.jackson.databind.JsonNode): Map[String, String] = {
+  private def propertiesOf(meta: JsonNode): Map[String, String] = {
     val p = meta.get("properties")
     if (p == null || !p.isObject) Map.empty
     else {
@@ -543,61 +624,45 @@ object IcebergTable {
     }
   }
 
-  private def specColumnNames(meta: com.fasterxml.jackson.databind.JsonNode): Seq[String] = {
+  private def specColumnNames(meta: JsonNode): Seq[String] = {
     // modern pair first (the only shape v2 requires), legacy fallback
-    val specs = meta.get("partition-specs")
-    if (specs != null && specs.isArray && specs.size() > 0) {
-      val wantId =
-        if (meta.has("default-spec-id")) meta.get("default-spec-id").asInt() else 0
-      (0 until specs.size()).map(specs.get)
-        .find(s => s.get("spec-id").asInt() == wantId)
-        .map { s =>
-          val fields = s.get("fields")
-          (0 until fields.size()).map(i => fields.get(i).get("name").asText())
-        }
-        .getOrElse(Seq.empty)
-    } else {
-      val spec = meta.get("partition-spec")
-      if (spec == null || !spec.isArray) Seq.empty
-      else (0 until spec.size()).map(i => spec.get(i).get("name").asText())
-    }
+    val specs = elements(meta.get("partition-specs"))
+    val wantId = if (meta.has("default-spec-id")) meta.get("default-spec-id").asInt() else 0
+    (if (specs.nonEmpty)
+      specs.find(_.get("spec-id").asInt() == wantId).fold(Seq.empty[JsonNode])(s =>
+        elements(s.get("fields")))
+    else elements(meta.get("partition-spec"))).map(_.get("name").asText())
   }
 
   /** The current schema NODE: v2's `schemas` + `current-schema-id`
     * pair when present, v1's inline `schema` otherwise.
     */
-  private def currentSchemaNode(
-      meta: com.fasterxml.jackson.databind.JsonNode): com.fasterxml.jackson.databind.JsonNode = {
-    val schemas = meta.get("schemas")
-    if (schemas != null && schemas.isArray && schemas.size() > 0) {
+  private def currentSchemaNode(meta: JsonNode): JsonNode = {
+    val schemas = elements(meta.get("schemas"))
+    if (schemas.nonEmpty) {
       val wantId =
         if (meta.has("current-schema-id")) meta.get("current-schema-id").asInt() else 0
-      (0 until schemas.size()).map(schemas.get)
-        .find(s => !s.has("schema-id") || s.get("schema-id").asInt() == wantId)
+      schemas.find(s => !s.has("schema-id") || s.get("schema-id").asInt() == wantId)
         .getOrElse(throw new IllegalArgumentException(
           s"IcebergTable: current-schema-id $wantId not found in schemas"))
     } else meta.get("schema")
   }
 
-  private def currentSchema(meta: com.fasterxml.jackson.databind.JsonNode): StructType =
+  private def currentSchema(meta: JsonNode): StructType =
     parseSchema(currentSchemaNode(meta))
 
   /** field id -> column name, from the current schema node (equality
     * delete manifests reference columns by FIELD ID).
     */
-  private def fieldIdToName(
-      meta: com.fasterxml.jackson.databind.JsonNode): Map[Int, String] = {
-    val fields = currentSchemaNode(meta).get("fields")
-    if (fields == null || !fields.isArray) Map.empty
-    else (0 until fields.size()).map(fields.get)
+  private def fieldIdToName(meta: JsonNode): Map[Int, String] =
+    elements(currentSchemaNode(meta).get("fields"))
       .map(f => f.get("id").asInt() -> f.get("name").asText()).toMap
-  }
 
   def snapshot(
       spark: SparkSession, tablePath: String, snapshotId: Option[Long] = None): Snapshot = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(spark, new Path(tablePath))
-    val meta = readJson(fs, currentMetadataPath(fs, tablePath))
+    val meta = head(fs, tablePath).meta
     val fv = meta.get("format-version").asInt()
     require(fv >= 1 && fv <= 3,
       s"IcebergTable: format-version $fv not supported (v1-v3 only)")
@@ -614,11 +679,9 @@ object IcebergTable {
     // pruning, never row content. Identity partition tuples are read
     // from data_file.partition for FILE-level pruning in [[read]].
     val pcols = specColumnNames(meta)
-    val snapshots = meta.get("snapshots")
-    require(snapshots != null && snapshots.size() > 0, "IcebergTable: no snapshots")
+    require(snapshotsOf(meta).nonEmpty, "IcebergTable: no snapshots")
     val wantId = snapshotId.getOrElse(meta.get("current-snapshot-id").asLong())
-    val snap = (0 until snapshots.size()).map(snapshots.get)
-      .find(_.get("snapshot-id").asLong() == wantId)
+    val snap = snapshotNode(meta, wantId)
       .getOrElse(throw new IllegalArgumentException(
         s"IcebergTable: snapshot $wantId not found (expired?)"))
     // TIME TRAVEL serves the snapshot's OWN schema (its `schema-id`
@@ -632,9 +695,7 @@ object IcebergTable {
       if (snapshotId.isEmpty || !snap.has("schema-id")) fallback
       else {
         val sid = snap.get("schema-id").asInt()
-        val schemas = meta.get("schemas")
-        if (schemas == null || !schemas.isArray) fallback
-        else (0 until schemas.size()).map(schemas.get)
+        elements(meta.get("schemas"))
           .find(x => x.has("schema-id") && x.get("schema-id").asInt() == sid)
           .getOrElse(fallback)
       }
@@ -648,10 +709,8 @@ object IcebergTable {
     // `write-default` only affects writers that OMIT the column —
     // this writer always brings full rows, so it never activates and
     // is ignored on read (it does not change scan semantics).
-    val defaults: Seq[(String, Int, Any)] = {
-      val fieldsNode = schemaNode.get("fields")
-      if (fieldsNode == null || !fieldsNode.isArray) Seq.empty
-      else (0 until fieldsNode.size()).map(fieldsNode.get).flatMap { f =>
+    val defaults: Seq[(String, Int, Any)] =
+      elements(schemaNode.get("fields")).flatMap { f =>
         val d = f.get("initial-default")
         if (d == null || d.isNull) None
         else {
@@ -660,17 +719,6 @@ object IcebergTable {
             parseDefault(name, fromIcebergType(f.get("type").asText()), d)))
         }
       }
-    }
-    val listPath = new Path(snap.get("manifest-list").asText())
-    def recOpt(r: GenericRecord, name: String): Option[AnyRef] =
-      if (r.getSchema.getField(name) == null) None else Option(r.get(name))
-    // manifest list rows: v2 adds content (0 data / 1 deletes) and the
-    // manifest's sequence number (inherited by entries that carry null)
-    val manifests: Seq[(String, Int, Long)] = readAvro(fs, listPath, conf).map { r =>
-      (r.get("manifest_path").toString,
-        recOpt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0),
-        recOpt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L))
-    }
     // equality-delete ids resolve against the SNAPSHOT's schema, the
     // same one the scan will read under — names line up by field id
     val idToType: Map[Int, (String, DataType)] =
@@ -706,19 +754,19 @@ object IcebergTable {
     // (path, offset), not the puffin file (one file packs many blobs)
     val dvEntries = Seq.newBuilder[
       (String, Int, Long, Long, Map[String, String], Long, String, Long, Long)]
-    manifests.foreach { case (mp, mContent, mSeq) =>
-      readAvro(fs, new Path(mp), conf).foreach { e =>
+    manifestRefs(fs, conf, snap).foreach { m =>
+      readAvro(fs, new Path(m.path), conf).foreach { e =>
         val status = e.get("status").asInstanceOf[Int]
         val df = e.get("data_file").asInstanceOf[GenericRecord]
         val entrySeq: Long =
-          recOpt(e, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(mSeq)
+          field(e, "sequence_number").fold(m.sequence)(_.asInstanceOf[Long])
         // v2 file content: 0 data, 1 position deletes, 2 EQUALITY deletes
-        val fContent: Int = recOpt(df, "content").map(_.asInstanceOf[Int])
-          .getOrElse(if (mContent == 1) 1 else 0)
+        val fContent: Int = field(df, "content").map(_.asInstanceOf[Int])
+          .getOrElse(if (m.content == 1) 1 else 0)
         // v3 deletion vectors live in PUFFIN files; everything else is
         // parquet (the only data format this reader implements)
         val isPuffin = fContent == 1 &&
-          recOpt(df, "file_format").exists(_.toString.equalsIgnoreCase("puffin"))
+          field(df, "file_format").exists(_.toString.equalsIgnoreCase("puffin"))
         if (status != 2 && !isPuffin) {
           val fmt = df.get("file_format").toString
           require(fmt.equalsIgnoreCase("parquet"),
@@ -742,7 +790,7 @@ object IcebergTable {
           // equality delete: tombstones by COLUMN VALUES, columns named
           // via field ids; an id we can't resolve would silently
           // resurrect rows — refuse instead
-          val ids: Seq[Int] = recOpt(df, "equality_ids") match {
+          val ids: Seq[Int] = field(df, "equality_ids") match {
             case Some(l: java.util.List[_]) =>
               import scala.jdk.CollectionConverters._
               l.asScala.toSeq.map(_.asInstanceOf[Number].intValue)
@@ -753,18 +801,18 @@ object IcebergTable {
           val cols = ids.map(id => idToName.getOrElse(id,
             throw new IllegalArgumentException(
               s"IcebergTable: equality delete field id $id not in the current schema")))
-          val recs = recOpt(df, "record_count").map(_.asInstanceOf[Long]).getOrElse(0L)
-          val dsz = recOpt(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(0L)
+          val recs = field(df, "record_count").map(_.asInstanceOf[Long]).getOrElse(0L)
+          val dsz = field(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(0L)
           deleteEntries += ((path, status, entrySeq, recs, cols, tuple, dsz))
         } else if (fContent == 1) {
-          val recs = recOpt(df, "record_count").map(_.asInstanceOf[Long]).getOrElse(0L)
-          val dsz = recOpt(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(0L)
+          val recs = field(df, "record_count").map(_.asInstanceOf[Long]).getOrElse(0L)
+          val dsz = field(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(0L)
           // a v3 DELETION VECTOR declares its single referenced data
           // file and its blob location — all three fields or none
-          val refFile = recOpt(df, "referenced_data_file").map(_.toString)
+          val refFile = field(df, "referenced_data_file").map(_.toString)
           val (cOff, cSize) = (
-            recOpt(df, "content_offset").map(_.asInstanceOf[Long]),
-            recOpt(df, "content_size_in_bytes").map(_.asInstanceOf[Long]))
+            field(df, "content_offset").map(_.asInstanceOf[Long]),
+            field(df, "content_size_in_bytes").map(_.asInstanceOf[Long]))
           if (isPuffin) {
             require(refFile.isDefined && cOff.isDefined && cSize.isDefined,
               s"IcebergTable: puffin deletion vector $path lacks " +
@@ -775,13 +823,13 @@ object IcebergTable {
             deleteEntries += ((path, status, entrySeq, recs, Seq.empty, tuple, dsz))
         } else {
           val size =
-            recOpt(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(0L)
-          val recs = recOpt(df, "record_count").map(_.asInstanceOf[Long]).getOrElse(0L)
+            field(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(0L)
+          val recs = field(df, "record_count").map(_.asInstanceOf[Long]).getOrElse(0L)
           val lo = boundsOf(df, "lower_bounds")
           val hi = boundsOf(df, "upper_bounds")
           val bounds = lo.keySet.intersect(hi.keySet)
             .map(k => k -> ((lo(k), hi(k)))).toMap
-          val firstRowId = recOpt(df, "first_row_id").map(_.asInstanceOf[Long])
+          val firstRowId = field(df, "first_row_id").map(_.asInstanceOf[Long])
           dataEntries += ((path, status, tuple, entrySeq, size, recs, bounds, firstRowId))
         }
       }
@@ -828,11 +876,9 @@ object IcebergTable {
     */
   def snapshotIdAtTimestamp(spark: SparkSession, tablePath: String, tsMillis: Long): Long = {
     val fs = fsOf(spark, new Path(tablePath))
-    val meta = readJson(fs, currentMetadataPath(fs, tablePath))
-    val snaps = meta.get("snapshots")
-    require(snaps != null && snaps.size() > 0, "IcebergTable: no snapshots")
-    val stamped = (0 until snaps.size()).map(snaps.get)
-      .map(s => (s.get("snapshot-id").asLong(), s.get("timestamp-ms").asLong()))
+    val snaps = snapshotsOf(head(fs, tablePath).meta)
+    require(snaps.nonEmpty, "IcebergTable: no snapshots")
+    val stamped = snaps.map(s => (s.get("snapshot-id").asLong(), s.get("timestamp-ms").asLong()))
       .sortBy(_._2)
     val eligible = stamped.filter(_._2 <= tsMillis)
     require(eligible.nonEmpty,
@@ -1171,22 +1217,111 @@ object IcebergTable {
   /** APPEND a new snapshot: data files staged and moved under the
     * table's `data/` dir, one new manifest for them, a new manifest
     * LIST carrying forward every prior manifest (old snapshots remain
-    * readable — time travel), then `vN+1.metadata.json` with the
-    * snapshot appended and `version-hint.text` repointed (the publish
-    * step; concurrent writers need a catalog's atomic swap, exactly as
-    * the Iceberg spec documents — out of scope here like the Delta
-    * writer's object-store caveat). Returns the new snapshot id.
+    * readable — time travel), then the commit ([[commitMetadata]]:
+    * `vN+1.metadata.json` put-if-absent, `version-hint.text`
+    * repointed; concurrent writers on object stores need a catalog's
+    * atomic swap, exactly as the Iceberg spec documents — out of scope
+    * here like the Delta writer's object-store caveat). Returns the
+    * new snapshot id.
     */
   def append(
       spark: SparkSession, tablePath: String, df: DataFrame,
       partitionBy: Seq[String] = Seq.empty,
       allowSchemaEvolution: Boolean = false,
       summary: Map[String, String] = Map.empty,
-      rowLineage: Boolean = false): Long =
-    publishDataSnapshot(spark, tablePath, df, partitionBy,
-      carryForward = true, operation = "append",
-      allowSchemaEvolution = allowSchemaEvolution, summary = summary,
-      rowLineage = rowLineage)
+      rowLineage: Boolean = false): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val table = new Path(tablePath)
+    val fs = fsOf(spark, table)
+    val prev = headOption(fs, tablePath)
+    val prevMeta = prev.map(_.meta)
+    val exists = prev.isDefined
+    val fv = prev.map(_.formatVersion).getOrElse(if (rowLineage) 3 else 1)
+    require(fv >= 1 && fv <= 3,
+      s"IcebergTable: append into format-version $fv is not supported")
+    // v3 ROW LINEAGE (write side): active when the table tracks a
+    // `next-row-id`, or requested at CREATION (rowLineage creates the
+    // table at format-version 3). An existing table cannot adopt it —
+    // retro-assigning ids to already-written files is a v3 upgrade
+    // step this writer does not perform.
+    val prevNextRowId: Option[Long] =
+      prevMeta.filter(_.has("next-row-id")).map(_.get("next-row-id").asLong())
+    require(!rowLineage || !exists || prevNextRowId.isDefined,
+      "IcebergTable: rowLineage is a CREATION option — the existing table " +
+        "tracks no next-row-id (ids for already-written files are undefined)")
+    val lineageActive = prevNextRowId.isDefined || (!exists && rowLineage)
+    var schemaEvolved = false
+    prevMeta.foreach { m =>
+      val have = currentSchema(m).fields.map(f => (f.name, f.dataType)).toSeq
+      val incoming = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+      if (have != incoming) {
+        require(allowSchemaEvolution,
+          s"IcebergTable: append schema mismatch — table declares $have, append " +
+            s"brings $incoming (pass allowSchemaEvolution = true for add-column evolution)")
+        // APPEND-only evolution here: the declared fields must survive
+        // as a PREFIX with their types (new columns take FRESH ids past
+        // last-column-id); reorders/retypes go through the dedicated
+        // metadata-only ops ([[renameColumn]]/[[dropColumn]]/
+        // [[widenColumnType]]) which keep ids stable
+        require(incoming.take(have.size) == have,
+          s"IcebergTable: schema evolution may only APPEND columns — declared " +
+            s"$have must survive as a prefix of $incoming")
+        schemaEvolved = true
+      }
+      val prevSpec = specColumnNames(m)
+      require(prevSpec == partitionBy,
+        s"IcebergTable: append partitioning mismatch — table declares " +
+          s"[${prevSpec.mkString(",")}], append brings [${partitionBy.mkString(",")}]")
+    }
+    df.schema.fields.foreach(f => toIcebergType(f.dataType)) // loud unsupported-type check
+    partitionBy.foreach(c => require(df.schema.fieldNames.contains(c),
+      s"IcebergTable: partition column $c missing from the append schema"))
+    // STABLE field ids: an existing table's ids come from its current
+    // schema (evolution appends fresh ids past last-column-id); a new
+    // table assigns 1..n and declares the field-ids property so reads
+    // resolve by id from the first file on
+    val prevLastCol: Int = prevMeta.map { m =>
+      val declared = if (m.has("last-column-id")) m.get("last-column-id").asInt() else 0
+      math.max(declared, parseFields(currentSchemaNode(m)).map(_.id).max)
+    }.getOrElse(0)
+    val prior = prevMeta.fold(Seq.empty[IceField])(m => parseFields(currentSchemaNode(m)))
+    val fields: Seq[IceField] = prior ++
+      df.schema.fields.drop(prior.size).zipWithIndex.map { case (f, i) =>
+        IceField(prevLastCol + 1 + i, f.name, f.dataType) }
+    val lastColumnId = math.max(prevLastCol, fields.map(_.id).max)
+    val idCapable = prevMeta.fold(true)(m =>
+      propertiesOf(m).get(FieldIdsProperty).contains("true"))
+    val idDf = if (idCapable) withFieldIds(spark, df, fields) else df
+    val pfields: Seq[(String, DataType)] =
+      partitionBy.map(c => c -> df.schema(c).dataType)
+    fs.mkdirs(metadataDir(tablePath))
+    val stamp = newStamp()
+    val dataFiles = stageFiles(fs, table, idDf, partitionBy, "part", stamp, data = true)
+    val snapshotId = newSnapshotId()
+    val newSeq = prev.fold(1L)(_.nextSequence)
+    // per-file first_row_id blocks: contiguous above the table's
+    // next-row-id, in staged-file order — a row's id is
+    // first_row_id + its position, the Delta baseRowId shape
+    val rlBase: Long = prevNextRowId.getOrElse(0L)
+    val rlFirsts: Seq[Long] = dataFiles.map(_.records).scanLeft(rlBase)(_ + _)
+    // one manifest for this append; record_count carries the footer
+    // truth (readers size broadcasts and metadata tables off it)
+    val manifest = writeManifest(fs, tablePath, s"manifest-$stamp.avro",
+      entrySchema(pfields, v2 = false), content = 0, newSeq, snapshotId,
+      dataFiles.zip(rlFirsts).map { case (sf, first) =>
+        addedDataEntry(sf, fields, pfields, snapshotId, newSeq,
+          if (lineageActive) Some(first) else None) })
+    val list = writeManifestList(fs, tablePath, fv, snapshotId, stamp,
+      prevMeta.toSeq.flatMap(currentManifests(fs, conf, _)) :+ manifest)
+    val newMeta = dataMetadata(tablePath, prevMeta, fv, fields, lastColumnId, partitionBy,
+      schemaEvolved, newSeq,
+      newProperties =
+        if (idCapable && prevMeta.isEmpty) Map(FieldIdsProperty -> "true") else Map.empty,
+      nextRowId = if (lineageActive) Some(rlFirsts.last) else None)
+    commitMetadata(fs, tablePath, prev, newMeta, Some(NewSnapshot(snapshotId, list, "append",
+      summary, if (lineageActive) Some(rlBase) else None)))
+    snapshotId
+  }
 
   /** EXACTLY-ONCE APPEND — the Iceberg twin of the Delta `txn` sink
     * (what Flink's Iceberg committer does with checkpoint ids): each
@@ -1222,13 +1357,8 @@ object IcebergTable {
   def lastCommittedStamp(
       spark: SparkSession, tablePath: String,
       appId: String): Option[(Long, Map[String, String])] = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val metaDir0 = metadataDir(tablePath)
-    if (!fs.exists(metaDir0) || fs.listStatus(metaDir0).isEmpty) return None
-    val meta = readJson(fs, currentMetadataPath(fs, tablePath))
-    val snaps = meta.get("snapshots")
-    if (snaps == null || !snaps.isArray) return None
-    val stamps = (0 until snaps.size()).map(snaps.get).flatMap { sn =>
+    val meta = headOption(fsOf(spark, new Path(tablePath)), tablePath).getOrElse(return None).meta
+    val stamps = snapshotsOf(meta).flatMap { sn =>
       val sm = sn.get("summary")
       if (sm != null && sm.has("graft.app-id") &&
           sm.get("graft.app-id").asText() == appId && sm.has("graft.epoch")) {
@@ -1344,10 +1474,9 @@ object IcebergTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val table = new Path(tablePath)
     val fs = fsOf(spark, table)
-    val metaPath = currentMetadataPath(fs, tablePath)
-    val prevVersion = metaPath.getName.stripPrefix("v").stripSuffix(".metadata.json").toLong
-    val meta = readJson(fs, metaPath)
-    val fv = meta.get("format-version").asInt()
+    val h = head(fs, tablePath)
+    val meta = h.meta
+    val fv = h.formatVersion
     val pby = specColumnNames(meta)
     val schema = currentSchema(meta)
     val snap = snapshot(spark, tablePath, None)
@@ -1396,8 +1525,7 @@ object IcebergTable {
           pmod(fhash(schema.fieldNames.map(fcol).toIndexedSeq: _*),
             flit(maxPerPartition))): _*)
     val pfields: Seq[(String, DataType)] = pby.map(c => c -> schema(c).dataType)
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val metaDir = metadataDir(tablePath)
+    val stamp = newStamp()
     val fieldsCur = parseFields(currentSchemaNode(meta))
     val stageFields =
       if (lineage) fieldsCur :+ IceField(RowIdFieldId.toInt, "_row_id", LongType)
@@ -1405,266 +1533,247 @@ object IcebergTable {
     val toStage =
       if (snap.fieldIdsWritten) withFieldIds(spark, packed, stageFields)
       else packed
-    val staged = stageDataFiles(spark, fs, table, toStage, pby, pfields, stamp)
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val newSeq: Long =
-      if (fv >= 2)
-        (if (meta.has("last-sequence-number")) meta.get("last-sequence-number").asLong() else 0L) + 1
-      else 1L
-    // ADDED manifest for the compacted outputs (v2 entry shape: the
-    // explicit content/sequence fields gate carried deletes OFF them)
-    val entrySchema =
-      if (fv >= 2) deleteManifestEntrySchema(pfields) else manifestEntrySchema(pfields)
+    val staged = stageFiles(fs, table, toStage, pby, "part", stamp, data = true)
+    val snapshotId = newSnapshotId()
+    val newSeq = h.nextSequence
+    // v2 entry shape: the explicit content/sequence fields gate carried
+    // deletes OFF the compacted outputs
+    val schemaOut = entrySchema(pfields, v2 = fv >= 2)
     // fresh first_row_id blocks for the compacted outputs (ids burn on
     // rewrite, the Delta compact shape — carried rows override through
     // the materialized column)
     val rlBase: Long = if (lineage) meta.get("next-row-id").asLong() else 0L
     val rlFirsts: Seq[Long] = staged.map(_.records).scanLeft(rlBase)(_ + _)
-    val added = staged.zipWithIndex.map { case (sf, i) =>
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", snapshotId)
-      if (fv >= 2) e.put("sequence_number", newSeq)
-      val d = new GenericData.Record(entrySchema.getField("data_file").schema())
-      if (fv >= 2) d.put("content", 0)
-      d.put("file_path", sf.path)
-      d.put("file_format", "PARQUET")
-      d.put("record_count", sf.records)
-      d.put("file_size_in_bytes", sf.len)
-      if (lineage) d.put("first_row_id", java.lang.Long.valueOf(rlFirsts(i)))
-      putBounds(d, fieldsCur, sf.bounds)
-      if (pby.nonEmpty) {
-        val pr = new GenericData.Record(
-          entrySchema.getField("data_file").schema().getField("partition").schema())
-        sf.tuple.foreach { case (k, v) => pr.put(k, v) }
-        d.put("partition", pr)
-      }
-      e.put("data_file", d)
-      e
-    }
-    val addedPath = new Path(metaDir, s"manifest-$stamp.avro")
-    val addedLen = writeAvro(fs, addedPath, entrySchema, added)
-
+    val added = writeManifest(fs, tablePath, s"manifest-$stamp.avro", schemaOut, content = 0,
+      newSeq, snapshotId, staged.zip(rlFirsts).map { case (sf, first) =>
+        addedDataEntry(sf, fieldsCur, pfields, snapshotId, newSeq,
+          if (lineage) Some(first) else None) })
     // walk the current snapshot's manifest list; rewrite only the
     // manifests that named a compacted file
-    val curId = meta.get("current-snapshot-id").asLong()
-    val snapsNode = meta.get("snapshots")
-    val curSnap = (0 until snapsNode.size()).map(snapsNode.get)
-      .find(_.get("snapshot-id").asLong() == curId).get
     val livePaths = snap.dataRefs.map(_.path).toSet
     val anySurvivor = snap.dataRefs.exists(r => !selectedPaths(r.path))
-    def opt(r: GenericRecord, n: String): Option[AnyRef] =
-      if (r.getSchema.getField(n) == null) None else Option(r.get(n))
     var replaceIdx = 0
-    val carried: Seq[(String, Long, Int, Long, Long, Long)] =
-      readAvro(fs, new Path(curSnap.get("manifest-list").asText()), conf).flatMap { r =>
-        val mPath = r.get("manifest_path").toString
-        val mLen = r.get("manifest_length").asInstanceOf[Long]
-        val mContent = opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0)
-        val mSeq = opt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
-        val mMin = opt(r, "min_sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
-        val mAdded = opt(r, "added_snapshot_id").map(_.asInstanceOf[Long]).getOrElse(curId)
-        if (mContent == 1) {
-          // delete manifest: still gates the surviving pre-rewrite
-          // files; inert (and dropped) once none remain
-          if (anySurvivor) Some((mPath, mLen, mContent, mSeq, mMin, mAdded)) else None
-        } else {
-          val entries = readAvro(fs, new Path(mPath), conf)
-          def pathOf(e: GenericRecord) =
-            e.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString
-          if (!entries.exists(e => selectedPaths(pathOf(e))))
-            Some((mPath, mLen, mContent, mSeq, mMin, mAdded)) // untouched: verbatim
+    val carried = currentManifests(fs, conf, meta).flatMap { m =>
+      if (m.content == 1) {
+        // delete manifest: still gates the surviving pre-rewrite
+        // files; inert (and dropped) once none remain
+        if (anySurvivor) Some(m) else None
+      } else {
+        val entries = readAvro(fs, new Path(m.path), conf)
+        def pathOf(e: GenericRecord) =
+          e.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString
+        if (!entries.exists(e => selectedPaths(pathOf(e)))) Some(m) // untouched: verbatim
+        else {
+          val keep = entries.filter { e =>
+            val p = pathOf(e)
+            e.get("status").asInstanceOf[Int] != 2 && !selectedPaths(p) && livePaths(p)
+          }
+          if (keep.isEmpty) None
           else {
-            val keep = entries.filter { e =>
-              val p = pathOf(e)
-              e.get("status").asInstanceOf[Int] != 2 && !selectedPaths(p) && livePaths(p)
-            }
-            if (keep.isEmpty) None
-            else {
-              // replacement: surviving entries as EXISTING with their
-              // original EXPLICIT sequence numbers (never inherited)
-              val outEntries = keep.map { e =>
-                val src = e.get("data_file").asInstanceOf[GenericRecord]
-                val seq = opt(e, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(mSeq)
-                val o = new GenericData.Record(entrySchema)
-                o.put("status", 0) // EXISTING
-                opt(e, "snapshot_id").foreach(o.put("snapshot_id", _))
-                if (fv >= 2) o.put("sequence_number", seq)
-                val d = new GenericData.Record(entrySchema.getField("data_file").schema())
-                if (fv >= 2) d.put("content", 0)
-                d.put("file_path", src.get("file_path").toString)
-                d.put("file_format", src.get("file_format").toString)
-                d.put("record_count",
-                  opt(src, "record_count").map(_.asInstanceOf[Long]).getOrElse(0L))
-                d.put("file_size_in_bytes",
-                  opt(src, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(0L))
-                // survivors keep their assigned first_row_id verbatim
-                opt(src, "first_row_id").foreach(d.put("first_row_id", _))
-                // survivors keep their column bounds (re-encoded k/v)
-                Seq("lower_bounds", "upper_bounds").foreach { bf =>
-                  opt(src, bf).foreach {
-                    case l: java.util.List[_] =>
-                      val as = d.getSchema.getField(bf).schema().getTypes.get(1)
-                      val items = l.asInstanceOf[java.util.List[GenericRecord]]
-                      val copy = new java.util.ArrayList[GenericRecord](items.size())
-                      items.forEach { kv =>
-                        val nk = new GenericData.Record(as.getElementType)
-                        nk.put("key", kv.get("key"))
-                        nk.put("value", kv.get("value"))
-                        copy.add(nk)
-                      }
-                      d.put(bf, new GenericData.Array[GenericRecord](as, copy))
-                    case _ =>
-                  }
-                }
-                if (pby.nonEmpty) {
-                  val pr = new GenericData.Record(
-                    entrySchema.getField("data_file").schema().getField("partition").schema())
-                  src.get("partition") match {
-                    case p: GenericRecord => pby.foreach { c =>
-                      if (p.getSchema.getField(c) != null) pr.put(c, p.get(c)) }
-                    case _ =>
-                  }
-                  d.put("partition", pr)
-                }
-                o.put("data_file", d)
-                o
-              }
-              replaceIdx += 1
-              val repPath = new Path(metaDir, s"manifest-$stamp-x$replaceIdx.avro")
-              val repLen = writeAvro(fs, repPath, entrySchema, outEntries)
-              val seqs = keep.map(e =>
-                opt(e, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(mSeq))
-              Some((fs.makeQualified(repPath).toString, repLen, 0,
-                seqs.max, seqs.min, snapshotId))
-            }
+            // replacement: surviving entries as EXISTING with their
+            // original EXPLICIT sequence numbers (never inherited)
+            val out = keep.map(existingEntry(_, m.sequence, pby))
+            replaceIdx += 1
+            Some(writeManifest(fs, tablePath, s"manifest-$stamp-x$replaceIdx.avro", schemaOut,
+              content = 0, out.map(_.sequence).max, snapshotId, out))
           }
         }
       }
-    val listPath = writeManifestList(fs, metaDir, fv, snapshotId, stamp,
-      carried :+ (fs.makeQualified(addedPath).toString, addedLen, 0, newSeq, newSeq,
-        snapshotId))
-    publishMetadataJson(fs, tablePath, Some(meta), prevVersion, fv, fieldsCur,
+    }
+    val list = writeManifestList(fs, tablePath, fv, snapshotId, stamp, carried :+ added)
+    val newMeta = dataMetadata(tablePath, Some(meta), fv, fieldsCur,
       if (meta.has("last-column-id")) meta.get("last-column-id").asInt()
       else fieldsCur.map(_.id).max,
-      pby, schemaEvolved = false, newSeq, snapshotId, listPath, "replace",
-      lineage = if (lineage)
-        Some((rlBase, rlBase + staged.map(_.records).sum)) else None)
+      pby, schemaEvolved = false, newSeq,
+      nextRowId = if (lineage) Some(rlFirsts.last) else None)
+    commitMetadata(fs, tablePath, Some(h), newMeta, Some(NewSnapshot(snapshotId, list, "replace",
+      firstRowId = if (lineage) Some(rlBase) else None)))
     snapshotId
   }
 
-  /** One data file staged into `data/`: qualified path, byte length,
-    * typed identity partition tuple, and its REAL row count (footer
-    * truth — what `record_count` must carry so readers can size
-    * broadcasts and metadata tables report honestly).
+  /** One file staged into `data/`: qualified path, byte length, its
+    * decoded partition-dir values (null for Hive's default partition),
+    * its REAL row count (footer truth — what `record_count` must carry
+    * so readers can size broadcasts and metadata tables report
+    * honestly) and, for data files, its footer bounds.
     */
   private final case class StagedFile(
-      path: String, len: Long, tuple: Map[String, Any], records: Long,
+      path: String, len: Long, dirs: Map[String, String], records: Long,
       bounds: Map[String, (Any, Any)] = Map.empty)
 
-  /** Write `df`'s part files through a staging dir and move them under
-    * the table's `data/` tree (Hive layout for partitioned tables) —
-    * the shared data path of [[publishDataSnapshot]] and
-    * [[rewriteDataFiles]]. Driver work is O(new files): one rename +
-    * one footer row-count read per staged file, the same order as the
-    * move itself.
+  /** Write `df` through one staging dir and move its part files, in
+    * path order, to `data/.../<prefix>-<stamp>-<i>.parquet` — the one
+    * landing path of every Iceberg writer. DATA files keep complete
+    * rows: Spark's partitionBy drops the partitioning columns from the
+    * files, so each `partitionBy` column is duplicated under a `__p_`
+    * alias that drives the Hive-style placement, and the files land in
+    * those dirs (alias stripped) with their footer bounds. DELETE files
+    * (`data = false`) are written by their `partitionBy` columns, land
+    * flat, and empty ones are dropped by footer row count. Driver work
+    * is O(new files): one footer read and one rename per file.
     */
-  private def stageDataFiles(
-      spark: SparkSession, fs: FileSystem, table: Path, df: DataFrame,
-      partitionBy: Seq[String], pfields: Seq[(String, DataType)],
-      stamp: String): Seq[StagedFile] = {
+  private def stageFiles(
+      fs: FileSystem, table: Path, df: DataFrame, partitionBy: Seq[String],
+      prefix: String, stamp: String, data: Boolean): Seq[StagedFile] = {
     val stage = new Path(table, s"_ice_stage_$stamp")
-    if (partitionBy.isEmpty) {
-      df.write.parquet(stage.toString)
-      val parts = fs.globStatus(new Path(stage, "part-*.parquet")).toSeq.map(_.getPath)
-      val m = parts.zipWithIndex.map { case (p, i) =>
-        val dest = new Path(table, s"data/part-$stamp-$i.parquet")
-        require(fs.rename(p, dest), s"IcebergTable: move failed for $p")
-        val st = fs.getFileStatus(dest)
-        val (nRows, bounds) = parquetFooterInfo(fs, dest)
-        StagedFile(fs.makeQualified(dest).toString, st.getLen,
-          Map.empty[String, Any], nRows, bounds)
-      }
-      fs.delete(stage, true)
-      m
-    } else {
-      // Iceberg data files carry COMPLETE rows — identity partition
-      // source columns included — but Spark's partitionBy drops the
-      // partitioning columns from the files. Duplicating each source
-      // column under a __p_ alias keeps the real column in the data
-      // while the alias drives the Hive-style placement; the alias
-      // prefix is stripped from the directory names on the move.
-      val dup = partitionBy.foldLeft(df)((d, c) =>
-        d.withColumn(s"__p_$c", org.apache.spark.sql.functions.col(c)))
-      dup.write.partitionBy(partitionBy.map(c => s"__p_$c"): _*).parquet(stage.toString)
-      val pattern = partitionBy.map(_ => "*").mkString("/")
-      val parts = fs.globStatus(new Path(stage, s"$pattern/part-*.parquet"))
-        .toSeq.map(_.getPath).sortBy(_.toString)
-      val stagePrefix = fs.makeQualified(stage).toString + "/"
-      val ptypes = pfields.toMap
-      val m = parts.zipWithIndex.map { case (p, i) =>
-        val rel0 = fs.makeQualified(p).toString.stripPrefix(stagePrefix)
-        require(rel0.length < fs.makeQualified(p).toString.length,
+    val stageBy = if (data) partitionBy.map("__p_" + _) else partitionBy
+    val out = if (data) partitionBy.foldLeft(df)((d, c) =>
+      d.withColumn("__p_" + c, org.apache.spark.sql.functions.col(c))) else df
+    (if (stageBy.isEmpty) out.write else out.write.partitionBy(stageBy: _*))
+      .parquet(stage.toString)
+    val pattern = (stageBy.map(_ => "*") :+ "part-*.parquet").mkString("/")
+    val stagePrefix = fs.makeQualified(stage).toString + "/"
+    def footer(p: Path): (Long, Map[String, (Any, Any)]) =
+      if (data) parquetFooterInfo(fs, p) else (DeltaLog.footerRowCount(fs, p), Map.empty)
+    val staged = fs.globStatus(new Path(stage, pattern)).toSeq.map(_.getPath)
+      .sortBy(_.toString).map(p => (p, footer(p)))
+      .filter { case (_, (records, _)) => data || records > 0L }
+      .zipWithIndex.map { case ((p, (records, bounds)), i) =>
+        val qualified = fs.makeQualified(p).toString
+        require(qualified.startsWith(stagePrefix),
           s"IcebergTable: stage-relative path resolution failed for $p")
-        val segs = rel0.split('/').dropRight(1).map(_.stripPrefix("__p_"))
-        val tuple: Map[String, Any] = segs.map { s =>
+        val segs = qualified.stripPrefix(stagePrefix).split('/').toSeq.dropRight(1)
+          .map(_.stripPrefix("__p_"))
+        val dirs = segs.map { s =>
           val Array(k, v) = s.split("=", 2)
-          val typed: Any =
-            if (v == "__HIVE_DEFAULT_PARTITION__") null
-            else ptypes(k) match {
-              case IntegerType => Integer.valueOf(DeltaLog.unescapePathName(v).toInt)
-              case LongType => java.lang.Long.valueOf(DeltaLog.unescapePathName(v).toLong)
-              case _ => DeltaLog.unescapePathName(v)
-            }
-          k -> typed
+          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null else DeltaLog.unescapePathName(v))
         }.toMap
-        require(tuple.keySet == partitionBy.toSet,
+        require(dirs.keySet == partitionBy.toSet,
           s"IcebergTable: unexpected partition layout under $p")
-        val rel = "data/" + segs.mkString("/") + s"/part-$stamp-$i.parquet"
+        val rel = (("data" +: (if (data) segs else Nil)) :+ s"$prefix-$stamp-$i.parquet")
+          .mkString("/")
         val dest = new Path(table, rel)
         fs.mkdirs(dest.getParent)
         require(fs.rename(p, dest), s"IcebergTable: move failed for $p")
-        val st = fs.getFileStatus(dest)
-        val (nRows, bounds) = parquetFooterInfo(fs, dest)
-        // identity partition columns have a constant value per file;
-        // partitionBy dropped them from the bytes, so their bounds are
-        // the tuple value itself (what real Iceberg records too)
-        val pbounds = tuple.collect { case (k, v) if v != null => k -> (v, v) }
-        StagedFile(fs.makeQualified(dest).toString, st.getLen, tuple, nRows,
-          bounds ++ pbounds)
+        StagedFile(fs.makeQualified(dest).toString, fs.getFileStatus(dest).getLen, dirs,
+          records, bounds)
       }
-      fs.delete(stage, true)
-      m
+    fs.delete(stage, true)
+    staged
+  }
+
+  /** A partition tuple as the manifest's typed `partition` record
+    * values: integral columns as Integer/Long, the rest as strings.
+    */
+  private def typedTuple(
+      tuple: Map[String, String], types: Seq[(String, DataType)]): Map[String, Any] = {
+    val byName = types.toMap
+    tuple.map { case (k, v) =>
+      k -> (if (v == null) null else byName.get(k) match {
+        case Some(IntegerType) => Integer.valueOf(v.toInt)
+        case Some(LongType) => java.lang.Long.valueOf(v.toLong)
+        case _ => v
+      })
     }
   }
 
-  /** Emit `lower_bounds`/`upper_bounds` k/v arrays onto a data_file
-    * avro record: field-id keys, Iceberg single-value binary payloads.
-    * Columns without collected bounds are simply absent (readers keep
-    * the file).
+  /** One manifest entry as this writer encodes it ([[entryRecord]]):
+    * `status` 0 EXISTING / 1 ADDED / 2 DELETED, `content` 0 data /
+    * 1 position deletes or a deletion vector / 2 equality deletes,
+    * bounds as (field id, single-value binary) pairs, and `dv` the
+    * deletion vector's (referenced data file, offset, length).
     */
-  private def putBounds(
-      d: GenericData.Record, fields: Seq[IceField],
-      bounds: Map[String, (Any, Any)]): Unit = {
-    if (bounds.isEmpty) return
-    def arraySchema(fieldName: String): Schema =
-      d.getSchema.getField(fieldName).schema().getTypes.get(1)
-    def emit(fieldName: String, pick: ((Any, Any)) => Any): Unit = {
-      val as = arraySchema(fieldName)
-      val items = new java.util.ArrayList[GenericRecord]()
-      fields.foreach { f =>
-        bounds.get(f.name).foreach { mm =>
+  private final case class Entry(
+      status: Int, snapshotId: Option[Long], sequence: Long, content: Int,
+      path: String, format: String, records: Long, size: Long,
+      partition: Map[String, Any] = Map.empty,
+      firstRowId: Option[Long] = None,
+      lower: Seq[(Int, java.nio.ByteBuffer)] = Nil,
+      upper: Seq[(Int, java.nio.ByteBuffer)] = Nil,
+      equalityIds: Seq[Int] = Nil,
+      dv: Option[(String, Long, Long)] = None)
+
+  /** The one manifest-entry encoder. Fields the schema lacks (the v1
+    * shape has no sequence number, content or delete references) are
+    * not written; the `partition` record is written whenever the
+    * schema declares one.
+    */
+  private def entryRecord(schema: Schema, e: Entry): GenericRecord = {
+    val fileSchema = schema.getField("data_file").schema()
+    val d = new GenericData.Record(fileSchema)
+    if (fileSchema.getField("content") != null) d.put("content", e.content)
+    d.put("file_path", e.path)
+    d.put("file_format", e.format)
+    d.put("record_count", e.records)
+    d.put("file_size_in_bytes", e.size)
+    e.firstRowId.foreach(d.put("first_row_id", _))
+    if (e.equalityIds.nonEmpty) {
+      val ids = new GenericData.Array[Integer](e.equalityIds.size,
+        fileSchema.getField("equality_ids").schema().getTypes.get(1))
+      e.equalityIds.foreach(id => ids.add(Integer.valueOf(id)))
+      d.put("equality_ids", ids)
+    }
+    e.dv.foreach { case (ref, offset, length) =>
+      d.put("referenced_data_file", ref)
+      d.put("content_offset", offset)
+      d.put("content_size_in_bytes", length)
+    }
+    Seq("lower_bounds" -> e.lower, "upper_bounds" -> e.upper).foreach { case (name, kvs) =>
+      if (kvs.nonEmpty) {
+        val as = fileSchema.getField(name).schema().getTypes.get(1)
+        val items = new java.util.ArrayList[GenericRecord](kvs.size)
+        kvs.foreach { case (id, bytes) =>
           val kv = new GenericData.Record(as.getElementType)
-          kv.put("key", f.id)
-          kv.put("value", java.nio.ByteBuffer.wrap(boundBytes(f.dataType, pick(mm))))
+          kv.put("key", id)
+          kv.put("value", bytes)
           items.add(kv)
         }
+        d.put(name, new GenericData.Array[GenericRecord](as, items))
       }
-      if (!items.isEmpty)
-        d.put(fieldName, new GenericData.Array[GenericRecord](as, items))
     }
-    emit("lower_bounds", _._1)
-    emit("upper_bounds", _._2)
+    Option(fileSchema.getField("partition")).foreach { f =>
+      val pr = new GenericData.Record(f.schema())
+      e.partition.foreach { case (k, v) => pr.put(k, v) }
+      d.put("partition", pr)
+    }
+    val r = new GenericData.Record(schema)
+    r.put("status", e.status)
+    e.snapshotId.foreach(r.put("snapshot_id", _))
+    if (schema.getField("sequence_number") != null) r.put("sequence_number", e.sequence)
+    r.put("data_file", d)
+    r
+  }
+
+  /** The ADDED entry of a data file this commit staged: its typed
+    * partition tuple, and `lower_bounds`/`upper_bounds` (field-id keys,
+    * Iceberg single-value binary) for every column with footer bounds.
+    * An identity partition column holds one value per file, so that
+    * value is its bound.
+    */
+  private def addedDataEntry(
+      sf: StagedFile, fields: Seq[IceField], pfields: Seq[(String, DataType)],
+      snapshotId: Long, sequence: Long, firstRowId: Option[Long]): Entry = {
+    val tuple = typedTuple(sf.dirs, pfields)
+    val bounds = sf.bounds ++ tuple.collect { case (k, v) if v != null => k -> ((v, v)) }
+    def side(pick: ((Any, Any)) => Any) = fields.flatMap(f => bounds.get(f.name).map(mm =>
+      f.id -> java.nio.ByteBuffer.wrap(boundBytes(f.dataType, pick(mm)))))
+    Entry(1, Some(snapshotId), sequence, 0, sf.path, "PARQUET", sf.records, sf.len, tuple,
+      firstRowId, side(_._1), side(_._2))
+  }
+
+  /** A carried data entry re-listed as EXISTING: its snapshot id,
+    * explicit sequence number (the manifest's, `inherited`, when the
+    * entry has none), counts, first row id, bounds and the `partition`
+    * values of the table's partition columns, all verbatim.
+    */
+  private def existingEntry(e: GenericRecord, inherited: Long, pby: Seq[String]): Entry = {
+    val src = e.get("data_file").asInstanceOf[GenericRecord]
+    def long(r: GenericRecord, n: String): Option[Long] = field(r, n).map(_.asInstanceOf[Long])
+    def kvs(n: String): Seq[(Int, java.nio.ByteBuffer)] = field(src, n) match {
+      case Some(l: java.util.List[_]) =>
+        l.toArray.toSeq.map { case kv: GenericRecord =>
+          kv.get("key").asInstanceOf[Int] -> kv.get("value").asInstanceOf[java.nio.ByteBuffer] }
+      case _ => Nil
+    }
+    val partition: Map[String, Any] = field(src, "partition") match {
+      case Some(p: GenericRecord) =>
+        pby.filter(c => p.getSchema.getField(c) != null).map(c => c -> p.get(c)).toMap
+      case _ => Map.empty
+    }
+    Entry(0, long(e, "snapshot_id"), long(e, "sequence_number").getOrElse(inherited), 0,
+      src.get("file_path").toString, src.get("file_format").toString,
+      long(src, "record_count").getOrElse(0L), long(src, "file_size_in_bytes").getOrElse(0L),
+      partition, long(src, "first_row_id"), kvs("lower_bounds"), kvs("upper_bounds"))
   }
 
   /** Decorate each column with its `parquet.field.id` so the written
@@ -1689,237 +1798,76 @@ object IcebergTable {
     }.toIndexedSeq: _*)
   }
 
-  private def publishDataSnapshot(
-      spark: SparkSession, tablePath: String, df: DataFrame,
-      partitionBy: Seq[String], carryForward: Boolean, operation: String,
-      allowSchemaEvolution: Boolean = false,
-      summary: Map[String, String] = Map.empty,
-      rowLineage: Boolean = false): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val table = new Path(tablePath)
-    val fs = fsOf(spark, table)
-    val metaDir = metadataDir(tablePath)
-    val exists = fs.exists(metaDir) && fs.listStatus(metaDir).nonEmpty
-    val (prevMeta, prevVersion) =
-      if (exists) {
-        val p = currentMetadataPath(fs, tablePath)
-        (Some(readJson(fs, p)),
-          p.getName.stripPrefix("v").stripSuffix(".metadata.json").toLong)
-      } else (None, 0L)
-    val fv = prevMeta.map(_.get("format-version").asInt())
-      .getOrElse(if (rowLineage) 3 else 1)
-    require(fv >= 1 && fv <= 3,
-      s"IcebergTable: append into format-version $fv is not supported")
-    // v3 ROW LINEAGE (write side): active when the table tracks a
-    // `next-row-id`, or requested at CREATION (rowLineage creates the
-    // table at format-version 3). An existing table cannot adopt it —
-    // retro-assigning ids to already-written files is a v3 upgrade
-    // step this writer does not perform.
-    val prevNextRowId: Option[Long] =
-      prevMeta.filter(_.has("next-row-id")).map(_.get("next-row-id").asLong())
-    require(!rowLineage || !exists || prevNextRowId.isDefined,
-      "IcebergTable: rowLineage is a CREATION option — the existing table " +
-        "tracks no next-row-id (ids for already-written files are undefined)")
-    val lineageActive = prevNextRowId.isDefined || (!exists && rowLineage)
-    var schemaEvolved = false
-    prevMeta.foreach { m =>
-      val have = currentSchema(m).fields.map(f => (f.name, f.dataType)).toSeq
-      val incoming = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (have != incoming) {
-        require(allowSchemaEvolution,
-          s"IcebergTable: append schema mismatch — table declares $have, append " +
-            s"brings $incoming (pass allowSchemaEvolution = true for add-column evolution)")
-        // APPEND-only evolution here: the declared fields must survive
-        // as a PREFIX with their types (new columns take FRESH ids past
-        // last-column-id); reorders/retypes go through the dedicated
-        // metadata-only ops ([[renameColumn]]/[[dropColumn]]/
-        // [[widenColumnType]]) which keep ids stable
-        require(incoming.take(have.size) == have,
-          s"IcebergTable: schema evolution may only APPEND columns — declared " +
-            s"$have must survive as a prefix of $incoming")
-        schemaEvolved = true
-      }
-      val prevSpec = specColumnNames(m)
-      require(prevSpec == partitionBy,
-        s"IcebergTable: append partitioning mismatch — table declares " +
-          s"[${prevSpec.mkString(",")}], append brings [${partitionBy.mkString(",")}]")
-    }
-    df.schema.fields.foreach(f => toIcebergType(f.dataType)) // loud unsupported-type check
-    partitionBy.foreach(c => require(df.schema.fieldNames.contains(c),
-      s"IcebergTable: partition column $c missing from the append schema"))
-    // STABLE field ids: an existing table's ids come from its current
-    // schema (evolution appends fresh ids past last-column-id); a new
-    // table assigns 1..n and declares the field-ids property so reads
-    // resolve by id from the first file on
-    val prevLastCol: Int = prevMeta.map { m =>
-      val declared = if (m.has("last-column-id")) m.get("last-column-id").asInt() else 0
-      math.max(declared, parseFields(currentSchemaNode(m)).map(_.id).max)
-    }.getOrElse(0)
-    val fields: Seq[IceField] = prevMeta match {
-      case Some(m) =>
-        val prior = parseFields(currentSchemaNode(m))
-        prior ++ df.schema.fields.drop(prior.size).zipWithIndex.map { case (f, i) =>
-          IceField(prevLastCol + 1 + i, f.name, f.dataType) }
-      case None =>
-        df.schema.fields.zipWithIndex.map { case (f, i) =>
-          IceField(i + 1, f.name, f.dataType) }.toSeq
-    }
-    val lastColumnId = math.max(prevLastCol, fields.map(_.id).max)
-    val idCapable = prevMeta.fold(true)(m =>
-      propertiesOf(m).get(FieldIdsProperty).contains("true"))
-    val idDf = if (idCapable) withFieldIds(spark, df, fields) else df
-    val pfields: Seq[(String, DataType)] =
-      partitionBy.map(c => c -> df.schema(c).dataType)
-    val entrySchema = manifestEntrySchema(pfields)
-    fs.mkdirs(metaDir)
-    fs.mkdirs(new Path(table, "data"))
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val dataFiles = stageDataFiles(spark, fs, table, idDf, partitionBy, pfields, stamp)
-
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    // per-file first_row_id blocks: contiguous above the table's
-    // next-row-id, in staged-file order — a row's id is
-    // first_row_id + its position, the Delta baseRowId shape
-    val rlBase: Long = prevNextRowId.getOrElse(0L)
-    val rlFirsts: Seq[Long] = dataFiles.map(_.records).scanLeft(rlBase)(_ + _)
-    // one manifest for this append; record_count carries the footer
-    // truth (readers size broadcasts and metadata tables off it)
-    val entries = dataFiles.zipWithIndex.map { case (sf, i) =>
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", snapshotId)
-      val d = new GenericData.Record(entrySchema.getField("data_file").schema())
-      d.put("file_path", sf.path)
-      d.put("file_format", "PARQUET")
-      d.put("record_count", sf.records)
-      d.put("file_size_in_bytes", sf.len)
-      if (lineageActive) d.put("first_row_id", java.lang.Long.valueOf(rlFirsts(i)))
-      putBounds(d, fields, sf.bounds)
-      if (partitionBy.nonEmpty) {
-        val pr = new GenericData.Record(
-          entrySchema.getField("data_file").schema().getField("partition").schema())
-        sf.tuple.foreach { case (k, v) => pr.put(k, v) }
-        d.put("partition", pr)
-      }
-      e.put("data_file", d)
-      e
-    }
-    val manifestPath = new Path(metaDir, s"manifest-$stamp.avro")
-    val manifestLen = writeAvro(fs, manifestPath, entrySchema, entries)
-
-    // the new data manifest's sequence number (v2 only; v1 has none)
-    val newSeq: Long =
-      prevMeta.filter(_ => fv >= 2)
-        .map(m => (if (m.has("last-sequence-number")) m.get("last-sequence-number").asLong() else 0L) + 1)
-        .getOrElse(1L)
-    // carry forward the prior snapshot's manifests WITH their v2
-    // content/sequence fields (default 0 for v1-era manifests) and
-    // the id of the snapshot that ORIGINALLY added each (the spec's
-    // added_snapshot_id meaning — the incremental scan keys on it)
-    val prevManifests: Seq[(String, Long, Int, Long, Long, Long)] =
-      (if (carryForward) prevMeta.toSeq else Seq.empty).flatMap { m =>
-      val curId = m.get("current-snapshot-id").asLong()
-      val snaps = m.get("snapshots")
-      (0 until snaps.size()).map(snaps.get)
-        .find(_.get("snapshot-id").asLong() == curId).toSeq
-        .flatMap { s =>
-          readAvro(fs, new Path(s.get("manifest-list").asText()), conf).map { r =>
-            def opt(n: String): Option[AnyRef] =
-              if (r.getSchema.getField(n) == null) None else Option(r.get(n))
-            (r.get("manifest_path").toString,
-              r.get("manifest_length").asInstanceOf[Long],
-              opt("content").map(_.asInstanceOf[Int]).getOrElse(0),
-              opt("sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L),
-              opt("min_sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L),
-              opt("added_snapshot_id").map(_.asInstanceOf[Long]).getOrElse(curId))
-          }
-        }
-    }
-    val listPath = writeManifestList(fs, metaDir, fv, snapshotId, stamp,
-      prevManifests :+
-        (fs.makeQualified(manifestPath).toString, manifestLen, 0, newSeq, newSeq,
-          snapshotId))
-    publishMetadataJson(fs, tablePath, prevMeta, prevVersion, fv, fields, lastColumnId,
-      partitionBy, schemaEvolved, newSeq, snapshotId, listPath, operation,
-      newProperties =
-        if (idCapable && prevMeta.isEmpty) Map(FieldIdsProperty -> "true") else Map.empty,
-      summary = summary,
-      lineage = if (lineageActive)
-        Some((rlBase, rlBase + dataFiles.map(_.records).sum)) else None)
-    snapshotId
+  /** Write one manifest of `entries` under `metadata/` and return its
+    * manifest-list row: `sequence` is the manifest's, its minimum the
+    * lowest live entry's, and `snapshotId` the snapshot adding it.
+    */
+  private def writeManifest(
+      fs: FileSystem, tablePath: String, name: String, schema: Schema, content: Int,
+      sequence: Long, snapshotId: Long, entries: Seq[Entry]): ManifestRef = {
+    val path = new Path(metadataDir(tablePath), name)
+    val len = writeAvro(fs, path, schema, entries.map(entryRecord(schema, _)))
+    ManifestRef(fs.makeQualified(path).toString, len, content, sequence,
+      entries.filter(_.status != 2).map(_.sequence).minOption.getOrElse(sequence), snapshotId)
   }
 
-  /** Write a snapshot's manifest LIST avro. `rows` are
-    * `(manifest_path, length, content, sequence, min_sequence,
-    * added_snapshot_id)` — carried manifests keep the id of the
-    * snapshot that ACTUALLY added them (the spec's meaning; the
-    * incremental append scan keys on it); the v2 fields are dropped
-    * under v1.
+  /** Write a snapshot's manifest LIST avro and return its qualified
+    * path. Carried manifests keep the id of the snapshot that ACTUALLY
+    * added them (the spec's meaning; the incremental append scan keys
+    * on it); the v2 fields are dropped under v1.
     */
   private def writeManifestList(
-      fs: FileSystem, metaDir: Path, fv: Int, snapshotId: Long, stamp: String,
-      rows: Seq[(String, Long, Int, Long, Long, Long)]): Path = {
+      fs: FileSystem, tablePath: String, fv: Int, snapshotId: Long, stamp: String,
+      rows: Seq[ManifestRef]): String = {
     val listSchema = if (fv >= 2) ManifestListSchemaV2 else ManifestListSchema
-    val listRecords = rows.map { case (p, len, content, seq, minSeq, addedBy) =>
+    val path = new Path(metadataDir(tablePath), s"snap-$snapshotId-$stamp.avro")
+    writeAvro(fs, path, listSchema, rows.map { m =>
       val r = new GenericData.Record(listSchema)
-      r.put("manifest_path", p)
-      r.put("manifest_length", len)
-      r.put("partition_spec_id", 0)
+      r.put("manifest_path", m.path)
+      r.put("manifest_length", m.length)
+      r.put("partition_spec_id", m.specId)
       if (fv >= 2) {
-        r.put("content", content)
-        r.put("sequence_number", seq)
-        r.put("min_sequence_number", minSeq)
+        r.put("content", m.content)
+        r.put("sequence_number", m.sequence)
+        r.put("min_sequence_number", m.minSequence)
       }
-      r.put("added_snapshot_id", addedBy)
+      r.put("added_snapshot_id", m.addedSnapshotId)
       r
-    }
-    val listPath = new Path(metaDir, s"snap-$snapshotId-$stamp.avro")
-    writeAvro(fs, listPath, listSchema, listRecords)
-    listPath
+    })
+    fs.makeQualified(path).toString
   }
 
-  /** Assemble and publish `vN+1.metadata.json` for a new DATA snapshot
-    * (append / replace): prior snapshots and schemas carry forward,
-    * the new snapshot appends, `version-hint.text` repoints — the
-    * shared publish tail of [[publishDataSnapshot]] and
-    * [[rewriteDataFiles]].
+  /** The table metadata a DATA snapshot (append / replace) commits
+    * over, rebuilt from the writer's fields: prior snapshots, schemas,
+    * properties and refs carry forward, and an add-column evolution
+    * publishes its schema under a BUMPED schema id. The new snapshot
+    * itself, `current-snapshot-id` and `last-updated-ms` are set by
+    * [[commitMetadata]]. A lineage table's `next-row-id` advances to
+    * `nextRowId`, or carries (the mark must never regress or vanish).
     */
-  private def publishMetadataJson(
-      fs: FileSystem, tablePath: String,
-      prevMeta: Option[com.fasterxml.jackson.databind.JsonNode], prevVersion: Long,
-      fv: Int, fields: Seq[IceField], lastColumnId: Int,
-      partitionBy: Seq[String], schemaEvolved: Boolean,
-      newSeq: Long, snapshotId: Long, listPath: Path, operation: String,
+  private def dataMetadata(
+      tablePath: String, prevMeta: Option[JsonNode], fv: Int, fields: Seq[IceField],
+      lastColumnId: Int, partitionBy: Seq[String], schemaEvolved: Boolean, newSeq: Long,
       newProperties: Map[String, String] = Map.empty,
-      summary: Map[String, String] = Map.empty,
-      lineage: Option[(Long, Long)] = None): Unit = {
-    val metaDir = metadataDir(tablePath)
+      nextRowId: Option[Long] = None): ObjectNode = {
     val meta = mapper.createObjectNode()
     meta.put("format-version", fv)
     if (fv >= 2) meta.put("last-sequence-number", newSeq)
-    // v3 row lineage: `lineage` is (this snapshot's first-row-id, the
-    // table's advanced next-row-id); a lineage table's next-row-id
-    // also CARRIES when a caller publishes without assigning (the
-    // mark must never regress or vanish)
-    lineage match {
-      case Some((_, next)) => meta.put("next-row-id", next)
-      case None => prevMeta.filter(_.has("next-row-id"))
-        .foreach(m => meta.put("next-row-id", m.get("next-row-id").asLong()))
-    }
+    nextRowId.orElse(prevMeta.filter(_.has("next-row-id")).map(_.get("next-row-id").asLong()))
+      .foreach(meta.put("next-row-id", _))
     meta.put("table-uuid",
       prevMeta.map(_.get("table-uuid").asText()).getOrElse(java.util.UUID.randomUUID().toString))
     meta.put("location", tablePath)
-    meta.put("last-updated-ms", System.currentTimeMillis())
+    meta.put("last-updated-ms", 0L) // stamped at commit; the key keeps its place
     meta.put("last-column-id", lastColumnId)
     // defaults carry by field id into every rebuilt schema json — an
     // append must not strip what addColumn declared
     val carried = prevMeta.map(carriedDefaults).getOrElse(Map.empty)
     val inlineSchema = schemaJsonOf(fields)
     attachDefaults(inlineSchema, carried)
-    meta.set[com.fasterxml.jackson.databind.node.ObjectNode]("schema", inlineSchema)
+    meta.set[ObjectNode]("schema", inlineSchema)
     // v2's required "schemas"/"current-schema-id" pair (also legal —
-    // and ignored — under v1 readers that use the legacy "schema");
-    // an add-column evolution publishes under a BUMPED schema id
+    // and ignored — under v1 readers that use the legacy "schema")
     val schemaId = prevMeta.map { m =>
       val prev = if (m.has("current-schema-id")) m.get("current-schema-id").asInt() else 0
       if (schemaEvolved) prev + 1 else prev
@@ -1929,13 +1877,9 @@ object IcebergTable {
     // reference their schema-id, and the spec requires every schema a
     // live snapshot references to stay resolvable (an external reader
     // time-traveling to a pre-evolution snapshot needs it)
-    prevMeta.foreach { m =>
-      val prev = m.get("schemas")
-      if (prev != null && prev.isArray)
-        (0 until prev.size()).map(prev.get)
-          .filter(s => !s.has("schema-id") || s.get("schema-id").asInt() != schemaId)
-          .foreach(schemasArr.add)
-    }
+    prevMeta.foreach(m => elements(m.get("schemas"))
+      .filter(s => !s.has("schema-id") || s.get("schema-id").asInt() != schemaId)
+      .foreach(schemasArr.add))
     val schema0 = schemaJsonOf(fields)
     schema0.put("schema-id", schemaId)
     attachDefaults(schema0, carried)
@@ -1944,75 +1888,38 @@ object IcebergTable {
     // v1's required legacy "partition-spec" plus the modern
     // "partition-specs"/"default-spec-id" pair; identity transforms
     // over the STABLE schema field ids
-    def sourceId(c: String): Int = fields.find(_.name == c).map(_.id).getOrElse(
-      throw new IllegalArgumentException(
-        s"IcebergTable: partition column $c not in the schema fields"))
-    val legacySpec = meta.putArray("partition-spec")
-    partitionBy.zipWithIndex.foreach { case (c, i) =>
-      val f = legacySpec.addObject()
+    def specFields(arr: ArrayNode): Unit = partitionBy.zipWithIndex.foreach { case (c, i) =>
+      val f = arr.addObject()
       f.put("name", c)
       f.put("transform", "identity")
-      f.put("source-id", sourceId(c))
+      f.put("source-id", fields.find(_.name == c).map(_.id).getOrElse(
+        throw new IllegalArgumentException(
+          s"IcebergTable: partition column $c not in the schema fields")))
       f.put("field-id", 1000 + i)
     }
-    val specs = meta.putArray("partition-specs")
-    val spec0 = specs.addObject()
+    specFields(meta.putArray("partition-spec"))
+    val spec0 = meta.putArray("partition-specs").addObject()
     spec0.put("spec-id", 0)
-    val specFields = spec0.putArray("fields")
-    partitionBy.zipWithIndex.foreach { case (c, i) =>
-      val f = specFields.addObject()
-      f.put("name", c)
-      f.put("transform", "identity")
-      f.put("source-id", sourceId(c))
-      f.put("field-id", 1000 + i)
-    }
+    specFields(spec0.putArray("fields"))
     meta.put("default-spec-id", 0)
     if (fv >= 2) {
-      val orders = meta.putArray("sort-orders")
-      val o0 = orders.addObject()
-      o0.put("order-id", 0)
-      o0.putArray("fields")
+      meta.putArray("sort-orders").addObject().put("order-id", 0).putArray("fields")
       meta.put("default-sort-order-id", 0)
     }
     // table properties carry forward verbatim, new ones layered on top
     val props = meta.putObject("properties")
-    prevMeta.map(_.get("properties")).filter(p => p != null && p.isObject).foreach { p =>
-      val it = p.fields()
-      while (it.hasNext) { val e = it.next(); props.set[com.fasterxml.jackson.databind.JsonNode](e.getKey, e.getValue) }
-    }
+    prevMeta.map(_.get("properties")).filter(p => p != null && p.isObject)
+      .foreach(p => props.setAll[JsonNode](p.asInstanceOf[ObjectNode]))
     newProperties.foreach { case (k, v) => props.put(k, v) }
     // named refs (tags/branches) carry forward verbatim
     prevMeta.map(_.get("refs")).filter(r => r != null && r.isObject).foreach { r =>
-      meta.set[com.fasterxml.jackson.databind.JsonNode]("refs", r.deepCopy())
+      meta.set[JsonNode]("refs", r.deepCopy())
     }
-    meta.put("current-snapshot-id", snapshotId)
+    meta.put("current-snapshot-id", -1L) // repointed at commit; the key keeps its place
     val snaps = meta.putArray("snapshots")
-    prevMeta.foreach { m =>
-      val ps = m.get("snapshots")
-      (0 until ps.size()).foreach(i => snaps.add(ps.get(i)))
-    }
-    val sn = snaps.addObject()
-    sn.put("snapshot-id", snapshotId)
-    if (fv >= 2) sn.put("sequence-number", newSeq)
-    sn.put("timestamp-ms", System.currentTimeMillis())
-    sn.put("schema-id", schemaId) // time travel serves the snapshot's OWN shape
-    lineage.foreach { case (first, _) => sn.put("first-row-id", first) }
-    sn.put("manifest-list", fs.makeQualified(listPath).toString)
-    val sm = sn.putObject("summary")
-    sm.put("operation", operation)
-    summary.foreach { case (k, v) => sm.put(k, v) }
-
-    val newVersion = prevVersion + 1
-    val metaPath = new Path(metaDir, s"v$newVersion.metadata.json")
-    val out = fs.create(metaPath, false) // put-if-absent publish
-    try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(meta))
-    finally out.close()
-    val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
-    try hint.write(newVersion.toString.getBytes("UTF-8")) finally hint.close()
+    prevMeta.foreach(m => snapshotsOf(m).foreach(snaps.add))
+    meta
   }
-
-  private def parquetRowCount(fs: FileSystem, p: Path): Long =
-    parquetFooterInfo(fs, p)._1
 
   /** How a column chunk's footer min/max becomes the JVM value
     * [[boundBytes]] serializes, for the physical/logical types it can
@@ -2122,9 +2029,7 @@ object IcebergTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val table = new Path(tablePath)
     val fs = fsOf(spark, table)
-    val metaPath = currentMetadataPath(fs, tablePath)
-    val prevVersion = metaPath.getName.stripPrefix("v").stripSuffix(".metadata.json").toLong
-    val meta = readJson(fs, metaPath)
+    val h = head(fs, tablePath)
     val snap = snapshot(spark, tablePath, None)
     require(snap.formatVersion < 3,
       "IcebergTable: deleteRows writes parquet position-delete files, which " +
@@ -2165,41 +2070,13 @@ object IcebergTable {
       .join(broadcast(pathMap), "__fid")
       .select(col("file_path"), col("__pos").cast(LongType).as("pos"), col("__pt"))
       .orderBy("file_path", "pos")
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new Path(table, s"_ice_stage_del_$stamp")
-    matches.write.partitionBy("__pt").parquet(stage.toString)
-    // typed partition values for the manifest records (same convention
-    // as append: stringified tuple -> declared partition column types)
-    val ptypes: Seq[(String, DataType)] =
-      snap.partitionColumns.map(c => c -> snap.schema(c).dataType)
-    val ptypeMap = ptypes.toMap
-    def typedTuple(t: Map[String, String]): Map[String, Any] =
-      t.map { case (k, v) =>
-        k -> (ptypeMap.get(k) match {
-          case Some(IntegerType) => Integer.valueOf(v.toInt)
-          case Some(LongType) => java.lang.Long.valueOf(v.toLong)
-          case _ => v
-        })
-      }
-    val parts = fs.globStatus(new Path(stage, "__pt=*/part-*.parquet")).toSeq
-      .map(_.getPath).sortBy(_.toString)
-    val moved: Seq[(String, Long, Long, Map[String, Any])] =
-      parts.zipWithIndex.flatMap { case (p, i) =>
-        val n = parquetRowCount(fs, p)
-        if (n == 0) None // an empty part is no tombstone
-        else {
-          val pt = p.getParent.getName.stripPrefix("__pt=").toInt
-          val dest = new Path(table, s"data/delete-$stamp-$i.parquet")
-          fs.mkdirs(dest.getParent)
-          require(fs.rename(p, dest), s"IcebergTable: move failed for $p")
-          Some((fs.makeQualified(dest).toString, fs.getFileStatus(dest).getLen, n,
-            typedTuple(tuples(pt))))
-        }
-      }
-    fs.delete(stage, true)
-    if (moved.isEmpty) return -1L
-    publishDeleteSnapshot(fs, conf, tablePath, meta, prevVersion, moved,
-      content = 1, equalityIds = Seq.empty, partitionFields = ptypes)
+    val ptypes = snap.partitionColumns.map(c => c -> snap.schema(c).dataType)
+    val (stamp, snapshotId, seq) = (newStamp(), newSnapshotId(), h.nextSequence)
+    commitDeletes(fs, conf, tablePath, h, ptypes, stamp, snapshotId,
+      math.max(2, h.formatVersion),
+      stageFiles(fs, table, matches, Seq("__pt"), "delete", stamp, data = false).map(sf =>
+        Entry(1, Some(snapshotId), seq, 1, sf.path, "PARQUET", sf.records, sf.len,
+          typedTuple(tuples(sf.dirs("__pt").toInt), ptypes))))
   }
 
   /** DELETE rows via v2 EQUALITY DELETES: tombstone every row whose
@@ -2225,9 +2102,7 @@ object IcebergTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val table = new Path(tablePath)
     val fs = fsOf(spark, table)
-    val metaPath = currentMetadataPath(fs, tablePath)
-    val prevVersion = metaPath.getName.stripPrefix("v").stripSuffix(".metadata.json").toLong
-    val meta = readJson(fs, metaPath)
+    val h = head(fs, tablePath)
     val snap = snapshot(spark, tablePath, None)
     if (partitionScope.nonEmpty)
       require(partitionScope.keySet == snap.partitionColumns.toSet,
@@ -2238,11 +2113,9 @@ object IcebergTable {
     require(keysDf.schema.fieldNames.toSeq == keys,
       s"IcebergTable: keysDf columns ${keysDf.schema.fieldNames.mkString(",")} " +
         s"must be exactly the keys [${keys.mkString(",")}]")
-    val nameToId = fieldIdToName(meta).map(_.swap)
+    val nameToId = fieldIdToName(h.meta).map(_.swap)
     val ids = keys.map(k => nameToId.getOrElse(k, throw new IllegalArgumentException(
       s"IcebergTable: no field id for equality key '$k'")))
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new Path(table, s"_ice_stage_eqdel_$stamp")
     val distinctKeys = keysDf.distinct()
       .orderBy(keys.map(org.apache.spark.sql.functions.col): _*)
     // id-capable tables stamp the key columns with their field ids so
@@ -2252,37 +2125,17 @@ object IcebergTable {
         withFieldIds(spark, distinctKeys,
           keys.zip(ids).map { case (k, id) => IceField(id, k, snap.schema(k).dataType) })
       else distinctKeys
-    keyedOut.write.parquet(stage.toString)
-    val parts = fs.globStatus(new Path(stage, "part-*.parquet")).toSeq
-      .map(_.getPath).sortBy(_.toString)
     // scoped deletes carry their typed tuple in the manifest entry;
     // global deletes carry none (the unpartitioned-spec shape)
-    val ptypes: Seq[(String, DataType)] =
+    val ptypes =
       if (partitionScope.isEmpty) Seq.empty
       else snap.partitionColumns.map(c => c -> snap.schema(c).dataType)
-    val scopedTuple: Map[String, Any] = partitionScope.map { case (k, v) =>
-      k -> (snap.schema(k).dataType match {
-        case IntegerType => Integer.valueOf(v.toInt)
-        case LongType => java.lang.Long.valueOf(v.toLong)
-        case _ => (v: Any)
-      })
-    }
-    val moved: Seq[(String, Long, Long, Map[String, Any])] =
-      parts.zipWithIndex.flatMap { case (p, i) =>
-        val n = parquetRowCount(fs, p)
-        if (n == 0) None
-        else {
-          val dest = new Path(table, s"data/eqdelete-$stamp-$i.parquet")
-          fs.mkdirs(dest.getParent)
-          require(fs.rename(p, dest), s"IcebergTable: move failed for $p")
-          Some((fs.makeQualified(dest).toString, fs.getFileStatus(dest).getLen, n,
-            scopedTuple))
-        }
-      }
-    fs.delete(stage, true)
-    if (moved.isEmpty) return -1L
-    publishDeleteSnapshot(fs, conf, tablePath, meta, prevVersion, moved,
-      content = 2, equalityIds = ids, partitionFields = ptypes)
+    val (stamp, snapshotId, seq) = (newStamp(), newSnapshotId(), h.nextSequence)
+    commitDeletes(fs, conf, tablePath, h, ptypes, stamp, snapshotId,
+      math.max(2, h.formatVersion),
+      stageFiles(fs, table, keyedOut, Nil, "eqdelete", stamp, data = false).map(sf =>
+        Entry(1, Some(snapshotId), seq, 2, sf.path, "PARQUET", sf.records, sf.len,
+          typedTuple(partitionScope, ptypes), equalityIds = ids)))
   }
 
   /** DELETE rows via format-version 3 DELETION VECTORS: one puffin
@@ -2312,9 +2165,7 @@ object IcebergTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val table = new Path(tablePath)
     val fs = fsOf(spark, table)
-    val metaPath = currentMetadataPath(fs, tablePath)
-    val prevVersion = metaPath.getName.stripPrefix("v").stripSuffix(".metadata.json").toLong
-    val meta = readJson(fs, metaPath)
+    val h = head(fs, tablePath)
     val snap = snapshot(spark, tablePath, None)
     require(snap.deleteFiles.forall(d => d.isDv || d.equalityColumns.nonEmpty),
       "IcebergTable: live parquet position-delete files — format-version 3 bans " +
@@ -2361,10 +2212,7 @@ object IcebergTable {
     if (frames.isEmpty) return -1L
     // publish: the puffin file, then ADDED entries for the new blobs
     // and DELETED entries tombstoning any replaced blob
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val newSeq =
-      (if (meta.has("last-sequence-number")) meta.get("last-sequence-number").asLong() else 0L) + 1
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
+    val (stamp, snapshotId, newSeq) = (newStamp(), newSnapshotId(), h.nextSequence)
     val refByFid: Map[String, DataFileRef] =
       snap.dataRefs.map(r => scanFileId(r.path) -> r).toMap
     val puffinPath = new Path(table, s"data/dv-$stamp.puffin")
@@ -2374,194 +2222,59 @@ object IcebergTable {
       snapshotId, newSeq)
     val puffinLen = fs.getFileStatus(puffinPath).getLen
     val qPuffin = fs.makeQualified(puffinPath).toString
-    val ptypes: Seq[(String, DataType)] =
-      snap.partitionColumns.map(c => c -> snap.schema(c).dataType)
-    val ptypeMap = ptypes.toMap
-    def typedTuple(t: Map[String, String]): Map[String, Any] =
-      t.map { case (k, v) =>
-        k -> (ptypeMap.get(k) match {
-          case Some(IntegerType) => Integer.valueOf(v.toInt)
-          case Some(LongType) => java.lang.Long.valueOf(v.toLong)
-          case _ => v
-        })
-      }
-    val entrySchema = deleteManifestEntrySchema(ptypes)
-    def dvEntry(status: Int, seq: Long, path: String, fileLen: Long,
-        refFile: String, off: Long, size: Long, card: Long,
-        tuple: Map[String, Any]): GenericRecord = {
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", status)
-      e.put("snapshot_id", snapshotId)
-      e.put("sequence_number", seq)
-      val d = new GenericData.Record(entrySchema.getField("data_file").schema())
-      d.put("content", 1)
-      d.put("file_path", path)
-      d.put("file_format", "PUFFIN")
-      d.put("record_count", card)
-      d.put("file_size_in_bytes", fileLen)
-      d.put("referenced_data_file", refFile)
-      d.put("content_offset", off)
-      d.put("content_size_in_bytes", size)
-      if (ptypes.nonEmpty) {
-        val pr = new GenericData.Record(
-          entrySchema.getField("data_file").schema().getField("partition").schema())
-        tuple.foreach { case (k, v) => pr.put(k, v) }
-        d.put("partition", pr)
-      }
-      e.put("data_file", d)
-      e
+    val ptypes = snap.partitionColumns.map(c => c -> snap.schema(c).dataType)
+    def dvEntry(status: Int, seq: Long, path: String, fileLen: Long, fid: String,
+        offset: Long, size: Long, card: Long): Entry = {
+      val ref = refByFid(fid)
+      Entry(status, Some(snapshotId), seq, 1, path, "PUFFIN", card, fileLen,
+        typedTuple(ref.partition, ptypes), dv = Some((ref.path, offset, size)))
     }
     val added = frames.zip(blobs).map { case ((fid, _, card), b) =>
-      dvEntry(1, newSeq, qPuffin, puffinLen, refByFid(fid).path,
-        b.offset, b.length, card, typedTuple(refByFid(fid).partition))
+      dvEntry(1, newSeq, qPuffin, puffinLen, fid, b.offset, b.length, card)
     }
     val replaced = frames.flatMap { case (fid, _, _) =>
       existingDvs.get(fid).map { case (p, off, size, oldSeq) =>
-        dvEntry(2, oldSeq, p, 0L, refByFid(fid).path, off, size, 0L,
-          typedTuple(refByFid(fid).partition))
+        dvEntry(2, oldSeq, p, 0L, fid, off, size, 0L)
       }
     }
-    publishDeleteManifestSnapshot(fs, conf, tablePath, meta, prevVersion,
-      entrySchema, added ++ replaced, newSeq, snapshotId, formatVersion = 3)
+    commitDeletes(fs, conf, tablePath, h, ptypes, stamp, snapshotId, formatVersion = 3,
+      added ++ replaced)
   }
 
-  /** Shared publish tail of [[deleteRows]] and [[deleteRowsEquality]]:
-    * the delete manifest, the v2 manifest list carrying the current
-    * snapshot's manifests forward, and the upgraded metadata JSON.
+  /** Commit a DELETE snapshot: one `manifest-del-<stamp>.avro` of
+    * `entries` (the v2 entry shape) at the next sequence number, the
+    * current snapshot's manifests carried forward in a v2 list, and
+    * the metadata upgraded in place to `formatVersion` — v2 for
+    * parquet deletes, v3 for deletion vectors, never a downgrade (a v1
+    * table's existing files keep sequence number 0, so the deletes
+    * gate onto them while LATER appends are never affected). Returns
+    * the new snapshot id, or -1 when `entries` is empty.
     */
-  /** `moved` rows: (path, length, records, partition tuple — empty
-    * for unpartitioned tables and equality deletes).
-    */
-  private def publishDeleteSnapshot(
-      fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
-      tablePath: String, meta: com.fasterxml.jackson.databind.JsonNode,
-      prevVersion: Long, moved: Seq[(String, Long, Long, Map[String, Any])],
-      content: Int, equalityIds: Seq[Int],
-      partitionFields: Seq[(String, DataType)] = Seq.empty): Long = {
-    val newSeq =
-      (if (meta.has("last-sequence-number")) meta.get("last-sequence-number").asLong() else 0L) + 1
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val entrySchema = deleteManifestEntrySchema(partitionFields)
-    val entries = moved.map { case (path, len, n, tuple) =>
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", snapshotId)
-      e.put("sequence_number", newSeq)
-      val d = new GenericData.Record(entrySchema.getField("data_file").schema())
-      d.put("content", content)
-      d.put("file_path", path)
-      d.put("file_format", "PARQUET")
-      d.put("record_count", n)
-      d.put("file_size_in_bytes", len)
-      if (partitionFields.nonEmpty) {
-        val pr = new GenericData.Record(
-          entrySchema.getField("data_file").schema().getField("partition").schema())
-        tuple.foreach { case (k, v) => pr.put(k, v) }
-        d.put("partition", pr)
-      }
-      if (equalityIds.nonEmpty) {
-        val arr = new GenericData.Array[Integer](
-          equalityIds.size,
-          entrySchema.getField("data_file").schema()
-            .getField("equality_ids").schema().getTypes.get(1))
-        equalityIds.foreach(id => arr.add(Integer.valueOf(id)))
-        d.put("equality_ids", arr)
-      }
-      e.put("data_file", d)
-      e
-    }
-    publishDeleteManifestSnapshot(fs, conf, tablePath, meta, prevVersion,
-      entrySchema, entries, newSeq, snapshotId,
-      math.max(2, meta.get("format-version").asInt()))
-  }
-
-  /** Shared publish tail: land a DELETE manifest's entries, carry the
-    * current snapshot's manifests forward, and publish the upgraded
-    * metadata JSON at `formatVersion`.
-    */
-  private def publishDeleteManifestSnapshot(
-      fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
-      tablePath: String, meta: com.fasterxml.jackson.databind.JsonNode,
-      prevVersion: Long, entrySchema: Schema, entries: Seq[GenericRecord],
-      newSeq: Long, snapshotId: Long, formatVersion: Int): Long = {
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val metaDir0 = metadataDir(tablePath)
-    val manifestPath = new Path(metaDir0, s"manifest-del-$stamp.avro")
-    val manifestLen = writeAvro(fs, manifestPath, entrySchema, entries)
-
-    // carry forward the current snapshot's manifests with their
-    // content/sequence fields (0 for v1-era ones, per the upgrade rule)
-    val curId = meta.get("current-snapshot-id").asLong()
-    val curSnap = {
-      val snaps = meta.get("snapshots")
-      (0 until snaps.size()).map(snaps.get)
-        .find(_.get("snapshot-id").asLong() == curId).get
-    }
-    val carried = readAvro(fs, new Path(curSnap.get("manifest-list").asText()), conf).map { r =>
-      def opt(n: String): Option[AnyRef] =
-        if (r.getSchema.getField(n) == null) None else Option(r.get(n))
-      (r.get("manifest_path").toString,
-        r.get("manifest_length").asInstanceOf[Long],
-        opt("content").map(_.asInstanceOf[Int]).getOrElse(0),
-        opt("sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L),
-        opt("min_sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L),
-        opt("added_snapshot_id").map(_.asInstanceOf[Long]).getOrElse(curId))
-    }
-    val listRecords = (carried :+
-      (fs.makeQualified(manifestPath).toString, manifestLen, 1, newSeq, newSeq,
-        snapshotId))
-      .map { case (p, len, content, seq, minSeq, addedBy) =>
-        val r = new GenericData.Record(ManifestListSchemaV2)
-        r.put("manifest_path", p)
-        r.put("manifest_length", len)
-        r.put("partition_spec_id", 0)
-        r.put("content", content)
-        r.put("sequence_number", seq)
-        r.put("min_sequence_number", minSeq)
-        r.put("added_snapshot_id", addedBy)
-        r
-      }
-    val listPath = new Path(metaDir0, s"snap-$snapshotId-$stamp.avro")
-    writeAvro(fs, listPath, ManifestListSchemaV2, listRecords)
-
-    // publish: deep-copy the prior metadata, upgrade in place (v2 for
-    // parquet deletes; v3 when the snapshot carries deletion vectors —
-    // never a downgrade)
-    val newMeta = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+  private def commitDeletes(
+      fs: FileSystem, conf: org.apache.hadoop.conf.Configuration, tablePath: String,
+      h: Head, ptypes: Seq[(String, DataType)], stamp: String, snapshotId: Long,
+      formatVersion: Int, entries: Seq[Entry]): Long = {
+    if (entries.isEmpty) return -1L
+    val seq = h.nextSequence
+    val manifest = writeManifest(fs, tablePath, s"manifest-del-$stamp.avro",
+      entrySchema(ptypes, v2 = true), content = 1, seq, snapshotId, entries)
+    val list = writeManifestList(fs, tablePath, fv = 2, snapshotId, stamp,
+      currentManifests(fs, conf, h.meta) :+ manifest)
+    val newMeta = h.meta.deepCopy[ObjectNode]()
     newMeta.put("format-version", formatVersion)
-    newMeta.put("last-sequence-number", newSeq)
-    newMeta.put("last-updated-ms", System.currentTimeMillis())
+    newMeta.put("last-sequence-number", seq)
     if (!newMeta.has("schemas")) {
-      val arr = newMeta.putArray("schemas")
-      val s0 = meta.get("schema").deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+      val s0 = h.meta.get("schema").deepCopy[ObjectNode]()
       s0.put("schema-id", 0)
-      arr.add(s0)
+      newMeta.putArray("schemas").add(s0)
       newMeta.put("current-schema-id", 0)
     }
     if (!newMeta.has("sort-orders")) {
-      val orders = newMeta.putArray("sort-orders")
-      val o0 = orders.addObject()
-      o0.put("order-id", 0)
-      o0.putArray("fields")
+      newMeta.putArray("sort-orders").addObject().put("order-id", 0).putArray("fields")
       newMeta.put("default-sort-order-id", 0)
     }
-    newMeta.put("current-snapshot-id", snapshotId)
-    val sn = newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-      .addObject()
-    sn.put("snapshot-id", snapshotId)
-    sn.put("sequence-number", newSeq)
-    sn.put("timestamp-ms", System.currentTimeMillis())
-    if (newMeta.has("current-schema-id"))
-      sn.put("schema-id", newMeta.get("current-schema-id").asInt())
-    sn.put("manifest-list", fs.makeQualified(listPath).toString)
-    sn.putObject("summary").put("operation", "delete")
-    val newVersion = prevVersion + 1
-    val outPath = new Path(metaDir0, s"v$newVersion.metadata.json")
-    val out = fs.create(outPath, false) // put-if-absent publish
-    try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(newMeta))
-    finally out.close()
-    val hint = fs.create(new Path(metaDir0, "version-hint.text"), true)
-    try hint.write(newVersion.toString.getBytes("UTF-8")) finally hint.close()
+    commitMetadata(fs, tablePath, Some(h), newMeta,
+      Some(NewSnapshot(snapshotId, list, "delete")))
     snapshotId
   }
 
@@ -2571,8 +2284,7 @@ object IcebergTable {
     * implicit `main` branch (current-snapshot-id) is NOT listed here,
     * matching the spec's default.
     */
-  private def refsOf(
-      meta: com.fasterxml.jackson.databind.JsonNode): Map[String, (Long, String)] = {
+  private def refsOf(meta: JsonNode): Map[String, (Long, String)] = {
     val r = meta.get("refs")
     if (r == null || !r.isObject) Map.empty
     else {
@@ -2618,18 +2330,13 @@ object IcebergTable {
     require(name.nonEmpty && name != "main",
       "IcebergTable: 'main' is the implicit current-snapshot branch")
     val fs = fsOf(spark, new Path(tablePath))
-    val metaPath = currentMetadataPath(fs, tablePath)
-    val prevVersion = metaPath.getName.stripPrefix("v").stripSuffix(".metadata.json").toLong
-    val meta = readJson(fs, metaPath)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val h = head(fs, tablePath)
+    val meta = h.meta
     val target = snapshotId.getOrElse(meta.get("current-snapshot-id").asLong())
-    val snaps = meta.get("snapshots")
-    require((0 until snaps.size()).map(snaps.get)
-        .exists(_.get("snapshot-id").asLong() == target),
+    require(snapshotNode(meta, target).isDefined,
       s"IcebergTable: ref target snapshot $target not found (expired?)")
     val refs =
-      if (meta.has("refs") && meta.get("refs").isObject)
-        meta.get("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      if (meta.has("refs") && meta.get("refs").isObject) meta.get("refs").asInstanceOf[ObjectNode]
       else meta.putObject("refs")
     if (replace) {
       require(refs.has(name),
@@ -2644,14 +2351,7 @@ object IcebergTable {
     val node = refs.putObject(name)
     node.put("snapshot-id", target)
     node.put("type", refType)
-    meta.put("last-updated-ms", System.currentTimeMillis())
-    val newVersion = prevVersion + 1
-    val outPath = new Path(metadataDir(tablePath), s"v$newVersion.metadata.json")
-    val out = fs.create(outPath, false) // put-if-absent publish
-    try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(meta))
-    finally out.close()
-    val hint = fs.create(new Path(metadataDir(tablePath), "version-hint.text"), true)
-    try hint.write(newVersion.toString.getBytes("UTF-8")) finally hint.close()
+    commitMetadata(fs, tablePath, Some(h), meta)
   }
 
   def createTag(spark: SparkSession, tablePath: String, name: String,
@@ -2665,7 +2365,7 @@ object IcebergTable {
   /** Read the table AS OF a named ref (`main` = current). */
   def readRef(spark: SparkSession, tablePath: String, name: String): DataFrame = {
     val fs = fsOf(spark, new Path(tablePath))
-    val meta = readJson(fs, currentMetadataPath(fs, tablePath))
+    val meta = head(fs, tablePath).meta
     if (name == "main") read(spark, tablePath)
     else {
       val (sid, _) = refsOf(meta).getOrElse(name, throw new IllegalArgumentException(
@@ -2680,7 +2380,7 @@ object IcebergTable {
     */
   def refsTable(spark: SparkSession, tablePath: String): DataFrame = {
     val fs = fsOf(spark, new Path(tablePath))
-    val meta = readJson(fs, currentMetadataPath(fs, tablePath))
+    val meta = head(fs, tablePath).meta
     val rows = (refsOf(meta).toSeq.map { case (n, (sid, tp)) =>
       org.apache.spark.sql.Row(n, tp, sid)
     } :+ org.apache.spark.sql.Row("main", "branch",
@@ -2711,10 +2411,8 @@ object IcebergTable {
       fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(spark, new Path(tablePath))
-    val meta = readJson(fs, currentMetadataPath(fs, tablePath))
-    val snapsArr = meta.get("snapshots")
-    val all = (0 until snapsArr.size()).map(snapsArr.get)
-    def idOf(s: com.fasterxml.jackson.databind.JsonNode) = s.get("snapshot-id").asLong()
+    val all = snapshotsOf(head(fs, tablePath).meta)
+    def idOf(s: JsonNode) = s.get("snapshot-id").asLong()
     val fromIdx = all.indexWhere(idOf(_) == fromSnapshotId)
     val toIdx = all.indexWhere(idOf(_) == toSnapshotId)
     require(fromIdx >= 0 && toIdx >= 0 && fromIdx <= toIdx,
@@ -2730,20 +2428,12 @@ object IcebergTable {
         case "append" =>
           val sid = idOf(s)
           readAvro(fs, new Path(s.get("manifest-list").asText()), conf)
-            .filter { r =>
-              val a = if (r.getSchema.getField("added_snapshot_id") == null) None
-                else Option(r.get("added_snapshot_id"))
-              a.exists(_.asInstanceOf[Long] == sid)
-            }
+            .filter(r => field(r, "added_snapshot_id").contains(sid))
             .flatMap(r => readAvro(fs, new Path(r.get("manifest_path").toString), conf))
             .filter(_.get("status").asInstanceOf[Int] == 1) // ADDED
             // per-entry snapshot_id confirms the adder (defensive for
             // lists older writers stamped with the wrong manifest-level id)
-            .filter { e =>
-              val es = if (e.getSchema.getField("snapshot_id") == null) None
-                else Option(e.get("snapshot_id"))
-              es.forall(_.asInstanceOf[Long] == sid)
-            }
+            .filter(e => field(e, "snapshot_id").forall(_ == sid))
             .map(_.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString)
         case "replace" => Seq.empty // layout-only: no new rows
         case other => throw new IllegalArgumentException(
@@ -2766,23 +2456,20 @@ object IcebergTable {
   private def publishSchemaEvolution(
       spark: SparkSession, tablePath: String, op: String,
       newDefaults: Map[String, (DataType, Any)] = Map.empty)(
-      transform: Seq[IceField] => Seq[IceField]): Unit = {
+      transform: (Seq[IceField], JsonNode) => Seq[IceField]): Unit = {
     val fs = fsOf(spark, new Path(tablePath))
-    val metaPath = currentMetadataPath(fs, tablePath)
-    val prevVersion = metaPath.getName.stripPrefix("v").stripSuffix(".metadata.json").toLong
-    val meta = readJson(fs, metaPath)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val h = head(fs, tablePath)
+    val meta = h.meta
     require(propertiesOf(meta).get(FieldIdsProperty).contains("true"),
       s"IcebergTable: $op needs a field-id-capable table " +
         s"($FieldIdsProperty=true) — files without parquet field ids could not " +
         "re-resolve the evolved schema; rewrite the table first")
     val fields = parseFields(currentSchemaNode(meta))
-    val newFields = transform(fields)
+    val newFields = transform(fields, meta)
     newFields.foreach(f => toIcebergType(f.dataType)) // loud unsupported-type check
     require(newFields.map(_.name).distinct.size == newFields.size,
       s"IcebergTable: $op would leave duplicate column names")
-    val newMeta = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    newMeta.put("last-updated-ms", System.currentTimeMillis())
+    val newMeta = meta.deepCopy[ObjectNode]()
     val curId =
       if (meta.has("current-schema-id")) meta.get("current-schema-id").asInt() else 0
     val newId = curId + 1
@@ -2790,17 +2477,17 @@ object IcebergTable {
     // by FIELD ID into the new current schema ([[carriedDefaults]]),
     // then `newDefaults` decorates the fields this op declares one for
     val carried = carriedDefaults(meta)
-    def decorate(node: com.fasterxml.jackson.databind.node.ObjectNode): Unit =
+    def decorate(node: ObjectNode): Unit =
       attachDefaults(node, carried, newDefaults)
     // legacy inline "schema" tracks the current shape; the schemas
     // array keeps every prior entry (live snapshots reference them)
     val inline = schemaJsonOf(newFields)
     inline.put("schema-id", newId)
     decorate(inline)
-    newMeta.set[com.fasterxml.jackson.databind.node.ObjectNode]("schema", inline)
+    newMeta.set[ObjectNode]("schema", inline)
     val schemasArr =
       if (newMeta.has("schemas") && newMeta.get("schemas").isArray)
-        newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas")
+        newMeta.withArray[ArrayNode]("schemas")
       else {
         val arr = newMeta.putArray("schemas")
         val s0 = schemaJsonOf(fields)
@@ -2836,13 +2523,7 @@ object IcebergTable {
       newMeta.put("format-version", 3)
       if (!newMeta.has("last-sequence-number")) newMeta.put("last-sequence-number", 0L)
     }
-    val newVersion = prevVersion + 1
-    val outPath = new Path(metadataDir(tablePath), s"v$newVersion.metadata.json")
-    val out = fs.create(outPath, false) // put-if-absent publish
-    try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(newMeta))
-    finally out.close()
-    val hint = fs.create(new Path(metadataDir(tablePath), "version-hint.text"), true)
-    try hint.write(newVersion.toString.getBytes("UTF-8")) finally hint.close()
+    commitMetadata(fs, tablePath, Some(h), newMeta)
   }
 
   /** ADD COLUMN — metadata-only (zero files touched): the new field
@@ -2862,13 +2543,11 @@ object IcebergTable {
     initialDefault.foreach(v =>
       parseDefault(name, dataType, defaultJsonNode(dataType, v)))
     publishSchemaEvolution(spark, tablePath, s"addColumn($name)",
-      newDefaults = initialDefault.map(v => name -> ((dataType, v))).toMap) { fields =>
+      newDefaults = initialDefault.map(v => name -> ((dataType, v))).toMap) { (fields, m) =>
       require(!fields.exists(_.name == name),
         s"IcebergTable: addColumn '$name' already exists")
       // fresh id past EVERY id ever used, not just the live maximum —
       // a dropped column's id must never be reassigned
-      val fs0 = fsOf(spark, new Path(tablePath))
-      val m = readJson(fs0, currentMetadataPath(fs0, tablePath))
       val declaredLast = if (m.has("last-column-id")) m.get("last-column-id").asInt() else 0
       val freshId = math.max(declaredLast, fields.map(_.id).max) + 1
       fields :+ IceField(freshId, name, dataType)
@@ -2882,14 +2561,12 @@ object IcebergTable {
     * deletes written before the rename still apply after it.
     */
   def renameColumn(spark: SparkSession, tablePath: String, from: String, to: String): Unit =
-    publishSchemaEvolution(spark, tablePath, s"renameColumn($from -> $to)") { fields =>
+    publishSchemaEvolution(spark, tablePath, s"renameColumn($from -> $to)") { (fields, m) =>
       require(fields.exists(_.name == from),
         s"IcebergTable: renameColumn '$from' not in the table schema")
       require(!fields.exists(_.name == to),
         s"IcebergTable: renameColumn target '$to' already exists")
-      val fs0 = fsOf(spark, new Path(tablePath))
-      val pby = specColumnNames(readJson(fs0, currentMetadataPath(fs0, tablePath)))
-      require(!pby.contains(from),
+      require(!specColumnNames(m).contains(from),
         s"IcebergTable: renameColumn '$from' is a partition source column — its name " +
           "keys the Hive-style data paths and stringified manifest tuples; rewrite instead")
       fields.map(f => if (f.name == from) f.copy(name = to) else f)
@@ -2907,7 +2584,7 @@ object IcebergTable {
     require(!snap.deleteFiles.exists(_.equalityColumns.contains(column)),
       s"IcebergTable: dropColumn '$column' is referenced by a live equality-delete " +
         "file — dropping it would orphan the tombstones; rewriteDataFiles first")
-    publishSchemaEvolution(spark, tablePath, s"dropColumn($column)") { fields =>
+    publishSchemaEvolution(spark, tablePath, s"dropColumn($column)") { (fields, _) =>
       require(fields.exists(_.name == column),
         s"IcebergTable: dropColumn '$column' not in the table schema")
       require(fields.size > 1,
@@ -2927,7 +2604,7 @@ object IcebergTable {
     */
   def widenColumnType(
       spark: SparkSession, tablePath: String, column: String, to: DataType): Unit =
-    publishSchemaEvolution(spark, tablePath, s"widenColumnType($column)") { fields =>
+    publishSchemaEvolution(spark, tablePath, s"widenColumnType($column)") { (fields, m) =>
       val f = fields.find(_.name == column).getOrElse(throw new IllegalArgumentException(
         s"IcebergTable: widenColumnType '$column' not in the table schema"))
       val ok = (f.dataType, to) match {
@@ -2937,9 +2614,7 @@ object IcebergTable {
       }
       require(ok, s"IcebergTable: ${f.dataType.simpleString} -> ${to.simpleString} is " +
         "not an Iceberg type promotion (int -> long, float -> double)")
-      val fs0 = fsOf(spark, new Path(tablePath))
-      val pby = specColumnNames(readJson(fs0, currentMetadataPath(fs0, tablePath)))
-      require(!pby.contains(column),
+      require(!specColumnNames(m).contains(column),
         s"IcebergTable: widenColumnType '$column' is a partition source column — its " +
           "stringified manifest tuples would re-type under every reader; rewrite instead")
       fields.map(x => if (x.name == column) x.copy(dataType = to) else x)
@@ -2954,15 +2629,13 @@ object IcebergTable {
     */
   def snapshotsTable(spark: SparkSession, tablePath: String): DataFrame = {
     val fs = fsOf(spark, new Path(tablePath))
-    val meta = readJson(fs, currentMetadataPath(fs, tablePath))
-    val snaps = meta.get("snapshots")
-    require(snaps != null && snaps.isArray, "IcebergTable: no snapshots array")
+    val meta = head(fs, tablePath).meta
+    require(meta.path("snapshots").isArray, "IcebergTable: no snapshots array")
     // `lineage` is the snapshot's position in the metadata array — the
     // COMMIT order. Timestamps have millisecond granularity, so two
     // commits in the same tick would sort nondeterministically by
     // (committed_at, random id); order by lineage instead.
-    val rows = (0 until snaps.size()).map { i =>
-      val s = snaps.get(i)
+    val rows = snapshotsOf(meta).zipWithIndex.map { case (s, i) =>
       org.apache.spark.sql.Row(
         i.toLong,
         new java.sql.Timestamp(s.get("timestamp-ms").asLong()),
@@ -3002,25 +2675,12 @@ object IcebergTable {
       snapshotId: Option[Long] = None): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(spark, new Path(tablePath))
-    val meta = readJson(fs, currentMetadataPath(fs, tablePath))
-    val snaps = meta.get("snapshots")
+    val meta = head(fs, tablePath).meta
     val wantId = snapshotId.getOrElse(meta.get("current-snapshot-id").asLong())
-    val snapNode = (0 until snaps.size()).map(snaps.get)
-      .find(_.get("snapshot-id").asLong() == wantId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"IcebergTable: snapshot $wantId not found (expired?)"))
-    def opt(r: GenericRecord, n: String): Option[AnyRef] =
-      if (r.getSchema.getField(n) == null) None else Option(r.get(n))
-    val rows = readAvro(fs, new Path(snapNode.get("manifest-list").asText()), conf).map { r =>
-      org.apache.spark.sql.Row(
-        r.get("manifest_path").toString,
-        r.get("manifest_length").asInstanceOf[Long],
-        opt(r, "partition_spec_id").map(_.asInstanceOf[Int]).getOrElse(0),
-        opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0),
-        opt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L),
-        opt(r, "min_sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L),
-        opt(r, "added_snapshot_id").map(_.asInstanceOf[Long]).getOrElse(wantId))
-    }
+    val snapNode = snapshotNode(meta, wantId).getOrElse(throw new IllegalArgumentException(
+      s"IcebergTable: snapshot $wantId not found (expired?)"))
+    val rows = manifestRefs(fs, conf, snapNode).map(m => org.apache.spark.sql.Row(
+      m.path, m.length, m.specId, m.content, m.sequence, m.minSequence, m.addedSnapshotId))
     val schema = StructType(Seq(
       StructField("path", StringType),
       StructField("length", LongType),
@@ -3044,7 +2704,7 @@ object IcebergTable {
       spark: SparkSession, tablePath: String,
       snapshotId: Option[Long] = None): DataFrame = {
     val fs = fsOf(spark, new Path(tablePath))
-    val meta = readJson(fs, currentMetadataPath(fs, tablePath))
+    val meta = head(fs, tablePath).meta
     val nameToId = fieldIdToName(meta).map(_.swap)
     val snap = snapshot(spark, tablePath, snapshotId)
     val rows =
@@ -3102,15 +2762,12 @@ object IcebergTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val table = new Path(tablePath)
     val fs = fsOf(spark, table)
-    val metaPath = currentMetadataPath(fs, tablePath)
-    val prevVersion = metaPath.getName.stripPrefix("v").stripSuffix(".metadata.json").toLong
-    val meta = readJson(fs, metaPath)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val h = head(fs, tablePath)
+    val meta = h.meta
     val currentId = meta.get("current-snapshot-id").asLong()
-    val snapsArr = meta.get("snapshots")
-    val all = (0 until snapsArr.size()).map(snapsArr.get)
-    def idOf(s: com.fasterxml.jackson.databind.JsonNode) = s.get("snapshot-id").asLong()
-    def tsOf(s: com.fasterxml.jackson.databind.JsonNode) = s.get("timestamp-ms").asLong()
+    val all = snapshotsOf(meta)
+    def idOf(s: JsonNode) = s.get("snapshot-id").asLong()
+    def tsOf(s: JsonNode) = s.get("timestamp-ms").asLong()
     val newestIds = all.sortBy(-tsOf(_)).take(retainLast).map(idOf).toSet
     // snapshots pinned by REFS (tags/branches) never expire — a tag is
     // exactly a retention promise
@@ -3124,13 +2781,11 @@ object IcebergTable {
     def q(p: String): String = fs.makeQualified(new Path(p)).toString
     // everything a snapshot reaches: its manifest list, the manifests
     // in it, and every file path those manifests carry (data + delete)
-    def reach(s: com.fasterxml.jackson.databind.JsonNode): (String, Seq[String], Seq[String]) = {
-      val list = q(s.get("manifest-list").asText())
-      val manifests = readAvro(fs, new Path(list), conf)
-        .map(r => q(r.get("manifest_path").toString))
+    def reach(s: JsonNode): (String, Seq[String], Seq[String]) = {
+      val manifests = manifestRefs(fs, conf, s).map(m => q(m.path))
       val files = manifests.flatMap(mp => readAvro(fs, new Path(mp), conf).map(r =>
         q(r.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString)))
-      (list, manifests, files)
+      (q(s.get("manifest-list").asText()), manifests, files)
     }
     val keepReach = keep.map(reach)
     val keepLists = keepReach.map(_._1).toSet
@@ -3143,15 +2798,8 @@ object IcebergTable {
     // publish the shrunk snapshot list FIRST, then reclaim
     val newSnaps = mapper.createArrayNode()
     keep.foreach(s => newSnaps.add(s))
-    meta.set[com.fasterxml.jackson.databind.node.ObjectNode]("snapshots", newSnaps)
-    meta.put("last-updated-ms", System.currentTimeMillis())
-    val newVersion = prevVersion + 1
-    val outPath = new Path(metadataDir(tablePath), s"v$newVersion.metadata.json")
-    val out = fs.create(outPath, false) // put-if-absent publish
-    try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(meta))
-    finally out.close()
-    val hint = fs.create(new Path(metadataDir(tablePath), "version-hint.text"), true)
-    try hint.write(newVersion.toString.getBytes("UTF-8")) finally hint.close()
+    meta.set[ObjectNode]("snapshots", newSnaps)
+    commitMetadata(fs, tablePath, Some(h), meta)
     delete.foreach(p => fs.delete(new Path(p), false))
     delete.size.toLong
   }

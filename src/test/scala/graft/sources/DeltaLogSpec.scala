@@ -2239,4 +2239,42 @@ class DeltaLogSpec extends SparkSpec {
     // and the upgraded table still reads + widens correctly
     assert(DeltaLog.read(spark, t).schema("i").dataType == LongType)
   }
+
+  test("an empty or unparsable _last_checkpoint falls back to listing the log") {
+    import spark.implicits._
+    val t = newTable()
+    (1L to 3L).foreach(i => DeltaLog.append(spark, t, Seq((i, "x")).toDF("id", "tag")))
+    assert(DeltaLog.writeCheckpoint(spark, t) == 2L)
+    DeltaLog.append(spark, t, Seq((4L, "y")).toDF("id", "tag"))
+    val logDir = s"$t/_delta_log"
+    Seq("", "{not json", """{"parts":2}""").foreach { text =>
+      Files.deleteIfExists(Paths.get(s"$logDir/._last_checkpoint.crc"))
+      Files.writeString(Paths.get(s"$logDir/_last_checkpoint"), text)
+      assert(DeltaLog.read(spark, t).count() == 4L, s"pointer '$text'")
+      assert(DeltaLog.snapshot(spark, t).files.size == 4, s"pointer '$text'")
+    }
+    // the checkpoint writer repoints it by temp + rename, leaving no temp file
+    assert(DeltaLog.writeCheckpoint(spark, t) == 3L)
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readString(Paths.get(s"$logDir/_last_checkpoint"))).get("version").asLong == 3L)
+    assert(!new java.io.File(logDir).list().exists(_.startsWith(".tmp-")))
+  }
+
+  test("writeCheckpointV2 on an in-commit-timestamp table: the upgrade commit carries its ICT") {
+    import spark.implicits._
+    val t = newTable()
+    DeltaLog.append(spark, t, Seq((1L, "a")).toDF("id", "tag"),
+      configuration = Map("delta.enableInCommitTimestamps" -> "true"))
+    assert(DeltaLog.writeCheckpointV2(spark, t) == 1L)
+    DeltaLog.append(spark, t, Seq((2L, "b")).toDF("id", "tag"))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val icts = (0L to 2L).map { v =>
+      val first = mapper.readTree(Files.readAllLines(Paths.get(
+        s"$t/_delta_log/" + f"$v%020d.json")).get(0))
+      assert(first.has("commitInfo"), s"commit $v must lead with commitInfo: $first")
+      first.get("commitInfo").get("inCommitTimestamp").asLong()
+    }
+    assert(icts == icts.sorted && icts.distinct.size == 3, icts.toString)
+    assert(DeltaLog.versionAtTimestamp(spark, t, icts(1)) == 1L)
+  }
 }

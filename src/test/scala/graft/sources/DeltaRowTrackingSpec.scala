@@ -413,4 +413,22 @@ class DeltaRowTrackingSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException](idsOf(t3))
       .getMessage.contains("half-configured"))
   }
+
+  test("restore re-adds files with the row ids the target version gave them") {
+    import spark.implicits._
+    val t = newTable()
+    DeltaLog.append(spark, t, df("a", 0, 4), rowTracking = true)
+    DeltaLog.append(spark, t, df("b", 4, 4))
+    assert(DeltaLog.compact(spark, t) >= 0)
+    def rows(v: Option[Long]) = DeltaLog.readWithRowIds(spark, t, v)
+      .select("id", "tag", "row_id", "row_commit_version")
+      .as[(Long, String, Long, Long)].collect().toSet
+    val atV0 = rows(Some(0L))
+    assert(atV0.size == 4)
+    val restored = DeltaLog.restore(spark, t, 0L)
+    assert(DeltaLog.snapshot(spark, t).files
+      .forall(f => f.baseRowId.isDefined && f.defaultRowCommitVersion.isDefined))
+    assert(rows(None) == atV0)
+    assert(rows(Some(restored)) == atV0)
+  }
 }

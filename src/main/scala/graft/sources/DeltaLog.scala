@@ -1402,11 +1402,22 @@ object DeltaLog {
   /** Land `bytes` at `target` by temp + rename: the content is written
     * fully off to the side under the hidden name `.tmp-<name>-<stamp>`
     * (no log or metadata pattern matches a crash orphan), so no reader
-    * ever sees a partial file. With `overwrite = false` the rename is
-    * the put-if-absent and false means `target` was taken (a lost
-    * race). With `overwrite = true` an existing `target` is replaced;
-    * where rename refuses an existing destination it is deleted first,
-    * so pointer readers must treat a missing pointer as "list".
+    * ever sees a partial file. With `overwrite = true` an existing
+    * `target` is replaced; where rename refuses an existing destination
+    * it is deleted first, so pointer readers must treat a missing
+    * pointer as "list".
+    *
+    * With `overwrite = false` it is a put-if-absent: false means
+    * `target` was taken (a lost race) and its bytes are left as they
+    * were. Only a filesystem whose rename refuses an existing
+    * destination atomically (HDFS) makes that atomic. Hadoop's own
+    * `LocalFileSystem` renames by `File.renameTo` (rename(2)), which
+    * replaces an existing file; Hive's `ProxyLocalFileSystem`, which
+    * serves `file:` when hive-exec is on the classpath, refuses one by
+    * its own `isFile` check first; object stores may replace. The
+    * `exists` check here, just before the rename, makes the refusal
+    * not depend on which of these is loaded; it narrows the race to
+    * that gap but does not close it.
     */
   private[sources] def landFile(
       fs: FileSystem, target: Path, bytes: Array[Byte], overwrite: Boolean): Boolean = {
@@ -1418,11 +1429,13 @@ object DeltaLog {
     } catch { case e: java.io.IOException => fs.delete(tmp, false); throw e }
     def move(): Boolean =
       try fs.rename(tmp, target) catch { case _: FileAlreadyExistsException => false }
-    val landed = move() || (overwrite && { fs.delete(target, false); move() })
+    val landed =
+      if (overwrite) move() || { fs.delete(target, false); move() }
+      else !fs.exists(target) && move()
     if (!landed) {
       fs.delete(tmp, false)
-      // rename refuses only when the destination exists (lost race)
-      // — anything else is a real IO failure and must surface
+      // a put-if-absent fails only when the destination exists (lost
+      // race); anything else is a real IO failure and must surface
       if (!fs.exists(target)) throw new java.io.IOException(
         s"rename to $target failed with no competing file present")
     }
@@ -1576,9 +1589,11 @@ object DeltaLog {
     * table under stamped names ([[stageAndMove]]); the commit then lands
     * through [[commitActions]], which writes the commit to a temp file
     * and RENAMES it into the version slot — the put-if-absent that makes
-    * the commit ATOMIC on filesystems with atomic rename (local, HDFS;
-    * object stores need a coordination service, exactly as the Delta
-    * protocol itself documents — out of scope here and guarded only by
+    * the commit ATOMIC where rename refuses an existing destination
+    * (HDFS; on the local filesystem an `exists` check before the rename
+    * narrows the race without closing it, see [[landFile]]; object
+    * stores need a coordination service, exactly as the Delta protocol
+    * itself documents — out of scope here and guarded only by
     * documentation). A lost race (the version file
     * already exists) retries at the next version: the already-moved
     * data files are referenced only by OUR commit line, so retrying the
@@ -3483,12 +3498,10 @@ object DeltaLog {
           Seq(commitInfoAction(ict))
         }
       val bytes = (ictLines ++ lines(version)).mkString("", "\n", "\n").getBytes("UTF-8")
-      val target = jsonPath(logDir, version)
-      if (fs.exists(target)) return false // already taken — skip the write
       // temp + rename (what Delta's own LogStore does on HDFS/local):
       // a failed write can never leave a truncated %020d.json in the
-      // log, and only the RENAME is the put-if-absent
-      landFile(fs, target, bytes, overwrite = false)
+      // log, and a taken version returns false
+      landFile(fs, jsonPath(logDir, version), bytes, overwrite = false)
     }
     // the floor version counts CHECKPOINTS too: after log cleanup the
     // JSON prefix is gone and the checkpoint is the only witness of

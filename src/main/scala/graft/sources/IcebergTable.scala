@@ -400,7 +400,7 @@ object IcebergTable {
   private def versionHint(dir: Path) = new Path(dir, "version-hint.text")
 
   /** A table's current metadata version and its JSON. */
-  private final case class Head(version: Long, meta: ObjectNode) {
+  private[sources] final case class Head(version: Long, meta: ObjectNode) {
     def formatVersion: Int = meta.get("format-version").asInt()
     def nextSequence: Long =
       (if (meta.has("last-sequence-number")) meta.get("last-sequence-number").asLong() else 0L) + 1
@@ -433,7 +433,7 @@ object IcebergTable {
     }
   }
 
-  private def head(fs: FileSystem, tablePath: String): Head = {
+  private[sources] def head(fs: FileSystem, tablePath: String): Head = {
     require(fs.exists(metadataDir(tablePath)),
       s"not an Iceberg table: no metadata/ under $tablePath")
     headOption(fs, tablePath).getOrElse(throw new IllegalArgumentException(
@@ -446,14 +446,16 @@ object IcebergTable {
     * snapshot node, under the table's current schema id and last
     * sequence number, and makes it current. Both files land by temp +
     * rename ([[DeltaLog.landFile]]): the metadata file put-if-absent,
-    * so a writer that lost the race for N+1 raises, and the hint by
-    * replacement (readers that find it missing or stale list or probe
-    * past it).
+    * so a writer that finds v(N+1) already there raises
+    * FileAlreadyExistsException and leaves it and the hint untouched
+    * (atomic only where rename refuses an existing destination; see
+    * landFile), and the hint by replacement (readers that find it
+    * missing or stale list or probe past it).
     */
-  private def commitMetadata(
+  private[sources] def commitMetadata(
       fs: FileSystem, tablePath: String, prev: Option[Head], newMeta: ObjectNode,
       snapshot: Option[NewSnapshot] = None): Unit = {
-    val now = System.currentTimeMillis()
+    val now = snapshot.fold(System.currentTimeMillis())(_.timestampMs)
     newMeta.put("last-updated-ms", now)
     snapshot.foreach { s =>
       newMeta.put("current-snapshot-id", s.id)
@@ -486,11 +488,13 @@ object IcebergTable {
     math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
 
   /** A snapshot a commit appends: its id, manifest list, summary
-    * (operation first) and, on row-lineage tables, first row id.
+    * (operation first), on row-lineage tables its first row id, and
+    * the clock its commit stamps as `timestamp-ms` and `last-updated-ms`.
     */
-  private final case class NewSnapshot(
+  private[sources] final case class NewSnapshot(
       id: Long, manifestList: String, operation: String,
-      summary: Map[String, String] = Map.empty, firstRowId: Option[Long] = None)
+      summary: Map[String, String] = Map.empty, firstRowId: Option[Long] = None,
+      timestampMs: Long = System.currentTimeMillis())
 
   private def readJson(fs: FileSystem, p: Path): JsonNode = {
     val in = fs.open(p)
@@ -1296,7 +1300,8 @@ object IcebergTable {
       partitionBy.map(c => c -> df.schema(c).dataType)
     fs.mkdirs(metadataDir(tablePath))
     val stamp = newStamp()
-    val dataFiles = stageFiles(fs, table, idDf, partitionBy, "part", stamp, data = true)
+    val dataFiles = stageFiles(fs, table, idDf, partitionBy, Nil, "part", stamp,
+      parquetFooterInfo(fs, _))
     val snapshotId = newSnapshotId()
     val newSeq = prev.fold(1L)(_.nextSequence)
     // per-file first_row_id blocks: contiguous above the table's
@@ -1313,13 +1318,14 @@ object IcebergTable {
           if (lineageActive) Some(first) else None) })
     val list = writeManifestList(fs, tablePath, fv, snapshotId, stamp,
       prevMeta.toSeq.flatMap(currentManifests(fs, conf, _)) :+ manifest)
+    val newSnap = NewSnapshot(snapshotId, list, "append", summary,
+      if (lineageActive) Some(rlBase) else None)
     val newMeta = dataMetadata(tablePath, prevMeta, fv, fields, lastColumnId, partitionBy,
-      schemaEvolved, newSeq,
+      schemaEvolved, newSeq, newSnap,
       newProperties =
         if (idCapable && prevMeta.isEmpty) Map(FieldIdsProperty -> "true") else Map.empty,
       nextRowId = if (lineageActive) Some(rlFirsts.last) else None)
-    commitMetadata(fs, tablePath, prev, newMeta, Some(NewSnapshot(snapshotId, list, "append",
-      summary, if (lineageActive) Some(rlBase) else None)))
+    commitMetadata(fs, tablePath, prev, newMeta, Some(newSnap))
     snapshotId
   }
 
@@ -1533,7 +1539,8 @@ object IcebergTable {
     val toStage =
       if (snap.fieldIdsWritten) withFieldIds(spark, packed, stageFields)
       else packed
-    val staged = stageFiles(fs, table, toStage, pby, "part", stamp, data = true)
+    val staged = stageFiles(fs, table, toStage, pby, Nil, "part", stamp,
+      parquetFooterInfo(fs, _))
     val snapshotId = newSnapshotId()
     val newSeq = h.nextSequence
     // v2 entry shape: the explicit content/sequence fields gate carried
@@ -1581,13 +1588,14 @@ object IcebergTable {
       }
     }
     val list = writeManifestList(fs, tablePath, fv, snapshotId, stamp, carried :+ added)
+    val newSnap = NewSnapshot(snapshotId, list, "replace",
+      firstRowId = if (lineage) Some(rlBase) else None)
     val newMeta = dataMetadata(tablePath, Some(meta), fv, fieldsCur,
       if (meta.has("last-column-id")) meta.get("last-column-id").asInt()
       else fieldsCur.map(_.id).max,
-      pby, schemaEvolved = false, newSeq,
+      pby, schemaEvolved = false, newSeq, newSnap,
       nextRowId = if (lineage) Some(rlFirsts.last) else None)
-    commitMetadata(fs, tablePath, Some(h), newMeta, Some(NewSnapshot(snapshotId, list, "replace",
-      firstRowId = if (lineage) Some(rlBase) else None)))
+    commitMetadata(fs, tablePath, Some(h), newMeta, Some(newSnap))
     snapshotId
   }
 
@@ -1603,44 +1611,46 @@ object IcebergTable {
 
   /** Write `df` through one staging dir and move its part files, in
     * path order, to `data/.../<prefix>-<stamp>-<i>.parquet` — the one
-    * landing path of every Iceberg writer. DATA files keep complete
-    * rows: Spark's partitionBy drops the partitioning columns from the
-    * files, so each `partitionBy` column is duplicated under a `__p_`
-    * alias that drives the Hive-style placement, and the files land in
-    * those dirs (alias stripped) with their footer bounds. DELETE files
-    * (`data = false`) are written by their `partitionBy` columns, land
-    * flat, and empty ones are dropped by footer row count. Driver work
-    * is O(new files): one footer read and one rename per file.
+    * landing path of every Iceberg writer. Rows split into files by
+    * `partitionBy` and `groupBy`, and `dirs` returns both columns'
+    * decoded values. A `partitionBy` column stays in the file's rows
+    * (Spark's partitionBy drops the columns it writes by, so it is
+    * staged under a `__p_` alias) and the file lands under its
+    * Hive-style dir; a `groupBy` column only splits files, so it is
+    * neither in the rows nor in the landing path. `footer` reads a
+    * file's row count and bounds; with `dropEmptyFiles` files of no
+    * rows are dropped. Driver work is O(new files): one footer read
+    * and one rename per file.
     */
   private def stageFiles(
       fs: FileSystem, table: Path, df: DataFrame, partitionBy: Seq[String],
-      prefix: String, stamp: String, data: Boolean): Seq[StagedFile] = {
+      groupBy: Seq[String], prefix: String, stamp: String,
+      footer: Path => (Long, Map[String, (Any, Any)]),
+      dropEmptyFiles: Boolean = false): Seq[StagedFile] = {
     val stage = new Path(table, s"_ice_stage_$stamp")
-    val stageBy = if (data) partitionBy.map("__p_" + _) else partitionBy
-    val out = if (data) partitionBy.foldLeft(df)((d, c) =>
-      d.withColumn("__p_" + c, org.apache.spark.sql.functions.col(c))) else df
+    val stageBy = partitionBy.map("__p_" + _) ++ groupBy
+    val out = partitionBy.foldLeft(df)((d, c) =>
+      d.withColumn("__p_" + c, org.apache.spark.sql.functions.col(c)))
     (if (stageBy.isEmpty) out.write else out.write.partitionBy(stageBy: _*))
       .parquet(stage.toString)
     val pattern = (stageBy.map(_ => "*") :+ "part-*.parquet").mkString("/")
     val stagePrefix = fs.makeQualified(stage).toString + "/"
-    def footer(p: Path): (Long, Map[String, (Any, Any)]) =
-      if (data) parquetFooterInfo(fs, p) else (DeltaLog.footerRowCount(fs, p), Map.empty)
     val staged = fs.globStatus(new Path(stage, pattern)).toSeq.map(_.getPath)
       .sortBy(_.toString).map(p => (p, footer(p)))
-      .filter { case (_, (records, _)) => data || records > 0L }
+      .filter { case (_, (records, _)) => !dropEmptyFiles || records > 0L }
       .zipWithIndex.map { case ((p, (records, bounds)), i) =>
         val qualified = fs.makeQualified(p).toString
         require(qualified.startsWith(stagePrefix),
           s"IcebergTable: stage-relative path resolution failed for $p")
         val segs = qualified.stripPrefix(stagePrefix).split('/').toSeq.dropRight(1)
-          .map(_.stripPrefix("__p_"))
-        val dirs = segs.map { s =>
+        val kept = segs.take(partitionBy.size).map(_.stripPrefix("__p_"))
+        val dirs = (kept ++ segs.drop(partitionBy.size)).map { s =>
           val Array(k, v) = s.split("=", 2)
           k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null else DeltaLog.unescapePathName(v))
         }.toMap
-        require(dirs.keySet == partitionBy.toSet,
+        require(dirs.keySet == (partitionBy ++ groupBy).toSet,
           s"IcebergTable: unexpected partition layout under $p")
-        val rel = (("data" +: (if (data) segs else Nil)) :+ s"$prefix-$stamp-$i.parquet")
+        val rel = (("data" +: kept) :+ s"$prefix-$stamp-$i.parquet")
           .mkString("/")
         val dest = new Path(table, rel)
         fs.mkdirs(dest.getParent)
@@ -1651,6 +1661,12 @@ object IcebergTable {
     fs.delete(stage, true)
     staged
   }
+
+  /** A delete file's footer as [[stageFiles]] reads it: the row count
+    * alone (deletes carry no bounds).
+    */
+  private def footerRows(fs: FileSystem): Path => (Long, Map[String, (Any, Any)]) =
+    p => (DeltaLog.footerRowCount(fs, p), Map.empty)
 
   /** A partition tuple as the manifest's typed `partition` record
     * values: integral columns as Integer/Long, the rest as strings.
@@ -1840,15 +1856,15 @@ object IcebergTable {
   /** The table metadata a DATA snapshot (append / replace) commits
     * over, rebuilt from the writer's fields: prior snapshots, schemas,
     * properties and refs carry forward, and an add-column evolution
-    * publishes its schema under a BUMPED schema id. The new snapshot
-    * itself, `current-snapshot-id` and `last-updated-ms` are set by
-    * [[commitMetadata]]. A lineage table's `next-row-id` advances to
+    * publishes its schema under a BUMPED schema id. `snapshot` is
+    * current and stamps `last-updated-ms`; [[commitMetadata]] appends
+    * its node. A lineage table's `next-row-id` advances to
     * `nextRowId`, or carries (the mark must never regress or vanish).
     */
   private def dataMetadata(
       tablePath: String, prevMeta: Option[JsonNode], fv: Int, fields: Seq[IceField],
       lastColumnId: Int, partitionBy: Seq[String], schemaEvolved: Boolean, newSeq: Long,
-      newProperties: Map[String, String] = Map.empty,
+      snapshot: NewSnapshot, newProperties: Map[String, String] = Map.empty,
       nextRowId: Option[Long] = None): ObjectNode = {
     val meta = mapper.createObjectNode()
     meta.put("format-version", fv)
@@ -1858,7 +1874,7 @@ object IcebergTable {
     meta.put("table-uuid",
       prevMeta.map(_.get("table-uuid").asText()).getOrElse(java.util.UUID.randomUUID().toString))
     meta.put("location", tablePath)
-    meta.put("last-updated-ms", 0L) // stamped at commit; the key keeps its place
+    meta.put("last-updated-ms", snapshot.timestampMs)
     meta.put("last-column-id", lastColumnId)
     // defaults carry by field id into every rebuilt schema json — an
     // append must not strip what addColumn declared
@@ -1915,7 +1931,7 @@ object IcebergTable {
     prevMeta.map(_.get("refs")).filter(r => r != null && r.isObject).foreach { r =>
       meta.set[JsonNode]("refs", r.deepCopy())
     }
-    meta.put("current-snapshot-id", -1L) // repointed at commit; the key keeps its place
+    meta.put("current-snapshot-id", snapshot.id)
     val snaps = meta.putArray("snapshots")
     prevMeta.foreach(m => snapshotsOf(m).foreach(snaps.add))
     meta
@@ -2072,9 +2088,10 @@ object IcebergTable {
       .orderBy("file_path", "pos")
     val ptypes = snap.partitionColumns.map(c => c -> snap.schema(c).dataType)
     val (stamp, snapshotId, seq) = (newStamp(), newSnapshotId(), h.nextSequence)
-    commitDeletes(fs, conf, tablePath, h, ptypes, stamp, snapshotId,
+    commitDeletes(fs, conf, tablePath, h, ptypes, stamp, snapshotId, seq,
       math.max(2, h.formatVersion),
-      stageFiles(fs, table, matches, Seq("__pt"), "delete", stamp, data = false).map(sf =>
+      stageFiles(fs, table, matches, Nil, Seq("__pt"), "delete", stamp, footerRows(fs),
+        dropEmptyFiles = true).map(sf =>
         Entry(1, Some(snapshotId), seq, 1, sf.path, "PARQUET", sf.records, sf.len,
           typedTuple(tuples(sf.dirs("__pt").toInt), ptypes))))
   }
@@ -2131,9 +2148,10 @@ object IcebergTable {
       if (partitionScope.isEmpty) Seq.empty
       else snap.partitionColumns.map(c => c -> snap.schema(c).dataType)
     val (stamp, snapshotId, seq) = (newStamp(), newSnapshotId(), h.nextSequence)
-    commitDeletes(fs, conf, tablePath, h, ptypes, stamp, snapshotId,
+    commitDeletes(fs, conf, tablePath, h, ptypes, stamp, snapshotId, seq,
       math.max(2, h.formatVersion),
-      stageFiles(fs, table, keyedOut, Nil, "eqdelete", stamp, data = false).map(sf =>
+      stageFiles(fs, table, keyedOut, Nil, Nil, "eqdelete", stamp, footerRows(fs),
+        dropEmptyFiles = true).map(sf =>
         Entry(1, Some(snapshotId), seq, 2, sf.path, "PARQUET", sf.records, sf.len,
           typedTuple(partitionScope, ptypes), equalityIds = ids)))
   }
@@ -2237,12 +2255,12 @@ object IcebergTable {
         dvEntry(2, oldSeq, p, 0L, fid, off, size, 0L)
       }
     }
-    commitDeletes(fs, conf, tablePath, h, ptypes, stamp, snapshotId, formatVersion = 3,
+    commitDeletes(fs, conf, tablePath, h, ptypes, stamp, snapshotId, newSeq, formatVersion = 3,
       added ++ replaced)
   }
 
   /** Commit a DELETE snapshot: one `manifest-del-<stamp>.avro` of
-    * `entries` (the v2 entry shape) at the next sequence number, the
+    * `entries` (the v2 entry shape) at sequence number `seq`, the
     * current snapshot's manifests carried forward in a v2 list, and
     * the metadata upgraded in place to `formatVersion` — v2 for
     * parquet deletes, v3 for deletion vectors, never a downgrade (a v1
@@ -2252,10 +2270,9 @@ object IcebergTable {
     */
   private def commitDeletes(
       fs: FileSystem, conf: org.apache.hadoop.conf.Configuration, tablePath: String,
-      h: Head, ptypes: Seq[(String, DataType)], stamp: String, snapshotId: Long,
+      h: Head, ptypes: Seq[(String, DataType)], stamp: String, snapshotId: Long, seq: Long,
       formatVersion: Int, entries: Seq[Entry]): Long = {
     if (entries.isEmpty) return -1L
-    val seq = h.nextSequence
     val manifest = writeManifest(fs, tablePath, s"manifest-del-$stamp.avro",
       entrySchema(ptypes, v2 = true), content = 1, seq, snapshotId, entries)
     val list = writeManifestList(fs, tablePath, fv = 2, snapshotId, stamp,

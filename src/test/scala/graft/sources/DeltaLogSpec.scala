@@ -2260,6 +2260,22 @@ class DeltaLogSpec extends SparkSpec {
     assert(!new java.io.File(logDir).list().exists(_.startsWith(".tmp-")))
   }
 
+  test("landFile without overwrite refuses a taken target and leaves its bytes in place") {
+    val dir = Files.createTempDirectory("graft-land")
+    val target = new org.apache.hadoop.fs.Path(dir.resolve("v1.json").toUri)
+    // Hadoop's own local filesystem, whose rename (File.renameTo)
+    // replaces an existing file: the put-if-absent must refuse before
+    // it gets there
+    val fs = new org.apache.hadoop.fs.LocalFileSystem()
+    fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(DeltaLog.landFile(fs, target, "first".getBytes("UTF-8"), overwrite = false))
+    assert(!DeltaLog.landFile(fs, target, "second".getBytes("UTF-8"), overwrite = false))
+    assert(Files.readString(dir.resolve("v1.json")) == "first")
+    assert(DeltaLog.landFile(fs, target, "third".getBytes("UTF-8"), overwrite = true))
+    assert(Files.readString(dir.resolve("v1.json")) == "third")
+    assert(!dir.toFile.list().exists(_.startsWith(".tmp-")))
+  }
+
   test("writeCheckpointV2 on an in-commit-timestamp table: the upgrade commit carries its ICT") {
     import spark.implicits._
     val t = newTable()

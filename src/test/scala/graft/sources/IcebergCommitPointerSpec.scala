@@ -48,4 +48,27 @@ class IcebergCommitPointerSpec extends SparkSpec {
     IcebergTable.append(spark, t, Seq((3L, "c")).toDF("id", "tag"))
     assert(IcebergTable.read(spark, t).count() == 3L)
   }
+
+  test("a commit over an already-present v(N+1).metadata.json raises and leaves it in place") {
+    import spark.implicits._
+    val t = newTable()
+    IcebergTable.append(spark, t, Seq((1L, "a")).toDF("id", "tag"))
+    // Hadoop's own local filesystem, whose rename replaces an existing file
+    val fs = new org.apache.hadoop.fs.LocalFileSystem()
+    fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    // writer A reads head 1; writer B then commits v2
+    val stale = IcebergTable.head(fs, t)
+    val s2 = IcebergTable.append(spark, t, Seq((2L, "b")).toDF("id", "tag"))
+    val v2 = Paths.get(s"$t/metadata/v2.metadata.json")
+    val v2Bytes = Files.readAllBytes(v2)
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      IcebergTable.commitMetadata(fs, t, Some(stale), stale.meta.deepCopy())
+    }
+    assert(Files.readAllBytes(v2).sameElements(v2Bytes), "B's v2 must survive A's lost race")
+    assert(Files.readString(Paths.get(s"$t/metadata/version-hint.text")) == "2")
+    assert(IcebergTable.snapshotsTable(spark, t).select("snapshot_id").as[Long]
+      .collect().last == s2)
+    assert(IcebergTable.read(spark, t).count() == 2L)
+    assert(!new java.io.File(s"$t/metadata").list().exists(_.startsWith(".tmp-")))
+  }
 }

@@ -842,16 +842,19 @@ object DeltaLog {
                 "(single-writer contract violated)")
         }
       }
-      lines(v) ++ rowIds.filter(_.counts.nonEmpty).map { r =>
-        jsonLine { root =>
-          val d = root.putObject("domainMetadata")
-          d.put("domain", "delta.rowTracking")
-          d.put("configuration",
-            s"""{"rowIdHighWaterMark":${r.mark.getOrElse(-1L) + r.counts.sum}}""")
-          d.put("removed", false)
-        }
-      }
+      lines(v) ++ rowIds.filter(_.counts.nonEmpty).map(r =>
+        rowTrackingDomainAction(r.mark.getOrElse(-1L) + r.counts.sum))
     }, withIct)
+  }
+
+  /** The `delta.rowTracking` domainMetadata action setting the row-id
+    * high-water mark to `mark`.
+    */
+  private def rowTrackingDomainAction(mark: Long): String = jsonLine { root =>
+    val d = root.putObject("domainMetadata")
+    d.put("domain", "delta.rowTracking")
+    d.put("configuration", s"""{"rowIdHighWaterMark":$mark}""")
+    d.put("removed", false)
   }
 
   /** One replay of a [[LogSegment]], on the driver: its version, the
@@ -2524,7 +2527,11 @@ object DeltaLog {
     * directory). Deletion-vector descriptors re-anchor as
     * absolute-path (`p`) descriptors so DV decode keeps working from
     * the clone; stats and partition values carry verbatim, so data
-    * skipping works immediately. Time-travel base: `versionAsOf`
+    * skipping works immediately. A row-tracked source's `baseRowId`/
+    * `defaultRowCommitVersion` carry verbatim too, with its
+    * `delta.rowTracking` high-water mark, so the clone reads the
+    * source's row ids and its own appends allocate above them.
+    * Time-travel base: `versionAsOf`
     * clones a historical source version. Returns the clone's version
     * (always 0).
     *
@@ -2559,10 +2566,12 @@ object DeltaLog {
         else d.copy(storageType = "p",
           pathOrInlineDv = srcFs.makeQualified(d.absolutePath(sourcePath)).toString))
       addAction(f.copy(path = abs, dv = dv), f.partitionValues.keys.toSeq,
-        modificationTime = 0L, dataChange = true)
+        modificationTime = 0L, dataChange = true,
+        rowIds = for (b <- f.baseRowId; v <- f.defaultRowCommitVersion) yield (b, v))
     }
+    val markLine = snap.rowIdHighWaterMark.map(rowTrackingDomainAction).toSeq
     commitActions(fs, logDir, targetPath,
-      _ => Seq(protocolLine, metaLine) ++ addLines,
+      _ => Seq(protocolLine, metaLine) ++ addLines ++ markLine,
       withIct = ictEnabled(snap.configuration))
   }
 
@@ -2959,14 +2968,23 @@ object DeltaLog {
     * Delta itself computes for versions without change files: rows in
     * `toVersion` but not `fromVersion` surface as `_change_type =
     * 'insert'`, the reverse as `'delete'` (an update is its
-    * delete+insert pair; rows rewritten unchanged cancel out in the
+    * delete+insert pair; rows rewritten unchanged cancel out, as in a
     * multiset EXCEPT ALL).
     *
-    * Scale shape: only the files whose (path, deletion-vector)
-    * identity CHANGED between the versions are read — an append-only
-    * step diffs just the new files and the EXCEPT ALL against an
-    * empty other side collapses to a pass-through; a merge/delete
-    * step reads the rewritten files, never the untouched ones.
+    * Two sources, one tail ([[netChanges]]):
+    *  - with the change data feed on and every commit in the range
+    *    derivable, the commits' change frames union ONCE and each row
+    *    is tagged +1 (`insert`, `update_postimage`) or −1 (`delete`,
+    *    `update_preimage`); rows of any other `_change_type` drop.
+    *    Every `_change_data` file is scanned once.
+    *  - otherwise (an underivable commit, e.g. a restore or versions
+    *    before the feed was enabled) only the files whose (path,
+    *    deletion-vector) identity CHANGED between the versions are
+    *    read: the `toVersion` side +1, the `fromVersion` side −1. The
+    *    two sides are different files (or one path under two DVs), so
+    *    they stay two scans. An append-only step diffs just the new
+    *    files; a merge/delete step reads the rewritten files, never
+    *    the untouched ones.
     */
   def diffVersions(
       spark: SparkSession, tablePath: String,
@@ -2980,26 +2998,17 @@ object DeltaLog {
         s"(version $fromVersion and $toVersion declare different schemas)")
     val declared = sb.schema.getOrElse(throw new IllegalArgumentException(
       s"DeltaLog: diffVersions needs a parseable metaData.schemaString at $tablePath"))
-    def key(f: DeltaFile) = (f.path, f.dv)
-    val aKeys = sa.files.map(key).toSet
-    val bKeys = sb.files.map(key).toSet
-    // CHANGE-DATA-FEED preference (r13 verdict item 7): when the table
-    // materializes cdc actions, the net diff comes from the (small)
-    // `_change_data` files + derivable append/delete commits instead
-    // of rescanning every rewritten data file — the protocol's answer
-    // for frequent small changes. Ranges with an underivable commit
-    // (e.g. a restore, or versions before CDF was enabled) fall back
-    // to the file-level recompute below, which is always correct.
+    val cols = declared.fieldNames.map(col).toSeq
     if (cdfEnabled(sb)) {
       cdfFrames(spark, tablePath, fromVersion, toVersion, sb, declared) match {
         case Right(frames) if frames.nonEmpty =>
-          val all = frames.reduce(_.unionByName(_))
-          val cols = declared.fieldNames.map(col).toSeq
-          val ins = all.filter(col("_change_type").isin("insert", "update_postimage"))
-            .select(cols: _*)
-          val del = all.filter(col("_change_type").isin("delete", "update_preimage"))
-            .select(cols: _*)
-          return netChanges(ins, del, declared)
+          val ct = col("_change_type")
+          val w = when(ct.isin("insert", "update_postimage"), lit(1L))
+            .when(ct.isin("delete", "update_preimage"), lit(-1L))
+          return netChanges(
+            frames.reduce(_.unionByName(_)).select(cols :+ w.as("_w"): _*)
+              .filter(col("_w").isNotNull),
+            declared)
         case Right(_) =>
           return spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], declared)
@@ -3007,37 +3016,36 @@ object DeltaLog {
         case Left(_) => () // fall through to the file-diff recompute
       }
     }
-    val onlyA = sa.files.filterNot(f => bKeys(key(f)))
-    val onlyB = sb.files.filterNot(f => aKeys(key(f)))
-    def rowsOf(snap: Snapshot, subset: Seq[DeltaFile]): DataFrame =
-      if (subset.exists(_.dv.isDefined))
-        readWithDv(spark, tablePath, snap.copy(files = subset))
-      else readSnapshotFiles(spark, tablePath, snap.copy(files = subset), subset,
-        addFileColumn = false).select(declared.fieldNames.map(col).toSeq: _*)
-    val before = rowsOf(sa, onlyA)
-    val after = rowsOf(sb, onlyB)
-    netChanges(after, before, declared)
+    def key(f: DeltaFile) = (f.path, f.dv)
+    val aKeys = sa.files.map(key).toSet
+    val bKeys = sb.files.map(key).toSet
+    def signedRows(snap: Snapshot, subset: Seq[DeltaFile], w: Long): DataFrame = {
+      val rows =
+        if (subset.exists(_.dv.isDefined))
+          readWithDv(spark, tablePath, snap.copy(files = subset))
+        else readSnapshotFiles(spark, tablePath, snap.copy(files = subset), subset,
+          addFileColumn = false)
+      rows.select(cols :+ lit(w).as("_w"): _*)
+    }
+    netChanges(
+      signedRows(sb, sb.files.filterNot(f => aKeys(key(f))), 1L)
+        .unionByName(signedRows(sa, sa.files.filterNot(f => bKeys(key(f))), -1L)),
+      declared)
   }
 
-  /** Both directions of a net row diff in ONE aggregation. Spark plans
-    * each `exceptAll` as a ±1-tagged union + sum-of-multiplicities
-    * aggregate (`RewriteExceptAll`), so the insert/delete pair —
-    * `ins.exceptAll(del) UNION del.exceptAll(ins)` — costs two
-    * exchanges and evaluates BOTH inputs twice. Tagging once and
-    * keeping the signed net instead halves both: one exchange, one
-    * pass over each input; rows with |net| > 1 re-emit through
-    * `explode(sequence)` — exactly `exceptAll`'s multiset semantics
-    * (max(count_a − count_b, 0) copies per distinct row, tagged by the
-    * surviving side). Row-for-row equal to the former shape; only the
-    * unsorted row ORDER differs (insert/delete rows interleave instead
-    * of concatenating), which every consumer sorts away.
+  /** The net of ±1-weighted rows (`declared` columns plus `_w`) in ONE
+    * aggregation: the signed sum per distinct row, rows whose sum is 0
+    * dropped, and |net| copies of the rest re-emitted through
+    * `explode(sequence)`, tagged `insert` when the sum is positive and
+    * `delete` when negative. That is `exceptAll`'s multiset semantics in
+    * both directions (max(count_a − count_b, 0) copies per distinct
+    * row) with one exchange, where `ins.exceptAll(del) UNION
+    * del.exceptAll(ins)` plans two and evaluates each input twice. Rows
+    * come out unordered; every consumer sorts.
     */
-  private def netChanges(
-      ins: DataFrame, del: DataFrame, declared: StructType): DataFrame = {
+  private def netChanges(weighted: DataFrame, declared: StructType): DataFrame = {
     val cols = declared.fieldNames.map(col).toSeq
-    val tagged = ins.select(cols: _*).withColumn("_w", lit(1L))
-      .unionByName(del.select(cols: _*).withColumn("_w", lit(-1L)))
-    tagged.groupBy(cols: _*).agg(sum(col("_w")).as("_net"))
+    weighted.groupBy(cols: _*).agg(sum(col("_w")).as("_net"))
       .filter(col("_net") =!= 0L)
       .withColumn("_dup", explode(sequence(lit(1L), abs(col("_net")))))
       .select(cols :+

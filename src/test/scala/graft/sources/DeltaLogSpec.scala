@@ -961,6 +961,30 @@ class DeltaLogSpec extends SparkSpec {
       d.mkString(", "))
   }
 
+  test("diffVersions scans each change file once: one file scan per change-feed commit, two for the file diff") {
+    import spark.implicits._
+    def scans(df: org.apache.spark.sql.DataFrame) =
+      graft.PlanProbe.fileScans(df.queryExecution.executedPlan).size
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    val want = Set((1L, "a", "delete"), (1L, "a2", "insert"), (3L, "c", "insert"))
+    val t = newTable()
+    DeltaLog.append(spark, t, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"),
+      configuration = Map("delta.enableChangeDataFeed" -> "true"))
+    DeltaLog.merge(spark, t, Seq((1L, "a2"), (3L, "c")).toDF("id", "tag"), Seq("id"))
+    val feed = DeltaLog.diffVersions(spark, t, 0L, 1L)
+    assert(scans(feed) == 1, feed.queryExecution.executedPlan.toString)
+    assert(rows(feed) == want)
+    // without the feed the range recomputes from the rewritten files:
+    // the old and the new side are different files, so two scans
+    val t2 = newTable()
+    DeltaLog.append(spark, t2, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
+    DeltaLog.merge(spark, t2, Seq((1L, "a2"), (3L, "c")).toDF("id", "tag"), Seq("id"))
+    val recomputed = DeltaLog.diffVersions(spark, t2, 0L, 1L)
+    assert(scans(recomputed) == 2, recomputed.queryExecution.executedPlan.toString)
+    assert(rows(recomputed) == want)
+  }
+
   test("timestamp travel: the newest commit at-or-before the instant wins") {
     import spark.implicits._
     val t = newTable()

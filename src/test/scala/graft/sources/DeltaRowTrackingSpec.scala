@@ -431,4 +431,27 @@ class DeltaRowTrackingSpec extends SparkSpec {
     assert(rows(None) == atV0)
     assert(rows(Some(restored)) == atV0)
   }
+
+  test("shallow clone carries row ids and the high-water mark; its appends allocate above them") {
+    import spark.implicits._
+    val src = newTable()
+    DeltaLog.append(spark, src, df("a", 0, 4), rowTracking = true)
+    DeltaLog.append(spark, src, df("b", 4, 3))
+    DeltaLog.append(spark, src, df("c", 7, 2))
+    def rows(t: String, v: Option[Long] = None) = DeltaLog.readWithRowIds(spark, t, v)
+      .select("id", "tag", "row_id", "row_commit_version")
+      .as[(Long, String, Long, Long)].collect().toSet
+    val atV1 = rows(src, Some(1L))
+    val clone = newTable()
+    assert(DeltaLog.shallowClone(spark, src, clone, versionAsOf = Some(1L)) == 0L)
+    assert(DeltaLog.snapshot(spark, clone).rowIdHighWaterMark ==
+      DeltaLog.snapshot(spark, src, Some(1L)).rowIdHighWaterMark)
+    assert(rows(clone) == atV1)
+    DeltaLog.append(spark, clone, df("d", 100, 5))
+    val after = rows(clone)
+    val fresh = after.filter(_._2 == "d").map(_._3)
+    assert(fresh.size == 5)
+    assert(fresh.min > atV1.map(_._3).max, s"fresh ids $fresh must lie above ${atV1.map(_._3)}")
+    assert(after.toSeq.map(_._3).distinct.size == after.size, "no row id repeats")
+  }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -358,7 +358,7 @@ object DeltaLog {
   private def checkpointActions(
       spark: SparkSession, version: Long, ref: CheckpointRef, logDir: Path): DataFrame = {
     val paths = ref.paths
-    // Footers read DRIVER-side (metadata-sized, the statsJson idiom):
+    // Footers read DRIVER-side (metadata-sized, as Landing reads them):
     // the malformed-checkpoint guard needs the files' PHYSICAL schema —
     // a declared read schema would null-fill a missing protocol/
     // metaData column, exactly the guard bypass the r11 verdict
@@ -1402,49 +1402,6 @@ object DeltaLog {
       readWithDv(spark, tablePath, snap.copy(files = files), keepFile = addFileColumn)
     else readSnapshotFiles(spark, tablePath, snap, files, addFileColumn = addFileColumn)
 
-  /** Land `bytes` at `target` by temp + rename: the content is written
-    * fully off to the side under the hidden name `.tmp-<name>-<stamp>`
-    * (no log or metadata pattern matches a crash orphan), so no reader
-    * ever sees a partial file. With `overwrite = true` an existing
-    * `target` is replaced; where rename refuses an existing destination
-    * it is deleted first, so pointer readers must treat a missing
-    * pointer as "list".
-    *
-    * With `overwrite = false` it is a put-if-absent: false means
-    * `target` was taken (a lost race) and its bytes are left as they
-    * were. Only a filesystem whose rename refuses an existing
-    * destination atomically (HDFS) makes that atomic. Hadoop's own
-    * `LocalFileSystem` renames by `File.renameTo` (rename(2)), which
-    * replaces an existing file; Hive's `ProxyLocalFileSystem`, which
-    * serves `file:` when hive-exec is on the classpath, refuses one by
-    * its own `isFile` check first; object stores may replace. The
-    * `exists` check here, just before the rename, makes the refusal
-    * not depend on which of these is loaded; it narrows the race to
-    * that gap but does not close it.
-    */
-  private[sources] def landFile(
-      fs: FileSystem, target: Path, bytes: Array[Byte], overwrite: Boolean): Boolean = {
-    val tmp = new Path(target.getParent,
-      s".tmp-${target.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      val out = fs.create(tmp, true)
-      try out.write(bytes) finally out.close()
-    } catch { case e: java.io.IOException => fs.delete(tmp, false); throw e }
-    def move(): Boolean =
-      try fs.rename(tmp, target) catch { case _: FileAlreadyExistsException => false }
-    val landed =
-      if (overwrite) move() || { fs.delete(target, false); move() }
-      else !fs.exists(target) && move()
-    if (!landed) {
-      fs.delete(tmp, false)
-      // a put-if-absent fails only when the destination exists (lost
-      // race); anything else is a real IO failure and must surface
-      if (!fs.exists(target)) throw new java.io.IOException(
-        s"rename to $target failed with no competing file present")
-    }
-    landed
-  }
-
   /** One checkpoint row carrying the given actions, null elsewhere. */
   private def checkpointRow(actions: (String, Row)*): Row = {
     val byName = actions.toMap
@@ -1534,7 +1491,7 @@ object DeltaLog {
     val (files, rest) = checkpointRows(r)
     val rows = rest ++ files
     writeCheckpointFile(spark, fs, tablePath, rows, 6, checkpointPath(logDir, r.version))
-    landFile(fs, new Path(logDir, "_last_checkpoint"),
+    Landing.landFile(fs, new Path(logDir, "_last_checkpoint"),
       s"""{"version":${r.version},"size":${rows.size}}""".getBytes("UTF-8"), overwrite = true)
     r.version
   }
@@ -1581,7 +1538,7 @@ object DeltaLog {
       Row(sidecarName, sidecarStat.getLen, sidecarStat.getModificationTime, null))
     writeCheckpointFile(spark, fs, tablePath, rows, 8,
       new Path(logDir, f"${r.version}%020d.checkpoint.$uuid.parquet"))
-    landFile(fs, new Path(logDir, "_last_checkpoint"),
+    Landing.landFile(fs, new Path(logDir, "_last_checkpoint"),
       s"""{"version":${r.version},"size":${rows.size + files.size}}""".getBytes("UTF-8"),
       overwrite = true)
     r.version
@@ -1589,15 +1546,14 @@ object DeltaLog {
 
   /** APPEND-ONLY writer twin: land `df` as one new protocol commit.
     * Data files are written through a staging dir and moved into the
-    * table under stamped names ([[stageAndMove]]); the commit then lands
+    * table under stamped names ([[Landing.land]]); the commit then lands
     * through [[commitActions]], which writes the commit to a temp file
     * and RENAMES it into the version slot — the put-if-absent that makes
-    * the commit ATOMIC where rename refuses an existing destination
-    * (HDFS; on the local filesystem an `exists` check before the rename
-    * narrows the race without closing it, see [[landFile]]; object
+    * the commit ATOMIC on the local filesystem and where rename refuses
+    * an existing destination (HDFS), see [[Landing.landFile]]; object
     * stores need a coordination service, exactly as the Delta protocol
     * itself documents — out of scope here and guarded only by
-    * documentation). A lost race (the version file
+    * documentation. A lost race (the version file
     * already exists) retries at the next version: the already-moved
     * data files are referenced only by OUR commit line, so retrying the
     * commit alone is safe; any OTHER IO failure (permissions, disk
@@ -1819,7 +1775,7 @@ object DeltaLog {
     // mark gives the allocator no floor — fresh ids could collide
     // with burned ones, so refuse rather than corrupt the identities
     // the feature exists for (and refuse with nothing staged: the r16
-    // placement fired after stageAndMove and left orphaned
+    // placement fired after the landing and left orphaned
     // uncommitted parquet in the table on refusal)
     val rtMark: Option[Long] = existingSnap.flatMap(_.rowIdHighWaterMark)
     require(!rtEnabled || rtMark.isDefined || existingSnap.forall(_.files.isEmpty),
@@ -1829,14 +1785,11 @@ object DeltaLog {
     val physDf = mapSnap.fold(dfIn)(s => toPhysical(spark, s, dfIn))
     val physBy = mapSnap.fold(partitionBy)(s => partitionBy.map(s.pvKey))
     // partitionValues keyed physical for mapped tables (spec)
-    val moved = stageAndMove(fs, table, physDf, physBy, "part")
+    val moved = Landing.land(fs, table, physDf, "part", partitionBy = physBy)
     identityPin.foreach(_.unpersist(blocking = false))
-    // row counts from the just-moved parquet footers — the allocation
-    // input for both high-water marks (row tracking + identity)
-    val movedCounts: Seq[Long] =
-      if (rtEnabled || identityState.isDefined)
-        moved.map(m => footerRowCount(fs, new Path(table, m.rel)))
-      else Seq.empty
+    // row counts from the landed files' footers — the allocation input
+    // for both high-water marks (row tracking + identity)
+    val movedCounts: Seq[Long] = moved.map(_.stats.rows)
     // the identity mark advances in THIS commit's metaData (field
     // metadata, per the protocol) — emitted via the evolution path.
     // An add-column evolution already rebuilt declaredSchema as the
@@ -1897,7 +1850,7 @@ object DeltaLog {
         "delta.columnMapping.mode" -> columnMapping,
         "delta.columnMapping.maxColumnId" -> declaredSchema.size.toString)))
     val rowIds = if (rtEnabled) Some(RowIdBlock(rtMark, movedCounts)) else None
-    val adds = landedAdds(fs, table, physBy, moved, dataChange = true, rowIds)
+    val adds = landedAdds(physBy, moved, dataChange = true, rowIds)
     val version = commitWithRowIds(spark, fs, logDir, tablePath, "append", rowIds,
         withIct = ictEnabled(if (tableExists) carryConfig else configuration)) { v =>
       (if (v == 0L) Seq(protocolLine, metaLine)
@@ -1992,7 +1945,7 @@ object DeltaLog {
     * shortest decimal, which as a double misses the float's value
     * (0.7f reads back as 0.699999988): a double bound spans both
     * readings. Decimal columns are unbounded: logs written before
-    * `statsJson` scaled them record the unscaled integer.
+    * the writer scaled them record the unscaled integer.
     */
   private def statsBounds(
       f: DeltaFile, statsKey: String => String): (String, DataType) => Option[(Any, Any)] = {
@@ -2167,7 +2120,7 @@ object DeltaLog {
   }
 
   /** Partition columns under their on-disk (physical) names — what
-    * [[stageAndMove]] must partition the staged write by so the
+    * [[Landing.land]] must partition the staged write by so the
     * returned partitionValues come back keyed exactly as
     * `add.partitionValues` requires.
     */
@@ -2248,8 +2201,8 @@ object DeltaLog {
   private def stageCdc(
       spark: SparkSession, fs: FileSystem, table: Path, snap: Snapshot,
       changes: DataFrame): Seq[String] = {
-    stageAndMove(fs, table, toPhysical(spark, snap, changes),
-        physPartitionBy(snap), "cdc", dropEmptyFiles = true, dir = "_change_data")
+    Landing.land(fs, table, toPhysical(spark, snap, changes), "cdc", dir = "_change_data",
+        partitionBy = physPartitionBy(snap), dropEmptyFiles = true)
       .map(l => cdcAction(encodePath(l.rel), physPartitionBy(snap), l.partitionValues, l.size))
   }
 
@@ -2338,8 +2291,8 @@ object DeltaLog {
     // writer-enforced rules verify over the NEW rows only (survivors
     // of the rewrite already satisfied them when first written)
     enforceWriteRules(snap, updates, "merge")
-    val moved = stageAndMove(fs, table, toPhysical(spark, snap, newData),
-      physPartitionBy(snap), "part-m", dropEmptyFiles = true)
+    val moved = Landing.land(fs, table, toPhysical(spark, snap, newData), "part-m",
+      partitionBy = physPartitionBy(snap), dropEmptyFiles = true)
     // CHANGE DATA FEED: matched live rows are update pre/post image
     // pairs, unmatched update keys are inserts — materialized into
     // `_change_data/` so a CDF reader never rescans the rewrite
@@ -2642,8 +2595,8 @@ object DeltaLog {
         .unionByName(ins)
     // writer-enforced rules verify over the NEW rows only
     enforceWriteRules(snap, ins, "applyChanges")
-    val moved = stageAndMove(fs, table, toPhysical(spark, snap, survivors),
-      physPartitionBy(snap), "part-c", dropEmptyFiles = true)
+    val moved = Landing.land(fs, table, toPhysical(spark, snap, survivors), "part-c",
+      partitionBy = physPartitionBy(snap), dropEmptyFiles = true)
     val cdcLines =
       if (!cdfEnabled(snap)) Seq.empty[String]
       else {
@@ -2790,9 +2743,9 @@ object DeltaLog {
     // parquet add would be valid but pointless); the isEmpty probe
     // early-exits on the first surviving row
     val moved =
-      if (survivors.isEmpty) Seq.empty[Landed]
-      else stageAndMove(fs, table, toPhysical(spark, snap, survivors),
-        physPartitionBy(snap), "part-d", dropEmptyFiles = true)
+      if (survivors.isEmpty) Seq.empty[Landing.Landed]
+      else Landing.land(fs, table, toPhysical(spark, snap, survivors), "part-d",
+        partitionBy = physPartitionBy(snap), dropEmptyFiles = true)
     val cdcLines =
       if (!cdfEnabled(snap)) Seq.empty[String]
       else stageCdc(spark, fs, table, snap,
@@ -2910,12 +2863,12 @@ object DeltaLog {
     */
   private def commitRewrite(
       spark: SparkSession, fs: FileSystem, logDir: Path, tablePath: String,
-      snap: Snapshot, removed: Seq[DeltaFile], added: Seq[Landed],
+      snap: Snapshot, removed: Seq[DeltaFile], added: Seq[Landing.Landed],
       checkpointInterval: Int, txn: Option[(String, Long)],
       cdcLines: Seq[String] = Seq.empty): Long = {
     val now = System.currentTimeMillis()
     val removeLines = removed.map(f => removeAction(f.path, now, dataChange = true))
-    val adds = landedAdds(fs, new Path(tablePath), physPartitionBy(snap), added, dataChange = true)
+    val adds = landedAdds(physPartitionBy(snap), added, dataChange = true)
     val version = commitActions(fs, logDir, tablePath,
       v => txn.map(txnAction).toSeq ++ removeLines ++ adds(v) ++ cdcLines,
       withIct = ictEnabled(snap.configuration))
@@ -3261,202 +3214,50 @@ object DeltaLog {
       withIct = ictEnabled(current.configuration))
   }
 
-  /** Exact row count from a parquet footer — a driver-side metadata
-    * read. [[stageAndMove]] drops the EMPTY part files a filtering
-    * rewrite can leave behind with it (a delete that empties a scan
-    * partition still makes Spark's writer emit a schema-only file;
-    * committing 10^4 empty adds after a wide delete would bloat every
-    * future replay), and it is the row-tracking and identity
-    * allocators' input. LOUD on an unreadable footer (unlike
-    * [[statsJson]]'s best-effort): committing a rowTracking add with a
-    * guessed count would burn or double-allocate row ids.
+  /** Delta's encoder of [[Landing.FooterStats]]: the protocol's
+    * `add.stats` JSON (numRecords, minValues, maxValues, nullCount) in
+    * the forms Delta's own stats carry — dates as ISO days, timestamps
+    * as ISO instants, decimals as their value.
     */
-  private[sources] def footerRowCount(fs: FileSystem, p: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(fs.getFileStatus(p), fs.getConf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+  private[sources] def addStats(stats: Landing.FooterStats): String = {
+    val root = mapper.createObjectNode()
+    root.put("numRecords", stats.rows)
+    val minVals = root.putObject("minValues")
+    val maxVals = root.putObject("maxValues")
+    val nullCnt = root.putObject("nullCount")
+    def put(o: ObjectNode, name: String, dt: DataType, v: Any): Unit = (dt, v) match {
+      case (DateType, d: Int) => o.put(name, java.time.LocalDate.ofEpochDay(d.toLong).toString)
+      case (TimestampType | TimestampNTZType, us: Long) => o.put(name, java.time.Instant
+        .ofEpochSecond(Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L).toString)
+      case (_, d: Decimal) => o.put(name, d.toJavaBigDecimal)
+      case (_, s: org.apache.spark.unsafe.types.UTF8String) => o.put(name, s.toString)
+      case (_, n: Byte) => o.put(name, n.toInt)
+      case (_, n: Short) => o.put(name, n.toInt)
+      case (_, n: Int) => o.put(name, n)
+      case (_, n: Long) => o.put(name, n)
+      case (_, n: Float) => o.put(name, n)
+      case (_, n: Double) => o.put(name, n)
+      case (_, b: Boolean) => o.put(name, b)
+    }
+    stats.columns.foreach { case (name, c) =>
+      nullCnt.put(name, c.nullCount)
+      c.bounds.foreach { case (dt, lo, hi) => put(minVals, name, dt, lo); put(maxVals, name, dt, hi) }
+    }
+    mapper.writeValueAsString(root)
   }
 
-  /** The protocol's `add.stats` JSON (numRecords, minValues, maxValues,
-    * nullCount), computed from the just-moved file's parquet FOOTER —
-    * real column-chunk statistics, no data re-read. Only top-level
-    * primitives with footer stats in every chunk are indexed (a column
-    * any chunk lacks stats for is simply not skippable); dates render
-    * as ISO days and timestamps as ISO instants, the forms Delta's own
-    * stats carry. A footer that can't be read yields no stats rather
-    * than a failed commit.
-    */
-  private def statsJson(fs: FileSystem, table: Path, rel: String): Option[String] =
-    try {
-      val p = new Path(table, rel)
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(fs.getFileStatus(p), fs.getConf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        import scala.jdk.CollectionConverters._
-        import org.apache.parquet.schema.LogicalTypeAnnotation
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-        val footer = reader.getFooter
-        val blocks = footer.getBlocks.asScala.toSeq
-        val numRecords = blocks.map(_.getRowCount).sum
-        val root = mapper.createObjectNode()
-        root.put("numRecords", numRecords)
-        val minVals = root.putObject("minValues")
-        val maxVals = root.putObject("maxValues")
-        val nullCnt = root.putObject("nullCount")
-        val fields = footer.getFileMetaData.getSchema.getFields.asScala.toSeq
-        fields.filter(_.isPrimitive).foreach { f =>
-          val name = f.getName
-          val prim = f.asPrimitiveType()
-          val chunks = blocks.flatMap(_.getColumns.asScala.find(
-            _.getPath.toDotString == name))
-          val stats = chunks.map(_.getStatistics)
-          // a chunk holding values but no min/max (parquet reads a
-          // NaN-bearing chunk's stats back without them) leaves the
-          // column unbounded: the other chunks' range would not cover it
-          val usable = chunks.nonEmpty && chunks.forall { c =>
-            val s = c.getStatistics
-            s != null && !s.isEmpty && s.isNumNullsSet &&
-              (s.hasNonNullValue || s.getNumNulls == c.getValueCount)
-          }
-          if (usable) {
-            nullCnt.put(name, stats.map(_.getNumNulls).sum)
-            val nonNull = stats.filter(_.hasNonNullValue)
-            if (nonNull.nonEmpty) {
-              // JSON forms per the stats schema; a column whose
-              // physical/logical pair we don't index is left out
-              val annot = prim.getLogicalTypeAnnotation
-              (prim.getPrimitiveTypeName, annot) match {
-                case (INT32, _: LogicalTypeAnnotation.DateLogicalTypeAnnotation) =>
-                  val mn = nonNull.map(_.genericGetMin.asInstanceOf[Integer].intValue).min
-                  val mx = nonNull.map(_.genericGetMax.asInstanceOf[Integer].intValue).max
-                  minVals.put(name, java.time.LocalDate.ofEpochDay(mn.toLong).toString)
-                  maxVals.put(name, java.time.LocalDate.ofEpochDay(mx.toLong).toString)
-                case (INT32 | INT64, d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
-                  // the chunk stats hold the unscaled integer; the log
-                  // spells the decimal's value
-                  def unscaled(v: Any) = v.asInstanceOf[Number].longValue
-                  minVals.put(name, java.math.BigDecimal.valueOf(
-                    nonNull.map(s => unscaled(s.genericGetMin)).min, d.getScale))
-                  maxVals.put(name, java.math.BigDecimal.valueOf(
-                    nonNull.map(s => unscaled(s.genericGetMax)).max, d.getScale))
-                case (INT32, _) =>
-                  minVals.put(name, nonNull.map(_.genericGetMin.asInstanceOf[Integer].intValue).min)
-                  maxVals.put(name, nonNull.map(_.genericGetMax.asInstanceOf[Integer].intValue).max)
-                case (INT64, t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
-                  val unit = t.getUnit
-                  def toInstant(v: Long): String = {
-                    val micros = unit match {
-                      case LogicalTypeAnnotation.TimeUnit.MILLIS => v * 1000L
-                      case LogicalTypeAnnotation.TimeUnit.MICROS => v
-                      case LogicalTypeAnnotation.TimeUnit.NANOS => v / 1000L
-                    }
-                    java.time.Instant.ofEpochSecond(
-                      Math.floorDiv(micros, 1000000L),
-                      Math.floorMod(micros, 1000000L) * 1000L).toString
-                  }
-                  minVals.put(name, toInstant(nonNull.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min))
-                  maxVals.put(name, toInstant(nonNull.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max))
-                case (INT64, _) =>
-                  minVals.put(name, nonNull.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min)
-                  maxVals.put(name, nonNull.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max)
-                case (DOUBLE, _) =>
-                  val mins = nonNull.map(_.genericGetMin.asInstanceOf[java.lang.Double].doubleValue)
-                  val maxs = nonNull.map(_.genericGetMax.asInstanceOf[java.lang.Double].doubleValue)
-                  if (!mins.exists(_.isNaN) && !maxs.exists(_.isNaN)) {
-                    minVals.put(name, mins.min); maxVals.put(name, maxs.max)
-                  }
-                case (FLOAT, _) =>
-                  val mins = nonNull.map(_.genericGetMin.asInstanceOf[java.lang.Float].floatValue)
-                  val maxs = nonNull.map(_.genericGetMax.asInstanceOf[java.lang.Float].floatValue)
-                  if (!mins.exists(_.isNaN) && !maxs.exists(_.isNaN)) {
-                    minVals.put(name, mins.min); maxVals.put(name, maxs.max)
-                  }
-                case (BOOLEAN, _) =>
-                  minVals.put(name, nonNull.map(_.genericGetMin.asInstanceOf[java.lang.Boolean].booleanValue).min)
-                  maxVals.put(name, nonNull.map(_.genericGetMax.asInstanceOf[java.lang.Boolean].booleanValue).max)
-                case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-                  // unsigned UTF-8 byte order, the order of Parquet
-                  // string stats and of Spark's string comparisons
-                  // (Java's UTF-16 order disagrees above U+FFFF)
-                  def utf8(v: Any) = org.apache.spark.unsafe.types.UTF8String.fromBytes(
-                    v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
-                  val byBytes: Ordering[org.apache.spark.unsafe.types.UTF8String] =
-                    (a, b) => a.binaryCompare(b)
-                  minVals.put(name, nonNull.map(s => utf8(s.genericGetMin)).min(byBytes).toString)
-                  maxVals.put(name, nonNull.map(s => utf8(s.genericGetMax)).max(byBytes).toString)
-                case _ => () // INT96 / FIXED_LEN decimals / raw binary: not indexed
-              }
-            }
-          }
-        }
-        Some(mapper.writeValueAsString(root))
-      } finally reader.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** A file [[stageAndMove]] landed: its path relative to the table
-    * (decoded), its partition values, size and modification time.
-    */
-  private final case class Landed(
-      rel: String, partitionValues: Map[String, String], size: Long, mtime: Long)
-
   /** The `add` lines of `landed` files at the commit version, with
-    * encoded paths and footer stats (read once, not per commit
+    * encoded paths and footer stats (encoded once, not per commit
     * attempt); `rowIds` gives file i its base row id.
     */
   private def landedAdds(
-      fs: FileSystem, table: Path, partitionKeys: Seq[String], landed: Seq[Landed],
+      partitionKeys: Seq[String], landed: Seq[Landing.Landed],
       dataChange: Boolean, rowIds: Option[RowIdBlock] = None): Long => Seq[String] = {
     val files = landed.map(l =>
-      DeltaFile(encodePath(l.rel), l.partitionValues, l.size, stats = statsJson(fs, table, l.rel)))
+      DeltaFile(encodePath(l.rel), l.partitionValues, l.size, stats = Some(addStats(l.stats))))
     v => files.zip(landed).zipWithIndex.map { case ((f, l), i) =>
       addAction(f, partitionKeys, l.mtime, dataChange, rowIds.map(r => (r.bases(i), v)))
     }
-  }
-
-  /** Stage `df` through a `_commit_stage_*` dir under the table root and
-    * move its part files to `dir` under collision-proof names
-    * `<filePrefix>-<stamp>-<i>.parquet` — the one data path of every
-    * writer that lands files ([[append]], the rewrites, [[compact]] and
-    * the change-data files). Partitioned frames write the Hive layout
-    * in ONE job; each part file keeps its `col=value` dirs when moved,
-    * and the decoded values are returned for `add.partitionValues` (the
-    * protocol's truth — the reader never re-parses directory names).
-    */
-  private def stageAndMove(
-      fs: FileSystem, table: Path, df: DataFrame,
-      partitionBy: Seq[String], filePrefix: String,
-      dropEmptyFiles: Boolean = false, dir: String = ""): Seq[Landed] = {
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new Path(table, s"_commit_stage_$stamp")
-    (if (partitionBy.isEmpty) df.write else df.write.partitionBy(partitionBy: _*))
-      .parquet(stage.toString)
-    val pattern = (partitionBy.map(_ => "*") :+ "part-*.parquet").mkString("/")
-    val parts = fs.globStatus(new Path(stage, pattern)).toSeq.map(_.getPath)
-      .filter(p => !dropEmptyFiles || footerRowCount(fs, p) > 0L)
-      .sortBy(_.toString)
-    val stagePrefix = fs.makeQualified(stage).toString + "/"
-    val landed = parts.zipWithIndex.map { case (p, i) =>
-      val qualified = fs.makeQualified(p).toString
-      require(qualified.startsWith(stagePrefix),
-        s"DeltaLog: stage-relative path resolution failed for $p")
-      // decode Spark's partition-dir escaping back to raw values
-      val segs = qualified.stripPrefix(stagePrefix).split('/').toSeq.dropRight(1)
-      val pvals = segs.map { s =>
-        val Array(k, v) = s.split("=", 2)
-        k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null else unescapePathName(v))
-      }.toMap
-      require(pvals.keySet == partitionBy.toSet,
-        s"DeltaLog: unexpected partition layout under $p")
-      val rel = (Seq(dir).filter(_.nonEmpty) ++ segs :+ s"$filePrefix-$stamp-$i.parquet")
-        .mkString("/")
-      val dest = new Path(table, rel)
-      if (rel.contains('/')) fs.mkdirs(dest.getParent)
-      require(fs.rename(p, dest), s"DeltaLog: move failed for $p")
-      val st = fs.getFileStatus(dest)
-      Landed(rel, pvals, st.getLen, st.getModificationTime)
-    }
-    fs.delete(stage, true)
-    landed
   }
 
   /** `delta.enableInCommitTimestamps = true` — every commit carries a
@@ -3509,7 +3310,7 @@ object DeltaLog {
       // temp + rename (what Delta's own LogStore does on HDFS/local):
       // a failed write can never leave a truncated %020d.json in the
       // log, and a taken version returns false
-      landFile(fs, jsonPath(logDir, version), bytes, overwrite = false)
+      Landing.landFile(fs, jsonPath(logDir, version), bytes, overwrite = false)
     }
     // the floor version counts CHECKPOINTS too: after log cleanup the
     // JSON prefix is gone and the checkpoint is the only witness of
@@ -3591,7 +3392,7 @@ object DeltaLog {
       }
     val partitionKeys = physPartitionBy(snap)
     var removes = Seq.empty[DeltaFile]
-    var adds = Seq.empty[Landed]
+    var adds = Seq.empty[Landing.Landed]
     snap.files.groupBy(_.partitionValues).toSeq
       .sortBy { case (pv, _) => snap.partitionColumns.map(c => pv.getOrElse(c, "")).mkString(" ") }
       .foreach { case (pvals, files) =>
@@ -3652,8 +3453,8 @@ object DeltaLog {
           val dir = partitionKeys.map(k =>
             org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
               .getPartitionPathString(k, pvals.getOrElse(k, null))).mkString("/")
-          adds = adds ++ stageAndMove(fs, table, toPhysical(spark, snap, rewritten),
-              Seq.empty, "part-compact", dir = dir)
+          adds = adds ++ Landing.land(fs, table, toPhysical(spark, snap, rewritten),
+              "part-compact", dir = dir)
             .map(_.copy(partitionValues = pvals))
           removes = removes ++ small
         }
@@ -3668,12 +3469,11 @@ object DeltaLog {
         require(snap.rowIdHighWaterMark.isDefined,
           "DeltaLog: compact on a rowTracking table with no delta.rowTracking " +
             "high-water-mark domain metadata — fresh base ids could reuse burned ones")
-        Some(RowIdBlock(snap.rowIdHighWaterMark,
-          adds.map(l => footerRowCount(fs, new Path(table, l.rel)))))
+        Some(RowIdBlock(snap.rowIdHighWaterMark, adds.map(_.stats.rows)))
       }
     // layout-only: removes carry no deletion time and dataChange=false
     val removeLines = removes.map(f => removeAction(f.path, 0L, dataChange = false))
-    val addLines = landedAdds(fs, table, partitionKeys, adds, dataChange = false, rowIds)
+    val addLines = landedAdds(partitionKeys, adds, dataChange = false, rowIds)
     commitWithRowIds(spark, fs, logDir, tablePath, "compact", rowIds,
       withIct = ictEnabled(snap.configuration))(v => removeLines ++ addLines(v))
   }
@@ -3717,7 +3517,7 @@ object DeltaLog {
       fs.listStatus(dir).foreach { st =>
         val name = st.getPath.getName
         if (st.isDirectory) {
-          if (name != "_delta_log" && !name.startsWith("_commit_stage_") &&
+          if (name != "_delta_log" && !name.startsWith(Landing.StagePrefix) &&
               !name.startsWith("_cp_stage_"))
             walk(st.getPath)
         } else if (name.endsWith(".parquet") &&

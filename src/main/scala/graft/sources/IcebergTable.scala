@@ -36,7 +36,7 @@ import org.apache.spark.sql.types._
   * manifest files); this reader walks them on the driver exactly as
   * Iceberg's own planner does, then hands Spark one declared-schema
   * parquet scan over the live files. Every writer commits through one
-  * path: data and delete files land through [[stageFiles]], their
+  * path: data and delete files land through [[Landing.land]], their
   * manifest entries through [[entryRecord]], the manifest list (prior
   * manifests CARRIED FORWARD, so old snapshots stay readable = time
   * travel) through [[writeManifestList]], and `vN+1.metadata.json` plus
@@ -127,7 +127,8 @@ object IcebergTable {
 
   /** Iceberg's binary single-value serialization (spec Appendix D):
     * little-endian fixed-width numerics, UTF-8 strings. `v` is the
-    * JVM-typed value [[parquetFooterInfo]] collected.
+    * JVM-typed value of a partition tuple, or the Catalyst value of a
+    * footer bound.
     */
   private def boundBytes(dt: DataType, v: Any): Array[Byte] = {
     def le(n: Long, w: Int): Array[Byte] =
@@ -141,6 +142,7 @@ object IcebergTable {
       case (DoubleType, x: Double) => le(java.lang.Double.doubleToLongBits(x), 8)
       case (BooleanType, x: Boolean) => Array(if (x) 1.toByte else 0.toByte)
       case (StringType, x: String) => x.getBytes("UTF-8")
+      case (StringType, x: org.apache.spark.unsafe.types.UTF8String) => x.getBytes
       case other => throw new IllegalArgumentException(
         s"IcebergTable: no single-value serialization for $other")
     }
@@ -444,13 +446,13 @@ object IcebergTable {
     * over `prev` (None creates the table) and repoint
     * `version-hint.text`. With `snapshot` it first appends the
     * snapshot node, under the table's current schema id and last
-    * sequence number, and makes it current. Both files land by temp +
-    * rename ([[DeltaLog.landFile]]): the metadata file put-if-absent,
+    * sequence number, and makes it current. Both files land through a
+    * temp file ([[Landing.landFile]]): the metadata file put-if-absent,
     * so a writer that finds v(N+1) already there raises
     * FileAlreadyExistsException and leaves it and the hint untouched
-    * (atomic only where rename refuses an existing destination; see
-    * landFile), and the hint by replacement (readers that find it
-    * missing or stale list or probe past it).
+    * (atomic on the local filesystem and where rename refuses an
+    * existing destination; see landFile), and the hint by replacement
+    * (readers that find it missing or stale list or probe past it).
     */
   private[sources] def commitMetadata(
       fs: FileSystem, tablePath: String, prev: Option[Head], newMeta: ObjectNode,
@@ -475,14 +477,12 @@ object IcebergTable {
     val dir = metadataDir(tablePath)
     val version = prev.fold(0L)(_.version) + 1
     val target = metadataFile(dir, version)
-    if (!DeltaLog.landFile(fs, target,
+    if (!Landing.landFile(fs, target,
         mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(newMeta), overwrite = false))
       throw new FileAlreadyExistsException(
         s"IcebergTable: $target already exists — a concurrent writer committed version $version")
-    DeltaLog.landFile(fs, versionHint(dir), version.toString.getBytes("UTF-8"), overwrite = true)
+    Landing.landFile(fs, versionHint(dir), version.toString.getBytes("UTF-8"), overwrite = true)
   }
-
-  private def newStamp(): String = java.util.UUID.randomUUID().toString.take(8)
 
   private def newSnapshotId(): Long =
     math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
@@ -1299,22 +1299,22 @@ object IcebergTable {
     val pfields: Seq[(String, DataType)] =
       partitionBy.map(c => c -> df.schema(c).dataType)
     fs.mkdirs(metadataDir(tablePath))
-    val stamp = newStamp()
-    val dataFiles = stageFiles(fs, table, idDf, partitionBy, Nil, "part", stamp,
-      parquetFooterInfo(fs, _))
+    val stamp = Landing.newStamp()
+    val dataFiles = Landing.land(fs, table, idDf, "part", stamp, "data",
+      partitionBy = partitionBy, keepPartitionColumns = true)
     val snapshotId = newSnapshotId()
     val newSeq = prev.fold(1L)(_.nextSequence)
     // per-file first_row_id blocks: contiguous above the table's
     // next-row-id, in staged-file order — a row's id is
     // first_row_id + its position, the Delta baseRowId shape
     val rlBase: Long = prevNextRowId.getOrElse(0L)
-    val rlFirsts: Seq[Long] = dataFiles.map(_.records).scanLeft(rlBase)(_ + _)
+    val rlFirsts: Seq[Long] = dataFiles.map(_.stats.rows).scanLeft(rlBase)(_ + _)
     // one manifest for this append; record_count carries the footer
     // truth (readers size broadcasts and metadata tables off it)
     val manifest = writeManifest(fs, tablePath, s"manifest-$stamp.avro",
       entrySchema(pfields, v2 = false), content = 0, newSeq, snapshotId,
       dataFiles.zip(rlFirsts).map { case (sf, first) =>
-        addedDataEntry(sf, fields, pfields, snapshotId, newSeq,
+        addedDataEntry(fs, table, sf, fields, pfields, snapshotId, newSeq,
           if (lineageActive) Some(first) else None) })
     val list = writeManifestList(fs, tablePath, fv, snapshotId, stamp,
       prevMeta.toSeq.flatMap(currentManifests(fs, conf, _)) :+ manifest)
@@ -1531,7 +1531,7 @@ object IcebergTable {
           pmod(fhash(schema.fieldNames.map(fcol).toIndexedSeq: _*),
             flit(maxPerPartition))): _*)
     val pfields: Seq[(String, DataType)] = pby.map(c => c -> schema(c).dataType)
-    val stamp = newStamp()
+    val stamp = Landing.newStamp()
     val fieldsCur = parseFields(currentSchemaNode(meta))
     val stageFields =
       if (lineage) fieldsCur :+ IceField(RowIdFieldId.toInt, "_row_id", LongType)
@@ -1539,8 +1539,8 @@ object IcebergTable {
     val toStage =
       if (snap.fieldIdsWritten) withFieldIds(spark, packed, stageFields)
       else packed
-    val staged = stageFiles(fs, table, toStage, pby, Nil, "part", stamp,
-      parquetFooterInfo(fs, _))
+    val staged = Landing.land(fs, table, toStage, "part", stamp, "data",
+      partitionBy = pby, keepPartitionColumns = true)
     val snapshotId = newSnapshotId()
     val newSeq = h.nextSequence
     // v2 entry shape: the explicit content/sequence fields gate carried
@@ -1550,10 +1550,10 @@ object IcebergTable {
     // rewrite, the Delta compact shape — carried rows override through
     // the materialized column)
     val rlBase: Long = if (lineage) meta.get("next-row-id").asLong() else 0L
-    val rlFirsts: Seq[Long] = staged.map(_.records).scanLeft(rlBase)(_ + _)
+    val rlFirsts: Seq[Long] = staged.map(_.stats.rows).scanLeft(rlBase)(_ + _)
     val added = writeManifest(fs, tablePath, s"manifest-$stamp.avro", schemaOut, content = 0,
       newSeq, snapshotId, staged.zip(rlFirsts).map { case (sf, first) =>
-        addedDataEntry(sf, fieldsCur, pfields, snapshotId, newSeq,
+        addedDataEntry(fs, table, sf, fieldsCur, pfields, snapshotId, newSeq,
           if (lineage) Some(first) else None) })
     // walk the current snapshot's manifest list; rewrite only the
     // manifests that named a compacted file
@@ -1599,74 +1599,9 @@ object IcebergTable {
     snapshotId
   }
 
-  /** One file staged into `data/`: qualified path, byte length, its
-    * decoded partition-dir values (null for Hive's default partition),
-    * its REAL row count (footer truth — what `record_count` must carry
-    * so readers can size broadcasts and metadata tables report
-    * honestly) and, for data files, its footer bounds.
-    */
-  private final case class StagedFile(
-      path: String, len: Long, dirs: Map[String, String], records: Long,
-      bounds: Map[String, (Any, Any)] = Map.empty)
-
-  /** Write `df` through one staging dir and move its part files, in
-    * path order, to `data/.../<prefix>-<stamp>-<i>.parquet` — the one
-    * landing path of every Iceberg writer. Rows split into files by
-    * `partitionBy` and `groupBy`, and `dirs` returns both columns'
-    * decoded values. A `partitionBy` column stays in the file's rows
-    * (Spark's partitionBy drops the columns it writes by, so it is
-    * staged under a `__p_` alias) and the file lands under its
-    * Hive-style dir; a `groupBy` column only splits files, so it is
-    * neither in the rows nor in the landing path. `footer` reads a
-    * file's row count and bounds; with `dropEmptyFiles` files of no
-    * rows are dropped. Driver work is O(new files): one footer read
-    * and one rename per file.
-    */
-  private def stageFiles(
-      fs: FileSystem, table: Path, df: DataFrame, partitionBy: Seq[String],
-      groupBy: Seq[String], prefix: String, stamp: String,
-      footer: Path => (Long, Map[String, (Any, Any)]),
-      dropEmptyFiles: Boolean = false): Seq[StagedFile] = {
-    val stage = new Path(table, s"_ice_stage_$stamp")
-    val stageBy = partitionBy.map("__p_" + _) ++ groupBy
-    val out = partitionBy.foldLeft(df)((d, c) =>
-      d.withColumn("__p_" + c, org.apache.spark.sql.functions.col(c)))
-    (if (stageBy.isEmpty) out.write else out.write.partitionBy(stageBy: _*))
-      .parquet(stage.toString)
-    val pattern = (stageBy.map(_ => "*") :+ "part-*.parquet").mkString("/")
-    val stagePrefix = fs.makeQualified(stage).toString + "/"
-    val staged = fs.globStatus(new Path(stage, pattern)).toSeq.map(_.getPath)
-      .sortBy(_.toString).map(p => (p, footer(p)))
-      .filter { case (_, (records, _)) => !dropEmptyFiles || records > 0L }
-      .zipWithIndex.map { case ((p, (records, bounds)), i) =>
-        val qualified = fs.makeQualified(p).toString
-        require(qualified.startsWith(stagePrefix),
-          s"IcebergTable: stage-relative path resolution failed for $p")
-        val segs = qualified.stripPrefix(stagePrefix).split('/').toSeq.dropRight(1)
-        val kept = segs.take(partitionBy.size).map(_.stripPrefix("__p_"))
-        val dirs = (kept ++ segs.drop(partitionBy.size)).map { s =>
-          val Array(k, v) = s.split("=", 2)
-          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null else DeltaLog.unescapePathName(v))
-        }.toMap
-        require(dirs.keySet == (partitionBy ++ groupBy).toSet,
-          s"IcebergTable: unexpected partition layout under $p")
-        val rel = (("data" +: kept) :+ s"$prefix-$stamp-$i.parquet")
-          .mkString("/")
-        val dest = new Path(table, rel)
-        fs.mkdirs(dest.getParent)
-        require(fs.rename(p, dest), s"IcebergTable: move failed for $p")
-        StagedFile(fs.makeQualified(dest).toString, fs.getFileStatus(dest).getLen, dirs,
-          records, bounds)
-      }
-    fs.delete(stage, true)
-    staged
-  }
-
-  /** A delete file's footer as [[stageFiles]] reads it: the row count
-    * alone (deletes carry no bounds).
-    */
-  private def footerRows(fs: FileSystem): Path => (Long, Map[String, (Any, Any)]) =
-    p => (DeltaLog.footerRowCount(fs, p), Map.empty)
+  /** The manifest's `file_path` of a file [[Landing.land]] landed. */
+  private def landedPath(fs: FileSystem, table: Path, l: Landing.Landed): String =
+    fs.makeQualified(new Path(table, l.rel)).toString
 
   /** A partition tuple as the manifest's typed `partition` record
     * values: integral columns as Integer/Long, the rest as strings.
@@ -1750,21 +1685,25 @@ object IcebergTable {
     r
   }
 
-  /** The ADDED entry of a data file this commit staged: its typed
+  /** The ADDED entry of a data file this commit landed: its typed
     * partition tuple, and `lower_bounds`/`upper_bounds` (field-id keys,
-    * Iceberg single-value binary) for every column with footer bounds.
-    * An identity partition column holds one value per file, so that
-    * value is its bound.
+    * Iceberg single-value binary) for every column with footer bounds
+    * ([[footerBoundBytes]]). An identity partition column holds one
+    * value per file, so that value is its bound.
     */
   private def addedDataEntry(
-      sf: StagedFile, fields: Seq[IceField], pfields: Seq[(String, DataType)],
+      fs: FileSystem, table: Path, l: Landing.Landed, fields: Seq[IceField],
+      pfields: Seq[(String, DataType)],
       snapshotId: Long, sequence: Long, firstRowId: Option[Long]): Entry = {
-    val tuple = typedTuple(sf.dirs, pfields)
-    val bounds = sf.bounds ++ tuple.collect { case (k, v) if v != null => k -> ((v, v)) }
-    def side(pick: ((Any, Any)) => Any) = fields.flatMap(f => bounds.get(f.name).map(mm =>
-      f.id -> java.nio.ByteBuffer.wrap(boundBytes(f.dataType, pick(mm)))))
-    Entry(1, Some(snapshotId), sequence, 0, sf.path, "PARQUET", sf.records, sf.len, tuple,
-      firstRowId, side(_._1), side(_._2))
+    val tuple = typedTuple(l.partitionValues, pfields)
+    val types = fields.map(f => f.name -> f.dataType).toMap
+    val bounds = footerBoundBytes(l.stats, types) ++ tuple.flatMap { case (k, v) =>
+      types.get(k).filter(_ => v != null).map { dt => val b = boundBytes(dt, v); k -> ((b, b)) }
+    }
+    def side(pick: ((Array[Byte], Array[Byte])) => Array[Byte]) = fields.flatMap(f =>
+      bounds.get(f.name).map(b => f.id -> java.nio.ByteBuffer.wrap(pick(b))))
+    Entry(1, Some(snapshotId), sequence, 0, landedPath(fs, table, l), "PARQUET", l.stats.rows,
+      l.size, tuple, firstRowId, side(_._1), side(_._2))
   }
 
   /** A carried data entry re-listed as EXISTING: its snapshot id,
@@ -1937,86 +1876,22 @@ object IcebergTable {
     meta
   }
 
-  /** How a column chunk's footer min/max becomes the JVM value
-    * [[boundBytes]] serializes, for the physical/logical types it can
-    * serialize: signed 32/64-bit integers, dates, UTC-adjusted
-    * micro/millisecond timestamps (as epoch micros), floats, doubles,
-    * booleans and UTF-8 strings. `None` for everything else — INT96
-    * timestamps (Spark's default timestamp encoding), decimals,
-    * unsigned integers, raw binary — which stays unbounded, the rule
-    * `DeltaLog.statsJson` applies to Delta file stats.
-    */
-  private def footerBound(
-      t: org.apache.parquet.schema.PrimitiveType): Option[Any => Any] = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val same: Any => Any = v => v
-    (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
-      case (INT32 | INT64 | FLOAT | DOUBLE | BOOLEAN, null) => Some(same)
-      case (INT32 | INT64, i: IntLogicalTypeAnnotation) if i.isSigned => Some(same)
-      case (INT32, _: DateLogicalTypeAnnotation) => Some(same)
-      case (INT64, ts: TimestampLogicalTypeAnnotation) if ts.isAdjustedToUTC =>
-        ts.getUnit match {
-          case TimeUnit.MICROS => Some(same)
-          case TimeUnit.MILLIS => Some(v => v.asInstanceOf[java.lang.Long] * 1000L)
-          case TimeUnit.NANOS => None
-        }
-      case (BINARY, _: StringLogicalTypeAnnotation) =>
-        Some(v => v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-      case _ => None
-    }
-  }
-
-  /** One footer read: record count + per-column (min, max) merged
-    * across row groups — what `record_count` and the manifest's
-    * `lower_bounds`/`upper_bounds` carry. A column whose stats are
-    * missing in ANY row group (or all-null), or whose type
-    * [[footerBound]] does not bound, gets no bounds; readers treat
+  /** Iceberg's encoder of [[Landing.FooterStats]]: per column, the
+    * (lower, upper) single-value bytes of its footer bounds, for the
+    * columns whose footer type is the table field's own type (`types`)
+    * and one [[boundBytes]] serializes. Decimals stay unbounded, as do
+    * non-UTC timestamps, whose footer type is not the field's; the
+    * reader leaves nanosecond timestamps unbounded. Readers treat
     * missing bounds as "keep the file".
     */
-  private def parquetFooterInfo(
-      fs: FileSystem, p: Path): (Long, Map[String, (Any, Any)]) = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromStatus(fs.getFileStatus(p), fs.getConf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val blocks = r.getFooter.getBlocks
-      import scala.jdk.CollectionConverters._
-      val perColumn = scala.collection.mutable.Map.empty[String, (Any, Any)]
-      val dropped = scala.collection.mutable.Set.empty[String]
-      blocks.asScala.foreach { b =>
-        b.getColumns.asScala.foreach { c =>
-          if (c.getPath.size == 1) { // top-level primitives only
-            val name = c.getPath.toDotString
-            val st = c.getStatistics
-            val conv = footerBound(c.getPrimitiveType)
-            if (conv.isEmpty || st == null || st.isEmpty || !st.hasNonNullValue) dropped += name
-            else {
-              val (mn, mx) = (conv.get(st.genericGetMin), conv.get(st.genericGetMax))
-              perColumn.get(name) match {
-                case None => perColumn(name) = (mn, mx)
-                case Some((pmn, pmx)) =>
-                  def lt(a: Any, b2: Any): Boolean = (a, b2) match {
-                    // parquet binary stats order: unsigned UTF-8 bytes
-                    case (x: String, y: String) =>
-                      org.apache.spark.unsafe.types.UTF8String.fromString(x)
-                        .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(y)) < 0
-                    // boxed numbers and booleans in their own order
-                    // (NaN above every double, longs without rounding)
-                    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y) < 0
-                    case _ => false
-                  }
-                  perColumn(name) = (if (lt(mn, pmn)) mn else pmn,
-                    if (lt(pmx, mx)) mx else pmx)
-              }
-            }
-          }
-        }
-      }
-      dropped.foreach(perColumn.remove)
-      (r.getRecordCount, perColumn.toMap)
-    } finally r.close()
-  }
+  private[sources] def footerBoundBytes(
+      stats: Landing.FooterStats,
+      types: Map[String, DataType]): Map[String, (Array[Byte], Array[Byte])] =
+    stats.columns.collect {
+      case (name, Landing.ColumnStats(_, Some((dt, lo, hi))))
+          if types.get(name).contains(dt) && !dt.isInstanceOf[DecimalType] =>
+        name -> ((boundBytes(dt, lo), boundBytes(dt, hi)))
+    }.toMap
 
   /** DELETE rows via v2 POSITION DELETES — Iceberg's merge-on-read
     * path: no data file is rewritten; the matching `(file_path, pos)`
@@ -2087,13 +1962,13 @@ object IcebergTable {
       .select(col("file_path"), col("__pos").cast(LongType).as("pos"), col("__pt"))
       .orderBy("file_path", "pos")
     val ptypes = snap.partitionColumns.map(c => c -> snap.schema(c).dataType)
-    val (stamp, snapshotId, seq) = (newStamp(), newSnapshotId(), h.nextSequence)
+    val (stamp, snapshotId, seq) = (Landing.newStamp(), newSnapshotId(), h.nextSequence)
     commitDeletes(fs, conf, tablePath, h, ptypes, stamp, snapshotId, seq,
       math.max(2, h.formatVersion),
-      stageFiles(fs, table, matches, Nil, Seq("__pt"), "delete", stamp, footerRows(fs),
-        dropEmptyFiles = true).map(sf =>
-        Entry(1, Some(snapshotId), seq, 1, sf.path, "PARQUET", sf.records, sf.len,
-          typedTuple(tuples(sf.dirs("__pt").toInt), ptypes))))
+      Landing.land(fs, table, matches, "delete", stamp, "data", groupBy = Seq("__pt"),
+        dropEmptyFiles = true).map(l =>
+        Entry(1, Some(snapshotId), seq, 1, landedPath(fs, table, l), "PARQUET", l.stats.rows,
+          l.size, typedTuple(tuples(l.partitionValues("__pt").toInt), ptypes))))
   }
 
   /** DELETE rows via v2 EQUALITY DELETES: tombstone every row whose
@@ -2147,13 +2022,13 @@ object IcebergTable {
     val ptypes =
       if (partitionScope.isEmpty) Seq.empty
       else snap.partitionColumns.map(c => c -> snap.schema(c).dataType)
-    val (stamp, snapshotId, seq) = (newStamp(), newSnapshotId(), h.nextSequence)
+    val (stamp, snapshotId, seq) = (Landing.newStamp(), newSnapshotId(), h.nextSequence)
     commitDeletes(fs, conf, tablePath, h, ptypes, stamp, snapshotId, seq,
       math.max(2, h.formatVersion),
-      stageFiles(fs, table, keyedOut, Nil, Nil, "eqdelete", stamp, footerRows(fs),
-        dropEmptyFiles = true).map(sf =>
-        Entry(1, Some(snapshotId), seq, 2, sf.path, "PARQUET", sf.records, sf.len,
-          typedTuple(partitionScope, ptypes), equalityIds = ids)))
+      Landing.land(fs, table, keyedOut, "eqdelete", stamp, "data",
+        dropEmptyFiles = true).map(l =>
+        Entry(1, Some(snapshotId), seq, 2, landedPath(fs, table, l), "PARQUET", l.stats.rows,
+          l.size, typedTuple(partitionScope, ptypes), equalityIds = ids)))
   }
 
   /** DELETE rows via format-version 3 DELETION VECTORS: one puffin
@@ -2230,7 +2105,7 @@ object IcebergTable {
     if (frames.isEmpty) return -1L
     // publish: the puffin file, then ADDED entries for the new blobs
     // and DELETED entries tombstoning any replaced blob
-    val (stamp, snapshotId, newSeq) = (newStamp(), newSnapshotId(), h.nextSequence)
+    val (stamp, snapshotId, newSeq) = (Landing.newStamp(), newSnapshotId(), h.nextSequence)
     val refByFid: Map[String, DataFileRef] =
       snap.dataRefs.map(r => scanFileId(r.path) -> r).toMap
     val puffinPath = new Path(table, s"data/dv-$stamp.puffin")

@@ -2292,10 +2292,10 @@ class DeltaLogSpec extends SparkSpec {
     // it gets there
     val fs = new org.apache.hadoop.fs.LocalFileSystem()
     fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
-    assert(DeltaLog.landFile(fs, target, "first".getBytes("UTF-8"), overwrite = false))
-    assert(!DeltaLog.landFile(fs, target, "second".getBytes("UTF-8"), overwrite = false))
+    assert(Landing.landFile(fs, target, "first".getBytes("UTF-8"), overwrite = false))
+    assert(!Landing.landFile(fs, target, "second".getBytes("UTF-8"), overwrite = false))
     assert(Files.readString(dir.resolve("v1.json")) == "first")
-    assert(DeltaLog.landFile(fs, target, "third".getBytes("UTF-8"), overwrite = true))
+    assert(Landing.landFile(fs, target, "third".getBytes("UTF-8"), overwrite = true))
     assert(Files.readString(dir.resolve("v1.json")) == "third")
     assert(!dir.toFile.list().exists(_.startsWith(".tmp-")))
   }

@@ -1,13 +1,16 @@
 #!/usr/bin/env python3
 """Print the size of each source file given on the command line.
 
-Usage: python3 tools/loc.py FILE...
+Usage: python3 tools/loc.py PATH...
 
-One line per file: the `wc -l` line count, then the count of code
-lines, which are the non-blank lines whose first non-space characters
-are not `//`, `*` or `/**` (line comments and scaladoc bodies do not
-count). A `total` line follows when more than one file is given.
+A PATH that is a directory stands for every `*.scala` file under it,
+in path order. One line per file: the `wc -l` line count, then the
+count of code lines, which are the non-blank lines whose first
+non-space characters are not `//`, `*` or `/**` (line comments and
+scaladoc bodies do not count). A `total` line follows when more than
+one file is counted.
 """
+import os
 import sys
 
 
@@ -23,10 +26,20 @@ def count(path):
     return lines, code
 
 
-def main(paths):
-    if not paths:
+def expand(path):
+    if not os.path.isdir(path):
+        return [path]
+    found = []
+    for root, _, names in os.walk(path):
+        found.extend(os.path.join(root, n) for n in names if n.endswith(".scala"))
+    return sorted(found)
+
+
+def main(args):
+    if not args:
         print(__doc__.strip(), file=sys.stderr)
         return 2
+    paths = [p for a in args for p in expand(a)]
     totals = [0, 0]
     for p in paths:
         lines, code = count(p)

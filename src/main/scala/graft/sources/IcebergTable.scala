@@ -1310,9 +1310,11 @@ object IcebergTable {
     val rlBase: Long = prevNextRowId.getOrElse(0L)
     val rlFirsts: Seq[Long] = dataFiles.map(_.stats.rows).scanLeft(rlBase)(_ + _)
     // one manifest for this append; record_count carries the footer
-    // truth (readers size broadcasts and metadata tables off it)
+    // truth (readers size broadcasts and metadata tables off it); from
+    // format-version 2 on, entries carry `content` and their sequence
+    // number, as the spec requires
     val manifest = writeManifest(fs, tablePath, s"manifest-$stamp.avro",
-      entrySchema(pfields, v2 = false), content = 0, newSeq, snapshotId,
+      entrySchema(pfields, v2 = fv >= 2), content = 0, newSeq, snapshotId,
       dataFiles.zip(rlFirsts).map { case (sf, first) =>
         addedDataEntry(fs, table, sf, fields, pfields, snapshotId, newSeq,
           if (lineageActive) Some(first) else None) })

@@ -169,8 +169,8 @@ class IcebergCommitShapeSpec extends SparkSpec {
     assertCommit(s, 1,
       """{"format-version":3,"last-sequence-number":1,"next-row-id":3,"table-uuid":"<uuid>","location":"<table>","last-updated-ms":"<ts>","last-column-id":2,"schema":{"type":"struct","fields":[{"id":1,"name":"id","required":false,"type":"long"},{"id":2,"name":"Year","required":false,"type":"int"}]},"schemas":[{"type":"struct","fields":[{"id":1,"name":"id","required":false,"type":"long"},{"id":2,"name":"Year","required":false,"type":"int"}],"schema-id":0}],"current-schema-id":0,"partition-spec":[{"name":"Year","transform":"identity","source-id":2,"field-id":1000}],"partition-specs":[{"spec-id":0,"fields":[{"name":"Year","transform":"identity","source-id":2,"field-id":1000}]}],"default-spec-id":0,"sort-orders":[{"order-id":0,"fields":[]}],"default-sort-order-id":0,"properties":{"graft.parquet.field-ids":"true"},"current-snapshot-id":"<s1>","snapshots":[{"snapshot-id":"<s1>","sequence-number":1,"timestamp-ms":"<ts>","schema-id":0,"first-row-id":0,"manifest-list":"<table>/metadata/snap-<s1>-<stamp>.avro","summary":{"operation":"append"}}]}""",
       """{"manifest_file":{"manifest_path":"<table>/metadata/manifest-<stamp>.avro","manifest_length":"<size>","partition_spec_id":0,"content":0,"sequence_number":1,"min_sequence_number":1,"added_snapshot_id":"<s1>"}}""",
-      """{"manifest_entry":{"status":1,"snapshot_id":"<s1>","data_file":{"file_path":"<table>/data/Year=1996/part-<stamp>-0.parquet","file_format":"PARQUET","record_count":2,"file_size_in_bytes":"<size>","first_row_id":0,"lower_bounds":[{"key":1,"value":"0100000000000000"},{"key":2,"value":"cc070000"}],"upper_bounds":[{"key":1,"value":"0300000000000000"},{"key":2,"value":"cc070000"}],"partition":{"Year":1996}}}}""",
-      """{"manifest_entry":{"status":1,"snapshot_id":"<s1>","data_file":{"file_path":"<table>/data/Year=1997/part-<stamp>-1.parquet","file_format":"PARQUET","record_count":1,"file_size_in_bytes":"<size>","first_row_id":2,"lower_bounds":[{"key":1,"value":"0200000000000000"},{"key":2,"value":"cd070000"}],"upper_bounds":[{"key":1,"value":"0200000000000000"},{"key":2,"value":"cd070000"}],"partition":{"Year":1997}}}}""")
+      """{"manifest_entry":{"status":1,"snapshot_id":"<s1>","sequence_number":1,"data_file":{"content":0,"file_path":"<table>/data/Year=1996/part-<stamp>-0.parquet","file_format":"PARQUET","record_count":2,"file_size_in_bytes":"<size>","first_row_id":0,"equality_ids":null,"referenced_data_file":null,"content_offset":null,"content_size_in_bytes":null,"lower_bounds":[{"key":1,"value":"0100000000000000"},{"key":2,"value":"cc070000"}],"upper_bounds":[{"key":1,"value":"0300000000000000"},{"key":2,"value":"cc070000"}],"partition":{"Year":1996}}}}""",
+      """{"manifest_entry":{"status":1,"snapshot_id":"<s1>","sequence_number":1,"data_file":{"content":0,"file_path":"<table>/data/Year=1997/part-<stamp>-1.parquet","file_format":"PARQUET","record_count":1,"file_size_in_bytes":"<size>","first_row_id":2,"equality_ids":null,"referenced_data_file":null,"content_offset":null,"content_size_in_bytes":null,"lower_bounds":[{"key":1,"value":"0200000000000000"},{"key":2,"value":"cd070000"}],"upper_bounds":[{"key":1,"value":"0200000000000000"},{"key":2,"value":"cd070000"}],"partition":{"Year":1997}}}}""")
     IcebergTable.append(spark, t,
       Seq((4L, 1997, "x")).toDF("id", "Year", "tag").coalesce(1),
       partitionBy = Seq("Year"), allowSchemaEvolution = true)
@@ -178,7 +178,7 @@ class IcebergCommitShapeSpec extends SparkSpec {
       """{"format-version":3,"last-sequence-number":2,"next-row-id":4,"table-uuid":"<uuid>","location":"<table>","last-updated-ms":"<ts>","last-column-id":3,"schema":{"type":"struct","fields":[{"id":1,"name":"id","required":false,"type":"long"},{"id":2,"name":"Year","required":false,"type":"int"},{"id":3,"name":"tag","required":false,"type":"string"}]},"schemas":[{"type":"struct","fields":[{"id":1,"name":"id","required":false,"type":"long"},{"id":2,"name":"Year","required":false,"type":"int"}],"schema-id":0},{"type":"struct","fields":[{"id":1,"name":"id","required":false,"type":"long"},{"id":2,"name":"Year","required":false,"type":"int"},{"id":3,"name":"tag","required":false,"type":"string"}],"schema-id":1}],"current-schema-id":1,"partition-spec":[{"name":"Year","transform":"identity","source-id":2,"field-id":1000}],"partition-specs":[{"spec-id":0,"fields":[{"name":"Year","transform":"identity","source-id":2,"field-id":1000}]}],"default-spec-id":0,"sort-orders":[{"order-id":0,"fields":[]}],"default-sort-order-id":0,"properties":{"graft.parquet.field-ids":"true"},"current-snapshot-id":"<s2>","snapshots":[{"snapshot-id":"<s1>","sequence-number":1,"timestamp-ms":"<ts>","schema-id":0,"first-row-id":0,"manifest-list":"<table>/metadata/snap-<s1>-<stamp>.avro","summary":{"operation":"append"}},{"snapshot-id":"<s2>","sequence-number":2,"timestamp-ms":"<ts>","schema-id":1,"first-row-id":3,"manifest-list":"<table>/metadata/snap-<s2>-<stamp>.avro","summary":{"operation":"append"}}]}""",
       """{"manifest_file":{"manifest_path":"<table>/metadata/manifest-<stamp>.avro","manifest_length":"<size>","partition_spec_id":0,"content":0,"sequence_number":1,"min_sequence_number":1,"added_snapshot_id":"<s1>"}}""",
       """{"manifest_file":{"manifest_path":"<table>/metadata/manifest-<stamp>.avro","manifest_length":"<size>","partition_spec_id":0,"content":0,"sequence_number":2,"min_sequence_number":2,"added_snapshot_id":"<s2>"}}""",
-      """{"manifest_entry":{"status":1,"snapshot_id":"<s2>","data_file":{"file_path":"<table>/data/Year=1997/part-<stamp>-0.parquet","file_format":"PARQUET","record_count":1,"file_size_in_bytes":"<size>","first_row_id":3,"lower_bounds":[{"key":1,"value":"0400000000000000"},{"key":2,"value":"cd070000"},{"key":3,"value":"78"}],"upper_bounds":[{"key":1,"value":"0400000000000000"},{"key":2,"value":"cd070000"},{"key":3,"value":"78"}],"partition":{"Year":1997}}}}""")
+      """{"manifest_entry":{"status":1,"snapshot_id":"<s2>","sequence_number":2,"data_file":{"content":0,"file_path":"<table>/data/Year=1997/part-<stamp>-0.parquet","file_format":"PARQUET","record_count":1,"file_size_in_bytes":"<size>","first_row_id":3,"equality_ids":null,"referenced_data_file":null,"content_offset":null,"content_size_in_bytes":null,"lower_bounds":[{"key":1,"value":"0400000000000000"},{"key":2,"value":"cd070000"},{"key":3,"value":"78"}],"upper_bounds":[{"key":1,"value":"0400000000000000"},{"key":2,"value":"cd070000"},{"key":3,"value":"78"}],"partition":{"Year":1997}}}}""")
   }
 
   test("appendOnce stamps its summary and absorbs a replay; a v1 rewriteDataFiles") {

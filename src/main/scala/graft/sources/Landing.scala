@@ -62,8 +62,10 @@ private[sources] object Landing {
     * dropped from them otherwise. A `groupBy` column only splits files:
     * it is neither in the rows nor in the landing path. Both columns'
     * values are returned. With `dropEmptyFiles` files of no rows are
-    * not landed. Driver work is O(new files): one footer read and one
-    * rename per file.
+    * not landed: a filtering rewrite that empties a scan partition
+    * still makes Spark's writer emit a schema-only file, and every
+    * later log replay would carry its entry. Driver work is O(new
+    * files): one footer read and one rename per file.
     */
   def land(
       fs: FileSystem, table: Path, df: DataFrame, prefix: String,
@@ -234,8 +236,7 @@ private[sources] object Landing {
     * it: those need a conditional put.
     */
   def landFile(fs: FileSystem, target: Path, bytes: Array[Byte], overwrite: Boolean): Boolean = {
-    val tmp = new Path(target.getParent,
-      s".tmp-${target.getName}-${newStamp()}")
+    val tmp = new Path(target.getParent, s".tmp-${target.getName}-${newStamp()}")
     try {
       val out = fs.create(tmp, true)
       try out.write(bytes) finally out.close()
